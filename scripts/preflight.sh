@@ -14,6 +14,11 @@ echo "[preflight] sbt Test/compile"
 sbt -batch "Test/compile" >/tmp/preflight_compile.log 2>&1 || {
   echo "[preflight] COMPILE FAILED — tail of log:"; tail -30 /tmp/preflight_compile.log; exit 1; }
 
+echo "[preflight] one session factory: SparkSession.builder only in GraftSession.scala"
+if grep -rn "SparkSession.builder" src | grep -v "^src/main/scala/graft/GraftSession.scala:"; then
+  echo "[preflight] build sessions with graft.GraftSession.local, not SparkSession.builder"; exit 1
+fi
+
 echo "[preflight] smoke: Verify on sf0.001 (entry + every query end-to-end)"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/preflight_out" \
   >/tmp/preflight_verify.log 2>&1 || {

@@ -152,17 +152,7 @@ object Bench {
     * doesn't commandeer the whole host mid-suite. getOrCreate — in a
     * test JVM an earlier suite's session may be inherited instead
     * (the structural skew the spec's sentinel scaling absorbs). */
-  private[graft] def remeasureSession(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private[graft] def remeasureSession(): SparkSession = GraftSession.local(8)
 
   /** min-of-3 (calib-normalized wall, process-cpu) for one query after
     * an unbilled warm pass — the single measurement definition behind
@@ -218,7 +208,7 @@ object Bench {
     // process instead of per call site.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
     // One parent directory for every store root this run creates, so
     // the fsync probe below measures the SAME filesystem the fs-heavy
@@ -246,14 +236,7 @@ object Bench {
     sampleFsync("pre")
     val cpuCalibPre = cpuCalibSec()
     val parCalibPre = parCalibSec()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     // ---- warm-up (not billed): session, codegen, parquet footers,
     // and the SHARED e2e fixture store — its one-time ingest was
@@ -805,8 +788,8 @@ object Bench {
     * engine append + ack per request), one SSE catch-up session
     * through the ReadSession machine, and an integrity check that the
     * /v1/metrics meter counted exactly the RPCs served under load.
-    * Factored out so the phase is testable without the 200-query
-    * sweep (tools.RecordsApiProbe). */
+    * Factored out so the phase can run without the 200-query
+    * sweep. */
   private[graft] def recordsApiPhaseJson(spark: SparkSession,
       parent: java.nio.file.Path = null): String = try {
       val rootR = (if (parent == null)
@@ -847,7 +830,7 @@ object Bench {
           "records-api workload lost records")
         // SSE catch-up: one session draining a stream under a count
         // budget, terminal [DONE]. One unbilled warm pass first — the
-        // phase may run on a cold session (RecordsApiProbe), where the
+        // phase may run on a cold session (outside the sweep), where the
         // first read plan's codegen would be billed to the session.
         val sseWant = perThread * recsPerRpc
         HttpRecordsClient.readSse(

@@ -2,38 +2,42 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [query ...]` — only
+  * the named queries are dumped when names are given, all otherwise.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir +: outDir +: names = args.toSeq
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    try dump(spark, sfDir, outDir, names)
+    finally spark.stop()
+  }
+
+  /** Dumps `names` (every query when empty) under `outDir`, after
+    * writing oracle_sql.json. A failing query is reported on stderr and
+    * the rest still run. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           names: Seq[String]): Unit = {
     new java.io.File(outDir).mkdirs()
     writeOracles(outDir) // FIRST: a crash mid-dump must still leave a
                          // gateable artifact (dumped queries + oracles),
                          // not zero out the round's correctness
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val queries = SparkEntry.queries
+    (if (names.isEmpty) queries.keys.toSeq else names).foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    spark.stop()
   }
 
-  /** Shared with tools.VerifySome — ONE escaper and ONE
-    * __VERIFY_OUT__ substitution, so the fast subset-iteration path
-    * can never gate against a differently-built oracle file.
+  /** ONE escaper and ONE __VERIFY_OUT__ substitution for every dump,
+    * full or by name, so a subset run can never gate against a
+    * differently-built oracle file.
     */
-  def writeOracles(outDir: String): Unit = {
+  private def writeOracles(outDir: String): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -345,26 +345,11 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     * puts, not locks); the mutex only cuts wasted staged work.
     */
   private def withStreamLock[A](basin: String, stream: String)(f: => A): A =
-    withStreamLockTimed(basin, stream, null)(f)
-
-  /** [[withStreamLock]] with optional sub-step timing (`tick(step,
-    * nanos)`), so the bulk-ingest profiling loop can attribute the
-    * lock wrapper's own cost (JVM monitor vs OS flock acquisition)
-    * separately from the commit body. null = no timing. */
-  private def withStreamLockTimed[A](basin: String, stream: String,
-      tick: (String, Long) => Unit)(f: => A): A = {
-    val t0 = if (tick == null) 0L else System.nanoTime()
     lockFor(basin, stream).synchronized {
-      val t1 = if (tick == null) 0L else { val t = System.nanoTime()
-        tick("jvmLock", t - t0); t }
       val lockPath = Layout.statePath(root, basin, stream)
         .resolveSibling(Layout.escape(stream) + ".lock")
-      backend.withWriterMutex(lockPath) {
-        if (tick != null) tick("flock", System.nanoTime() - t1)
-        f
-      }
+      backend.withWriterMutex(lockPath)(f)
     }
-  }
 
   val recordSchema: StructType = StructType(Seq(
     StructField("seq_num", LongType, nullable = false),
@@ -939,20 +924,8 @@ final class StreamStore(val spark: SparkSession, val root: String) {
              cipher: Option[Array[Byte]] = None): Map[(String, String), AppendAck] = {
     import spark.implicits._
     val now = nowMs.getOrElse(System.currentTimeMillis())
-    // Phase timing for the profiling loop (GRAFT_INGEST_TIMING=1):
-    // the 10k-stream commit fan-out has regressed twice on costs that
-    // per-phase walls would have localized in one run.
-    val tLog = sys.env.contains("GRAFT_INGEST_TIMING") ||
-      sys.props.contains("graft.ingest.timing")
-    var tPhase = System.nanoTime()
-    def phase(name: String): Unit = if (tLog) {
-      val t = System.nanoTime()
-      System.err.println(f"[ingest-phase] $name ${(t - tPhase) / 1e9}%.3f s")
-      tPhase = t
-    }
     val allKeys = df0.select("basin", "stream").distinct().collect()
       .map(r => (r.getString(0), r.getString(1)))
-    phase("distinct-keys")
     // A13 on the BULK path: resolve each basin's stream_cipher against
     // the per-call key EXACTLY like unary append (encryption.rs
     // resolve — key without cipher = plaintext, cipher without key =
@@ -1045,7 +1018,6 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         case TimestampingMode.Arrival => "arrival"
       }, t.uncapped)
     }
-    phase("plan-metadata")
     val tsConfigDf = spark.createDataFrame(tsConfig)
       .toDF("basin", "stream", "ts_mode", "ts_uncapped")
     val tsPicked = when(col("ts_mode") === "arrival", lit(now))
@@ -1086,7 +1058,6 @@ final class StreamStore(val spark: SparkSession, val root: String) {
       }
       stats.iterator.map { case ((b, s), (c, mx)) => (pid, b, s, c, mx) }
     }.collect()
-    phase("part-stats")
 
     // driver: prefix sums per stream across partitions
     val seqOffset = scala.collection.mutable.Map.empty[(Int, String, String), (Long, Long)]
@@ -1161,7 +1132,6 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         .groupBy(r => (r.basin, r.stream))
         .map { case (k, rs) => k -> rs.map(r => r.name -> r).toMap }
     prepared.unpersist()
-    phase("staged-write")
     beforeStagedCommit(stage)
 
     // per-stream commit (no extra job): under the stream lock, verify
@@ -1177,33 +1147,14 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     // faster than 16 on the 10k-stream bench phase (cap matches that
     // measurement).
     val commitPar = math.min(48, runSeq.size)
-    // sub-step thread-time accounting for the profiling loop (tLog):
-    // aggregate nanos across the pool, printed once after the loop
-    val subNs = if (tLog) Map(
-      "lock" -> new java.util.concurrent.atomic.LongAdder,
-      "jvmLock" -> new java.util.concurrent.atomic.LongAdder,
-      "flock" -> new java.util.concurrent.atomic.LongAdder,
-      "manifest" -> new java.util.concurrent.atomic.LongAdder,
-      "sweep" -> new java.util.concurrent.atomic.LongAdder,
-      "stagedList" -> new java.util.concurrent.atomic.LongAdder,
-      "stagedStats" -> new java.util.concurrent.atomic.LongAdder,
-      "putData" -> new java.util.concurrent.atomic.LongAdder,
-      "delete" -> new java.util.concurrent.atomic.LongAdder,
-      "cas" -> new java.util.concurrent.atomic.LongAdder) else Map.empty[String, java.util.concurrent.atomic.LongAdder]
-    @inline def sub[A](name: String)(f: => A): A =
-      if (!tLog) f else {
-        val t0 = System.nanoTime()
-        try f finally subNs(name).add(System.nanoTime() - t0)
-      }
     try {
-      val acked = parallelMap(runSeq.keys.toSeq, commitPar) { case k @ (b, s) =>
+      parallelMap(runSeq.keys.toSeq, commitPar) { case k @ (b, s) =>
       val m = tails(k)
-      val committed = sub("lock")(withStreamLockTimed(b, s,
-        if (tLog) (n, ns) => subNs(n).add(ns) else null) {
-        val (cur0, tag0) = sub("manifest")(manifestTagged(b, s))
+      val committed = withStreamLock(b, s) {
+        val (cur0, tag0) = manifestTagged(b, s)
         // sweep first (it may fence-bump or refresh the manifest) so
         // the precondition checks and the commit see one state
-        val (cur, tag) = sub("sweep")(sweepOrphans(b, s, cur0, tag0))
+        val (cur, tag) = sweepOrphans(b, s, cur0, tag0)
         // The staged files' seq_nums were assigned from the PLANNED
         // tail (m.tailSeq), so the CAS precondition is the TAIL, not
         // the raw version: a concurrent append/trim/fence command
@@ -1231,7 +1182,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
           version = cur.version + 1)
         val src = Paths.get(Layout.stageDir(stage, b, s))
         val dst = Paths.get(Layout.genDir(root, b, s, cur.generation))
-        val stagedPaths: Seq[String] = sub("stagedList") {
+        val stagedPaths: Seq[String] =
           if (!Files.exists(src)) Nil
           else {
             val parts = Files.list(src)
@@ -1239,20 +1190,19 @@ final class StreamStore(val spark: SparkSession, val root: String) {
               .filter(_.endsWith(".parquet")).toSeq
             finally parts.close()
           }
-        }
         // Task-retry/speculation gate: promote only the file set that
         // densely tiles [plannedTail, newTail) — torn attempt leavings
         // and retried/speculated duplicate twins stay staged and die
         // with the stage dir (see selectStagedFiles).
-        val acceptedFiles = sub("stagedStats")(StreamStore.selectStagedFiles(
+        val acceptedFiles = StreamStore.selectStagedFiles(
           stagedPaths, m.tailSeq, runSeq(k), b, s,
-          stagedReports.getOrElse(k, Map.empty)))
+          stagedReports.getOrElse(k, Map.empty))
         val moved = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-        sub("putData")(acceptedFiles.foreach { st =>
+        acceptedFiles.foreach { st =>
           val f = Paths.get(st.path)
           val d = dst.resolve(f.getFileName)
           backend.putData(f, d); moved += d
-        })
+        }
         // same atomicity contract as unary append: a commit that fails
         // after the objects entered the live prefix must take them back
         // out, or a re-driven ingest duplicates their seq_nums (the
@@ -1260,7 +1210,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         // exactly that failure here too)
         try {
           beforeManifestCommit()
-          sub("cas")(saveManifestCas(b, s, newM, tag))
+          saveManifestCas(b, s, newM, tag)
         } catch {
           // indeterminate commit: may have landed — keep the moved
           // objects and force a re-sweep (see appendGroup)
@@ -1281,17 +1231,12 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         // sweep below, where deletion parallelism is chosen for the
         // filesystem instead of inherited from the commit pool.
         newM
-      })
+      }
       k -> AppendAck(
         StreamPosition(m.tailSeq, 0),
         StreamPosition(committed.tailSeq, committed.tailTs),
         StreamPosition(committed.tailSeq, committed.tailTs))
       }.toMap
-      phase("commit-loop")
-      if (tLog) System.err.println("[ingest-commit-sub] " + subNs.toSeq
-        .map { case (n, a) => f"$n=${a.sum / 1e9}%.3f" }.mkString(" ") +
-        " thread-s")
-      acked
     } finally {
       // ONE stage sweep for committed and uncommitted streams alike:
       // committed dirs are empty (files moved into the live prefix),
@@ -1336,7 +1281,6 @@ final class StreamStore(val spark: SparkSession, val root: String) {
                   s"[stage-gc] sweep of $stage failed: $t")
             }
         })
-      phase("stage-cleanup")
     }
   }
 

@@ -207,7 +207,7 @@ object CorpusOps {
                                       withExact: Boolean = true): DataFrame = {
     import TextOps.{docsAug, shingles, minhashSig, bandsOfSig,
       cappedCandidates, jaccardFor, BandBucketCap}
-    // both checkpoints measured at sf0.01 (tools/VerifySome): with
+    // both checkpoints measured at sf0.01 (probe in c4420b2): with
     // them 44 cpu-s, without the sh one 49 — sh feeds three
     // consumers (sig, jaccardFor A/B sides), sig feeds two
     val sh = shingles(docsAug(s, d)).localCheckpoint()
@@ -549,8 +549,8 @@ object CorpusOps {
           .groupBy("tok").agg(min("doc_id").as("fd"))
         // localCheckpoint: cps feeds BOTH cumulative joins below —
         // uncheckpointed, its whole max(doc_id) agg subtree (a corpus
-        // scan) is planned twice (12-exchange plan observed via
-        // tools/Explain; 6 after)
+        // scan) is planned twice (12-exchange plan observed with the
+        // plan printer in c4420b2; 6 after)
         val cps = perDoc.agg(max("doc_id").as("maxd"))
           .select(explode(sequence(lit(1), lit(10))).as("cp_idx"),
             col("maxd"))

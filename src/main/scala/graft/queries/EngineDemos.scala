@@ -63,7 +63,7 @@ object EngineDemos {
     * nothing. ONE partition since r22: these demos are fixed-size
     * semantic proofs (≤ 10 rows per batch), so the guide-§2 rule
     * "size partitions to the data" bottoms out at 1 — r22's per-batch
-    * breakdown (tools/StreamProbe) measured addBatch 1.6-4.7 s/pass
+    * breakdown (probe in c4420b2) measured addBatch 1.6-4.7 s/pass
     * at 4 partitions vs 0.6-1.3 s at 1, same oracle outputs (state
     * persistence, restart resume and watermark semantics are
     * partition-count-independent). A production stream sizes this to

@@ -133,9 +133,8 @@ object PipelineOps {
     nodes.join(ccIncident(edges), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
 
-  /** LSH-verified near-dup pairs as (a, b) edges — the edge source of
-    * dedup_cluster_cc, shared with tools/ProfCC so the profiler always
-    * measures the pipeline the query actually runs.
+  /** LSH-verified near-dup pairs as (a, b) edges — the edge source
+    * shared by dedup_cluster_cc and dedup_keep_best.
     */
   private[graft] def nearDupEdges(s: SparkSession, d: String): DataFrame = {
     val sh = shingles(docsAug(s, d))
@@ -957,7 +956,7 @@ object PipelineOps {
     // column, so it cannot enter parquet PushedFilters; it evaluates
     // scan-side before the exchange, which is what bounds the
     // shuffle — the scan itself prunes to (doc_id, lang), verified
-    // via tools.Explain.) The prefilter is
+    // with the plan printer in c4420b2.) The prefilter is
     // part of the spec (both engines apply it identically), so the
     // result stays bit-deterministic even in the pathological case
     // where a tiny stratum has fewer than k survivors.

@@ -35,16 +35,12 @@ object QueryDef {
     * deterministic under retries.
     */
   private[graft] def fanOut(df: DataFrame): DataFrame = {
-    // target = parallelism/2 (overridable): A/B at sf0.1 measured the
+    // target = parallelism/2: A/B at sf0.1 measured the
     // full-parallelism target slower on multi-stage queries (32 tiny
     // tasks per stage of per-stage overhead) and /2 the best of
     // {1, 2, 4} across the hot set — enough cores on the CPU-dense
     // map stages, half the task fan-out everywhere else
-    // divisor clamped to >= 1 via toIntOption (ADVICE r21: a "0" or
-    // non-numeric value crashed every query builder at plan time)
-    val div = sys.env.get("SPARK_GRAFT_FANOUT_DIV")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(2)
-    val p = math.max(1, df.sparkSession.sparkContext.defaultParallelism / div)
+    val p = math.max(1, df.sparkSession.sparkContext.defaultParallelism / 2)
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 }

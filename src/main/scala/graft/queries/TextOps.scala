@@ -309,7 +309,7 @@ object TextOps {
     * `cap` elements, so a list row is tiny), over-cap buckets are
     * dropped by a size filter, and ordered pairs explode from the
     * sorted list — replacing the former sizes-agg + join + self-join
-    * chain (A/B at sf0.1, tools/ProfTextAB: minhash 2.0 s vs 2.7 s
+    * chain (A/B at sf0.1, probe in c4420b2: minhash 2.0 s vs 2.7 s
     * median). Every bucket still contributes ≤ cap² pairs.
     */
   def cappedCandidates(bands: DataFrame, cap: Long): DataFrame =
@@ -1126,7 +1126,7 @@ object TextOps {
     // one 16-hash row per doc, not 16x shingle rows).
     QueryDef("dedup_minhash_lsh",
       (s, d) => {
-        // NOT cached: A/B at sf0.1 (tools/ProfMinhashAB) shows the
+        // NOT cached: A/B at sf0.1 (probe in c4420b2) shows the
         // recomputed, fully-pipelined shingle stream beating .cache()
         // by ~25% cold — materializing shingles breaks whole-stage
         // codegen and costs more than the recompute
@@ -1152,7 +1152,7 @@ object TextOps {
         // conv() calls over 8-hex-char chunks put 8 nibbles in each
         // Long; vote j masks its nibble's high bit — fewer expressions
         // than 32 substring+isin branches, so single-shot codegen
-        // compiles less code (tools/ProfTextAB: 0.39 s vs 0.43 s)
+        // compiles less code (A/B probe in c4420b2: 0.39 s vs 0.43 s)
         val sh = shingles(docsAug(s, d)).withColumn("h", md5s(col("sh")))
         val chunks = (0 until 4).map(c =>
           conv(substring(col("h"), 1 + 8 * c, 8), 16, 10).cast(LongType).as(s"c$c"))

@@ -1,13 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Quiet-host drift adjudication: min-of-3 calib-normalized wall at
-  * the BENCH environment (local[32], shuffle 32 — the environment the
-  * snapshot's queries_norm was recorded in), one line per query with
-  * the snapshot ratio. The procedure that cleared the five r16 flags
-  * and (r18) re-adjudicates the r17 verdict's three quiet-to-quiet
-  * drifts. Usage: runMain graft.tools.Adjudicate <query>...
+/** Quiet-host drift adjudication: `Bench.minOf3Norm` (warm pass, then
+  * min-of-3 calib-normalized wall) at the BENCH environment (local[32],
+  * shuffle 32 — the environment the snapshot's queries_norm was
+  * recorded in), one line per query with the snapshot ratio.
+  * Usage: runMain graft.tools.Adjudicate <query>...
   */
 object Adjudicate {
   def main(args: Array[String]): Unit = {
@@ -21,29 +18,15 @@ object Adjudicate {
       """"([^"]+)"\s*:\s*(-?[0-9.]+)""".r.findAllMatchIn(m)
         .map(g => g.group(1) -> g.group(2).toDouble).toMap
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    args.foreach { q =>
-      val fn = graft.SparkEntry.queries(q)
-      fn(spark, sfDir).count() // warm
-      val passes = (0 until 3).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
+    val spark = graft.GraftSession.local(32)
+    try args.foreach { q =>
+      graft.Bench.minOf3Norm(spark, q, sfDir) match {
+        case None => println(s"[adjudicate] $q: UNKNOWN QUERY")
+        case Some((norm, cpu)) =>
+          val s = snap.getOrElse(q, Double.NaN)
+          println(f"[adjudicate] $q: min-of-3 norm $norm%.3f s (cpu $cpu%.3f s) " +
+            f"vs snapshot $s%.3f s = ${norm / s}%.2fx")
       }
-      val normFactor = math.min(
-        graft.Bench.CalibBaselineSec / graft.Bench.cpuCalibSec(),
-        graft.Bench.ParCalibBaselineSec / graft.Bench.parCalibSec())
-      val norm = passes.min * normFactor
-      val s = snap.getOrElse(q, Double.NaN)
-      println(f"[adjudicate] $q: min-of-3 norm $norm%.3f s (calib x$normFactor%.3f) " +
-        f"vs snapshot $s%.3f s = ${norm / s}%.2fx")
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 }

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query structural profile: median-of-3 wall seconds plus the
   * job/stage/task counts and shuffle bytes of one pass — the numbers
@@ -26,15 +25,8 @@ object QueryProfile {
         "rank_mmr_diversify", "bpe_learn_merges", "dedup_minhash_index",
         "ann_ivf_kmeans", "dedup_ngram_jaccard", "dedup_cdc_chunks",
         "dedup_semantic_kmeans", "graph_pagerank")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val jobs = new AtomicInteger
     val stages = new AtomicInteger

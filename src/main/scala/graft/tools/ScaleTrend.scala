@@ -117,13 +117,7 @@ object ScaleTrend {
     val root = sys.env.getOrElse("GRAFT_TESTDATA", "/root/testdata")
     val names = if (args.nonEmpty) args.toSeq
                 else DedupBucketed ++ HotExtras ++ TrainingFanout
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32)
     val dirs = Seq(s"$root/sf0.001", s"$root/sf0.01", s"$root/sf0.1")
     val trends = measure(spark, names, dirs)
     trends.foreach { t =>

@@ -1,18 +1,9 @@
 package graft.extras
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MultimodalSpec extends AnyFunSuite with LocalSpark {
 
   test("ImageHeaderDecoder parses real PNG/JPEG/GIF headers, rejects garbage") {
     val dec = new Multimodal.ImageHeaderDecoder

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** The codegen'd signature-word expression must agree bit-for-bit
   * with the interpreted 16-fold SQL chain it replaced (the DuckDB
@@ -12,15 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   * null-poisons every plane's dot, and `CASE WHEN null >= 0` takes
   * the ELSE branch — word 0, not null.
   */
-class BinarySigSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BinarySigSpec extends AnyFunSuite with LocalSpark {
 
   /** The interpreted formulation, rebuilt from the shared sign
     * derivation — the exact shape VectorOps used before the

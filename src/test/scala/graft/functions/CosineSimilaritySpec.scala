@@ -1,23 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** The codegen'd cosine expression must agree bit-for-bit with the
   * interpreted aggregate(zip_with(...)) SQL chain it replaced — the
   * DuckDB oracle hash-compares the rounded scores.
   */
-class CosineSimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CosineSimilaritySpec extends AnyFunSuite with LocalSpark {
 
   private def legacy = expr(
     """aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),

@@ -1,22 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** The codegen'd integer dot must agree exactly with the interpreted
   * aggregate(zip_with(...)) chain it replaced in ann_int8_topk.
   */
-class IntDotSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class IntDotSpec extends AnyFunSuite with LocalSpark {
 
   private def legacy = expr(
     "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, w) -> acc + w)")

@@ -1,10 +1,9 @@
 package graft.functions
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import graft.log._
 import graft.model._
 
@@ -16,15 +15,7 @@ import graft.model._
   * both headers and body re-ran the cipher 4x per record (measured via
   * EnvelopeCodec.decryptCalls), a silent 4x cipher bill at 100 TB.
   */
-class RecordDecryptPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RecordDecryptPlanSpec extends AnyFunSuite with LocalSpark {
 
   private val key = Array.fill(32)(0x66.toByte)
 

@@ -6,9 +6,8 @@ import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 
@@ -20,15 +19,7 @@ import graft.model._
   * the storage submit is one atomic WriteBatch
   * (lite/src/backend/streamer.rs:1010-1070).
   */
-class AppendGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AppendGroupSpec extends AnyFunSuite with LocalSpark {
 
   private def freshStore(): StreamStore = {
     val st = new StreamStore(spark,

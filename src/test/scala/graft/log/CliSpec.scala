@@ -3,9 +3,8 @@ package graft.log
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 import graft.tools.Cli
@@ -18,18 +17,11 @@ import graft.tools.Cli
   * commands, error discipline (exit codes + stderr), config-file
   * resolution, follow mode, and TLS flags.
   */
-class CliSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class CliSpec extends AnyFunSuite with LocalSpark {
 
   override def afterAll(): Unit = {
     HttpRecordsClient.clientTls(None)
-    spark.stop()
+    super.afterAll()
   }
 
   private def served(): (StreamStore, com.sun.net.httpserver.HttpServer, String) = {

@@ -2,9 +2,8 @@ package graft.log
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 
@@ -24,16 +23,7 @@ import graft.model._
   * the canonical example is an unseeded shuffle of the op order
   * (sim/README's own motivating case).
   */
-class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DeterminismSpec extends AnyFunSuite with LocalSpark {
 
   /** One op: (label, method, path+query, body). Built from the seed
     * only, so two runs with one seed issue identical request

@@ -1,9 +1,8 @@
 package graft.log
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import graft.model._
 import scala.jdk.CollectionConverters._
 
@@ -17,16 +16,7 @@ import scala.jdk.CollectionConverters._
   * protocol's crash matrix and the writer/reader routing around it;
   * the live-follower lifecycle is e2e_stream_during_compact.
   */
-class GenerationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GenerationSpec extends AnyFunSuite with LocalSpark {
 
   private val Basin = "test-basin"
 

@@ -2,9 +2,8 @@ package graft.log
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 import HttpRecordsClient.requestAny
@@ -15,16 +14,7 @@ import HttpRecordsClient.requestAny
   * the documented api/src/v1 wire shapes). Pinned-clock servers make
   * the metric buckets deterministic.
   */
-class HttpAccountApiSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HttpAccountApiSpec extends AnyFunSuite with LocalSpark {
 
   private def served(nowMs: Option[Long] = Some(120000L))
       : (StreamStore, com.sun.net.httpserver.HttpServer, String) = {

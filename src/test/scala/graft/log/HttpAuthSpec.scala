@@ -2,9 +2,8 @@ package graft.log
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 import HttpRecordsClient.requestAny
@@ -16,16 +15,7 @@ import HttpRecordsClient.requestAny
   * name arguments prefixed before scope checks and dispatch, the
   * prefix stripped from listings (api access.rs:355-357).
   */
-class HttpAuthSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HttpAuthSpec extends AnyFunSuite with LocalSpark {
 
   /** Store with one scoped basin/stream and a guarded server; tokens
     * are seeded through the catalog (the operator bootstrap path —

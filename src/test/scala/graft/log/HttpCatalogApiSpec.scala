@@ -2,9 +2,8 @@ package graft.log
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 import HttpRecordsClient.requestAny
@@ -19,16 +18,7 @@ import HttpRecordsClient.requestAny
   * (kebab-case enums, externally-tagged retention), and the tri-state
   * PATCH semantics (absent keeps, null resets, value sets).
   */
-class HttpCatalogApiSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HttpCatalogApiSpec extends AnyFunSuite with LocalSpark {
 
   private def served(): (StreamStore, com.sun.net.httpserver.HttpServer, String) = {
     val st = new StreamStore(spark,

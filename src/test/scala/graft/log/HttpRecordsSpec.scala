@@ -3,9 +3,8 @@ package graft.log
 import java.nio.file.Files
 import java.util.Base64
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 import HttpRecordsClient._
@@ -18,16 +17,7 @@ import HttpRecordsClient._
   * arithmetic (records.rs:49-65). The e2e demo covers the happy
   * reconnect path inside the oracle gate; this spec covers the edges.
   */
-class HttpRecordsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HttpRecordsSpec extends AnyFunSuite with LocalSpark {
 
   private def served(cipher: Option[CipherAlgo] = None)
       : (StreamStore, com.sun.net.httpserver.HttpServer, String) = {

@@ -1,9 +1,8 @@
 package graft.log
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import graft.model._
 
 /** Lazy migration of pre-shard `_state` manifests (ADVICE r19, high):
@@ -16,16 +15,7 @@ import graft.model._
   * prove a fresh store (and the streaming source's direct reader)
   * adopts it.
   */
-class LegacyStateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LegacyStateSpec extends AnyFunSuite with LocalSpark {
 
   private def env(body: String): EnvelopeRecord =
     EnvelopeRecord(Nil, body.getBytes)

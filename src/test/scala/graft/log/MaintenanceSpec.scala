@@ -1,25 +1,18 @@
 package graft.log
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import graft.model._
 
 /** Maintenance tick (bgtasks/mod.rs analog): physical trim, retention
   * reclaim, terminal deletion, DoE sweep — idempotent, skip-if-clean.
   * Plus the GraftExtensions SQL registration.
   */
-class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MaintenanceSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def conf =
+    Seq("spark.sql.extensions" -> "graft.GraftExtensions")
 
   private def freshStore(): StreamStore = {
     val st = new StreamStore(spark,

@@ -2,9 +2,8 @@ package graft.log
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.sum
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
@@ -19,16 +18,7 @@ import graft.model._
   * stays in the suite as the spec's cross-check; the serving edge
   * itself runs only the fast path.
   */
-class MetricsGaugeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MetricsGaugeSpec extends AnyFunSuite with LocalSpark {
 
   private def env(body: String): EnvelopeRecord =
     EnvelopeRecord(Nil, body.getBytes("UTF-8"))

@@ -3,9 +3,8 @@ package graft.log
 import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 import LinModel._
@@ -26,16 +25,7 @@ import LinModel._
   * data object KEPT — and proves sweepOrphans resolves the ambiguity
   * on the next append with no duplicate or ghost rows.
   */
-class NetFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class NetFaultSpec extends AnyFunSuite with LocalSpark {
 
   private val Basin = "fault-basin"
 

@@ -1,8 +1,7 @@
 package graft.log
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** e2e_a12_object_durability as a local spec (the driver also
   * hash-verifies it against its constant oracle): the A12 durability
@@ -11,16 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * puts, no locks, no rename (VERDICT r12 task #1; semantics per the
   * reference's simulation, /root/reference/sim/src/s3.rs:120-134).
   */
-class ObjectDurabilitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ObjectDurabilitySpec extends AnyFunSuite with LocalSpark {
 
   test("e2e_a12_object_durability matches its oracle rows") {
     val df = graft.SparkEntry.queries("e2e_a12_object_durability")(spark, "unused")

@@ -5,9 +5,8 @@ import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 
@@ -15,15 +14,7 @@ import graft.model._
   * permit-based flow control (A11), terminal-error poisoning; M5
   * server-metrics histograms (sdk/src/producer.rs, lite/src/metrics.rs).
   */
-class ProducerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ProducerSpec extends AnyFunSuite with LocalSpark {
 
   private def freshStore(): StreamStore = {
     val st = new StreamStore(spark,

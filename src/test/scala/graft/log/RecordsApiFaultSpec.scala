@@ -2,8 +2,7 @@ package graft.log
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
@@ -35,16 +34,7 @@ import graft.model._
   *      one basin, 201 + noop provision result on the duplicate
   *      (basins.rs:60-120 retry contract).
   */
-class RecordsApiFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RecordsApiFaultSpec extends AnyFunSuite with LocalSpark {
 
   private def utf8(s: String) = s.getBytes("UTF-8")
 

@@ -7,9 +7,8 @@ import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 import LinModel._
@@ -60,16 +59,7 @@ import LinModel._
   * preserved, orphan invisible then swept, CAS retry exactly-once,
   * stitched history linearizes — are identical.
   */
-class RecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RecoverySpec extends AnyFunSuite with LocalSpark {
 
   private val Basin = "rec-basin"
   private val Stream = "rec"

@@ -1,9 +1,8 @@
 package graft.log
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import graft.model._
 
 /** Task-retry/speculation safety of the committer-free staged bulk
@@ -16,16 +15,7 @@ import graft.model._
   * storage submit is a single atomic WriteBatch
   * (lite/src/backend/streamer.rs:1010-1070).
   */
-class StagedCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StagedCommitSpec extends AnyFunSuite with LocalSpark {
 
   private def freshStore(): StreamStore = {
     val dir = Files.createTempDirectory("graft-staged").toString

@@ -1,9 +1,8 @@
 package graft.log
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 import scala.jdk.CollectionConverters._
 import graft.model._
 
@@ -12,16 +11,7 @@ import graft.model._
   * mirroring lite/tests/backend/data_plane + streamer.rs inline
   * matrices.
   */
-class StreamStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamStoreSpec extends AnyFunSuite with LocalSpark {
 
   private def freshStore(): StreamStore = {
     val dir = Files.createTempDirectory("graft-store").toString

@@ -3,9 +3,8 @@ package graft.log
 import java.nio.file.Files
 import java.util.Base64
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.model._
 
@@ -17,18 +16,11 @@ import graft.model._
   * cert — tighter than the reference CLI's `--insecure` hint — except
   * where the insecure context itself is under test.
   */
-class TlsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class TlsSpec extends AnyFunSuite with LocalSpark {
 
   override def afterAll(): Unit = {
     HttpRecordsClient.clientTls(None)
-    spark.stop()
+    super.afterAll()
   }
 
   private def freshStore(): StreamStore = {

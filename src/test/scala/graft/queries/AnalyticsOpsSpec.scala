@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Semantic guarantees of the sketch/cluster/retrieval operators that
   * the DuckDB oracle can only witness, not prove: the Count-Min
@@ -11,15 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   * known cardinalities (including the linear-counting small range),
   * and Lloyd convergence on a corpus with exact cluster structure.
   */
-class AnalyticsOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AnalyticsOpsSpec extends AnyFunSuite with LocalSpark {
 
   private def sfDir: String = graft.TestData.requireSf("sf0.001")
 

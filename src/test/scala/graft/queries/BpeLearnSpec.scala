@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** bpeLearnPlan vs a sequential in-memory BPE learner: the oracle
   * hash-match proves Spark == DuckDB, but both could share a
@@ -11,15 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * algorithm (count pairs over the word-frequency table, merge the
   * argmax pair leftmost-greedy, repeat).
   */
-class BpeLearnSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BpeLearnSpec extends AnyFunSuite with LocalSpark {
 
   /** Sequential reference learner over (word -> freq). */
   private def refLearn(words: Map[String, Long], rounds: Int): Seq[(String, String, Long)] = {

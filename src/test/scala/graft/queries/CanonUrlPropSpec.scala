@@ -1,10 +1,9 @@
 package graft.queries
 
 import org.scalacheck.{Gen, rng}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Property coverage for CurationOps.canonUrlExpr — the one expression
   * both the batch dedup_url and the streaming frontier dedup trust.
@@ -26,15 +25,7 @@ import org.scalatest.BeforeAndAfterAll
   * in one job per property, not a Scala re-implementation, so the
   * property tests the expression that ships.
   */
-class CanonUrlPropSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CanonUrlPropSpec extends AnyFunSuite with LocalSpark {
 
   private val seed0 = rng.Seed(42L)
 

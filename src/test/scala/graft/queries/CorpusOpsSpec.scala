@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Semantic guarantees of the corpus diagnostics and multimodal
   * decoders that the DuckDB oracle witnesses but cannot prove:
@@ -16,15 +15,7 @@ import org.scalatest.BeforeAndAfterAll
   * dedicated-decoder agreement, and malformed-input rejection for
   * every decoder.
   */
-class CorpusOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
 
   private def sfDir: String = graft.TestData.requireSf("sf0.001")
 

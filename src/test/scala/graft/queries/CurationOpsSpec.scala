@@ -1,9 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Semantic guarantees of the curation operators beyond what the
   * DuckDB hash-match witnesses: URL canonicalization actually
@@ -14,15 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * per source with bounded overshoot, and drift is zero between
   * identical snapshots by construction.
   */
-class CurationOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CurationOpsSpec extends AnyFunSuite with LocalSpark {
 
   private def sfDir: String = graft.TestData.requireSf("sf0.001")
 

@@ -1,22 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Connected-components label propagation: the corpus's near-dup
   * clusters are clique-ish (diameter ~1), so the oracle query never
   * exercises multi-round convergence — these fixtures do.
   */
-class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PipelineOpsSpec extends AnyFunSuite with LocalSpark {
 
   private def sfDir: String = graft.TestData.requireSf("sf0.01")
 

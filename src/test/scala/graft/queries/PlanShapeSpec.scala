@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Scale-hygiene regression gate over PHYSICAL PLANS, not results: the
   * correctness oracle can't see a plan regression (an accidental
@@ -19,16 +18,7 @@ import org.scalatest.BeforeAndAfterAll
   * is desired (dedup_near_edit's block self-join broadcasts at this
   * SF and merge-joins at scale).
   */
-class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PlanShapeSpec extends AnyFunSuite with LocalSpark {
 
   private def sfDir: String = graft.TestData.requireSf("sf0.001")
 
@@ -238,7 +228,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   // 0 exchanges REGARDLESS of upstream shape — a budget there would
   // be a vacuous assertion, not a gate (review-caught). Queries whose
   // checkpointed subplans dominate need job-level auditing
-  // (VerifySome cpu-s), not plan-string budgets.
+  // (tools.QueryProfile's jobs/stages/tasks), not plan-string budgets.
   test("the final temperature plan consumes only broadcast dims") {
     val p = plan("corpus_mix_temperature")
     assert(p.contains("BroadcastExchange"),

@@ -3,8 +3,7 @@ package graft.queries
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 
 /** Property coverage for the prefix-filtering bound in
   * TextOps.prefixFilteredJaccard: the claim is ZERO false negatives
@@ -117,16 +116,8 @@ class PrefixFilterPropSpec extends Properties("PrefixFilter") {
 
 /** The same property through the REAL Spark plan, plus the teeth
   * proof that the unguarded ceil loses a pair. */
-class PrefixFilterSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PrefixFilterSparkSpec extends AnyFunSuite with LocalSpark {
   import PrefixFilterModel._
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def run(docs: Map[Int, Set[String]], t: Double): Set[(Int, Int, Double)] = {
     import spark.implicits._

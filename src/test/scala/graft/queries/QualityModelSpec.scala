@@ -1,9 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** text_quality_model guarantees the oracle hash-match can only
   * witness: the learned hashed-bigram classifier separates the
@@ -12,15 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   * the same strata at any threshold — the reason a model-based filter
   * exists in every serious pipeline.
   */
-class QualityModelSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class QualityModelSpec extends AnyFunSuite with LocalSpark {
 
   private def sfDir: String = {
     val d = graft.TestData.requireSf("sf0.001")

@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.tools.ScaleTrend
 
@@ -19,17 +18,9 @@ import graft.tools.ScaleTrend
   * margin for host noise (CPU-seconds-based, so external load barely
   * moves it).
   */
-class ScaleTrendSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScaleTrendSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cpus = 8
 
   private val Gate = 1.35
 

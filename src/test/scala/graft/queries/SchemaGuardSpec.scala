@@ -1,9 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Schema-drift canary over the driver-generated testdata.
   *
@@ -17,21 +16,15 @@ import org.scalatest.BeforeAndAfterAll
   * encodings of `ts`, and proves the canonical `Records.records`
   * view still analyzes.
   */
-class SchemaGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SchemaGuardSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    // set BEFORE any events.parquet read: on the TIMESTAMP(NANOS)
-    // encoding a plain read dies with PARQUET_TYPE_ILLEGAL — the
-    // opaque crash this canary exists to replace with a targeted
-    // message, so the canary itself must never hit it
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cpus = 2
+  // set BEFORE any events.parquet read: on the TIMESTAMP(NANOS)
+  // encoding a plain read dies with PARQUET_TYPE_ILLEGAL — the
+  // opaque crash this canary exists to replace with a targeted
+  // message, so the canary itself must never hit it
+  override protected def conf =
+    Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   private def sfDir: String = graft.TestData.requireSf("sf0.001")
 

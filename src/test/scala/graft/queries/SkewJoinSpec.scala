@@ -1,9 +1,8 @@
 package graft.queries
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Skew hardening beyond j5_salted_join's explicit x8 salt (VERDICT
   * r11 #7): the engine's OTHER answer to a hot join key is AQE's
@@ -28,23 +27,17 @@ import org.scalatest.BeforeAndAfterAll
   *  - everything else (events/profile joins, doc joins at 100 TB):
   *    relies on AQE skew-join — THIS spec is the proof it engages.
   */
-class SkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SkewJoinSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "10")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+  override protected def conf = Seq(
+    "spark.sql.shuffle.partitions" -> "10",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
     // test-sized skew thresholds: hot partition ~8 MB vs ~1 MB median
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "512k")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "512k",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256k",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
   /** Runs `f` and returns, for the stage with the largest total
     * shuffle-read record count (the join stage), the max single-task

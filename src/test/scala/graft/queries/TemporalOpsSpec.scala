@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Semantic guarantees of the temporal joins that the DuckDB oracle
   * witnesses but a reader can't see from the plan: the as-of union+
@@ -13,7 +12,7 @@ import org.scalatest.BeforeAndAfterAll
   * Runs on the sf0.001 testdata so the cross-check is over real
   * distributions, not a fixture the implementation could be shaped to.
   */
-class TemporalOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TemporalOpsSpec extends AnyFunSuite with LocalSpark {
 
   /** Fixture root; cancels (not fails) the calling test when the
     * driver-generated parquet isn't present on this machine.
@@ -22,15 +21,6 @@ class TemporalOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = graft.TestData.requireSf("sf0.001")
     d
   }
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def queries = graft.SparkEntry.queries
 

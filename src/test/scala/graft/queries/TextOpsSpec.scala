@@ -1,21 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** LSH candidate generation stays bounded under degenerate buckets —
   * the VERDICT-flagged boilerplate-cluster hotspot.
   */
-class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TextOpsSpec extends AnyFunSuite with LocalSpark {
 
   test("dedup_lines: copies fully removed, near-dups keep only their modified tail") {
     val d = graft.TestData.requireSf("sf0.001")

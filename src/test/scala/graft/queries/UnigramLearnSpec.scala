@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** uniTrainFromWords / uniSegment vs a sequential in-memory unigram-LM
   * trainer: the oracle hash-match proves Spark == DuckDB, but both
@@ -15,15 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   * seed cap 256 (UniSeedV) — fixtures stay far below the cap so a drift
   * in the cap itself would be caught by the oracle, not silently here.
   */
-class UnigramLearnSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class UnigramLearnSpec extends AnyFunSuite with LocalSpark {
 
   private val MaxPieceLen = 6
 

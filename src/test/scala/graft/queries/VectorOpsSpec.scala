@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 /** Semantic guarantees of the vector operators beyond the DuckDB
   * hash-match: hard-negative mining's positives/negatives are the TRUE
@@ -10,15 +9,7 @@ import org.scalatest.BeforeAndAfterAll
   * vectors), every anchor emits a row, and the semi-hard band is
   * consistent with the frozen ppm scores.
   */
-class VectorOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class VectorOpsSpec extends AnyFunSuite with LocalSpark {
 
   test("mine_hard_negatives: driver-side replay — true per-class argmaxes, " +
        "no anchor dropped, semi-hard band consistent") {

@@ -1,9 +1,8 @@
 package graft.streaming
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.log.StreamStore
 import graft.model._
@@ -11,15 +10,7 @@ import graft.model._
 /** The TableCatalog plugin: basins as namespaces, streams as SQL
   * tables, reads through the shared DSv2 table.
   */
-class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraftCatalogSpec extends AnyFunSuite with LocalSpark {
 
   test("streams are first-class SQL tables under the graft catalog") {
     val dir = Files.createTempDirectory("graft-cat").toString

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.log.StreamStore
 import graft.model._
@@ -12,15 +11,7 @@ import graft.model._
 /** The custom DataSource V2 micro-batch source: seq_num offsets,
   * footer-stat file pruning, checkpoint resumption.
   */
-class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraftSourceSpec extends AnyFunSuite with LocalSpark {
 
   private def env(body: String): EnvelopeRecord =
     EnvelopeRecord(Seq(Header.utf8("h", "v")), body.getBytes)

@@ -4,9 +4,8 @@ import java.nio.file.Files
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.log.{AppendSession, StreamStore}
 import graft.model._
@@ -16,15 +15,7 @@ import graft.model._
   * read.rs:603-928 + read_follow.rs wait/heartbeat/limit cases) onto a
   * virtual clock.
   */
-class SessionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SessionSpec extends AnyFunSuite with LocalSpark {
 
   private def freshStore(): StreamStore = {
     val st = new StreamStore(spark,

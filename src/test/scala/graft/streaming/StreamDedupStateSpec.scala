@@ -1,9 +1,8 @@
 package graft.streaming
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.log.StreamStore
 import graft.model._
@@ -27,15 +26,9 @@ import graft.model._
   *      dropDuplicatesWithinWatermark tradeoff: dedup is exact within
   *      the horizon, best-effort beyond it.
   */
-class StreamDedupStateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamDedupStateSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def conf = Seq("spark.sql.shuffle.partitions" -> "2")
 
   private val Hour = 3600L * 1000L
 

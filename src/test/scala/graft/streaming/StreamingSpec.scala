@@ -1,10 +1,9 @@
 package graft.streaming
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSpark
 
 import graft.log.StreamStore
 import graft.model._
@@ -13,16 +12,7 @@ import graft.model._
   * sequencer tests, driven synchronously with memory sinks
   * (processAllAvailable).
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingSpec extends AnyFunSuite with LocalSpark {
 
   private def env(body: String): EnvelopeRecord =
     EnvelopeRecord(Nil, body.getBytes)
