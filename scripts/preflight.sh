@@ -6,7 +6,8 @@
 # the guard against repeating that.
 #
 #   ./scripts/preflight.sh            # compile (main+test) + smoke query
-#   ./scripts/preflight.sh --full     # also: full test suite + sf0.01 oracle
+#   ./scripts/preflight.sh --full     # also: full test suite (failing if it
+#                                     # leaks /tmp store roots) + sf0.01 oracle
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -27,10 +28,24 @@ if grep -q "\[verify\].*failed" /tmp/preflight_verify.log; then
   echo "[preflight] QUERY FAILURES:"; grep "\[verify\].*failed" /tmp/preflight_verify.log; exit 1
 fi
 
+# temp roots of the store suites; BackendHarness.cleanup deletes them
+leaked_roots() {
+  shopt -s nullglob
+  local dirs=(/tmp/graft-{gen,rec,lin,store}*)
+  shopt -u nullglob
+  echo "${#dirs[@]}"
+}
+
 if [[ "${1:-}" == "--full" ]]; then
   echo "[preflight] full: sbt test"
+  roots_before=$(leaked_roots)
   sbt -batch test >/tmp/preflight_test.log 2>&1 || {
     echo "[preflight] TESTS FAILED — tail of log:"; tail -40 /tmp/preflight_test.log; exit 1; }
+  roots_after=$(leaked_roots)
+  echo "[preflight] full: /tmp/graft-{gen,rec,lin,store}* before $roots_before, after $roots_after"
+  if (( roots_after > roots_before )); then
+    echo "[preflight] the suite leaked $((roots_after - roots_before)) temp roots"; exit 1
+  fi
   echo "[preflight] full: sf0.01 oracle compare"
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/preflight_out01" \
     >/tmp/preflight_verify01.log 2>&1

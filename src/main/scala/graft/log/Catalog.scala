@@ -22,12 +22,6 @@ final case class StreamEntry(
     deletedAt: Option[Long] = None,
     idempotencyKey: Option[String] = None)
 
-/** Legacy single-file catalog layout; still parsed for one-time
-  * migration to the sharded layout. */
-final case class CatalogState(
-    basins: List[BasinEntry] = Nil,
-    streams: List[StreamEntry] = Nil)
-
 /** On-disk shape of `basins.json`. */
 final case class BasinsFile(basins: List[BasinEntry] = Nil)
 
@@ -193,10 +187,7 @@ object Catalog {
     * same root in this process (a StreamStore's catalog, the SQL
     * catalog plugin's, a scan's — each news its own instance):
     * per-instance monitors would let two instances interleave a
-    * basins.json rewrite and lose one side's update. It also keeps the
-    * migration's OS file lock single-entrant per JVM — a second
-    * in-JVM `FileChannel.lock()` on one file throws
-    * OverlappingFileLockException rather than waiting.
+    * basins.json rewrite and lose one side's update.
     */
   private val locks = new java.util.concurrent.ConcurrentHashMap[
     String, java.lang.ref.WeakReference[Object]]()
@@ -353,9 +344,8 @@ final class Catalog(root: String) {
     */
   private val canonRoot = Catalog.canonicalRoot(root)
 
-  // basin list + legacy migration; shared JVM-wide per root so
-  // independent Catalog instances over one root serialize (see
-  // Catalog.globalLock)
+  // basin list; shared JVM-wide per root so independent Catalog
+  // instances over one root serialize (see Catalog.globalLock)
   private val lock = Catalog.globalLock(canonRoot, "__basins__")
   private def basinLock(basin: String): Object =
     Catalog.globalLock(canonRoot, "b\u0000" + basin)
@@ -527,49 +517,14 @@ final class Catalog(root: String) {
     Catalog.purgeDeadEntries()
   }
 
-  /** One-time migration of a pre-shard single-file root: split
-    * `catalog.json` into the sharded layout, then park the legacy file
-    * under a `.pre-shard` name so the migration never re-runs.
-    *
-    * Serialized ACROSS PROCESSES by an OS file lock (two Catalog
-    * instances constructed concurrently over one legacy root must not
-    * both migrate — a slow loser would overwrite freshly mutated
-    * shards with stale legacy content) and re-checked under the lock.
-    * basins.json is written LAST, so any instance that observes it can
-    * trust every shard is already in place. In-JVM racers serialize on
-    * the global per-root monitor FIRST — OS file locks are per-JVM, so
-    * without it the second instance's `ch.lock()` would throw
-    * OverlappingFileLockException instead of waiting.
-    */
-  // POSIX-only by construction: object roots are born on the sharded
-  // layout (the legacy single-file era predates the object adapter),
-  // so the migration — and its OS file lock and renames — never runs
-  // there. The `objectMode` guard makes that explicit rather than
-  // relying on catalog.json never existing under an object root.
+  // A pre-shard root (single-file `catalog.json`, no basins.json) is
+  // refused: reading it as an empty sharded catalog would hide every
+  // basin and stream it lists. Object roots are born sharded.
   if (!objectMode &&
       Files.exists(Layout.catalogPath(canonRoot)) && !Files.exists(basinsPath))
-    Catalog.globalLock(canonRoot, "__migrate__").synchronized {
-      val legacy = Layout.catalogPath(canonRoot)
-      Files.createDirectories(legacy.getParent)
-      val lockPath = legacy.resolveSibling("migrate.lock")
-      val ch = java.nio.channels.FileChannel.open(lockPath,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val fl = ch.lock()
-        try {
-          if (Files.exists(legacy) && !Files.exists(basinsPath)) {
-            val st = Layout.readJson[CatalogState](legacy).getOrElse(CatalogState())
-            st.streams.groupBy(s => (s.basin, Catalog.shardOf(s.name))).foreach {
-              case ((b, sh), entries) =>
-                saveFile(Layout.streamShardPath(canonRoot, b, sh), StreamShard(entries))
-            }
-            saveFile(basinsPath, BasinsFile(st.basins))
-            Files.move(legacy, legacy.resolveSibling("catalog.json.pre-shard"))
-          }
-        } finally fl.release()
-      } finally ch.close()
-    }
+    throw new IllegalStateException(s"${Layout.catalogPath(canonRoot)} is a " +
+      "pre-round-19 single-file catalog; this build reads only the sharded " +
+      "_catalog layout and does not migrate old roots")
 
   private def basinsFile(): BasinsFile = loadCached(basinsPath, BasinsFile())
 

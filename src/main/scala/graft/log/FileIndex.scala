@@ -144,31 +144,6 @@ object FileIndex {
     } finally reader.close()
   })
 
-  /** All data files of a stream directory, sorted by min seq_num.
-    * Listing is fresh per call (new files appear); stats are cached.
-    * A concurrent compaction swaps the directory atomically between
-    * our exists/list/stat calls — one retry observes the new
-    * generation ("trimming is eventually consistent").
-    */
-  /** Union listing over `Layout.resolveDataDirs` output: one dir in
-    * the steady state; in the interrupted-migration state (rows split
-    * between loose legacy files and a partial `gen=0`) both dirs are
-    * listed and deduped by FILE NAME, preferring the later dir — the
-    * migration move preserves names, so a file caught mid-move by the
-    * two listings resolves to its post-move `gen=0` path.
-    */
-  /** Manifest + union listing, CONSISTENT under a foreign compaction
-    * flip — the shared form of the guard used by every planner
-    * (StreamStore reads, the microbatch stream, the connector's batch
-    * scan): a flip (and a grace-expired sweep of the dir the manifest
-    * resolved to) landing between the manifest read and the listing
-    * yields an empty or partial listing, which a caller would serve as
-    * silently-missing rows, not an error. Re-read the manifest after
-    * listing; a moved generation re-plans. Terminates: each retry
-    * observes a strictly newer generation (the spin bound is a
-    * foreign-bug backstop). `first` may serve a cache; `recheck` must
-    * be authoritative enough to observe a foreign flip.
-    */
   /** Default lister: the POSIX adapter's directory listing. Backends
     * with their own listing source (object-store key index) pass a
     * lister; read-only consumers of a POSIX mirror (the streaming
@@ -176,34 +151,32 @@ object FileIndex {
   val posixLister: String => Seq[String] =
     dir => PosixBackend.listData(Paths.get(dir)).map(_.toString)
 
+  /** Manifest + listing of its generation dir, CONSISTENT under a
+    * foreign compaction flip — the shared form of the guard used by
+    * every planner (StreamStore reads, the microbatch stream, the
+    * connector's batch scan): a flip (and a grace-expired sweep of the
+    * dir the manifest resolved to) landing between the manifest read
+    * and the listing yields an empty or partial listing, which a
+    * caller would serve as silently-missing rows, not an error.
+    * Re-read the manifest after listing; a moved generation re-plans.
+    * Terminates: each retry observes a strictly newer generation (the
+    * spin bound is a foreign-bug backstop). `first` may serve a cache;
+    * `recheck` must be authoritative enough to observe a foreign flip.
+    * Files come back sorted by min seq_num; stats are cached.
+    */
   def consistentListing(first: () => StreamManifest,
                         recheck: () => StreamManifest,
-                        dirs: StreamManifest => Seq[String],
+                        dir: StreamManifest => String,
                         lister: String => Seq[String] = posixLister)
       : (StreamManifest, Seq[FileStats]) = {
-    var m = first()
-    var files = listStatsUnion(dirs(m), lister)
-    var fresh = recheck()
-    var spins = 0
-    while (fresh.generation != m.generation && spins < 8) {
-      m = fresh
-      files = listStatsUnion(dirs(m), lister)
-      fresh = recheck()
-      spins += 1
+    @scala.annotation.tailrec
+    def plan(m: StreamManifest, spins: Int): (StreamManifest, Seq[FileStats]) = {
+      val files = statsFor(lister(dir(m)))
+      val fresh = recheck()
+      if (fresh.generation == m.generation || spins == 8) (m, files)
+      else plan(fresh, spins + 1)
     }
-    (m, files)
-  }
-
-  def listStatsUnion(dirs: Seq[String],
-                     lister: String => Seq[String] = posixLister)
-      : Seq[FileStats] = dirs match {
-    case Seq(one) => statsFor(lister(one))
-    case many =>
-      val byName = scala.collection.mutable.LinkedHashMap.empty[String, FileStats]
-      many.foreach(d => statsFor(lister(d)).foreach { st =>
-        byName.update(Paths.get(st.path).getFileName.toString, st)
-      })
-      byName.values.toSeq.sortBy(_.minSeq)
+    plan(first(), 0)
   }
 
   /** Footer stats over an explicit file list (torn files drop out). */

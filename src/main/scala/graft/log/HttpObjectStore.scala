@@ -299,7 +299,6 @@ final class HttpObjectBackend(endpoint: String,
     clientSsl: Option[javax.net.ssl.SSLContext] = None)
     extends StorageBackend {
   val name = "http-object"
-  val supportsLegacyLayout = false
   val hasWriterMutex = false
 
   // the default keep-alive pool caps at 5 connections per host; the

@@ -1,7 +1,6 @@
 package graft.log
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -16,10 +15,13 @@ import org.json4s.jackson.Serialization
   *   data/basin=<basin>/stream=<escaped>/gen=N/ — record parquet files
   * }}}
   *
-  * (Pre-shard roots used `_catalog/catalog.json` and a flat
-  * `_state/<basin>/<escaped-stream>.json`; both are migrated — the
-  * catalog eagerly at construction, manifests lazily per stream via
-  * [[Layout.adoptLegacyState]].)
+  * Every stream's files live in exactly one place: [[Layout.genDir]]
+  * of its manifest's generation. Roots written before round 19 are
+  * refused, not upgraded. Their single-file `_catalog/catalog.json`
+  * fails [[Catalog]] construction, and each written stream's flat
+  * `_state/<basin>/<escaped-stream>.json` manifest fails its lookup
+  * ([[Layout.refuseFlatManifest]]); the still older loose-parquet
+  * streams (round <= 8) carry such a manifest too.
   *
   * The per-stream manifest is the analog of the reference's KV keys
   * StreamTailPosition / StreamFencingToken / StreamTrimPoint
@@ -80,43 +82,6 @@ object Layout {
   def genDir(root: String, basin: String, stream: String, gen: Long): String =
     s"${dataDir(root, basin, stream)}/gen=$gen"
 
-  /** All dirs a reader must list to see every durable row. Usually one
-    * (the generation dir, or the legacy loose-file dir); TWO in the
-    * interrupted-migration state — a crash mid-`migrateLegacyLocked`
-    * leaves rows split between a partially-filled `gen=0` and leftover
-    * loose files, and until some later write re-enters and finishes
-    * the move, reads must take the union or silently lose the loose
-    * remainder. Ordered legacy-first: the migration is an atomic
-    * per-file rename, so a file a concurrent migration moves between
-    * the two listings shows up in the gen=0 listing (callers dedupe by
-    * file name preferring the later dir) rather than vanishing.
-    *
-    * Check order matters: gen-dir existence is sampled AFTER the
-    * legacy listing. Sampling it before opens a race — a migration
-    * that creates gen=0 and moves files between the two checks would
-    * leave an unlocked reader seeing genExists=false + hasLoose=true
-    * and serving ONLY the legacy dir, dropping the already-moved
-    * files. Sampled after, any migration racing the listing has
-    * necessarily created the gen dir by the time we look, so the
-    * two-dir union covers its moves.
-    */
-  def resolveDataDirs(root: String, basin: String, stream: String,
-                      gen: Long): Seq[String] = {
-    val gd = genDir(root, basin, stream, gen)
-    if (gen > 0) return Seq(gd)
-    val legacy = Paths.get(dataDir(root, basin, stream))
-    val hasLoose = Files.exists(legacy) && {
-      val s = Files.list(legacy)
-      try s.iterator().asScala.exists(p =>
-        p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      finally s.close()
-    }
-    val genExists = Files.exists(Paths.get(gd))
-    if (genExists && hasLoose) Seq(legacy.toString, gd)
-    else if (hasLoose && !genExists) Seq(legacy.toString)
-    else Seq(gd)
-  }
-
   /** Hash-sharded like the catalog's stream shards, and for the same
     * physical reason at a different layer: every manifest commit
     * CREATES files in this directory (the CAS temp file + rename, the
@@ -131,76 +96,31 @@ object Layout {
     Paths.get(root, "_state", basin, f"s${Catalog.shardOf(stream)}%02d",
       escape(stream) + ".json")
 
-  /** Pre-shard (round <= 18) flat manifest location — read only by the
-    * lazy migration below. */
+  /** Pre-shard (round <= 18) flat manifest location: probed only when
+    * the sharded manifest is absent, to refuse such a root. */
   def legacyStatePath(root: String, basin: String, stream: String): Path =
     Paths.get(root, "_state", basin, escape(stream) + ".json")
 
-  /** Lazy migration of a pre-shard manifest: when the sharded path is
-    * absent but the flat legacy file exists, adopt it with an atomic
-    * NON-replacing rename. Without this, a root written by an older
-    * build reads every manifest as absent — tails reset to 0 and new
-    * appends re-assign committed seq_nums (the catalog got an eager
-    * one-time migration for the same transformation; manifests are
-    * per-stream, so theirs is lazy and per-lookup).
-    *
-    * Races are settled by rename atomicity, no lock needed:
-    *  - two adopters: one move wins, the loser's NoSuchFileException
-    *    is swallowed and its caller re-reads the winner's file;
-    *  - a concurrent writer that already created the sharded file
-    *    (it would itself have adopted first, so this means the legacy
-    *    file is a stale leftover of an interrupted r19-era run): the
-    *    non-REPLACE move fails FileAlreadyExists and the stale flat
-    *    file is parked, never clobbering the live manifest.
-    *
-    * Returns true iff the caller should re-read the sharded path.
-    * POSIX-only physics (Files.move); object adapters guard on
-    * supportsLegacyLayout and never call this.
-    */
-  def adoptLegacyState(root: String, basin: String, stream: String): Boolean = {
-    val legacy = legacyStatePath(root, basin, stream)
-    if (!Files.exists(legacy)) return false
-    val sharded = statePath(root, basin, stream)
-
-    def park(): Boolean = {
-      // sharded manifest is live; park the stale flat file out of
-      // the lookup path so this probe never re-fires
-      try Files.move(legacy,
-        legacy.resolveSibling(legacy.getFileName.toString + ".pre-shard"))
-      catch { case _: java.io.IOException => () }
-      false
-    }
-
-    // Deliberately NOT ATOMIC_MOVE: on Linux that flag maps straight to
-    // rename(2), which silently REPLACES an existing target — exactly
-    // the clobber this function must never do. The flag-less move keeps
-    // rename atomicity on one filesystem but throws
-    // FileAlreadyExistsException when the target is present. The
-    // check-then-move window is closed by call order, not locks: every
-    // commit path adopts BEFORE it can create the sharded file, so a
-    // sharded file appearing concurrently was adopted from this same
-    // legacy file — our move then fails NoSuchFile, never clobbering.
-    if (Files.exists(sharded)) return park()
-    try {
-      Files.createDirectories(sharded.getParent)
-      Files.move(legacy, sharded)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => park()
-      case _: java.nio.file.NoSuchFileException => true // racer adopted it
-      case _: java.io.IOException => false
-    }
+  /** Throw if a pre-shard flat manifest stands where the sharded one
+    * is missing. Read as absent, that stream's tail would be 0 and the
+    * next append would re-assign committed seq_nums. Callers run it
+    * only after a sharded-path miss, so it costs one stat on the
+    * manifest-absent path (brand-new streams), never on hot reads. */
+  def refuseFlatManifest(root: String, basin: String, stream: String): Unit = {
+    val flat = legacyStatePath(root, basin, stream)
+    if (Files.exists(flat))
+      throw new IllegalStateException(s"$flat is a pre-round-19 flat " +
+        "manifest; this build reads only the sharded _state layout and " +
+        "does not migrate old roots")
   }
 
-  /** Manifest read with the lazy pre-shard adoption applied — the
-    * entry point for POSIX-file readers outside StreamStore (the
+  /** Manifest read for POSIX-file readers outside StreamStore (the
     * streaming source plans against this). */
-  def readManifestAdopting(root: String, basin: String,
-                           stream: String): Option[StreamManifest] =
+  def readManifest(root: String, basin: String,
+                   stream: String): Option[StreamManifest] =
     readJson[StreamManifest](statePath(root, basin, stream)).orElse {
-      if (adoptLegacyState(root, basin, stream))
-        readJson[StreamManifest](statePath(root, basin, stream))
-      else None
+      refuseFlatManifest(root, basin, stream)
+      None
     }
 
   /** One bulk-ingest's private staged dir for a stream — sharded like
@@ -211,7 +131,7 @@ object Layout {
   def stageDir(stage: String, basin: String, stream: String): String =
     s"$stage/basin=$basin/s${f"${Catalog.shardOf(stream)}%02d"}/stream=${escape(stream)}"
 
-  /** Legacy (pre-shard) single-file catalog; read once for migration. */
+  /** Pre-shard single-file catalog: probed only to refuse such a root. */
   def catalogPath(root: String): Path =
     Paths.get(root, "_catalog", "catalog.json")
 

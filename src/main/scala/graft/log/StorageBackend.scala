@@ -57,11 +57,6 @@ final class IndeterminateCommit(msg: String, cause: Throwable = null)
 trait StorageBackend {
   def name: String
 
-  /** False on object stores: the pre-generation loose-file layout is
-    * POSIX-era history; object roots are born on the gen= layout, so
-    * legacy detection/migration short-circuits. */
-  def supportsLegacyLayout: Boolean
-
   /** Whether `withWriterMutex` provides REAL cross-process mutual
     * exclusion (POSIX OS file locks: yes; object stores: no — it's a
     * no-op there). Destructive maintenance that infers "dead writer"
@@ -159,7 +154,6 @@ object StorageBackend {
   */
 object PosixBackend extends StorageBackend {
   val name = "posix"
-  val supportsLegacyLayout = true
   val hasWriterMutex = true
 
   def getMeta(key: String, fresh: Boolean): Option[(String, String)] =
@@ -281,7 +275,6 @@ object PosixBackend extends StorageBackend {
   */
 final class ObjectStoreBackend extends StorageBackend {
   val name = "object"
-  val supportsLegacyLayout = false
   val hasWriterMutex = false
 
   private final case class Obj(json: String, etag: String, putAtMs: Long)

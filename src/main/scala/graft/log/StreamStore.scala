@@ -392,33 +392,6 @@ final class StreamStore(val spark: SparkSession, val root: String) {
   private val sweptStreams =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Pre-generation layouts (round <= 8) wrote parquet directly under
-    * the stream dir. Read paths fall back to that legacy dir when the
-    * manifest still says generation 0 and no gen=0 dir exists; write
-    * paths migrate the loose files into gen=0 under the stream lock
-    * the first time they commit (migrateLegacyLocked), after which the
-    * layout is uniform. The one-time migration MOVE invalidates a plan
-    * captured over the legacy paths — an upgrade-time event, unlike
-    * steady-state compaction which never moves live paths.
-    */
-  private def hasLooseParquet(dir: java.nio.file.Path): Boolean =
-    backend.supportsLegacyLayout && {
-      if (!Files.exists(dir)) return false
-      val s = Files.list(dir)
-      try s.iterator().asScala.exists(p =>
-        p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      finally s.close()
-    }
-
-  /** All dirs a read must union (two only in the interrupted-migration
-    * state — see Layout.resolveDataDirs).
-    */
-  private def dataDirsFor(basin: String, stream: String,
-                          m: StreamManifest): Seq[String] =
-    if (!backend.supportsLegacyLayout)
-      Seq(Layout.genDir(root, basin, stream, m.generation))
-    else Layout.resolveDataDirs(root, basin, stream, m.generation)
-
   /** Manifest + file listing via FileIndex.consistentListing (see its
     * doc for the flip-races-listing scenario): first read may serve
     * the mtime-keyed cache (hot path), rechecks bypass it so a foreign
@@ -429,25 +402,8 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     FileIndex.consistentListing(
       () => manifest(basin, stream),
       () => manifestFresh(basin, stream),
-      m => dataDirsFor(basin, stream, m),
+      m => Layout.genDir(root, basin, stream, m.generation),
       dir => backend.listData(Paths.get(dir)).map(_.toString))
-
-  /** Caller must hold the stream lock. POSIX-era mechanics: object
-    * roots are born on the gen= layout, so this never runs there. */
-  private def migrateLegacyLocked(basin: String, stream: String,
-                                  m: StreamManifest): Unit = {
-    if (!backend.supportsLegacyLayout) return
-    if (m.generation != 0L) return
-    val legacy = Paths.get(Layout.dataDir(root, basin, stream))
-    if (!hasLooseParquet(legacy)) return
-    val gen0 = Paths.get(Layout.genDir(root, basin, stream, 0L))
-    Files.createDirectories(gen0)
-    val s = Files.list(legacy)
-    try s.iterator().asScala.toSeq
-      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      .foreach(p => Files.move(p, gen0.resolve(p.getFileName)))
-    finally s.close()
-  }
 
   /** Sweep a dead writer's leavings from the current generation, once
     * per stream per store instance. Returns the (manifest, tag) the
@@ -492,8 +448,6 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     // footer stats are cached per path.
     if (backend.hasWriterMutex && !sweptStreams.add(basin + "\u0000" + stream))
       return (m, tag)
-    // legacy loose files join gen=0 before anything else commits here
-    migrateLegacyLocked(basin, stream, m)
     // orphans can only live in the CURRENT generation: writers commit
     // into manifest.generation, and a generation flip is itself CAS'd
     val dir = Paths.get(Layout.genDir(root, basin, stream, m.generation))
@@ -501,7 +455,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
       // name-embedded stats first: zero IO for the overwhelmingly
       // common committed-below-tail file (every commit path publishes
       // stats-named objects; atomic publish means a stats-named file
-      // is never torn). Nameless files (legacy layout, fabricated
+      // is never torn). Nameless files (older writers, fabricated
       // leavings) fall back to the footer/tail probe.
       StreamStore.nameMinSeq(p.getFileName.toString) match {
         case Some(minSeq) => minSeq >= m.tailSeq
@@ -536,23 +490,19 @@ final class StreamStore(val spark: SparkSession, val root: String) {
   private def stateKey(basin: String, stream: String): String =
     Layout.statePath(root, basin, stream).toString
 
-  /** getMeta with the pre-shard fallback: a miss at the sharded path
-    * on a POSIX root probes the legacy flat location and adopts it
-    * (Layout.adoptLegacyState), so an old root's committed tails are
-    * never read as absent. The extra probe only runs on the
-    * manifest-absent path (brand-new streams), never on hot reads. */
-  private def getMetaAdopting(key: String, basin: String, stream: String,
-                              fresh: Boolean): Option[(String, String)] =
+  /** Manifest bytes + etag at the sharded path; a miss refuses a
+    * pre-shard root (Layout.refuseFlatManifest) rather than reading
+    * its committed stream as empty. */
+  private def getMeta(key: String, basin: String, stream: String,
+                      fresh: Boolean): Option[(String, String)] =
     backend.getMeta(key, fresh = fresh).orElse {
-      if (backend.supportsLegacyLayout &&
-          Layout.adoptLegacyState(root, basin, stream))
-        backend.getMeta(key, fresh = true)
-      else None
+      Layout.refuseFlatManifest(root, basin, stream)
+      None
     }
 
   def manifest(basin: String, stream: String): StreamManifest = {
     val key = stateKey(basin, stream)
-    ManifestCache.parse(key, getMetaAdopting(key, basin, stream, fresh = false))
+    ManifestCache.parse(key, getMeta(key, basin, stream, fresh = false))
   }
 
   /** Authoritative manifest read for commit paths: bypasses any
@@ -568,7 +518,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
   private def manifestTagged(basin: String,
                              stream: String): (StreamManifest, Option[String]) = {
     val key = stateKey(basin, stream)
-    getMetaAdopting(key, basin, stream, fresh = true) match {
+    getMeta(key, basin, stream, fresh = true) match {
       case None => (StreamManifest(), None)
       case some @ Some((_, etag)) => (ManifestCache.parse(key, some), Some(etag))
     }
@@ -1321,15 +1271,12 @@ final class StreamStore(val spark: SparkSession, val root: String) {
   // Read path (R2-R7, R10)
   // -------------------------------------------------------------------------
 
-  /** All durable rows of one stream (no visibility masks) — unions the
-    * manifest's CURRENT generation with any interrupted-migration
-    * leftovers (Layout.resolveDataDirs), so a compaction's new files
-    * become visible exactly when its manifest flip commits and a crash
-    * mid-legacy-migration never hides the unmoved remainder.
+  /** All durable rows of one stream (no visibility masks), planned
+    * per file over the manifest's CURRENT generation as
+    * consistentListing returns it, so a compaction's new files become
+    * visible exactly when its manifest flip commits.
     */
   private def rawData(basin: String, stream: String): DataFrame = {
-    // per-file plan (not a directory scan) so the interrupted-migration
-    // union never depends on partition discovery over mixed layouts
     val files = manifestAndFiles(basin, stream)._2.map(_.path)
     if (files.nonEmpty)
       spark.read.schema(recordSchema).parquet(files: _*)
@@ -1702,15 +1649,10 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     withStreamLock(basin, stream) {
       val (m, tag) = manifestTagged(basin, stream)
       val streamDir = Paths.get(Layout.dataDir(root, basin, stream))
-      migrateLegacyLocked(basin, stream, m) // uniform layout from here on
       val curDir = Paths.get(Layout.genDir(root, basin, stream, m.generation))
       if (m.deletionPending || m.trimPoint == Long.MaxValue) {
         backend.deletePrefix(streamDir)
         backend.deleteMeta(stateKey(basin, stream))
-        // a stale pre-shard flat manifest must die with the stream, or
-        // the lazy adoption would resurrect it on the next lookup
-        if (backend.supportsLegacyLayout)
-          Files.deleteIfExists(Layout.legacyStatePath(root, basin, stream))
         catalog.hardDeleteStream(basin, stream)
       } else if (backend.dataExists(curDir)) {
         val tmp = Paths.get(s"$root/_tmp/compact-${System.nanoTime()}")
@@ -1842,35 +1784,9 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     val now = nowMs.getOrElse(System.currentTimeMillis())
     val streams = catalog.listStreams(basin).items.map(_.name)
     val dir = Paths.get(s"$root/data/basin=$basin")
-    if (streams.isEmpty || !backend.dataExists(dir))
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        recordSchema.add("stream", StringType))
-    // Partition discovery requires a UNIFORM directory depth: after a
-    // legacy-root upgrade where one stream has migrated to gen=
-    // subdirectories while another still holds loose parquet, the
-    // mixed depths fail the scan ("Conflicting directory structures").
-    // Only in that MIXED state does this scan write: it eagerly
-    // finishes the per-stream migration (idempotent, under each
-    // stream's lock) during the upgrade window. A uniformly-legacy
-    // root (no gen= dirs anywhere) partition-discovers fine in the
-    // degraded no-`gen`-column form and stays strictly read-only —
-    // read-only deployments and concurrent readers holding plans over
-    // legacy paths never see files move under a metrics/scan call.
-    val looseStreams =
-      if (!backend.supportsLegacyLayout) Nil
-      else streams.filter(s =>
-        manifest(basin, s).generation == 0L &&
-          hasLooseParquet(Paths.get(Layout.dataDir(root, basin, s))))
-    val anyGenDir = backend.supportsLegacyLayout && streams.exists { s =>
-      backend.listSubdirs(Paths.get(Layout.dataDir(root, basin, s)))
-        .exists(_.startsWith("gen="))
-    }
-    if (anyGenDir && looseStreams.nonEmpty)
-      looseStreams.foreach { s =>
-        withStreamLock(basin, s) {
-          migrateLegacyLocked(basin, s, manifestFresh(basin, s))
-        }
-      }
+    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      recordSchema.add("stream", StringType))
+    if (streams.isEmpty || !backend.dataExists(dir)) return empty
     val masks = streams.map { s =>
       val m = manifest(basin, s)
       val cutoff = catalog.streamConfig(basin, s)
@@ -1885,17 +1801,16 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     // `gen` arrives via partition discovery like `stream`; the mask
     // join keeps only each stream's CURRENT generation, so a rewrite's
     // predecessor files (alive within the grace window) never surface
-    // as duplicates in a basin-wide scan. A root written before the
-    // generation upgrade (loose files, no gen= dirs anywhere) yields
-    // no `gen` partition column — every stream is implicitly at
-    // generation 0, so the mask degrades to the pre-upgrade form.
+    // as duplicates in a basin-wide scan.
     val raw = spark.read.schema(recordSchema).parquet(dir.toString)
-    val genMask =
-      if (raw.columns.contains("gen"))
-        col("gen").cast(LongType) === col("cur_gen")
-      else lit(0L) === col("cur_gen")
+    // A POSIX basin dir can hold no data file at all: when its only
+    // written stream was deleted and compacted away (deletePrefix of
+    // the stream dir) while another, never-written stream is still
+    // listed. Discovery then yields neither a `gen` nor a `stream`
+    // column, and the join below would fail analysis.
+    if (!raw.columns.contains("gen")) return empty
     raw.join(broadcast(maskDf), Seq("stream"))
-      .where(genMask &&
+      .where(col("gen").cast(LongType) === col("cur_gen") &&
              col("seq_num") < col("tail") && col("seq_num") >= col("trim") &&
              col("timestamp") >= col("cutoff"))
       .drop("stream", "gen", "tail", "trim", "cutoff", "cur_gen")

@@ -163,8 +163,7 @@ final class GraftScan(props: Map[String, String],
       val root = props("root")
       val basin = props("basin")
       val stream = props("stream")
-      def mf = Layout.readManifestAdopting(root, basin, stream)
-        .getOrElse(StreamManifest())
+      def mf = Layout.readManifest(root, basin, stream).getOrElse(StreamManifest())
       // empty/fully-bounded ranges exit before paying any listing or
       // footer reads (pollers and startSeq/endSeq probes hit this a
       // lot); the bounds are re-derived below from the guard's final
@@ -178,7 +177,7 @@ final class GraftScan(props: Map[String, String],
       // same flip-races-listing guard as the microbatch path: re-plan
       // if a foreign compaction moved the generation mid-listing
       val (m, listed) = FileIndex.consistentListing(() => mf, () => mf,
-        mm => Layout.resolveDataDirs(root, basin, stream, mm.generation))
+        mm => Layout.genDir(root, basin, stream, mm.generation))
       val lo = Seq(opt("startSeq").map(_.toLong).getOrElse(0L),
         m.trimPoint, seqLo).max
       val e = Seq(opt("endSeq").map(_.toLong).getOrElse(Long.MaxValue),
@@ -234,22 +233,18 @@ final class GraftMicroBatchStream(root: String, basin: String, stream: String,
   private lazy val catalog = new Catalog(root)
 
   private def manifest: StreamManifest =
-    Layout.readManifestAdopting(root, basin, stream)
-      .getOrElse(StreamManifest())
+    Layout.readManifest(root, basin, stream).getOrElse(StreamManifest())
 
-  /** All data dirs a microbatch must list, resolved against the SAME
-    * manifest the caller already holds: usually the one current-
-    * generation dir, plus the legacy loose-file dir in the
-    * interrupted-migration state (see Layout.resolveDataDirs — callers
-    * dedupe by file name preferring the later dir). A microbatch plans
-    * entirely within one generation, and a compaction flip between two
-    * plans is safe because the old generation's files survive in place
-    * for the grace window (Layout.genDir) — the in-flight batch keeps
+  /** The one data dir a microbatch lists, resolved against the SAME
+    * manifest the caller already holds. A microbatch plans entirely
+    * within one generation, and a compaction flip between two plans
+    * is safe because the old generation's files survive in place for
+    * the grace window (Layout.genDir) — the in-flight batch keeps
     * reading its planned paths while the next plan lists the new
     * generation.
     */
-  private def dirsFor(m: StreamManifest): Seq[String] =
-    Layout.resolveDataDirs(root, basin, stream, m.generation)
+  private def dirFor(m: StreamManifest): String =
+    Layout.genDir(root, basin, stream, m.generation)
 
   /** Manifest + listing via FileIndex.consistentListing (see its doc):
     * without the guard, a flip + grace-expired sweep between manifest
@@ -258,7 +253,7 @@ final class GraftMicroBatchStream(root: String, basin: String, stream: String,
     * uncached authoritative read.
     */
   private def manifestAndFiles(): (StreamManifest, Seq[FileIndex.FileStats]) =
-    FileIndex.consistentListing(() => manifest, () => manifest, dirsFor)
+    FileIndex.consistentListing(() => manifest, () => manifest, dirFor)
 
   /** Resolved retention policy, cached with a short TTL: it changes
     * only via reconfigure, and resolving it per micro-batch per
@@ -341,7 +336,7 @@ final class GraftMicroBatchStream(root: String, basin: String, stream: String,
         var byteEnd = effStart
         var admitted = 0
         var done = false
-        val it = FileIndex.listStatsUnion(dirsFor(m)).iterator
+        val it = FileIndex.listStats(dirFor(m)).iterator
           .filter(st => st.maxSeq >= effStart && st.minSeq < tail)
         while (!done && it.hasNext) {
           val st = it.next()

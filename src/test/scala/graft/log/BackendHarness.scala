@@ -1,7 +1,6 @@
 package graft.log
 
 import java.nio.file.{Files, Path}
-import scala.jdk.CollectionConverters._
 
 /** Test-side view of a storage backend, so the commit-protocol suites
   * (RecoverySpec crash matrix, GenerationSpec flip protocol,
@@ -20,25 +19,67 @@ import scala.jdk.CollectionConverters._
   */
 sealed trait BackendHarness {
   def label: String
-  /** Fresh root governed by this backend (registers it first). */
+  /** Fresh root governed by this backend (registers it first); the
+    * next [[BackendHarness.cleanup]] deletes it. */
   def freshRoot(prefix: String): String
   /** Re-materialize a dead writer's COMPLETED data put (crash sim). */
   def restoreDead(root: String, dir: Path, name: String, bytes: Array[Byte]): Unit
   /** Whether a kill mid-write can leave a torn, footerless data file
     * (POSIX yes; object stores never — PUT is atomic). */
   def supportsTorn: Boolean
+
   /** Data-file names visible to the PROTOCOL's listing under dir. */
-  def listData(root: String, dir: Path): Set[String]
+  def listData(root: String, dir: Path): Set[String] =
+    StorageBackend.forRoot(root).listData(dir).map(_.getFileName.toString).toSet
+
   /** Fabricate a whole published data file (e.g. a crashed
     * compaction's completed generation rewrite). */
-  def fabricate(root: String, dir: Path, recs: Seq[DirectParquet.Rec]): Unit
+  def fabricate(root: String, dir: Path, recs: Seq[DirectParquet.Rec]): Unit = {
+    val f = java.nio.file.Paths.get(DirectParquet.writeBatch(
+      BackendHarness.tempDir("graft-fab").toString, recs))
+    StorageBackend.forRoot(root).putData(f, dir.resolve(f.getFileName))
+  }
+
   /** Whether a prefix still holds any data object. */
-  def dataExists(root: String, dir: Path): Boolean
+  def dataExists(root: String, dir: Path): Boolean =
+    StorageBackend.forRoot(root).dataExists(dir)
 }
 
 object BackendHarness {
   val all: Seq[BackendHarness] =
     Seq(PosixHarness, ObjectHarness, HttpHarness, FlakyHttpHarness)
+
+  /** Every temp dir handed out since the last [[cleanup]]: roots of
+    * all four harnesses (an object root's data and metadata mirrors
+    * live under its local dir) and fabrication scratch dirs. */
+  private val handedOut = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp dir that the next [[cleanup]] deletes. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    handedOut.add(dir)
+    dir
+  }
+
+  /** Recursively delete every dir handed out so far. Suites call it
+    * from `afterAll`; sbt runs the suites of the forked test JVM one
+    * after another, so no other suite's roots are live. Best effort: a
+    * dir whose walk fails (a file vanished under it) is left behind. */
+  def cleanup(): Unit = {
+    var dir = handedOut.poll()
+    while (dir != null) {
+      if (Files.exists(dir))
+        try {
+          val walk = Files.walk(dir)
+          try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+            .forEach(p => Files.deleteIfExists(p))
+          finally walk.close()
+        } catch {
+          case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+        }
+      dir = handedOut.poll()
+    }
+  }
 
   /** One shared localhost object server per test JVM (keys are
     * canonical absolute paths, so a single server serves every root). */
@@ -56,48 +97,34 @@ object BackendHarness {
   object PosixHarness extends BackendHarness {
     val label = "posix"
     val supportsTorn = true
-    def freshRoot(prefix: String): String =
-      Files.createTempDirectory(prefix).toString
+    def freshRoot(prefix: String): String = tempDir(prefix).toString
     def restoreDead(root: String, dir: Path, name: String,
                     bytes: Array[Byte]): Unit = {
       Files.createDirectories(dir)
       Files.write(dir.resolve(name), bytes)
       ()
     }
-    def listData(root: String, dir: Path): Set[String] =
-      PosixBackend.listData(dir).map(_.getFileName.toString).toSet
-    def fabricate(root: String, dir: Path, recs: Seq[DirectParquet.Rec]): Unit = {
-      DirectParquet.writeBatch(dir.toString, recs)
-      ()
-    }
-    def dataExists(root: String, dir: Path): Boolean =
-      PosixBackend.dataExists(dir)
   }
 
-  object ObjectHarness extends BackendHarness {
-    val label = "object"
+  /** The object-semantics harnesses differ only in how a root's
+    * backend is installed. */
+  sealed class ObjectSemantics(val label: String, install: String => Any)
+      extends BackendHarness {
     val supportsTorn = false
     def freshRoot(prefix: String): String = {
-      val root = Files.createTempDirectory(prefix).toString
-      ObjectStoreBackend.install(root)
+      val root = tempDir(prefix).toString
+      install(root)
       root
     }
-    private def backend(root: String): ObjectStoreBackend =
-      StorageBackend.forRoot(root).asInstanceOf[ObjectStoreBackend]
     def restoreDead(root: String, dir: Path, name: String,
                     bytes: Array[Byte]): Unit =
-      backend(root).putDataBytes(dir.resolve(name), bytes)
-    def listData(root: String, dir: Path): Set[String] =
-      backend(root).listData(dir).map(_.getFileName.toString).toSet
-    def fabricate(root: String, dir: Path, recs: Seq[DirectParquet.Rec]): Unit = {
-      val scratch = Files.createTempDirectory("graft-fab")
-      val f = java.nio.file.Paths.get(
-        DirectParquet.writeBatch(scratch.toString, recs))
-      backend(root).putData(f, dir.resolve(f.getFileName))
-    }
-    def dataExists(root: String, dir: Path): Boolean =
-      backend(root).dataExists(dir)
+      StorageBackend.forRoot(root) match {
+        case b: ObjectStoreBackend => b.putDataBytes(dir.resolve(name), bytes)
+        case b: HttpObjectBackend => b.putDataBytes(dir.resolve(name), bytes)
+      }
   }
+
+  object ObjectHarness extends ObjectSemantics("object", ObjectStoreBackend.install)
 
   /** Real-endpoint variant: same S3 semantics as ObjectHarness but
     * every protocol operation is an actual HTTP round trip to
@@ -105,30 +132,8 @@ object BackendHarness {
     * and server-side CAS atomicity are all exercised for real (the
     * reference's object_store_http analog). Cross-PROCESS coverage on
     * the same server is HttpCrossProcessSpec. */
-  object HttpHarness extends BackendHarness {
-    val label = "http"
-    val supportsTorn = false
-    def freshRoot(prefix: String): String = {
-      val root = Files.createTempDirectory(prefix).toString
-      HttpObjectBackend.install(root, sharedHttpEndpoint)
-      root
-    }
-    private def backend(root: String): HttpObjectBackend =
-      StorageBackend.forRoot(root).asInstanceOf[HttpObjectBackend]
-    def restoreDead(root: String, dir: Path, name: String,
-                    bytes: Array[Byte]): Unit =
-      backend(root).putDataBytes(dir.resolve(name), bytes)
-    def listData(root: String, dir: Path): Set[String] =
-      backend(root).listData(dir).map(_.getFileName.toString).toSet
-    def fabricate(root: String, dir: Path, recs: Seq[DirectParquet.Rec]): Unit = {
-      val scratch = Files.createTempDirectory("graft-fab")
-      val f = java.nio.file.Paths.get(
-        DirectParquet.writeBatch(scratch.toString, recs))
-      backend(root).putData(f, dir.resolve(f.getFileName))
-    }
-    def dataExists(root: String, dir: Path): Boolean =
-      backend(root).dataExists(dir)
-  }
+  object HttpHarness extends ObjectSemantics("http",
+    HttpObjectBackend.install(_, sharedHttpEndpoint))
 
   /** HTTP adapter behind the seeded fault-injecting proxy: every
     * protocol call can be dropped, lose its response, be duplicated,
@@ -137,28 +142,6 @@ object BackendHarness {
     * iterating `all` thus run the crash matrix and the
     * linearizability workloads under network faults too; the
     * at-most-once fault rule keeps them deterministic. */
-  object FlakyHttpHarness extends BackendHarness {
-    val label = "flaky-http"
-    val supportsTorn = false
-    def freshRoot(prefix: String): String = {
-      val root = Files.createTempDirectory(prefix).toString
-      HttpObjectBackend.install(root, sharedFlakyEndpoint)
-      root
-    }
-    private def backend(root: String): HttpObjectBackend =
-      StorageBackend.forRoot(root).asInstanceOf[HttpObjectBackend]
-    def restoreDead(root: String, dir: Path, name: String,
-                    bytes: Array[Byte]): Unit =
-      backend(root).putDataBytes(dir.resolve(name), bytes)
-    def listData(root: String, dir: Path): Set[String] =
-      backend(root).listData(dir).map(_.getFileName.toString).toSet
-    def fabricate(root: String, dir: Path, recs: Seq[DirectParquet.Rec]): Unit = {
-      val scratch = Files.createTempDirectory("graft-fab")
-      val f = java.nio.file.Paths.get(
-        DirectParquet.writeBatch(scratch.toString, recs))
-      backend(root).putData(f, dir.resolve(f.getFileName))
-    }
-    def dataExists(root: String, dir: Path): Boolean =
-      backend(root).dataExists(dir)
-  }
+  object FlakyHttpHarness extends ObjectSemantics("flaky-http",
+    HttpObjectBackend.install(_, sharedFlakyEndpoint))
 }

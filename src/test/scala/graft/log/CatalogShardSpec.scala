@@ -68,35 +68,22 @@ class CatalogShardSpec extends AnyFunSuite {
       .exists(_.retentionPolicy.contains(RetentionPolicy.Infinite)))
   }
 
-  test("legacy single-file catalog migrates to shards exactly once") {
+  test("a pre-shard single-file catalog root is refused, left byte-identical") {
     val r = root()
-    // fabricate a pre-shard root
-    val legacy = CatalogState(
-      basins = List(BasinEntry("legacy-basin",
-        ConfigCodec.encodeBasin(BasinConfig(createStreamOnAppend = true)),
-        createdAt = 1000L)),
-      streams = List(
-        StreamEntry("legacy-basin", "s1",
-          ConfigCodec.encode(StreamConfig(
-            retentionPolicy = Some(RetentionPolicy.Infinite))), 1000L),
-        StreamEntry("legacy-basin", "s2", Map.empty, 1000L,
-          deletedAt = Some(2000L)),
-        StreamEntry("legacy-basin", "s3", Map.empty, 1000L)))
-    Layout.writeJson(Layout.catalogPath(r), legacy)
-
-    val cat = new Catalog(r)
-    assert(!Files.exists(Layout.catalogPath(r)), "legacy file parked")
-    assert(Files.exists(
-      Layout.catalogPath(r).resolveSibling("catalog.json.pre-shard")))
-    assert(cat.basinConfig("legacy-basin").createStreamOnAppend)
-    assert(cat.streamConfig("legacy-basin", "s1")
-      .exists(_.retentionPolicy.contains(RetentionPolicy.Infinite)))
-    assert(cat.getStream("legacy-basin", "s2").isEmpty) // stayed deleted
-    assert(cat.listStreams("legacy-basin").items.map(_.name) == Seq("s1", "s3"))
-
-    // a second instance over the migrated root must not re-migrate
-    val cat2 = new Catalog(r)
-    assert(cat2.listStreams("legacy-basin").items.map(_.name) == Seq("s1", "s3"))
+    val legacy = Layout.catalogPath(r)
+    Files.createDirectories(legacy.getParent)
+    Files.writeString(legacy, """{"basins":[{"name":"b","config":{},""" +
+      """"createdAt":1000}],"streams":[]}""")
+    val bytes = Files.readAllBytes(legacy)
+    val e = intercept[IllegalStateException](new Catalog(r))
+    assert(e.getMessage.contains(legacy.toString), e.getMessage)
+    // nothing split, renamed or created beside it
+    assert(java.util.Arrays.equals(Files.readAllBytes(legacy), bytes))
+    val left = Files.list(legacy.getParent)
+    try assert(left.iterator().asScala.map(_.getFileName.toString).toList ==
+      List("catalog.json"))
+    finally left.close()
+    assert(!Files.exists(Layout.basinsPath(r)))
   }
 
   test("concurrent mutations: parallel across basins, serialized within, none lost") {

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
 import graft.model._
-import scala.jdk.CollectionConverters._
 
 /** Generation-directory compaction (the analog of the reference's
   * "trimming is eventually consistent" rewrite, cli/src/cli.rs:143-146,
@@ -18,9 +17,12 @@ import scala.jdk.CollectionConverters._
   */
 class GenerationSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private val Basin = "test-basin"
 
-  /** POSIX-rooted store (legacy/staleness tests are POSIX physics). */
+  /** POSIX-rooted store (staleness tests are POSIX physics). */
   private def freshStore(): StreamStore = freshStore(BackendHarness.PosixHarness)
 
   private def freshStore(h: BackendHarness): StreamStore = {
@@ -153,104 +155,6 @@ class GenerationSpec extends AnyFunSuite with LocalSpark {
     assert(fresh == Seq(3L, 4L, 5L))
   }
 
-  test("pre-generation (legacy) roots: reads fall back, writes migrate, compact flips") {
-    val st = freshStore()
-    st.catalog.createStream(Basin, "leg")
-    // fabricate a round-8 layout: loose parquet directly under the
-    // stream dir + a manifest whose JSON predates the generation field
-    val legacyDir = Paths.get(Layout.dataDir(st.root, Basin, "leg"))
-    Files.createDirectories(legacyDir)
-    DirectParquet.writeBatch(legacyDir.toString, Seq(
-      DirectParquet.Rec(0L, 1000L, Nil, "old0".getBytes, 12L),
-      DirectParquet.Rec(1L, 1000L, Nil, "old1".getBytes, 12L)))
-    Files.createDirectories(Layout.statePath(st.root, Basin, "leg").getParent)
-    Files.writeString(Layout.statePath(st.root, Basin, "leg"),
-      """{"tailSeq":2,"tailTs":1000,"fencingToken":"","trimPoint":0,""" +
-        """"deletionPending":false,"lastEpoch":-1,"reclaimedTo":0,""" +
-        """"version":1}""")
-    ManifestCache.invalidate(Layout.statePath(st.root, Basin, "leg"))
-    // READ fallback: legacy records visible with no gen dir on disk
-    assert(st.manifest(Basin, "leg").generation == 0L)
-    assert(bodies(st, "leg") == Seq("old0", "old1"))
-    // basin-wide scan also serves the legacy layout
-    assert(st.visibleBasin(Basin).where("stream = 'leg'").count() == 2L)
-    // WRITE migrates: after one append the loose files joined gen=0
-    st.append(Basin, "leg", AppendInput(Seq(env("new2"))), Some(2000L))
-    val loose = Files.list(legacyDir)
-    val looseLeft = try loose.iterator().asScala.count(p =>
-      p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      finally loose.close()
-    assert(looseLeft == 0, "legacy loose files must migrate into gen=0")
-    assert(bodies(st, "leg") == Seq("old0", "old1", "new2"))
-    // compact from the migrated layout flips the generation normally
-    st.append(Basin, "leg", AppendInput(Seq(TrimCommand(1))), Some(2100L))
-    st.compact(Basin, "leg")
-    assert(st.manifest(Basin, "leg").generation == 1L)
-    assert(bodies(st, "leg") == Seq("old1", "new2"))
-  }
-
-  test("mixed legacy/migrated basin: visibleBasin scans without conflicting-depth failure") {
-    val st = freshStore()
-    // stream A: normal (migrated) layout with gen= subdirectories
-    st.catalog.createStream(Basin, "mixA")
-    st.append(Basin, "mixA", AppendInput(Seq(env("a0"), env("a1"))), Some(1000L))
-    // stream B: fabricated legacy layout — loose parquet, no gen dir
-    st.catalog.createStream(Basin, "mixB")
-    val legacyB = Paths.get(Layout.dataDir(st.root, Basin, "mixB"))
-    Files.createDirectories(legacyB)
-    DirectParquet.writeBatch(legacyB.toString, Seq(
-      DirectParquet.Rec(0L, 1000L, Nil, "b0".getBytes, 10L)))
-    Files.createDirectories(Layout.statePath(st.root, Basin, "mixB").getParent)
-    Files.writeString(Layout.statePath(st.root, Basin, "mixB"),
-      """{"tailSeq":1,"tailTs":1000,"fencingToken":"","trimPoint":0,""" +
-        """"deletionPending":false,"lastEpoch":-1,"reclaimedTo":0,""" +
-        """"version":1}""")
-    ManifestCache.invalidate(Layout.statePath(st.root, Basin, "mixB"))
-    // the upgrade window the advice flagged: one stream at gen= depth,
-    // one still loose. The basin scan must eagerly finish B's
-    // migration instead of failing partition discovery.
-    val counts = st.visibleBasin(Basin)
-      .groupBy("stream").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts.get("mixA").contains(2L), s"got $counts")
-    assert(counts.get("mixB").contains(1L), s"got $counts")
-    // and B's loose files are now in gen=0
-    val loose = Files.list(legacyB)
-    val left = try loose.iterator().asScala.count(p =>
-      p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      finally loose.close()
-    assert(left == 0, "basin scan must have completed the migration")
-  }
-
-  test("interrupted migration (rows split between gen=0 and loose files) reads the union") {
-    val st = freshStore()
-    st.catalog.createStream(Basin, "split")
-    // fabricate the crash state migrateLegacyLocked can leave: file 0
-    // already moved into gen=0, file 1 still loose under the stream dir
-    val legacyDir = Paths.get(Layout.dataDir(st.root, Basin, "split"))
-    val gen0 = Paths.get(Layout.genDir(st.root, Basin, "split", 0L))
-    Files.createDirectories(gen0)
-    DirectParquet.writeBatch(gen0.toString, Seq(
-      DirectParquet.Rec(0L, 1000L, Nil, "moved0".getBytes, 12L)))
-    DirectParquet.writeBatch(legacyDir.toString, Seq(
-      DirectParquet.Rec(1L, 1000L, Nil, "loose1".getBytes, 12L)))
-    Files.createDirectories(Layout.statePath(st.root, Basin, "split").getParent)
-    Files.writeString(Layout.statePath(st.root, Basin, "split"),
-      """{"tailSeq":2,"tailTs":1000,"fencingToken":"","trimPoint":0,""" +
-        """"deletionPending":false,"lastEpoch":-1,"reclaimedTo":0,""" +
-        """"version":1}""")
-    ManifestCache.invalidate(Layout.statePath(st.root, Basin, "split"))
-    // both dirs are resolved (legacy first, so a racing move can never
-    // hide a file from the union)
-    assert(Layout.resolveDataDirs(st.root, Basin, "split", 0L).size == 2)
-    // batch read sees BOTH rows — the loose remainder is not invisible
-    assert(bodies(st, "split") == Seq("moved0", "loose1"))
-    // a later write commit finishes the migration and collapses the union
-    st.append(Basin, "split", AppendInput(Seq(env("new2"))), Some(2000L))
-    assert(Layout.resolveDataDirs(st.root, Basin, "split", 0L).size == 1)
-    assert(bodies(st, "split") == Seq("moved0", "loose1", "new2"))
-  }
-
   for (h <- BackendHarness.all)
   test(s"[${h.label}] visibleBasin masks out non-current generations (no duplicates inside grace)") {
     val st = freshStore(h)
@@ -262,6 +166,23 @@ class GenerationSpec extends AnyFunSuite with LocalSpark {
     val rows = st.visibleBasin(Basin).where("stream = 'vb'")
       .select("seq_num").collect().map(_.getLong(0)).sorted.toSeq
     assert(rows == Seq(2L, 3L, 4L, 5L, 6L), s"got $rows") // no gen-0 dupes
+  }
+
+  test("visibleBasin over a basin dir with no data left: empty, no analysis failure") {
+    // The only written stream is deleted and compacted away, which
+    // removes its stream dir but leaves the basin dir; a second,
+    // never-written stream keeps the catalog listing non-empty. The
+    // scan then discovers neither a `gen` nor a `stream` column.
+    val st = freshStore()
+    st.catalog.createStream(Basin, "gone")
+    st.catalog.createStream(Basin, "idle")
+    st.append(Basin, "gone", AppendInput(Seq(env("g0"))), Some(1000L))
+    st.deleteStream(Basin, "gone")
+    st.compact(Basin, "gone")
+    // fixture: the basin dir survives, empty (Files.list throws if gone)
+    val left = Files.list(Paths.get(st.root, "data", s"basin=$Basin"))
+    try assert(left.count() == 0L) finally left.close()
+    assert(st.visibleBasin(Basin).count() == 0L)
   }
 
   test("stale cached manifest + flip + EXPIRED grace: read re-plans onto the new gen, not empty") {

@@ -36,6 +36,9 @@ import LinModel._
   */
 class LinearizabilitySpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private val Basin = "test-basin"
   private val Stream = "lin"
 
@@ -493,7 +496,7 @@ class LinearizabilitySpec extends AnyFunSuite with LocalSpark {
   }
 
   test("teeth: a store that skips the fencing check is caught") {
-    val root = Files.createTempDirectory("graft-lin-bug").toString
+    val root = BackendHarness.tempDir("graft-lin-bug").toString
     val stores = newStores(root)
     val good = new ClientConn(stores(0))
     val buggy = new ClientConn(stores(1), skipFencing = true)
@@ -515,7 +518,7 @@ class LinearizabilitySpec extends AnyFunSuite with LocalSpark {
   }
 
   test("teeth: a store that skips the CAS check is caught") {
-    val root = Files.createTempDirectory("graft-lin-bug2").toString
+    val root = BackendHarness.tempDir("graft-lin-bug2").toString
     val stores = newStores(root)
     val good = new ClientConn(stores(0))
     val buggy = new ClientConn(stores(1), skipCas = true)
@@ -535,7 +538,7 @@ class LinearizabilitySpec extends AnyFunSuite with LocalSpark {
   }
 
   test("teeth: a fabricated out-of-thin-air ack is caught") {
-    val root = Files.createTempDirectory("graft-lin-bug3").toString
+    val root = BackendHarness.tempDir("graft-lin-bug3").toString
     val stores = newStores(root)
     val good = new ClientConn(stores(0))
     val events = scala.collection.mutable.ArrayBuffer.empty[LinEvent]

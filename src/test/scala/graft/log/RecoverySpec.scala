@@ -61,6 +61,9 @@ import LinModel._
   */
 class RecoverySpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private val Basin = "rec-basin"
   private val Stream = "rec"
 
@@ -362,7 +365,7 @@ class RecoverySpec extends AnyFunSuite with LocalSpark {
     // I/O error on a COMMITTED file, and silently skipping (or worse,
     // sweeping) it would drop committed records. tryStats must
     // propagate the error; only the magicless file reads as None.
-    val dir = java.nio.file.Files.createTempDirectory("graft-torncheck")
+    val dir = BackendHarness.tempDir("graft-torncheck")
     val withMagic = dir.resolve("fake-committed.parquet")
     java.nio.file.Files.write(withMagic,
       ("not a parquet file at all" + "PAR1").getBytes)

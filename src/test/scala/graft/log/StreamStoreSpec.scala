@@ -13,8 +13,11 @@ import graft.model._
   */
 class StreamStoreSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def freshStore(): StreamStore = {
-    val dir = Files.createTempDirectory("graft-store").toString
+    val dir = BackendHarness.PosixHarness.freshRoot("graft-store")
     val st = new StreamStore(spark, dir)
     // Fixture timestamps are tiny epoch values; infinite retention by
     // default so the age mask (T2) only applies where a test opts in.
@@ -935,7 +938,7 @@ class StreamStoreSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("two store instances on one root: concurrent appends never lose records (manifest CAS)") {
-    val dir = Files.createTempDirectory("graft-multi").toString
+    val dir = BackendHarness.tempDir("graft-multi").toString
     val st1 = new StreamStore(spark, dir)
     st1.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
