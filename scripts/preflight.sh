@@ -28,10 +28,11 @@ if grep -q "\[verify\].*failed" /tmp/preflight_verify.log; then
   echo "[preflight] QUERY FAILURES:"; grep "\[verify\].*failed" /tmp/preflight_verify.log; exit 1
 fi
 
-# temp roots of the store suites; BackendHarness.cleanup deletes them
+# temp roots of the suites on BackendHarness.tempDir; its cleanup()
+# deletes them from each suite's afterAll
 leaked_roots() {
   shopt -s nullglob
-  local dirs=(/tmp/graft-{gen,rec,lin,store}*)
+  local dirs=(/tmp/graft-{gen,rec,lin,store,http-records,session,prod,src,rafault,http-auth,catshard,clispec}*)
   shopt -u nullglob
   echo "${#dirs[@]}"
 }
@@ -42,7 +43,7 @@ if [[ "${1:-}" == "--full" ]]; then
   sbt -batch test >/tmp/preflight_test.log 2>&1 || {
     echo "[preflight] TESTS FAILED — tail of log:"; tail -40 /tmp/preflight_test.log; exit 1; }
   roots_after=$(leaked_roots)
-  echo "[preflight] full: /tmp/graft-{gen,rec,lin,store}* before $roots_before, after $roots_after"
+  echo "[preflight] full: harness temp roots in /tmp before $roots_before, after $roots_after"
   if (( roots_after > roots_before )); then
     echo "[preflight] the suite leaked $((roots_after - roots_before)) temp roots"; exit 1
   fi

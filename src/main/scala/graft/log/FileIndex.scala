@@ -153,8 +153,8 @@ object FileIndex {
 
   /** Manifest + listing of its generation dir, CONSISTENT under a
     * foreign compaction flip — the shared form of the guard used by
-    * every planner (StreamStore reads, the microbatch stream, the
-    * connector's batch scan): a flip (and a grace-expired sweep of the
+    * every planner (StreamStore reads and the connector's planner,
+    * GraftStreamSource.plan): a flip (and a grace-expired sweep of the
     * dir the manifest resolved to) landing between the manifest read
     * and the listing yields an empty or partial listing, which a
     * caller would serve as silently-missing rows, not an error.

@@ -2016,9 +2016,6 @@ private[graft] object HttpRecordsClient {
     c
   }
 
-  /** Like [[request]] but over java.net.http — HttpURLConnection
-    * refuses the PATCH method the reconfigure routes use. Returns
-    * (status, body, response headers). */
   /** JSON bodies require `Content-Type: application/json` server-side
     * (the strict Json extractor); the SDK-shaped helpers default it
     * when the caller sends a body without naming an encoding. */
@@ -2028,6 +2025,9 @@ private[graft] object HttpRecordsClient {
       headers :+ ("Content-Type" -> "application/json")
     else headers
 
+  /** Like [[request]] but over java.net.http — HttpURLConnection
+    * refuses the PATCH method the reconfigure routes use. Returns
+    * (status, body, response headers). */
   def requestAny(method: String, url: String,
                  headers0: Seq[(String, String)] = Nil,
                  body: Array[Byte] = null): (Int, String, java.net.http.HttpHeaders) = {
@@ -2043,17 +2043,27 @@ private[graft] object HttpRecordsClient {
     (resp.statusCode(), resp.body(), resp.headers())
   }
 
-  /** Like [[request]] but returns the RAW response bytes plus the
-    * Content-Encoding header — the unary compression layer's test
-    * surface (HttpURLConnection does not transparently inflate). */
-  def requestRaw(method: String, url: String,
-                 headers: Seq[(String, String)] = Nil,
-                 body: Array[Byte] = null): (Int, Array[Byte], Option[String]) = {
+  /** An opened connection: method, timeouts and request headers set,
+    * `headers` applied in order (a later pair overrides an earlier
+    * one of the same name). */
+  private def connect(method: String, url: String,
+                      headers: Seq[(String, String)]): java.net.HttpURLConnection = {
     val c = open(url)
     c.setRequestMethod(method)
     c.setConnectTimeout(5000)
     c.setReadTimeout(65000)
     headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
+    c
+  }
+
+  /** One unary exchange: send `body` (if any) and read the whole
+    * response, the error stream for a status >= 400. Returns the
+    * status, the response bytes and the connection, whose response
+    * headers stay readable. */
+  private def exchange(method: String, url: String,
+                       headers: Seq[(String, String)],
+                       body: Array[Byte]): (Int, Array[Byte], java.net.HttpURLConnection) = {
+    val c = connect(method, url, headers)
     if (body != null) {
       c.setDoOutput(true)
       c.setFixedLengthStreamingMode(body.length)
@@ -2064,6 +2074,16 @@ private[graft] object HttpRecordsClient {
     val is = if (code >= 400) c.getErrorStream else c.getInputStream
     val out = if (is == null) Array.emptyByteArray
               else try is.readAllBytes() finally is.close()
+    (code, out, c)
+  }
+
+  /** Like [[request]] but returns the RAW response bytes plus the
+    * Content-Encoding header — the unary compression layer's test
+    * surface (HttpURLConnection does not transparently inflate). */
+  def requestRaw(method: String, url: String,
+                 headers: Seq[(String, String)] = Nil,
+                 body: Array[Byte] = null): (Int, Array[Byte], Option[String]) = {
+    val (code, out, c) = exchange(method, url, headers, body)
     (code, out, Option(c.getHeaderField("Content-Encoding")))
   }
 
@@ -2072,87 +2092,25 @@ private[graft] object HttpRecordsClient {
   def requestBinary(method: String, url: String,
                     headers: Seq[(String, String)] = Nil,
                     body: Array[Byte] = null): (Int, Array[Byte], String) = {
-    val c = open(url)
-    c.setRequestMethod(method)
-    c.setConnectTimeout(5000)
-    c.setReadTimeout(65000)
-    headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
-    if (body != null) {
-      c.setDoOutput(true)
-      c.setFixedLengthStreamingMode(body.length)
-      val os = c.getOutputStream
-      try os.write(body) finally os.close()
-    }
-    val code = c.getResponseCode
-    val is = if (code >= 400) c.getErrorStream else c.getInputStream
-    val out = if (is == null) Array.emptyByteArray
-              else try is.readAllBytes() finally is.close()
+    val (code, out, c) = exchange(method, url, headers, body)
     (code, out, Option(c.getHeaderField("Content-Type")).getOrElse(""))
   }
 
   def request(method: String, url: String,
               headers0: Seq[(String, String)] = Nil,
               body: Array[Byte] = null): (Int, String) = {
-    val headers = withDefaultJsonCt(headers0, body)
-    val c = open(url)
-    c.setRequestMethod(method)
-    c.setConnectTimeout(5000)
-    c.setReadTimeout(65000)
-    headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
-    if (body != null) {
-      c.setDoOutput(true)
-      c.setFixedLengthStreamingMode(body.length)
-      val os = c.getOutputStream
-      try os.write(body) finally os.close()
-    }
-    val code = c.getResponseCode
-    val is = if (code >= 400) c.getErrorStream else c.getInputStream
-    val out = if (is == null) "" else
-      try new String(is.readAllBytes(), UTF_8) finally is.close()
-    (code, out)
+    val (code, out, _) = exchange(method, url, withDefaultJsonCt(headers0, body), body)
+    (code, new String(out, UTF_8))
   }
 
-  /** Consume an SSE response: parse events until `[DONE]`, an `error`
-    * event, EOF, or — when `stopAfter` is hit — CLOSE the connection
-    * mid-stream (the reconnect scenario). Returns the events seen. */
+  /** Consume an SSE response into a buffer: events until `[DONE]`, an
+    * `error` event, EOF, or — when `stopAfter` is hit — CLOSE the
+    * connection mid-stream (the reconnect scenario). Returns the
+    * events seen. */
   def readSse(url: String, headers: Seq[(String, String)] = Nil,
               stopAfter: Int = Int.MaxValue): Seq[SseEvent] = {
-    val c = open(url)
-    c.setRequestMethod("GET")
-    c.setConnectTimeout(5000)
-    c.setReadTimeout(65000)
-    c.setRequestProperty("Accept", "text/event-stream")
-    headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
-    require(c.getResponseCode == 200,
-      s"SSE open failed: HTTP ${c.getResponseCode}")
-    val in = new java.io.BufferedReader(
-      new java.io.InputStreamReader(c.getInputStream, UTF_8))
     val out = scala.collection.mutable.ArrayBuffer.empty[SseEvent]
-    try {
-      var event: Option[String] = None
-      var id: Option[String] = None
-      val data = new StringBuilder
-      var open = true
-      while (open) {
-        val line = in.readLine()
-        if (line == null) open = false
-        else if (line.isEmpty) {
-          if (data.nonEmpty || event.isDefined) {
-            out += SseEvent(event, id, data.toString)
-            if (data.toString == "[DONE]" || event.contains("error") ||
-                out.size >= stopAfter)
-              open = false // stopAfter: hang up mid-stream
-          }
-          event = None; id = None; data.clear()
-        }
-        else if (line.startsWith("event: ")) event = Some(line.drop(7))
-        else if (line.startsWith("id: ")) id = Some(line.drop(4))
-        else if (line.startsWith("data: ")) {
-          if (data.nonEmpty) data.append('\n')
-          data.append(line.drop(6))
-        }
-      }
-    } finally { in.close(); c.disconnect() }
+    streamSse(url, headers) { ev => out += ev; out.size < stopAfter }
     out.toSeq
   }
 
@@ -2173,13 +2131,7 @@ private[graft] object HttpRecordsClient {
   def s2sAppendSessionRaw(url: String, headers: Seq[(String, String)],
                           frames: Seq[Array[Byte]], gzip: Boolean,
                           contentType: String): Seq[S2sCodec.Frame] = {
-    val c = open(url)
-    c.setRequestMethod("POST")
-    c.setConnectTimeout(5000)
-    c.setReadTimeout(65000)
-    c.setRequestProperty("Content-Type", contentType)
-    if (gzip) c.setRequestProperty("Accept-Encoding", "gzip")
-    headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
+    val c = connect("POST", url, s2sHeaders(contentType, gzip) ++ headers)
     c.setDoOutput(true)
     c.setChunkedStreamingMode(0)
     val os = c.getOutputStream
@@ -2198,30 +2150,22 @@ private[graft] object HttpRecordsClient {
                      gzip: Boolean = false,
                      contentType: String = S2sCodec.ContentType)
       : Seq[S2sCodec.Frame] = {
-    val c = open(url)
-    c.setRequestMethod("GET")
-    c.setConnectTimeout(5000)
-    c.setReadTimeout(65000)
-    c.setRequestProperty("Content-Type", contentType)
-    if (gzip) c.setRequestProperty("Accept-Encoding", "gzip")
-    headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
+    val c = connect("GET", url, s2sHeaders(contentType, gzip) ++ headers)
     require(c.getResponseCode == 200,
       s"s2s read session open failed: HTTP ${c.getResponseCode}")
     drainFrames(c)
   }
 
-  /** Streaming SSE consumer for long-lived follows (the CLI's
-    * `tail -f`): invokes `onEvent` per event as it arrives instead of
-    * buffering the session like [[readSse]]. Ends on `[DONE]`, an
-    * `error` event, EOF, or `onEvent` returning false (hang up). */
+  private def s2sHeaders(contentType: String, gzip: Boolean): Seq[(String, String)] =
+    ("Content-Type" -> contentType) +: (if (gzip) Seq("Accept-Encoding" -> "gzip") else Nil)
+
+  /** The SSE parser, for long-lived follows (the CLI's `tail -f`):
+    * invokes `onEvent` per event as it arrives ([[readSse]] collects
+    * them). Ends on `[DONE]`, an `error` event, EOF, or `onEvent`
+    * returning false (hang up). */
   def streamSse(url: String, headers: Seq[(String, String)] = Nil)
                (onEvent: SseEvent => Boolean): Unit = {
-    val c = open(url)
-    c.setRequestMethod("GET")
-    c.setConnectTimeout(5000)
-    c.setReadTimeout(65000)
-    c.setRequestProperty("Accept", "text/event-stream")
-    headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
+    val c = connect("GET", url, ("Accept" -> "text/event-stream") +: headers)
     require(c.getResponseCode == 200,
       s"SSE open failed: HTTP ${c.getResponseCode}")
     val in = new java.io.BufferedReader(

@@ -2,8 +2,6 @@ package graft.log
 
 import java.util.concurrent.{Executors, TimeUnit}
 
-import graft.model._
-
 /** Background maintenance driver — the analog of the reference's
   * bgtasks runner (lite/src/backend/bgtasks/mod.rs:19-45): a fixed
   * cadence with jitter plus an explicit trigger, paged stream listing,
@@ -54,15 +52,12 @@ final class Maintenance(store: StreamStore,
             store.sweepOldGens(basin, e.name, nowMs = Some(now)))
           val work = page.items.filter { e =>
             val m = store.manifest(basin, e.name)
-            lazy val cutoff = store.catalog.streamConfig(basin, e.name)
-              .getOrElse(StreamConfig.SystemDefault).retentionOrDefault match {
-              case RetentionPolicy.Age(secs) => Some(now - secs * 1000)
-              case RetentionPolicy.Infinite => None
-            }
-            lazy val expiredFiles = cutoff.exists { c =>
-              FileIndex.listStats(
+            lazy val expiredFiles = {
+              val mask = Visibility.of(m, store.streamConfig(basin, e.name), Some(now))
+              // infinite retention expires nothing: skip the listing
+              mask.tsLo > Long.MinValue && FileIndex.listStats(
                 Layout.genDir(store.root, basin, e.name, m.generation))
-                .exists(_.maxTs < c)
+                .exists(mask.expired)
             }
             m.deletionPending || m.trimPoint > m.reclaimedTo || expiredFiles
           }

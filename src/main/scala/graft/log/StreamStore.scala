@@ -46,6 +46,17 @@ final class ManifestCasConflict(msg: String)
 
 object StreamStore {
 
+  /** The record schema of every data file, and of every read — the
+    * store's DataFrames and the `graft-stream` connector alike. */
+  val RecordSchema: StructType = StructType(Seq(
+    StructField("seq_num", LongType, nullable = false),
+    StructField("timestamp", LongType, nullable = false),
+    StructField("headers", ArrayType(StructType(Seq(
+      StructField("name", BinaryType), StructField("value", BinaryType)))),
+      nullable = true),
+    StructField("body", BinaryType, nullable = true),
+    StructField("metered_size", LongType, nullable = false)))
+
   /** One staged file written by a SUCCESSFUL task attempt, reported
     * back to the driver through the job's own result channel — the
     * committer-free equivalent of a task-commit message. The
@@ -296,15 +307,10 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     * — resolves to the same backend, like processes sharing a bucket. */
   val backend: StorageBackend = StorageBackend.forRoot(root)
 
-  /** Budget for the reader-side overlap guard's re-listing before the
-    * loud OverlappingDataObjects refusal. Time-based, not a try
-    * count: the loser's eager delete runs on the LOSING WRITER's
-    * thread, so under heavy CPU contention (a full test suite, a
-    * saturated executor) it can take seconds — a 1 s budget misread
-    * that as the persisting-overlap bug state and refused a read one
-    * more listing would have served. A REAL persisting overlap still
-    * fails, just later. Tests pinning the refusal itself lower this. */
-  @volatile private[log] var overlapRefusalMs: Long = 10000L
+  /** Budget of the read path's overlap guard ([[Visibility.disjoint]]
+    * before its OverlappingDataObjects refusal). Tests pinning the
+    * refusal itself lower it. */
+  @volatile private[log] var overlapRefusalMs: Long = Visibility.OverlapRefusalMs
 
   val catalog = new Catalog(root)
 
@@ -350,15 +356,6 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         .resolveSibling(Layout.escape(stream) + ".lock")
       backend.withWriterMutex(lockPath)(f)
     }
-
-  val recordSchema: StructType = StructType(Seq(
-    StructField("seq_num", LongType, nullable = false),
-    StructField("timestamp", LongType, nullable = false),
-    StructField("headers", ArrayType(StructType(Seq(
-      StructField("name", BinaryType), StructField("value", BinaryType)))),
-      nullable = true),
-    StructField("body", BinaryType, nullable = true),
-    StructField("metered_size", LongType, nullable = false)))
 
   /** Test seam: runs between the unary append's data-file write and its
     * manifest commit, so specs can inject the commit-time failures
@@ -1276,29 +1273,27 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     * consistentListing returns it, so a compaction's new files become
     * visible exactly when its manifest flip commits.
     */
-  private def rawData(basin: String, stream: String): DataFrame = {
-    val files = manifestAndFiles(basin, stream)._2.map(_.path)
-    if (files.nonEmpty)
-      spark.read.schema(recordSchema).parquet(files: _*)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], recordSchema)
-  }
+  private def rawData(basin: String, stream: String): DataFrame =
+    scan(manifestAndFiles(basin, stream)._2)
 
-  /** Visible rows: below tail, above trim point, within retention. */
+  /** The records of an explicit data file list. */
+  private def scan(files: Seq[FileIndex.FileStats]): DataFrame =
+    if (files.nonEmpty)
+      spark.read.schema(StreamStore.RecordSchema).parquet(files.map(_.path): _*)
+    else
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StreamStore.RecordSchema)
+
+  /** The stream's merged config (stream over basin over system). */
+  private[log] def streamConfig(basin: String, stream: String): StreamConfig =
+    catalog.streamConfig(basin, stream).getOrElse(StreamConfig.SystemDefault)
+
+  /** Visible rows: below tail, above trim point, within retention
+    * ([[Visibility]]). */
   def visible(basin: String, stream: String,
               nowMs: Option[Long] = None): DataFrame = {
-    val m = manifest(basin, stream)
-    val config = catalog.streamConfig(basin, stream)
-      .getOrElse(StreamConfig.SystemDefault)
-    var df = rawData(basin, stream)
-      .where(col("seq_num") < m.tailSeq && col("seq_num") >= m.trimPoint)
-    config.retentionOrDefault match {
-      case RetentionPolicy.Age(secs) =>
-        val cutoff = nowMs.getOrElse(System.currentTimeMillis()) - secs * 1000
-        df = df.where(col("timestamp") >= cutoff)
-      case RetentionPolicy.Infinite =>
-    }
-    df
+    val mask = Visibility.of(manifest(basin, stream),
+      streamConfig(basin, stream), nowMs)
+    rawData(basin, stream).where(mask.column)
   }
 
   /** R2 Timestamp start resolution: first visible seq with
@@ -1308,19 +1303,16 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     * decided by its footer stats. No Spark job on the resolution path.
     */
   private def resolveTimestampStart(files: Seq[FileIndex.FileStats], t: Long,
-                                    m: StreamManifest,
-                                    retCutoff: Option[Long]): Long = {
+                                    mask: Visibility.Mask): Long = {
+    val from = mask.narrow(tsStart = t)
     var res = -1L
-    val it = files.iterator.filter(st =>
-      st.maxTs >= t && st.maxSeq >= m.trimPoint && st.minSeq < m.tailSeq)
+    val it = files.iterator.filter(from.overlaps)
     while (res < 0 && it.hasNext) {
       FileIndex.scanRows(it.next().path) { r =>
-        val ok = r.ts >= t && r.seq >= m.trimPoint && r.seq < m.tailSeq &&
-          retCutoff.forall(r.ts >= _)
-        if (ok) { res = r.seq; false } else true
+        if (from.admits(r)) { res = r.seq; false } else true
       }
     }
-    if (res < 0) m.tailSeq else res
+    if (res < 0) mask.hi else res
   }
 
   /** R4 read limits: last admitted seq under count and metered-bytes
@@ -1337,8 +1329,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     * only budget-overlapping files. Returns -1 when nothing is
     * admitted.
     */
-  private def limitCutoff(files: Seq[FileIndex.FileStats], lo: Long, hi: Long,
-                          retCutoff: Option[Long], until: Option[Long],
+  private def limitCutoff(files: Seq[FileIndex.FileStats], mask: Visibility.Mask,
                           ignoreCommands: Boolean,
                           countBudget: Long, bytesBudget: Long): Long = {
     var cumBytes = 0L
@@ -1348,13 +1339,12 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     val it = files.iterator
     while (!done && it.hasNext) {
       val st = it.next()
-      if (st.minSeq >= hi || until.exists(u => st.minTs >= u)) {
+      if (st.minSeq >= mask.hi || st.minTs >= mask.tsHi) {
         done = true // beyond tail / past the until cut (ts monotone)
-      } else if (st.maxSeq < lo || retCutoff.exists(rc => st.maxTs < rc)) {
+      } else if (!mask.overlaps(st)) {
         // fully before the start or fully expired: contributes nothing
       } else {
-        val wholeFile = st.minSeq >= lo && st.maxSeq < hi &&
-          retCutoff.forall(rc => st.minTs >= rc) && until.forall(u => st.maxTs < u)
+        val wholeFile = mask.covers(st)
         val (fileRows, fileBytes) = if (wholeFile) {
           val s = FileIndex.sums(st.path)
           if (ignoreCommands) (st.rows - s.cmdRows, s.metered - s.cmdMetered)
@@ -1368,9 +1358,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         } else {
           // boundary or budget-crossing file: exact row walk
           FileIndex.scanRows(st.path) { r =>
-            val vis = r.seq >= lo && r.seq < hi &&
-              retCutoff.forall(r.ts >= _) && until.forall(r.ts < _) &&
-              !(ignoreCommands && r.isCommand)
+            val vis = mask.admits(r) && !(ignoreCommands && r.isCommand)
             if (!vis) true
             else if (cumRows < countBudget && cumBytes + r.metered <= bytesBudget) {
               cumRows += 1; cumBytes += r.metered; last = r.seq; true
@@ -1418,79 +1406,34 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         case Right(s) => s
         case Left(e) => return Left(s"EncryptionError: $e")
       }
-    val retCutoff: Option[Long] = config.retentionOrDefault match {
-      case RetentionPolicy.Age(secs) =>
-        Some(nowMs.getOrElse(System.currentTimeMillis()) - secs * 1000)
-      case RetentionPolicy.Infinite => None
+    val (m, files) = Visibility.disjoint(() => manifestAndFiles(basin, stream),
+        overlapRefusalMs, s"$basin/$stream") match {
+      case Right(listing) => listing
+      case Left(e) => return Left(e)
     }
-    var (m, files) = manifestAndFiles(basin, stream)
-    // Transient listed-loser window: between a winner's manifest
-    // commit and a definite loser's eager self-delete (object
-    // adapters, milliseconds), a listing can show BOTH objects
-    // covering one sub-tail seq range — serving them would duplicate
-    // seq_nums. The committed set always tiles disjointly, so overlap
-    // below the tail is provably not a committed state: re-list
-    // briefly (the loser's delete or the next writer's sweep resolves
-    // it), and fail LOUDLY if it persists rather than guess which
-    // object is real. (Same-range overlap above the tail is the
-    // normal in-flight-commit state and stays invisible via the tail
-    // clamp below.)
-    locally {
-      def overlapBelowTail(fs: Seq[FileIndex.FileStats], tail: Long): Boolean = {
-        val below = fs.filter(_.minSeq < tail).sortBy(f => (f.minSeq, f.path))
-        below.nonEmpty && below.zip(below.tail).exists {
-          case (a, b) => b.minSeq <= a.maxSeq
-        }
-      }
-      val overlapDeadline = System.nanoTime() + overlapRefusalMs * 1000000L
-      while (overlapBelowTail(files, m.tailSeq) &&
-             System.nanoTime() < overlapDeadline) {
-        Thread.sleep(25)
-        val fresh = manifestAndFiles(basin, stream)
-        m = fresh._1; files = fresh._2
-      }
-      if (overlapBelowTail(files, m.tailSeq))
-        return Left(s"OverlappingDataObjects: $basin/$stream lists data " +
-          "objects with overlapping seq ranges below the committed tail " +
-          "that did not resolve — refusing to serve duplicate seq_nums")
-    }
+    val mask = Visibility.of(m, config, nowMs)
 
     val start: Long = spec.start.from match {
       case ReadFrom.SeqNum(n) => n
       case ReadFrom.TailOffset(k) => math.max(m.tailSeq - k, 0L)
-      case ReadFrom.Timestamp(t) => resolveTimestampStart(files, t, m, retCutoff)
+      case ReadFrom.Timestamp(t) => resolveTimestampStart(files, t, mask)
     }
     val effStart = if (start > m.tailSeq) {
       if (spec.start.clamp) m.tailSeq
       else return Left(s"RANGE_NOT_SATISFIABLE: start=$start tail=${m.tailSeq}")
     } else start
-    val lo = math.max(effStart, m.trimPoint)
+    val from = mask.narrow(start = effStart,
+      until = spec.end.until.getOrElse(Long.MaxValue))
 
     val cut: Option[Long] =
       if (spec.end.limit.count.isEmpty && spec.end.limit.bytes.isEmpty) None
-      else Some(limitCutoff(files, lo, m.tailSeq, retCutoff, spec.end.until,
-        ignoreCommands,
+      else Some(limitCutoff(files, from, ignoreCommands,
         spec.end.limit.count.getOrElse(Long.MaxValue),
         spec.end.limit.bytes.getOrElse(Long.MaxValue)))
-    val hiCut = cut.fold(m.tailSeq)(c => math.min(m.tailSeq, c + 1)) // exclusive
+    val chosen = cut.fold(from)(c => from.narrow(end = c + 1)) // c + 1: exclusive
 
-    val chosen = files.filter(st =>
-      st.maxSeq >= lo && st.minSeq < hiCut &&
-        spec.end.until.forall(u => st.minTs < u) &&
-        retCutoff.forall(rc => st.maxTs >= rc))
-    var df =
-      if (chosen.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], recordSchema)
-      else spark.read.schema(recordSchema).parquet(chosen.map(_.path): _*)
-    df = df.where(col("seq_num") >= lo && col("seq_num") < hiCut)
-    retCutoff.foreach(rc => df = df.where(col("timestamp") >= rc))
-    spec.end.until.foreach(u => df = df.where(col("timestamp") < u))
-    if (ignoreCommands)
-      // NULL headers = an encrypted data envelope (never a command —
-      // commands are stored plaintext, encryption.rs:211-213); the
-      // null-safe guard keeps those rows
-      df = df.where(col("headers").isNull || !(size(col("headers")) === 1 &&
-        octet_length(col("headers")(0)("name")) === 0))
+    var df = scan(files.filter(chosen.overlaps)).where(chosen.column)
+    if (ignoreCommands) df = df.where(Visibility.notCommand)
     var out = df.orderBy("seq_num")
     // the budget walk above already bounds rows; clamp so a count above
     // 2^31 can't overflow into a negative limit
@@ -1755,8 +1698,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     while (more) {
       val page = catalog.listStreams(basin, startAfter = after)
       page.items.foreach { s =>
-        val doe = catalog.streamConfig(basin, s.name)
-          .getOrElse(StreamConfig.SystemDefault).deleteOnEmptyOrDefault
+        val doe = streamConfig(basin, s.name).deleteOnEmptyOrDefault
         if (doe.minAgeSeconds > 0) {
           val m = manifest(basin, s.name)
           val idle = now - m.tailTs >= doe.minAgeSeconds * 1000
@@ -1781,20 +1723,16 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     * job, partition pruning intact, no per-stream plan explosion.
     */
   def visibleBasin(basin: String, nowMs: Option[Long] = None): DataFrame = {
-    val now = nowMs.getOrElse(System.currentTimeMillis())
+    val now = Some(nowMs.getOrElse(System.currentTimeMillis()))
     val streams = catalog.listStreams(basin).items.map(_.name)
     val dir = Paths.get(s"$root/data/basin=$basin")
     def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      recordSchema.add("stream", StringType))
+      StreamStore.RecordSchema.add("stream", StringType))
     if (streams.isEmpty || !backend.dataExists(dir)) return empty
     val masks = streams.map { s =>
       val m = manifest(basin, s)
-      val cutoff = catalog.streamConfig(basin, s)
-        .getOrElse(StreamConfig.SystemDefault).retentionOrDefault match {
-        case RetentionPolicy.Age(secs) => now - secs * 1000
-        case RetentionPolicy.Infinite => Long.MinValue
-      }
-      (Layout.escape(s), s, m.tailSeq, m.trimPoint, cutoff, m.generation)
+      val mask = Visibility.of(m, streamConfig(basin, s), now)
+      (Layout.escape(s), s, mask.hi, mask.lo, mask.tsLo, m.generation)
     }
     val maskDf = spark.createDataFrame(masks)
       .toDF("stream", "stream_name", "tail", "trim", "cutoff", "cur_gen")
@@ -1802,7 +1740,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     // join keeps only each stream's CURRENT generation, so a rewrite's
     // predecessor files (alive within the grace window) never surface
     // as duplicates in a basin-wide scan.
-    val raw = spark.read.schema(recordSchema).parquet(dir.toString)
+    val raw = spark.read.schema(StreamStore.RecordSchema).parquet(dir.toString)
     // A POSIX basin dir can hold no data file at all: when its only
     // written stream was deleted and compacted away (deletePrefix of
     // the stream dir) while another, never-written stream is still
@@ -1825,30 +1763,19 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     * are decided by footer stats + cached per-file sums (one
     * projected scan per immutable file, EVER); only files straddling
     * the trim/tail/retention boundary are row-scanned, O(1) files per
-    * stream. The mask is exactly [[visible]]'s: seq in
-    * [trimPoint, tailSeq), timestamp >= the Age-retention cutoff —
+    * stream. The mask is exactly [[visible]]'s ([[Visibility.of]]) —
     * MetricsGaugeSpec pins equality against the Spark scan. */
   def storageBytesFast(basin: String, stream: String,
                        nowMs: Option[Long] = None): Long = {
     val (m, files) = manifestAndFiles(basin, stream)
-    val cutoff = catalog.streamConfig(basin, stream)
-      .getOrElse(StreamConfig.SystemDefault).retentionOrDefault match {
-      case RetentionPolicy.Age(secs) =>
-        nowMs.getOrElse(System.currentTimeMillis()) - secs * 1000
-      case RetentionPolicy.Infinite => Long.MinValue
-    }
-    val lo = m.trimPoint
-    val hi = m.tailSeq
+    val mask = Visibility.of(m, streamConfig(basin, stream), nowMs)
     var total = 0L
-    files.foreach { st =>
-      val invisible = st.maxSeq < lo || st.minSeq >= hi || st.maxTs < cutoff
-      val whole = !invisible &&
-        st.minSeq >= lo && st.maxSeq < hi && st.minTs >= cutoff
-      if (whole) total += FileIndex.sums(st.path).metered
-      else if (!invisible)
+    files.filter(mask.overlaps).foreach { st =>
+      if (mask.covers(st)) total += FileIndex.sums(st.path).metered
+      else
         FileIndex.scanRows(st.path) { r =>
-          if (r.seq >= lo && r.seq < hi && r.ts >= cutoff) total += r.metered
-          r.seq < hi // rows are seq-sorted: past tail, nothing more counts
+          if (mask.admits(r)) total += r.metered
+          r.seq < mask.hi // rows are seq-sorted: past tail, nothing more counts
         }
     }
     total
@@ -1877,26 +1804,16 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         coalesce(col("nr"), lit(0L)).as("n_records"))
   }
 
-  /** Delete trashed compaction generations older than the grace
-    * window, plus staging/temp dirs orphaned by crashed drivers
-    * (also called by the Maintenance tick).
+  /** Delete staging and scratch dirs orphaned by crashed drivers
+    * (also called by the Maintenance tick): `_stage` (ingest staging)
+    * and `_tmp` (compact scratch) entries are deleted by their owners
+    * on success or abort, so anything still there past the grace
+    * window belongs to a crashed driver. Old compaction generations
+    * are reclaimed by [[sweepOldGens]].
     */
   def sweepTrash(graceMs: Long = 10 * 60 * 1000L,
                  nowMs: Option[Long] = None): Unit = {
     val cutoff = nowMs.getOrElse(System.currentTimeMillis()) - graceMs
-    val trash = Paths.get(s"$root/_trash")
-    if (Files.exists(trash)) {
-      val s = Files.list(trash)
-      try s.iterator().asScala.foreach { p =>
-        val name = p.getFileName.toString
-        val ts = name.substring(name.lastIndexOf('-') + 1)
-        if (ts.nonEmpty && ts.forall(_.isDigit) && ts.toLong < cutoff)
-          deleteRecursively(p)
-      } finally s.close()
-    }
-    // _stage (ingest staging) and _tmp (compact scratch) entries are
-    // deleted by their owners on success or abort; anything still
-    // here past the grace window belongs to a crashed driver
     Seq(s"$root/_stage", s"$root/_tmp").map(Paths.get(_))
       .filter(Files.exists(_)).foreach { d =>
         val s = Files.list(d)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.log.{StreamStore, CipherAlgo, LocationInfo, Layout}
+import graft.log.{StreamStore, CipherAlgo, LocationInfo, Layout, Visibility}
 import graft.model._
 
 /** Deterministic engine-semantics checks exposed as oracle queries.
@@ -1186,7 +1186,7 @@ object EngineDemos {
           .option("stream", "cp").load()
           // R10: command records (single empty-name header) are
           // control-plane, not data
-          .where("NOT (size(headers) = 1 AND octet_length(headers[0].name) = 0)")
+          .where(Visibility.notCommand)
           .selectExpr("CAST(body AS STRING) AS body")
           .writeStream.format("parquet")
           .option("path", s"${st.root}/$sink")

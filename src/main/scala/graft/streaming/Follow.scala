@@ -3,28 +3,30 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.log.{Layout, StreamStore}
+import graft.log.{StreamStore, Visibility}
 
 /** R8/R9 — live tail ("follow") of a stream as a Structured Streaming
-  * query.
-  *
-  * The store's data directory IS the streaming source: every committed
-  * append lands as a new parquet file, and Spark's file stream source
-  * turns new-files-in-order into micro-batches. This matches the
-  * reference's follow semantics structurally (read.rs:183-240):
+  * query over the `graft-stream` connector
+  * (graft.streaming.source.GraftStreamSource), whose offsets are
+  * seq_nums. This matches the reference's follow semantics
+  * structurally (read.rs:183-240):
   * - catch-up vs live is unified — a follower that falls behind simply
   *   reads older files (the "lagged follower falls back to catch-up
   *   scan" rule, FOLLOWER_MAX_LAG, is inherent: there is no bounded
   *   broadcast buffer to overflow);
+  * - a follower sees exactly what a batch read would: only
+  *   manifest-committed (= durable) records, masked by the store's
+  *   visibility rule ([[graft.log.Visibility]]: trim point, tail,
+  *   retention);
   * - resumption (SSE Last-Event-ID, read.rs:49-65) is the source's
-  *   checkpointed file offset — restart the query with the same
+  *   checkpointed seq offset — restart the query with the same
   *   checkpointLocation and it continues exactly after the last
   *   delivered batch;
   * - heartbeats / wait budgets are serving-layer concerns around
   *   `StreamingQuery.awaitTermination(timeout)` + progress events.
   *
-  * At scale: one follower = one streaming query over one partition
-  * directory — no shuffle, no state store; fan-out to N followers is N
+  * At scale: one follower = one streaming query over one stream's
+  * files — no shuffle, no state store; fan-out to N followers is N
   * independent queries over the same immutable files.
   */
 object Follow {
@@ -53,29 +55,8 @@ object Follow {
     maxBytesPerTrigger.foreach(n =>
       reader = reader.option("maxBytesPerTrigger", n))
     var df = reader.load()
-    if (ignoreCommands)
-      // null-safe: NULL headers = encrypted data envelope, never a command
-      df = df.where(col("headers").isNull || !(size(col("headers")) === 1 &&
-        octet_length(col("headers")(0)("name")) === 0))
+    if (ignoreCommands) df = df.where(Visibility.notCommand)
     df
-  }
-
-  /** File-stream variant (plain Spark file source over the partition
-    * dir) — kept for comparison/fallback; may surface rows written but
-    * not yet manifest-committed during a crash window.
-    */
-  def followFiles(store: StreamStore, basin: String, stream: String,
-                  fromSeq: Long = 0L,
-                  maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    // pinned to the CURRENT generation at stream start; a compaction
-    // flip mid-stream is the known limitation of this fallback (the
-    // DSv2 source re-resolves the generation every plan)
-    val dir = Layout.genDir(store.root, basin, stream,
-      store.manifest(basin, stream).generation)
-    var reader = store.spark.readStream.schema(store.recordSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader = reader.option("maxFilesPerTrigger", n))
-    reader.parquet(dir).where(col("seq_num") >= fromSeq)
   }
 
   /** M1-style live metrics over the tail: per-minute ops/bytes with

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchT
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.log.{Catalog, Layout}
+import graft.log.{Catalog, StreamStore}
 import graft.model.StreamConfig
 
 /** Spark TableCatalog over a graft root: basins are namespaces,
@@ -24,11 +24,12 @@ import graft.model.StreamConfig
   * }}}
   *
   * Reads resolve through the same DSv2 table as
-  * `spark.read.format("graft-stream")` (manifest tail, trim fold,
-  * retention cutoff, footer-stat pruning). CREATE/DROP TABLE map to
-  * control-plane create/delete-stream; the record schema is fixed by
-  * the engine, so CREATE TABLE accepts only an empty or matching
-  * schema.
+  * `spark.read.format("graft-stream")`: one planner with footer-stat
+  * pruning, masked by [[graft.log.Visibility]] (manifest trim point and
+  * tail, retention cutoff) exactly like `StreamStore.read`.
+  * CREATE/DROP TABLE map to control-plane create/delete-stream; the
+  * record schema is fixed by the engine (`StreamStore.RecordSchema`),
+  * so CREATE TABLE accepts only an empty or matching schema.
   */
 class GraftCatalogPlugin extends TableCatalog with SupportsNamespaces {
 
@@ -112,7 +113,7 @@ class GraftCatalogPlugin extends TableCatalog with SupportsNamespaces {
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: JMap[String, String]): Table = {
-    if (schema.nonEmpty && schema != GraftStreamSource.Schema)
+    if (schema.nonEmpty && schema != StreamStore.RecordSchema)
       throw new IllegalArgumentException(
         "graft streams have a fixed record schema; omit the column list")
     val b = basinOf(ident.namespace)

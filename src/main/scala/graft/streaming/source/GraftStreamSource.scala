@@ -15,11 +15,11 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxRows, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.log.{Catalog, FileIndex, Layout, StreamManifest}
-import graft.model.{RetentionPolicy, StreamConfig}
+import graft.log.{Catalog, FileIndex, Layout, StreamManifest, StreamStore, Visibility}
+import graft.model.StreamConfig
 
 /** R8/R9 as a first-class connector: a DataSource V2 streaming source
   * whose OFFSETS ARE SEQ_NUMS (`cf. ReadSessionOutput`,
@@ -41,16 +41,17 @@ import graft.model.{RetentionPolicy, StreamConfig}
   *   per-file metered sums at file granularity, always admitting at
   *   least one file so the query can make progress.
   * - **Visibility**: trimmed-but-not-yet-compacted and
-  *   retention-expired records are masked exactly like the batch read
-  *   path (`StreamStore.visible`) — the reference's catch-up scan can
+  *   retention-expired records are masked by the store's own rule
+  *   ([[graft.log.Visibility]]) — the reference's catch-up scan can
   *   never return trimmed keys because they are deleted from the LSM
-  *   (read.rs:112-131); here trim/retention are logical masks applied
-  *   at plan time (trim point from the manifest, age cutoff from the
-  *   merged stream config) and inside the partition reader.
-  * - `planInputPartitions(start, end)` prunes data files by their
-  *   parquet footer min/max seq_num stats (cached on the driver) — the
+  *   (read.rs:112-131). The mask is built on the driver at plan time
+  *   and applied inside the partition reader.
+  * - Batch and micro-batch reads share one planner
+  *   ([[GraftStreamSource.plan]] over [start, end)): it prunes data
+  *   files by their parquet footer stats (cached on the driver) — the
   *   SRD prefix-scan analog; a catch-up of [1000, 2000) opens only the
-  *   files overlapping that range.
+  *   files overlapping that range — and, like `StreamStore.read`,
+  *   never serves two listed objects that overlap below the tail.
   * - Checkpointed offsets give exact SSE-style resumption
   *   (Last-Event-ID ⇒ restart at seq_num+1, records.rs:49-65).
   *
@@ -67,27 +68,57 @@ import graft.model.{RetentionPolicy, StreamConfig}
 class GraftStreamSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-stream"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftStreamSource.Schema
+    StreamStore.RecordSchema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table =
     new GraftStreamTable(properties.asScala.toMap)
 }
 
 object GraftStreamSource {
-  val Schema: StructType = StructType(Seq(
-    StructField("seq_num", LongType, nullable = false),
-    StructField("timestamp", LongType, nullable = false),
-    StructField("headers", ArrayType(StructType(Seq(
-      StructField("name", BinaryType), StructField("value", BinaryType)))),
-      nullable = true),
-    StructField("body", BinaryType, nullable = true),
-    StructField("metered_size", LongType, nullable = false)))
+
+  /** The connector's one planner: the visible records of seq range
+    * [start, end), narrowed by pushed timestamp bounds [tsLo, tsHi),
+    * as one input partition per overlapping data file.
+    *
+    * The listing is the manifest's generation dir through
+    * FileIndex.consistentListing (a foreign compaction flip mid-listing
+    * re-plans; without it a flip + grace-expired sweep between manifest
+    * read and listing would plan nothing while the offset range still
+    * advances), then Visibility.disjoint (a loser twin below the tail
+    * is re-listed away, or the plan fails). `config` is the merged
+    * stream config; `nowMs` pins the retention clock (wall clock when
+    * absent).
+    */
+  def plan(root: String, basin: String, stream: String,
+           start: Long, end: Long, tsLo: Long, tsHi: Long,
+           config: () => StreamConfig,
+           nowMs: Option[Long]): Array[InputPartition] = {
+    def manifest = Layout.readManifest(root, basin, stream).getOrElse(StreamManifest())
+    // an empty range exits before paying any listing or footer reads
+    // (pollers and startSeq/endSeq probes hit this a lot); the mask is
+    // re-derived below from the listing's final manifest
+    val m0 = manifest
+    if (Visibility.Mask(m0.trimPoint, m0.tailSeq, tsLo, tsHi).narrow(start, end).isEmpty)
+      return Array.empty
+    val listing = () => FileIndex.consistentListing(() => manifest, () => manifest,
+      m => Layout.genDir(root, basin, stream, m.generation))
+    val (m, files) = Visibility.disjoint(listing, Visibility.OverlapRefusalMs,
+        s"$basin/$stream") match {
+      case Right(l) => l
+      case Left(e) => throw new IllegalStateException(e)
+    }
+    val mask = Visibility.of(m, config(), nowMs).narrow(start, end, tsLo, tsHi)
+    if (mask.isEmpty) return Array.empty
+    files.filter(mask.overlaps)
+      .map(st => GraftInputPartition(st.path, mask))
+      .toArray[InputPartition]
+  }
 }
 
 final class GraftStreamTable(props: Map[String, String]) extends Table with SupportsRead {
   override def name(): String =
     s"graft-stream:${props.getOrElse("basin", "?")}/${props.getOrElse("stream", "?")}"
-  override def schema(): StructType = GraftStreamSource.Schema
+  override def schema(): StructType = StreamStore.RecordSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -96,10 +127,10 @@ final class GraftStreamTable(props: Map[String, String]) extends Table with Supp
 
 /** Accepts seq_num / timestamp range predicates for file pruning.
   * Everything is reported back as residual (Spark re-evaluates rows),
-  * but seq_num bounds additionally fold into the reader's exact
-  * [lo, end) mask and timestamp bounds prune whole files by their
-  * footer stats — a `WHERE seq_num >= x` SQL read of a 10 TB stream
-  * opens only the overlapping files, same as the engine read path.
+  * but the bounds also narrow the planner's visibility mask, so they
+  * prune whole files by their footer stats — a `WHERE seq_num >= x`
+  * SQL read of a 10 TB stream opens only the overlapping files, same
+  * as the engine read path.
   */
 final class GraftScanBuilder(props: Map[String, String])
     extends ScanBuilder
@@ -141,7 +172,7 @@ final class GraftScan(props: Map[String, String],
     extends Scan {
   private def opt(name: String): Option[String] =
     props.get(name.toLowerCase(java.util.Locale.ROOT)).orElse(props.get(name))
-  override def readSchema(): StructType = GraftStreamSource.Schema
+  override def readSchema(): StructType = StreamStore.RecordSchema
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new GraftMicroBatchStream(
       props("root"), props("basin"), props("stream"),
@@ -152,54 +183,20 @@ final class GraftScan(props: Map[String, String],
 
   /** Batch read over the same connector: `spark.read.format
     * ("graft-stream").option("root", …).option("basin", …)
-    * .option("stream", …)` plans a point-in-time snapshot with the
-    * same pruned file list and visibility masks as the streaming path
-    * (tail from the manifest, trim fold, retention cutoff), reusing
-    * the executor-side partition reader. Optional `startSeq` /
-    * `endSeq` bound the seq range.
+    * .option("stream", …)` plans a point-in-time snapshot through the
+    * same planner as the streaming path, reusing the executor-side
+    * partition reader. Optional `startSeq` / `endSeq` bound the seq
+    * range.
     */
   override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val root = props("root")
-      val basin = props("basin")
-      val stream = props("stream")
-      def mf = Layout.readManifest(root, basin, stream).getOrElse(StreamManifest())
-      // empty/fully-bounded ranges exit before paying any listing or
-      // footer reads (pollers and startSeq/endSeq probes hit this a
-      // lot); the bounds are re-derived below from the guard's final
-      // manifest, so this is purely a fast path
-      val m0 = mf
-      if (Seq(opt("endSeq").map(_.toLong).getOrElse(Long.MaxValue),
-          m0.tailSeq, seqHi).min <=
-          Seq(opt("startSeq").map(_.toLong).getOrElse(0L),
-            m0.trimPoint, seqLo).max)
-        return Array.empty
-      // same flip-races-listing guard as the microbatch path: re-plan
-      // if a foreign compaction moved the generation mid-listing
-      val (m, listed) = FileIndex.consistentListing(() => mf, () => mf,
-        mm => Layout.genDir(root, basin, stream, mm.generation))
-      val lo = Seq(opt("startSeq").map(_.toLong).getOrElse(0L),
-        m.trimPoint, seqLo).max
-      val e = Seq(opt("endSeq").map(_.toLong).getOrElse(Long.MaxValue),
-        m.tailSeq, seqHi).min
-      val cutoff = {
-        val catalog = new Catalog(root)
-        val ret = catalog.streamConfig(basin, stream)
-          .getOrElse(StreamConfig.SystemDefault).retentionOrDefault match {
-          case RetentionPolicy.Age(secs) =>
-            opt("nowMs").map(_.toLong)
-              .getOrElse(System.currentTimeMillis()) - secs * 1000
-          case RetentionPolicy.Infinite => Long.MinValue
-        }
-        math.max(ret, tsLo) // pushed timestamp lower bound prunes too
-      }
-      if (e <= lo) return Array.empty
-      listed
-        .filter(st => st.maxSeq >= lo && st.minSeq < e &&
-          st.maxTs >= cutoff && st.minTs < tsHi)
-        .map(st => GraftInputPartition(st.path, lo, e, cutoff))
-        .toArray[InputPartition]
-    }
+    override def planInputPartitions(): Array[InputPartition] =
+      GraftStreamSource.plan(props("root"), props("basin"), props("stream"),
+        math.max(opt("startSeq").map(_.toLong).getOrElse(0L), seqLo),
+        math.min(opt("endSeq").map(_.toLong).getOrElse(Long.MaxValue), seqHi),
+        tsLo, tsHi,
+        () => new Catalog(props("root")).streamConfig(props("basin"), props("stream"))
+          .getOrElse(StreamConfig.SystemDefault),
+        opt("nowMs").map(_.toLong))
     override def createReaderFactory(): PartitionReaderFactory =
       new GraftReaderFactory
   }
@@ -210,13 +207,11 @@ final case class GraftOffset(seq: Long) extends Offset {
   override def json(): String = s"""{"seq":$seq}"""
 }
 
-/** `lo` folds the plan-time trim point into the range start; `retCutoff`
-  * is the retention age cutoff (Long.MinValue when infinite) — both
-  * evaluated on the driver at plan time so every executor applies the
-  * same visibility mask the batch path would.
+/** One data file and the visibility mask built for it on the driver at
+  * plan time, so every executor applies the mask the engine read path
+  * would.
   */
-final case class GraftInputPartition(path: String, lo: Long, endSeq: Long,
-                                     retCutoff: Long)
+final case class GraftInputPartition(path: String, mask: Visibility.Mask)
     extends InputPartition
 
 /** @param nowMsOpt pinned "now" for the retention mask (a source
@@ -235,51 +230,21 @@ final class GraftMicroBatchStream(root: String, basin: String, stream: String,
   private def manifest: StreamManifest =
     Layout.readManifest(root, basin, stream).getOrElse(StreamManifest())
 
-  /** The one data dir a microbatch lists, resolved against the SAME
-    * manifest the caller already holds. A microbatch plans entirely
-    * within one generation, and a compaction flip between two plans
-    * is safe because the old generation's files survive in place for
-    * the grace window (Layout.genDir) — the in-flight batch keeps
-    * reading its planned paths while the next plan lists the new
-    * generation.
+  /** Merged stream config, cached with a short TTL: it changes only
+    * via reconfigure, and resolving it per micro-batch per follower
+    * multiplied catalog reads on the driver.
     */
-  private def dirFor(m: StreamManifest): String =
-    Layout.genDir(root, basin, stream, m.generation)
-
-  /** Manifest + listing via FileIndex.consistentListing (see its doc):
-    * without the guard, a flip + grace-expired sweep between manifest
-    * read and listing makes a microbatch silently read nothing while
-    * its offset range still advances. `manifest` here is already an
-    * uncached authoritative read.
-    */
-  private def manifestAndFiles(): (StreamManifest, Seq[FileIndex.FileStats]) =
-    FileIndex.consistentListing(() => manifest, () => manifest, dirFor)
-
-  /** Resolved retention policy, cached with a short TTL: it changes
-    * only via reconfigure, and resolving it per micro-batch per
-    * follower multiplied catalog reads on the driver.
-    */
-  private val RetentionTtlNanos = 2_000_000_000L
-  @volatile private var retPol: (Long, RetentionPolicy) = null
-  private def retentionPolicy(): RetentionPolicy = {
-    val c = retPol
+  private val ConfigTtlNanos = 2_000_000_000L
+  @volatile private var cachedConfig: (Long, StreamConfig) = null
+  private def streamConfig(): StreamConfig = {
+    val c = cachedConfig
     val t = System.nanoTime()
     if (c != null && t < c._1) c._2
     else {
-      val p = catalog.streamConfig(basin, stream)
-        .getOrElse(StreamConfig.SystemDefault).retentionOrDefault
-      retPol = (t + RetentionTtlNanos, p)
-      p
+      val cfg = catalog.streamConfig(basin, stream).getOrElse(StreamConfig.SystemDefault)
+      cachedConfig = (t + ConfigTtlNanos, cfg)
+      cfg
     }
-  }
-
-  /** Retention cutoff from the merged stream config (the same mask
-    * StreamStore.visible applies on the batch path), evaluated at the
-    * pinned `nowMs` option when present, else wall clock. */
-  private def retentionCutoff(): Long = retentionPolicy() match {
-    case RetentionPolicy.Age(secs) =>
-      nowMsOpt.getOrElse(System.currentTimeMillis()) - secs * 1000
-    case RetentionPolicy.Infinite => Long.MinValue
   }
 
   /** Offset at which bytes-capped admission first saw an empty file
@@ -336,7 +301,7 @@ final class GraftMicroBatchStream(root: String, basin: String, stream: String,
         var byteEnd = effStart
         var admitted = 0
         var done = false
-        val it = FileIndex.listStats(dirFor(m)).iterator
+        val it = FileIndex.listStats(Layout.genDir(root, basin, stream, m.generation)).iterator
           .filter(st => st.maxSeq >= effStart && st.minSeq < tail)
         while (!done && it.hasNext) {
           val st = it.next()
@@ -382,24 +347,15 @@ final class GraftMicroBatchStream(root: String, basin: String, stream: String,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[GraftOffset].seq
-    val e = end.asInstanceOf[GraftOffset].seq
-    val (m, files) = manifestAndFiles()
-    // visibility: the batch path (StreamStore.visible) masks trimmed and
-    // retention-expired rows; followers must agree (read.rs:112-131 —
-    // a catch-up can never see trimmed keys)
-    val lo = math.max(s, m.trimPoint)
-    val cutoff = retentionCutoff()
-    if (e <= lo) return Array.empty
-    // shared driver-side footer-stats cache (graft.log.FileIndex):
-    // catch-up ranges open only the files overlapping [lo, e) that can
-    // still hold unexpired rows
-    files
-      .filter(st => st.maxSeq >= lo && st.minSeq < e && st.maxTs >= cutoff)
-      .map(st => GraftInputPartition(st.path, lo, e, cutoff))
-      .toArray[InputPartition]
-  }
+  /** A microbatch plans entirely within one generation; a compaction
+    * flip between two plans is safe because the old generation's files
+    * survive in place for the grace window (Layout.genDir), so the
+    * in-flight batch keeps reading its planned paths while the next
+    * plan lists the new generation. */
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    GraftStreamSource.plan(root, basin, stream,
+      start.asInstanceOf[GraftOffset].seq, end.asInstanceOf[GraftOffset].seq,
+      Long.MinValue, Long.MaxValue, () => streamConfig(), nowMsOpt)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory
@@ -411,7 +367,7 @@ final class GraftReaderFactory extends PartitionReaderFactory {
 }
 
 /** Executor-side reader: parquet-mr Group API -> InternalRow, filtered
-  * to the [lo, endSeq) offset range and the plan-time retention cutoff.
+  * by the plan-time visibility mask.
   */
 final class GraftPartitionReader(part: GraftInputPartition)
     extends PartitionReader[InternalRow] {
@@ -427,7 +383,7 @@ final class GraftPartitionReader(part: GraftInputPartition)
     while (g != null) {
       val seq = g.getLong("seq_num", 0)
       val ts = g.getLong("timestamp", 0)
-      if (seq >= part.lo && seq < part.endSeq && ts >= part.retCutoff) {
+      if (part.mask.admits(seq, ts)) {
         val headers =
           if (g.getFieldRepetitionCount("headers") == 0) null
           else {

@@ -3,6 +3,7 @@ package graft.log
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
@@ -12,10 +13,13 @@ import graft.model._
   * streams: a single-stream mutation rewrites ONLY its own shard file,
   * never the whole catalog.
   */
-class CatalogShardSpec extends AnyFunSuite {
+class CatalogShardSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
 
   private def root(): String =
-    Files.createTempDirectory("graft-catshard").toString
+    BackendHarness.tempDir("graft-catshard").toString
 
   /** Snapshot every control-plane file as path -> (mtime, size). */
   private def snapshot(root: String): Map[String, (Object, Long)] = {
@@ -176,7 +180,7 @@ class CatalogShardSpec extends AnyFunSuite {
 
   test("symlinked root aliases share one control plane (locks + cache)") {
     val real = root()
-    val alias = Files.createTempDirectory("graft-alias").resolve("link")
+    val alias = BackendHarness.tempDir("graft-alias").resolve("link")
     Files.createSymbolicLink(alias, java.nio.file.Paths.get(real))
 
     val viaReal = new Catalog(real)
@@ -207,8 +211,8 @@ class CatalogShardSpec extends AnyFunSuite {
     // deepest-existing-ancestor resolution must give the same key the
     // real-path spelling gets, or the two instances split the control
     // plane
-    val realParent = Files.createTempDirectory("graft-anc")
-    val linkParent = Files.createTempDirectory("graft-ancl").resolve("p")
+    val realParent = BackendHarness.tempDir("graft-anc")
+    val linkParent = BackendHarness.tempDir("graft-ancl").resolve("p")
     Files.createSymbolicLink(linkParent, realParent)
     // the registry KEY itself must match — the filesystem aliasing
     // would make the behavioral assertions below pass even with split
@@ -297,7 +301,7 @@ class CatalogShardSpec extends AnyFunSuite {
   // ----------------------------------------------------------------
 
   private def objectRoot(): String = {
-    val r = Files.createTempDirectory("graft-catobj").toString
+    val r = BackendHarness.tempDir("graft-catobj").toString
     ObjectStoreBackend.install(r)
     r
   }

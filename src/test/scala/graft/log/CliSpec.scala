@@ -21,12 +21,12 @@ class CliSpec extends AnyFunSuite with LocalSpark {
 
   override def afterAll(): Unit = {
     HttpRecordsClient.clientTls(None)
-    super.afterAll()
+    try super.afterAll() finally BackendHarness.cleanup()
   }
 
   private def served(): (StreamStore, com.sun.net.httpserver.HttpServer, String) = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-clispec").toString)
+      BackendHarness.tempDir("graft-clispec").toString)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
@@ -67,7 +67,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
       val (rc1, _, e1) = cli("frobnicate", "--endpoint", ep)
       assert(rc1 == 1 && e1.contains("unknown command"))
       // missing endpoint resolves from nothing → actionable error
-      val cfg = Files.createTempDirectory("graft-clicfg")
+      val cfg = BackendHarness.tempDir("graft-clicfg")
         .resolve("none.json").toString
       val (rc2, _, e2) = cli("ls", "--config", cfg)
       assert(rc2 == 1 && e2.contains("no endpoint"))
@@ -79,7 +79,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
       // fencing-token mismatch on append: the 412 surfaces
       cli("create-stream", "s2://test-basin/fs", "--endpoint", ep)
       cli("fence", "s2://test-basin/fs", "tokA", "--endpoint", ep)
-      val in = Files.createTempFile("graft-cli", ".txt")
+      val in = Files.createTempFile(BackendHarness.tempDir("graft-cli"), "in", ".txt")
       Files.writeString(in, "x\n")
       val (rc4, _, e4) = cli("append", "s2://test-basin/fs",
         "-i", in.toString, "--fencing-token", "tokB", "--endpoint", ep)
@@ -88,7 +88,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("config file: set/get/ls/unset round-trip and endpoint resolution order") {
-    val cfg = Files.createTempDirectory("graft-clicfg")
+    val cfg = BackendHarness.tempDir("graft-clicfg")
       .resolve("config.json").toString
     val (_, server, ep) = served()
     try {
@@ -115,7 +115,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
     val (_, server, ep) = served()
     try {
       cli("create-stream", "s2://test-basin/js", "--endpoint", ep)
-      val in = Files.createTempFile("graft-cli", ".jsonl")
+      val in = Files.createTempFile(BackendHarness.tempDir("graft-cli"), "in", ".jsonl")
       Files.writeString(in,
         """{"headers":[["h1","v1"],["h2","v2"]],"body":"payload"}""" + "\n" +
           """{"body":"plain"}""" + "\n")
@@ -137,13 +137,13 @@ class CliSpec extends AnyFunSuite with LocalSpark {
     val (_, server, ep) = served()
     try {
       cli("create-stream", "s2://test-basin/tf", "--endpoint", ep)
-      val in = Files.createTempFile("graft-cli", ".txt")
+      val in = Files.createTempFile(BackendHarness.tempDir("graft-cli"), "in", ".txt")
       Files.writeString(in, "f0\nf1\n")
       cli("append", "s2://test-basin/tf", "-i", in.toString, "--endpoint", ep)
       // a record lands 150 ms AFTER the follow starts
       val late = new Thread(() => {
         Thread.sleep(150)
-        val in2 = Files.createTempFile("graft-cli", ".txt")
+        val in2 = Files.createTempFile(BackendHarness.tempDir("graft-cli"), "in", ".txt")
         Files.writeString(in2, "f2\n")
         cli("append", "s2://test-basin/tf", "-i", in2.toString,
           "--endpoint", ep)
@@ -174,7 +174,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
 
       // metrics: some traffic, then account + basin + stream reads
       cli("create-stream", "s2://test-basin/mx", "--endpoint", ep)
-      val in = Files.createTempFile("graft-cli", ".txt")
+      val in = Files.createTempFile(BackendHarness.tempDir("graft-cli"), "in", ".txt")
       Files.writeString(in, "m0\nm1\n")
       cli("append", "s2://test-basin/mx", "-i", in.toString, "--endpoint", ep)
       val (rcA, accJson, _) = cli("get-account-metrics", "--set", "account-ops",
@@ -188,7 +188,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
       assert(rcS == 0 && strJson.contains("storage"), strJson)
 
       // apply: first run creates, second run is all '=' (idempotent)
-      val spec = Files.createTempFile("graft-cli", ".json")
+      val spec = Files.createTempFile(BackendHarness.tempDir("graft-cli"), "in", ".json")
       Files.writeString(spec,
         """{"basins":[{"name":"apply-basin","streams":[
           |{"name":"s1"},{"name":"logs/x"}]}]}""".stripMargin)
@@ -230,7 +230,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
 
   test("--token and the config-file token authenticate against a bearer-required server") {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-cliauth").toString)
+      BackendHarness.tempDir("graft-cliauth").toString)
     st.catalog.createBasin("auth-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
@@ -249,7 +249,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
         "--endpoint", ep)
       assert(rc0 == 1 && e0.contains("401"), s"$rc0 $e0")
       // --token flag authorizes append + read
-      val in = Files.createTempFile("graft-cli", ".txt")
+      val in = Files.createTempFile(BackendHarness.tempDir("graft-cli"), "in", ".txt")
       Files.writeString(in, "secret\n")
       assert(cli("append", "s2://auth-basin/guarded", "-i", in.toString,
         "--token", "cli-rw", "--endpoint", ep)._1 == 0)
@@ -257,7 +257,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
         "--token", "cli-rw", "--endpoint", ep)
       assert(rc1 == 0 && out1.trim == "secret", s"$rc1 $out1")
       // token resolved from the config file works the same way
-      val cfg = Files.createTempDirectory("graft-cliauth")
+      val cfg = BackendHarness.tempDir("graft-cliauth")
         .resolve("config.json").toString
       cli("config", "set", "endpoint", ep, "--config", cfg)
       cli("config", "set", "token", "cli-rw", "--config", cfg)
@@ -269,7 +269,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
 
   test("--cacert pins a TLS server's cert; --insecure trusts a self-signed one") {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-clitls").toString)
+      BackendHarness.tempDir("graft-clitls").toString)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
@@ -278,7 +278,7 @@ class CliSpec extends AnyFunSuite with LocalSpark {
     val (server, ep) = HttpRecordsServer.start(st, Some(1000L),
       tls = Some(tls))
     try {
-      val pem = Files.createTempFile("graft-cli", ".pem")
+      val pem = Files.createTempFile(BackendHarness.tempDir("graft-cli"), "in", ".pem")
       Files.writeString(pem, tls.certPem)
       val (rc1, out1, _) = cli("ls", "--endpoint", ep,
         "--cacert", pem.toString)

@@ -1,6 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
@@ -17,12 +16,15 @@ import HttpRecordsClient.requestAny
   */
 class HttpAuthSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   /** Store with one scoped basin/stream and a guarded server; tokens
     * are seeded through the catalog (the operator bootstrap path —
     * token serving itself requires a token). */
   private def served(): (StreamStore, com.sun.net.httpserver.HttpServer, String) = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-http-auth").toString)
+      BackendHarness.tempDir("graft-http-auth").toString)
     st.catalog.createBasin("auth-basin-a1", BasinConfig(
       defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))

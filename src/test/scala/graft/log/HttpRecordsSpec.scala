@@ -1,6 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
 import java.util.Base64
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,10 +18,13 @@ import HttpRecordsClient._
   */
 class HttpRecordsSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def served(cipher: Option[CipherAlgo] = None)
       : (StreamStore, com.sun.net.httpserver.HttpServer, String) = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-http-records").toString)
+      BackendHarness.tempDir("graft-http-records").toString)
     st.catalog.createBasin("rec-basin",
       BasinConfig(
         defaultStreamConfig =
@@ -318,7 +320,7 @@ class HttpRecordsSpec extends AnyFunSuite with LocalSpark {
   test("/ping and /health probe the backend: 200 OK live, 503 with the " +
     "error once the storage endpoint is gone (db_status parity)") {
     val (objServer, objEp) = HttpObjectServer.start()
-    val root = Files.createTempDirectory("graft-http-health").toString
+    val root = BackendHarness.tempDir("graft-http-health").toString
     HttpObjectBackend.install(root, objEp)
     val st = new StreamStore(spark, root)
     st.catalog.createBasin("rec-basin", BasinConfig())
@@ -371,7 +373,7 @@ class HttpRecordsSpec extends AnyFunSuite with LocalSpark {
 
     // --no-cors: the layer is absent entirely (server.rs:222-223)
     val st2 = new StreamStore(spark,
-      Files.createTempDirectory("graft-http-nocors").toString)
+      BackendHarness.tempDir("graft-http-nocors").toString)
     st2.catalog.createBasin("rec-basin", BasinConfig())
     st2.catalog.createStream("rec-basin", "s")
     val (server2, ep2) = HttpRecordsServer.start(st2, Some(1000L), noCors = true)

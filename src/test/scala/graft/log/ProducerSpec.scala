@@ -16,9 +16,12 @@ import graft.model._
   */
 class ProducerSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def freshStore(): StreamStore = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-prod").toString)
+      BackendHarness.tempDir("graft-prod").toString)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))

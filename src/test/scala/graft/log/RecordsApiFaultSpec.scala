@@ -1,6 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
 
 import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,12 +35,15 @@ import graft.model._
   */
 class RecordsApiFaultSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def utf8(s: String) = s.getBytes("UTF-8")
 
   /** store + real server + fault proxy in front of it. */
   private def harness(): (StreamStore, com.sun.net.httpserver.HttpServer,
       com.sun.net.httpserver.HttpServer, String, NetFaultProxy.Controls) = {
-    val st = new StreamStore(spark, Files.createTempDirectory("graft-rafault").toString)
+    val st = new StreamStore(spark, BackendHarness.tempDir("graft-rafault").toString)
     st.catalog.createBasin("fault-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
 
-import graft.log.StreamStore
+import graft.log.{BackendHarness, DirectParquet, Layout, StreamStore}
 import graft.model._
 
 /** The custom DataSource V2 micro-batch source: seq_num offsets,
@@ -13,11 +13,14 @@ import graft.model._
   */
 class GraftSourceSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def env(body: String): EnvelopeRecord =
     EnvelopeRecord(Seq(Header.utf8("h", "v")), body.getBytes)
 
   test("seq offsets: catch-up from startSeq, live batches, only durable rows") {
-    val dir = Files.createTempDirectory("graft-src").toString
+    val dir = BackendHarness.tempDir("graft-src").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -56,7 +59,7 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
     // batch read path uses — live micro-batches decrypt in-plan,
     // never on the driver, and a wrong key fails authentication
     // instead of delivering garbage
-    val dir = Files.createTempDirectory("graft-src-enc").toString
+    val dir = BackendHarness.tempDir("graft-src-enc").toString
     val st = new StreamStore(spark, dir)
     val key = Array.fill(32)(0x77.toByte)
     st.catalog.createBasin("enc-src-basin", BasinConfig(
@@ -104,7 +107,7 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("checkpoint resumption continues exactly after the last offset (R9)") {
-    val dir = Files.createTempDirectory("graft-src2").toString
+    val dir = BackendHarness.tempDir("graft-src2").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -131,7 +134,7 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("admission control: maxRecordsPerTrigger bounds each micro-batch") {
-    val dir = Files.createTempDirectory("graft-src3").toString
+    val dir = BackendHarness.tempDir("graft-src3").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -159,7 +162,7 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("admission control: maxBytesPerTrigger admits whole files up to the budget") {
-    val dir = Files.createTempDirectory("graft-src4").toString
+    val dir = BackendHarness.tempDir("graft-src4").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -184,7 +187,7 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("visibility: follow-from-0 delivers nothing below the trim point") {
-    val dir = Files.createTempDirectory("graft-src5").toString
+    val dir = BackendHarness.tempDir("graft-src5").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -213,7 +216,7 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("visibility: retention-expired records are masked from followers (pinned clock)") {
-    val dir = Files.createTempDirectory("graft-src6").toString
+    val dir = BackendHarness.tempDir("graft-src6").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin")
     st.catalog.createStream("test-basin", "s",
@@ -248,7 +251,7 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("batch read through the connector equals the engine read path") {
-    val dir = Files.createTempDirectory("graft-src8").toString
+    val dir = BackendHarness.tempDir("graft-src8").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -257,28 +260,107 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
     st.append("test-basin", "s",
       AppendInput(Seq(env("a"), env("b"), env("c"), env("d"), env("e"))), Some(1000L))
     st.append("test-basin", "s", AppendInput(Seq(TrimCommand(2L))), Some(2000L))
+    st.append("test-basin", "s", AppendInput(Seq(env("f"), env("g"))), Some(3000L))
+
+    def connector(stream: String, opts: (String, String)*) =
+      opts.foldLeft(spark.read.format("graft-stream")
+        .option("root", dir).option("basin", "test-basin")
+        .option("stream", stream)) { case (r, (k, v)) => r.option(k, v) }
+        .load()
+    def seqs(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("seq_num").collect().map(_.getLong(0)).toSeq.sorted
+    def engine(stream: String, spec: ReadSpec, nowMs: Option[Long] = None,
+               ignoreCommands: Boolean = false) =
+      st.read("test-basin", stream, spec, ignoreCommands, nowMs).toOption.get
+    def metered(df: org.apache.spark.sql.DataFrame): Long =
+      df.selectExpr("coalesce(sum(metered_size), 0L)").first().getLong(0)
+    val fromZero = ReadSpec(ReadStart(ReadFrom.SeqNum(0)))
 
     // same connector, batch: spark.read instead of readStream
-    val got = spark.read.format("graft-stream")
-      .option("root", dir).option("basin", "test-basin").option("stream", "s")
-      .load()
-      .select("seq_num").collect().map(_.getLong(0)).toSeq.sorted
-    val engine = st.read("test-basin", "s",
-        ReadSpec(ReadStart(ReadFrom.SeqNum(0)))).toOption.get
-      .select("seq_num").collect().map(_.getLong(0)).toSeq.sorted
-    assert(got == engine && got == Seq(2L, 3L, 4L, 5L)) // trim masked
+    val got = seqs(connector("s"))
+    assert(got == seqs(engine("s", fromZero)) && got == Seq(2L, 3L, 4L, 5L, 6L, 7L),
+      s"trim not masked alike: $got") // trim masked
+    assert(got == seqs(st.visible("test-basin", "s")))
+    assert(st.storageBytesFast("test-basin", "s") ==
+      metered(st.visible("test-basin", "s")))
 
     // explicit seq bounds prune
-    val bounded = spark.read.format("graft-stream")
+    assert(seqs(connector("s", "startSeq" -> "3", "endSeq" -> "5")) == Seq(3L, 4L))
+
+    // an `until` bound: the engine stops before the first record at or
+    // past it; the connector and visible see the same rows by predicate
+    val until = seqs(engine("s",
+      fromZero.copy(end = ReadEnd(until = Some(3000L)))))
+    assert(until == Seq(2L, 3L, 4L, 5L), s"until: $until")
+    assert(seqs(connector("s").where(col("timestamp") < 3000L)) == until)
+    assert(seqs(st.visible("test-basin", "s").where(col("timestamp") < 3000L)) == until)
+
+    // a timestamp start: the first visible record at or past it
+    val fromTs = seqs(engine("s", ReadSpec(ReadStart(ReadFrom.Timestamp(2000L)))))
+    assert(fromTs == Seq(5L, 6L, 7L), s"timestamp start: $fromTs")
+    assert(seqs(connector("s").where(col("timestamp") >= 2000L)) == fromTs)
+    assert(seqs(st.visible("test-basin", "s").where(col("timestamp") >= 2000L)) == fromTs)
+
+    // ignoreCommands: the follower and the engine drop the same rows
+    val noCmds = seqs(engine("s", fromZero, ignoreCommands = true))
+    assert(noCmds == Seq(2L, 3L, 4L, 6L, 7L), s"ignoreCommands: $noCmds")
+    val q = Follow.follow(st, "test-basin", "s", ignoreCommands = true)
+      .writeStream.format("memory").queryName("gsrc_eq_cmds")
+      .option("checkpointLocation", s"$dir/_ckpt_cmds")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(seqs(spark.table("gsrc_eq_cmds")) == noCmds)
+    } finally q.stop()
+
+    // an Age retention at a pinned clock: records at ts 1000 are expired,
+    // records at the pinned time are inside the hour
+    val pinned = 4000000000L
+    st.catalog.createStream("test-basin", "r",
+      StreamConfig(retentionPolicy = Some(RetentionPolicy.Age(3600))))
+    st.append("test-basin", "r", AppendInput(Seq(env("old1"), env("old2"))), Some(1000L))
+    st.append("test-basin", "r",
+      AppendInput(Seq(env("new1"), env("new1b"))), Some(pinned - 1000L))
+    st.append("test-basin", "r", AppendInput(Seq(env("new2"))), Some(pinned))
+    val live = seqs(connector("r", "nowMs" -> pinned.toString))
+    assert(live == Seq(2L, 3L, 4L), s"retention: $live")
+    assert(seqs(engine("r", fromZero, Some(pinned))) == live)
+    assert(seqs(st.visible("test-basin", "r", Some(pinned))) == live)
+    assert(st.storageBytesFast("test-basin", "r", Some(pinned)) ==
+      metered(st.visible("test-basin", "r", Some(pinned))))
+    assert(st.storageBytesFast("test-basin", "r", Some(pinned)) ==
+      metered(connector("r", "nowMs" -> pinned.toString)))
+  }
+
+  test("connector overlap guard: a duplicate-range twin below the tail is " +
+    "never served; the planner re-lists until it vanishes") {
+    val dir = BackendHarness.tempDir("graft-src10").toString
+    val st = new StreamStore(spark, dir)
+    st.catalog.createBasin("test-basin",
+      BasinConfig(defaultStreamConfig =
+        StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
+    st.catalog.createStream("test-basin", "s")
+    assert(st.append("test-basin", "s", AppendInput(Seq(env("real"))), Some(1000L)).isRight)
+    val genDir = Paths.get(Layout.genDir(st.root, "test-basin", "s",
+      st.manifest("test-basin", "s").generation))
+    // a loser twin covering the SAME committed range with a different
+    // body, published whole into the generation dir
+    val scratch = BackendHarness.tempDir("graft-src10-twin")
+    val f = Paths.get(DirectParquet.writeBatch(scratch.toString,
+      Seq(DirectParquet.Rec(0L, 999L, Nil, "ghost".getBytes("UTF-8"), 13L))))
+    val ghost = Files.move(f, genDir.resolve(f.getFileName))
+    val deleter = new Thread(() => { Thread.sleep(200); Files.delete(ghost) })
+    deleter.start()
+    val rows = try spark.read.format("graft-stream")
       .option("root", dir).option("basin", "test-basin").option("stream", "s")
-      .option("startSeq", "3").option("endSeq", "5")
-      .load()
-      .select("seq_num").collect().map(_.getLong(0)).toSeq.sorted
-    assert(bounded == Seq(3L, 4L))
+      .load().selectExpr("seq_num", "CAST(body AS STRING)")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    finally deleter.join()
+    assert(rows == Seq((0L, "real")), s"connector served a transient twin: $rows")
   }
 
   test("batch read pushes seq_num/timestamp predicates into file pruning") {
-    val dir = Files.createTempDirectory("graft-src9").toString
+    val dir = BackendHarness.tempDir("graft-src9").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -312,7 +394,7 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
     import graft.streaming.source.{GraftMicroBatchStream, GraftOffset}
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
 
-    val dir = Files.createTempDirectory("graft-src7").toString
+    val dir = BackendHarness.tempDir("graft-src7").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =

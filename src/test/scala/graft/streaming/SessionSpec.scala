@@ -7,7 +7,7 @@ import scala.concurrent.duration._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
 
-import graft.log.{AppendSession, StreamStore}
+import graft.log.{AppendSession, BackendHarness, StreamStore}
 import graft.model._
 
 /** A8 poison/ordered-ack + R8 wait-budget/heartbeat session tests,
@@ -17,9 +17,12 @@ import graft.model._
   */
 class SessionSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def freshStore(): StreamStore = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-session").toString)
+      BackendHarness.tempDir("graft-session").toString)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
