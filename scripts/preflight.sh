@@ -32,7 +32,8 @@ fi
 # deletes them from each suite's afterAll
 leaked_roots() {
   shopt -s nullglob
-  local dirs=(/tmp/graft-{gen,rec,lin,store,http-records,session,prod,src,rafault,http-auth,catshard,clispec}*)
+  local dirs=(/tmp/graft-{gen,rec,lin,store,http-records,session,prod,src,rafault,http-auth,catshard,clispec}*
+              /tmp/graft-{netfault,nf,http-catalog,group,det,http-account,maint,gauge,tls,pem,staged,follow,singest,ord}*)
   shopt -u nullglob
   echo "${#dirs[@]}"
 }

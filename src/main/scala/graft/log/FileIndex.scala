@@ -6,10 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.parquet.schema.MessageType
 
 /** Driver-side per-file statistics over a stream's parquet files — the
@@ -37,9 +40,10 @@ import org.apache.parquet.schema.MessageType
   */
 object FileIndex {
 
-  /** Footer-derived stats of one immutable data file. */
+  /** Footer-derived stats of one immutable data file; `bytes` is its
+    * length on disk (read planning packs files into partitions by it). */
   final case class FileStats(path: String, minSeq: Long, maxSeq: Long,
-                             minTs: Long, maxTs: Long, rows: Long)
+                             minTs: Long, maxTs: Long, rows: Long, bytes: Long)
 
   /** A row projected to read-planning columns. */
   final case class RowLite(seq: Long, ts: Long, metered: Long, isCommand: Boolean)
@@ -51,8 +55,26 @@ object FileIndex {
     * `new Configuration()` serialized the 10k-stream commit's footer
     * validation (measured: cp10k ingest 6 s -> 21 s when
     * selectStagedFiles started statting every staged file). The
-    * object is read-only here, safe to share across threads. */
+    * object is read-only here, safe to share across threads; the
+    * ordered scan's partition reader opens its files with it too. */
   private val sharedConf = new Configuration()
+
+  /** A record reader of one parquet file under `conf`, returning only
+    * the rows `filter` passes. Built on a HadoopInputFile, not
+    * `ParquetReader.builder(support, path)`: that builder constructs
+    * and parses a fresh Configuration per file before `withConf` can
+    * replace it — measured 11–22 ms against 0.8–3.8 ms per one-record
+    * file, 300 files in a row on a 4-vCPU VM. */
+  private[log] def groupReader(path: String,
+                               filter: FilterCompat.Filter = FilterCompat.NOOP,
+                               conf: Configuration = sharedConf): ParquetReader[Group] =
+    new GroupReaderBuilder(HadoopInputFile.fromPath(new Path(path), conf))
+      .withFilter(filter).build()
+
+  private final class GroupReaderBuilder(file: InputFile)
+      extends ParquetReader.Builder[Group](file) {
+    override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+  }
 
   /** Exact per-file aggregates for limit planning (computed by one
     * projected scan per immutable file, ever). */
@@ -140,7 +162,8 @@ object FileIndex {
       def mx(name: String) = colStats(name)
         .map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue()).max
       FileStats(path, mn("seq_num"), mx("seq_num"),
-        mn("timestamp"), mx("timestamp"), blocks.map(_.getRowCount).sum)
+        mn("timestamp"), mx("timestamp"), blocks.map(_.getRowCount).sum,
+        in.getLength)
     } finally reader.close()
   })
 
@@ -186,10 +209,12 @@ object FileIndex {
   def listStats(dir: String): Seq[FileStats] = statsFor(posixLister(dir))
 
   /** Projected driver-side row scan in file order (= seq order; files
-    * are written sorted). `f` returns false to stop early. Reads only
-    * the planning columns (+ headers, needed for command detection).
+    * are written sorted) over the rows `filter` passes. `f` returns
+    * false to stop early. Reads only the planning columns (+ headers,
+    * needed for command detection).
     */
-  def scanRows(path: String)(f: RowLite => Boolean): Unit = {
+  def scanRows(path: String, filter: FilterCompat.Filter = FilterCompat.NOOP)
+              (f: RowLite => Boolean): Unit = {
     // copy-constructor: this scan SETS the projection key, so it needs
     // its own instance, but copying skips the global resource parse
     val conf = new Configuration(sharedConf)
@@ -202,8 +227,7 @@ object FileIndex {
     val projection = new MessageType(fileSchema.getName,
       fileSchema.getFields.asScala.filter(fd => keep(fd.getName)).asJava)
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val reader = ParquetReader.builder(new GroupReadSupport(), new Path(path))
-      .withConf(conf).build()
+    val reader = groupReader(path, filter, conf)
     try {
       var g = reader.read()
       var go = true

@@ -183,13 +183,14 @@ object StreamStore {
   /** Stats of one staged file for the commit gate: from the embedded
     * name when present (plus the cheap tail-magic check — a torn dead
     * attempt still gets dropped), else the authoritative footer read.
-    * None = provably torn. */
+    * The name carries no timestamps or size; the gate reads neither,
+    * so they are 0. None = provably torn. */
   private[log] def stagedStats(path: String): Option[FileIndex.FileStats] =
     path match {
       case StagedNameStats(s, e, r) =>
         FileIndex.tailIntact(path) match {
           case Some(true) =>
-            Some(FileIndex.FileStats(path, s.toLong, e.toLong, 0L, 0L, r.toLong))
+            Some(FileIndex.FileStats(path, s.toLong, e.toLong, 0L, 0L, r.toLong, 0L))
           case Some(false) => None // torn attempt leavings
           case None => FileIndex.tryStats(path) // undetermined: be loud
         }
@@ -253,7 +254,7 @@ object StreamStore {
             throw new IllegalStateException(
               s"staged file $p was reported complete by its task but " +
                 "lacks the parquet tail magic — torn staged write")
-          Some((FileIndex.FileStats(p, r.minSeq, r.maxSeq, 0L, 0L, r.rows), true))
+          Some((FileIndex.FileStats(p, r.minSeq, r.maxSeq, 0L, 0L, r.rows, 0L), true))
         case None => stagedStats(p).map((_, false))
       }
     }.sortBy { case (s, rep) => (s.minSeq, !rep, s.path) }
@@ -1273,15 +1274,13 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     * consistentListing returns it, so a compaction's new files become
     * visible exactly when its manifest flip commits.
     */
-  private def rawData(basin: String, stream: String): DataFrame =
-    scan(manifestAndFiles(basin, stream)._2)
-
-  /** The records of an explicit data file list. */
-  private def scan(files: Seq[FileIndex.FileStats]): DataFrame =
+  private def rawData(basin: String, stream: String): DataFrame = {
+    val files = manifestAndFiles(basin, stream)._2
     if (files.nonEmpty)
       spark.read.schema(StreamStore.RecordSchema).parquet(files.map(_.path): _*)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StreamStore.RecordSchema)
+  }
 
   /** The stream's merged config (stream over basin over system). */
   private[log] def streamConfig(basin: String, stream: String): StreamConfig =
@@ -1308,7 +1307,8 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     var res = -1L
     val it = files.iterator.filter(from.overlaps)
     while (res < 0 && it.hasNext) {
-      FileIndex.scanRows(it.next().path) { r =>
+      val st = it.next()
+      FileIndex.scanRows(st.path, from.parquetFilter(st)) { r =>
         if (from.admits(r)) { res = r.seq; false } else true
       }
     }
@@ -1357,7 +1357,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
           last = st.maxSeq
         } else {
           // boundary or budget-crossing file: exact row walk
-          FileIndex.scanRows(st.path) { r =>
+          FileIndex.scanRows(st.path, mask.parquetFilter(st)) { r =>
             val vis = mask.admits(r) && !(ignoreCommands && r.isCommand)
             if (!vis) true
             else if (cumRows < countBudget && cumBytes + r.metered <= bytesBudget) {
@@ -1379,13 +1379,26 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     * interval on the driver from parquet footer stats (+ cached sums),
     * then ONLY budget-overlapping files enter the plan — a bytes-limited
     * read from seq 0 of a 10 TB stream scans ~budget bytes, not 10 TB.
-    * No window function anywhere in the plan.
+    * The cut is the exact last admitted seq, so no row limit follows.
     *
-    * The final orderBy is a sort of the BOUNDED result (limited reads
-    * are ≤ budget by construction). For an unbounded ordered catch-up
-    * of a huge range, use the streaming source (Follow /
-    * GraftStreamSource): it delivers seq-ordered batches from the
-    * sorted, disjoint files directly — no sort, no shuffle.
+    * Ordering contract: the planned files tile the seq range without
+    * overlap ([[Visibility.disjoint]]) and each is written in seq
+    * order, so the read is an ordered scan, as s2's catch-up is an
+    * ordered range scan over sorted keys (read.rs:110-182): runs of
+    * consecutive files become the DataFrame's partitions, in seq
+    * order ([[OrderedScan.partitions]]), read by the partition reader
+    * the connector shares, which applies the visibility mask, stops at
+    * the range's end and fails the task on any seq regression. The
+    * plan holds no sort, no exchange and no window; `collect`,
+    * `toLocalIterator` and `take` return records in seq order.
+    * Narrow transformations (select, where, the decrypt below) keep
+    * it. A caller who adds a wide one (join, aggregate, repartition)
+    * must sort again.
+    *
+    * A13 read-side decryption is a codegen'd plan expression
+    * (record_decrypt; the reference decrypts in the session loop,
+    * read.rs:74-91) on top of the scan and the command filter, so it
+    * runs once per served record, never for masked or cut rows.
     */
   def read(basin: String, stream: String, spec: ReadSpec,
            ignoreCommands: Boolean = false,
@@ -1432,23 +1445,9 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         spec.end.limit.bytes.getOrElse(Long.MaxValue)))
     val chosen = cut.fold(from)(c => from.narrow(end = c + 1)) // c + 1: exclusive
 
-    var df = scan(files.filter(chosen.overlaps)).where(chosen.column)
-    if (ignoreCommands) df = df.where(Visibility.notCommand)
-    var out = df.orderBy("seq_num")
-    // the budget walk above already bounds rows; clamp so a count above
-    // 2^31 can't overflow into a negative limit
-    spec.end.limit.count.foreach(c =>
-      out = out.limit(math.min(c, Int.MaxValue.toLong).toInt))
-    // A13 read-side decryption as a codegen'd plan expression (the
-    // reference decrypts in the session loop, read.rs:74-91; the Spark
-    // analog is record_decrypt inside the plan — per-record format-byte
-    // dispatch across both ciphers — never a driver loop): restores the
-    // logical (headers, body) from the sealed envelope encoding.
-    // Applied ABOVE the sort + count limit deliberately: the sort's
-    // range exchange SAMPLES its child to pick partition bounds, so a
-    // decrypt below it would run the cipher twice per record (pinned
-    // in RecordDecryptPlanSpec), and a count-limited read should only
-    // pay the cipher for rows that survive the limit.
+    var out = OrderedScan.ordered(spark, OrderedScan.partitions(
+      spark, if (chosen.isEmpty) Nil else files.filter(chosen.overlaps), chosen))
+    if (ignoreCommands) out = out.where(Visibility.notCommand)
     cipherSpec.foreach { s =>
       out = RecordCipher.decryptRecords(out, s.key, basin, stream)
     }
@@ -1773,7 +1772,7 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     files.filter(mask.overlaps).foreach { st =>
       if (mask.covers(st)) total += FileIndex.sums(st.path).metered
       else
-        FileIndex.scanRows(st.path) { r =>
+        FileIndex.scanRows(st.path, mask.parquetFilter(st)) { r =>
           if (mask.admits(r)) total += r.metered
           r.seq < mask.hi // rows are seq-sorted: past tail, nothing more counts
         }

@@ -1,5 +1,7 @@
 package graft.log
 
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -55,6 +57,24 @@ object Visibility {
       if (tsLo > Long.MinValue) c = c && col("timestamp") >= tsLo
       if (tsHi < Long.MaxValue) c = c && col("timestamp") < tsHi
       c
+    }
+
+    /** The mask's bounds that cut into file `st`, as a parquet record
+      * filter: row groups and pages outside them are skipped, rows
+      * outside are never returned, and a file the bounds do not cut
+      * gets no filter at all. The upper seq bound is left out: rows
+      * ascend, so a reader stops at the first row at or past `hi`
+      * instead. */
+    def parquetFilter(st: FileStats): FilterCompat.Filter = {
+      val seq = FilterApi.longColumn("seq_num")
+      val ts = FilterApi.longColumn("timestamp")
+      def long(v: Long) = java.lang.Long.valueOf(v)
+      Seq[Option[FilterPredicate]](
+        Option.when(st.minSeq < lo)(FilterApi.gtEq(seq, long(lo))),
+        Option.when(st.minTs < tsLo)(FilterApi.gtEq(ts, long(tsLo))),
+        Option.when(st.maxTs >= tsHi)(FilterApi.lt(ts, long(tsHi))))
+        .flatten.reduceOption(FilterApi.and(_, _))
+        .fold(FilterCompat.NOOP)(FilterCompat.get)
     }
   }
 

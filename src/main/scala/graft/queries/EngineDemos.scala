@@ -452,9 +452,10 @@ object EngineDemos {
       val seqs = s.sql(
         s"SELECT seq_num FROM $cat.`demo-basin1`.orders WHERE seq_num >= 3 ORDER BY seq_num")
         .collect().map(_.getLong(0)).mkString(",")
-      // unsorted: rdd partitions == planned files, so 1 proves the
-      // seq bound pruned the first file (a sort would let AQE coalesce
-      // and mask it)
+      // unsorted, and on two or more cores the two tiny files plan as
+      // two partitions (each costs spark.sql.files.openCostInBytes, the
+      // split size here), so 1 proves the seq bound pruned the first
+      // file (a sort would let AQE coalesce and mask it)
       val parts = s.sql(
         s"SELECT seq_num FROM $cat.`demo-basin1`.orders WHERE seq_num >= 3")
         .rdd.getNumPartitions

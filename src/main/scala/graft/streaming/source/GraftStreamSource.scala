@@ -3,13 +3,8 @@ package graft.streaming.source
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.example.GroupReadSupport
-
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -18,7 +13,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.log.{Catalog, FileIndex, Layout, StreamManifest, StreamStore, Visibility}
+import graft.log.{Catalog, FileIndex, GraftInputPartition, GraftPartitionReader, Layout,
+  OrderedScan, StreamManifest, StreamStore, Visibility}
 import graft.model.StreamConfig
 
 /** R8/R9 as a first-class connector: a DataSource V2 streaming source
@@ -78,7 +74,8 @@ object GraftStreamSource {
 
   /** The connector's one planner: the visible records of seq range
     * [start, end), narrowed by pushed timestamp bounds [tsLo, tsHi),
-    * as one input partition per overlapping data file.
+    * as seq-ordered runs of the overlapping data files
+    * ([[graft.log.OrderedScan.partitions]]).
     *
     * The listing is the manifest's generation dir through
     * FileIndex.consistentListing (a foreign compaction flip mid-listing
@@ -109,8 +106,7 @@ object GraftStreamSource {
     }
     val mask = Visibility.of(m, config(), nowMs).narrow(start, end, tsLo, tsHi)
     if (mask.isEmpty) return Array.empty
-    files.filter(mask.overlaps)
-      .map(st => GraftInputPartition(st.path, mask))
+    OrderedScan.partitions(SparkSession.active, files.filter(mask.overlaps), mask)
       .toArray[InputPartition]
   }
 }
@@ -206,13 +202,6 @@ final class GraftScan(props: Map[String, String],
 final case class GraftOffset(seq: Long) extends Offset {
   override def json(): String = s"""{"seq":$seq}"""
 }
-
-/** One data file and the visibility mask built for it on the driver at
-  * plan time, so every executor applies the mask the engine read path
-  * would.
-  */
-final case class GraftInputPartition(path: String, mask: Visibility.Mask)
-    extends InputPartition
 
 /** @param nowMsOpt pinned "now" for the retention mask (a source
   *   option, used by specs so batch and streaming visibility can be
@@ -364,52 +353,4 @@ final class GraftMicroBatchStream(root: String, basin: String, stream: String,
 final class GraftReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition])
-}
-
-/** Executor-side reader: parquet-mr Group API -> InternalRow, filtered
-  * by the plan-time visibility mask.
-  */
-final class GraftPartitionReader(part: GraftInputPartition)
-    extends PartitionReader[InternalRow] {
-
-  private val reader = org.apache.parquet.hadoop.ParquetReader
-    .builder(new GroupReadSupport(), new Path(part.path))
-    .withConf(new Configuration())
-    .build()
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    var g = reader.read()
-    while (g != null) {
-      val seq = g.getLong("seq_num", 0)
-      val ts = g.getLong("timestamp", 0)
-      if (part.mask.admits(seq, ts)) {
-        val headers =
-          if (g.getFieldRepetitionCount("headers") == 0) null
-          else {
-            val hg = g.getGroup("headers", 0)
-            val n = hg.getFieldRepetitionCount("list")
-            new GenericArrayData((0 until n).map { i =>
-              val el = hg.getGroup("list", i).getGroup("element", 0)
-              val name = if (el.getFieldRepetitionCount("name") > 0)
-                el.getBinary("name", 0).getBytes else null
-              val value = if (el.getFieldRepetitionCount("value") > 0)
-                el.getBinary("value", 0).getBytes else null
-              new GenericInternalRow(Array[Any](name, value)): Any
-            }.toArray)
-          }
-        val body = if (g.getFieldRepetitionCount("body") > 0)
-          g.getBinary("body", 0).getBytes else null
-        current = new GenericInternalRow(Array[Any](
-          seq, ts, headers, body,
-          g.getLong("metered_size", 0)))
-        return true
-      }
-      g = reader.read()
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }

@@ -62,10 +62,11 @@ class RecordDecryptPlanSpec extends AnyFunSuite with LocalSpark {
     EnvelopeCodec.decryptCalls.reset()
     val rows = df.collect()
     assert(rows.length == 10)
-    // the seq-range filter sits below the decrypt project and the
-    // count limit below it too — 50 stored records, 10 decrypts. Also
-    // proves the sort's range-exchange sampling pass no longer runs
-    // the cipher (decrypt is applied above the sort).
+    // the count budget resolves to an exact seq cut on the driver and
+    // the partition reader masks every row outside [10, 20) before
+    // the decrypt project sees it — 50 stored records, 10 decrypts.
+    // The ordered scan has no sort whose sampling pass could run the
+    // cipher a second time.
     val calls = EnvelopeCodec.decryptCalls.sum()
     assert(calls <= 10L && calls > 0L,
       s"count-limited read should decrypt <= 10 records, measured $calls")

@@ -21,9 +21,12 @@ import graft.model._
   */
 class AppendGroupSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def freshStore(): StreamStore = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-group").toString)
+      BackendHarness.tempDir("graft-group").toString)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))

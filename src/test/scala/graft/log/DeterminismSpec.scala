@@ -1,6 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
@@ -24,6 +23,9 @@ import graft.model._
   * (sim/README's own motivating case).
   */
 class DeterminismSpec extends AnyFunSuite with LocalSpark {
+
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
 
   /** One op: (label, method, path+query, body). Built from the seed
     * only, so two runs with one seed issue identical request
@@ -60,7 +62,7 @@ class DeterminismSpec extends AnyFunSuite with LocalSpark {
   private def runScenario(seed: Long,
                           shuffleUnseeded: Boolean = false): String = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-det").toString)
+      BackendHarness.tempDir("graft-det").toString)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))

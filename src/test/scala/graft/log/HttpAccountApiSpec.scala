@@ -1,6 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
@@ -16,10 +15,13 @@ import HttpRecordsClient.requestAny
   */
 class HttpAccountApiSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def served(nowMs: Option[Long] = Some(120000L))
       : (StreamStore, com.sun.net.httpserver.HttpServer, String) = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-http-account").toString)
+      BackendHarness.tempDir("graft-http-account").toString)
     val (server, endpoint) = HttpRecordsServer.start(st, nowMs)
     (st, server, endpoint)
   }
@@ -79,7 +81,7 @@ class HttpAccountApiSpec extends AnyFunSuite with LocalSpark {
 
   test("token registry persists across store instances and pages with " +
     "prefix/start_after/limit") {
-    val root = Files.createTempDirectory("graft-http-account-p").toString
+    val root = BackendHarness.tempDir("graft-http-account-p").toString
     val st = new StreamStore(spark, root)
     val (server, ep) = HttpRecordsServer.start(st, Some(120000L))
     try {

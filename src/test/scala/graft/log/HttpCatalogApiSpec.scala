@@ -1,6 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
@@ -20,9 +19,12 @@ import HttpRecordsClient.requestAny
   */
 class HttpCatalogApiSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def served(): (StreamStore, com.sun.net.httpserver.HttpServer, String) = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-http-catalog").toString)
+      BackendHarness.tempDir("graft-http-catalog").toString)
     val (server, endpoint) = HttpRecordsServer.start(st, Some(1000L))
     (st, server, endpoint)
   }

@@ -1,6 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
 import graft.model._
@@ -11,12 +10,15 @@ import graft.model._
   */
 class MaintenanceSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   override protected def conf =
     Seq("spark.sql.extensions" -> "graft.GraftExtensions")
 
   private def freshStore(): StreamStore = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-maint").toString)
+      BackendHarness.tempDir("graft-maint").toString)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))

@@ -1,6 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions.sum
 import graft.LocalSpark
@@ -20,6 +19,9 @@ import graft.model._
   */
 class MetricsGaugeSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def env(body: String): EnvelopeRecord =
     EnvelopeRecord(Nil, body.getBytes("UTF-8"))
 
@@ -29,7 +31,7 @@ class MetricsGaugeSpec extends AnyFunSuite with LocalSpark {
   }
 
   private def freshStore(): StreamStore = {
-    val st = new StreamStore(spark, Files.createTempDirectory("graft-gauge").toString)
+    val st = new StreamStore(spark, BackendHarness.tempDir("graft-gauge").toString)
     st.catalog.createBasin("gauge-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))

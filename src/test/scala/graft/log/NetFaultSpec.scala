@@ -1,6 +1,5 @@
 package graft.log
 
-import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,6 +26,9 @@ import LinModel._
   */
 class NetFaultSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private val Basin = "fault-basin"
 
   /** Fresh real server + fresh proxy + proxied root + store. */
@@ -34,7 +36,7 @@ class NetFaultSpec extends AnyFunSuite with LocalSpark {
                            HttpObjectBackend, String) = {
     val realEp = BackendHarness.sharedHttpEndpoint
     val (_, proxyEp, controls) = NetFaultProxy.start(realEp, seed = 99L)
-    val root = Files.createTempDirectory("graft-netfault").toString
+    val root = BackendHarness.tempDir("graft-netfault").toString
     HttpObjectBackend.install(root, proxyEp)
     val st = new StreamStore(spark, root)
     st.catalog.createBasin(Basin,
@@ -180,7 +182,7 @@ class NetFaultSpec extends AnyFunSuite with LocalSpark {
     // `unknown` after a burst of foreign writes
     val (_, realEp) = HttpObjectServer.start(nonceHistoryCap = 4)
     val (_, proxyEp, controls) = NetFaultProxy.start(realEp, seed = 7L)
-    val root = Files.createTempDirectory("graft-netfault-trunc").toString
+    val root = BackendHarness.tempDir("graft-netfault-trunc").toString
     HttpObjectBackend.install(root, proxyEp)
     val st = new StreamStore(spark, root)
     st.catalog.createBasin(Basin,
@@ -234,7 +236,7 @@ class NetFaultSpec extends AnyFunSuite with LocalSpark {
       // a loser twin covering the SAME committed range with a
       // different body — what a crashed/slow loser leaves listed in
       // the ms between the winner's commit and its own delete
-      val scratch = Files.createTempDirectory("graft-nf7")
+      val scratch = BackendHarness.tempDir("graft-nf7")
       val f = java.nio.file.Paths.get(DirectParquet.writeBatch(scratch.toString,
         Seq(DirectParquet.Rec(0L, 999L, Nil, "ghost".getBytes("UTF-8"), 13L))))
       val dest = genDir.resolve(f.getFileName)

@@ -17,8 +17,11 @@ import graft.model._
   */
 class StagedCommitSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def freshStore(): StreamStore = {
-    val dir = Files.createTempDirectory("graft-staged").toString
+    val dir = BackendHarness.tempDir("graft-staged").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -49,7 +52,7 @@ class StagedCommitSpec extends AnyFunSuite with LocalSpark {
 
   test("selectStagedFiles drops torn attempt leavings and exact retry " +
     "twins, keeping one dense tiling of [plannedTail, newTail)") {
-    val dir = Files.createTempDirectory("sel").toString
+    val dir = BackendHarness.tempDir("sel").toString
     val a = DirectParquet.writeIter(dir, recs(2 until 5, "a").iterator)
     val aTwin = DirectParquet.writeIter(dir, recs(2 until 5, "a").iterator)
     val b = DirectParquet.writeIter(dir, recs(5 until 8, "b").iterator)
@@ -66,7 +69,7 @@ class StagedCommitSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("selectStagedFiles aborts on a coverage gap (lost staged file)") {
-    val dir = Files.createTempDirectory("sel-gap").toString
+    val dir = BackendHarness.tempDir("sel-gap").toString
     DirectParquet.writeIter(dir, recs(0 until 3, "a").iterator)
     // [3,6) missing
     DirectParquet.writeIter(dir, recs(6 until 9, "c").iterator)
@@ -80,7 +83,7 @@ class StagedCommitSpec extends AnyFunSuite with LocalSpark {
 
   test("selectStagedFiles aborts on short coverage (all files present " +
     "but the tail is not reached)") {
-    val dir = Files.createTempDirectory("sel-short").toString
+    val dir = BackendHarness.tempDir("sel-short").toString
     DirectParquet.writeIter(dir, recs(0 until 3, "a").iterator)
     val staged = Files.list(Paths.get(dir)).toArray.toSeq
       .map(_.toString).filter(_.endsWith(".parquet"))
@@ -92,7 +95,7 @@ class StagedCommitSpec extends AnyFunSuite with LocalSpark {
 
   test("selectStagedFiles aborts on a partial overlap (not an exact " +
     "twin — an invariant violation, never silently resolved)") {
-    val dir = Files.createTempDirectory("sel-ovl").toString
+    val dir = BackendHarness.tempDir("sel-ovl").toString
     DirectParquet.writeIter(dir, recs(0 until 4, "a").iterator)
     DirectParquet.writeIter(dir, recs(2 until 6, "b").iterator)
     val staged = Files.list(Paths.get(dir)).toArray.toSeq
@@ -105,7 +108,7 @@ class StagedCommitSpec extends AnyFunSuite with LocalSpark {
 
   test("selectStagedFiles rejects a file whose rows are not dense " +
     "(rows != max-min+1)") {
-    val dir = Files.createTempDirectory("sel-sparse").toString
+    val dir = BackendHarness.tempDir("sel-sparse").toString
     // seqs 0,2 in one file: footer says [0,2] rows=2 — a corrupt write
     DirectParquet.writeIter(dir, Seq(
       DirectParquet.Rec(0L, 1L, Nil, "x".getBytes, 1L),

@@ -20,12 +20,12 @@ class TlsSpec extends AnyFunSuite with LocalSpark {
 
   override def afterAll(): Unit = {
     HttpRecordsClient.clientTls(None)
-    super.afterAll()
+    try super.afterAll() finally BackendHarness.cleanup()
   }
 
   private def freshStore(): StreamStore = {
     val st = new StreamStore(spark,
-      Files.createTempDirectory("graft-tls").toString)
+      BackendHarness.tempDir("graft-tls").toString)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
         StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
@@ -109,7 +109,7 @@ class TlsSpec extends AnyFunSuite with LocalSpark {
     val kp = kpg.generateKeyPair()
     val cert = Tls.selfSignCert(kp, "graft-pem",
       dns = Seq("localhost"), ips = Seq("127.0.0.1"))
-    val dir = Files.createTempDirectory("graft-pem")
+    val dir = BackendHarness.tempDir("graft-pem")
     val certPem = dir.resolve("cert.pem")
     val keyPem = dir.resolve("key.pem")
     val b64 = Base64.getMimeEncoder(64, "\n".getBytes("US-ASCII"))
@@ -144,7 +144,7 @@ class TlsSpec extends AnyFunSuite with LocalSpark {
     val (oserver, oep) = HttpObjectServer.start(tls = Some(tls))
     try {
       assert(oep.startsWith("https://"))
-      val root = Files.createTempDirectory("graft-tls-obj").toString
+      val root = BackendHarness.tempDir("graft-tls-obj").toString
       HttpObjectBackend.install(root, oep,
         Some(Tls.clientContext(tls.certPem)))
       val st = new StreamStore(spark, root)
@@ -161,7 +161,7 @@ class TlsSpec extends AnyFunSuite with LocalSpark {
         ReadSpec(ReadStart(ReadFrom.SeqNum(0)))).toOption.get
       assert(rows.map(r => new String(r.body)) == Seq("over-tls"))
       // and an untrusting backend is refused at handshake
-      val root2 = Files.createTempDirectory("graft-tls-obj2").toString
+      val root2 = BackendHarness.tempDir("graft-tls-obj2").toString
       val bare = HttpObjectBackend.install(root2, oep, None)
       intercept[Exception](bare.getMeta("x", fresh = true))
     } finally oserver.stop(0)

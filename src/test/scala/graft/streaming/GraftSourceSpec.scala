@@ -377,7 +377,9 @@ class GraftSourceSpec extends AnyFunSuite with LocalSpark {
       .load()
 
     // a WHERE on seq_num must both return exact rows and open only the
-    // overlapping file (one input partition per planned file)
+    // overlapping file (on this suite's 4 cores two tiny files plan as
+    // two input partitions: each costs spark.sql.files.openCostInBytes,
+    // the split size here)
     val q = scan().where(col("seq_num") >= 3)
     assert(q.select("seq_num").collect().map(_.getLong(0)).sorted.toSeq ==
       Seq(3L, 4L, 5L))

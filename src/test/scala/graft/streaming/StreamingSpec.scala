@@ -1,9 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
+import graft.log.BackendHarness
 
 import graft.log.StreamStore
 import graft.model._
@@ -14,11 +14,14 @@ import graft.model._
   */
 class StreamingSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private def env(body: String): EnvelopeRecord =
     EnvelopeRecord(Nil, body.getBytes)
 
   test("follow delivers catch-up then live batches in order (R8)") {
-    val dir = Files.createTempDirectory("graft-follow").toString
+    val dir = BackendHarness.tempDir("graft-follow").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -45,7 +48,7 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("follow filters command records when asked (R10 on the live feed)") {
-    val dir = Files.createTempDirectory("graft-follow2").toString
+    val dir = BackendHarness.tempDir("graft-follow2").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
@@ -67,7 +70,7 @@ class StreamingSpec extends AnyFunSuite with LocalSpark {
   test("continuous ingest: micro-batches land as contiguous durable appends (A8 end-to-end)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-singest").toString
+    val dir = BackendHarness.tempDir("graft-singest").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("test-basin",
       BasinConfig(defaultStreamConfig =
