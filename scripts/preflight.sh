@@ -33,7 +33,8 @@ fi
 leaked_roots() {
   shopt -s nullglob
   local dirs=(/tmp/graft-{gen,rec,lin,store,http-records,session,prod,src,rafault,http-auth,catshard,clispec}*
-              /tmp/graft-{netfault,nf,http-catalog,group,det,http-account,maint,gauge,tls,pem,staged,follow,singest,ord}*)
+              /tmp/graft-{netfault,nf,http-catalog,group,det,http-account,maint,gauge,tls,pem,staged,follow,singest,ord}*
+              /tmp/graft-{decplan,decbasin,sqlcat,wmdedup,xproot,xpcrash,verify}*)
   shopt -u nullglob
   echo "${#dirs[@]}"
 }

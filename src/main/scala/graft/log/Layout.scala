@@ -35,12 +35,13 @@ object Layout {
 
   /** Escape a stream name into a pure-ASCII partition-path token.
     *
-    * Escape char is `~` (`~XX` per UTF-8 byte) - deliberately NOT `%`:
-    * `%` is in Spark's own partition-escaping set, so a `%`-encoded
-    * value passed through `partitionBy` would be double-escaped.
-    * `~` passes through Spark's writer verbatim, so directories written
-    * via dynamic partitions and directories addressed by this layout
-    * coincide, and non-ASCII names survive POSIX-locale filesystems.
+    * Escape char is `~` (`~XX` per UTF-8 byte) - deliberately NOT `%`,
+    * which is in Spark's own partition-escaping set and would be
+    * escaped twice by any Spark partition writer. Every writer — unary
+    * append, compaction, and bulk ingest's executor-side staged files
+    * ([[stageDir]], no Spark dynamic-partition writer) — derives its
+    * directories from this function, so they coincide for all legal
+    * names, and non-ASCII names survive POSIX-locale filesystems.
     */
   def escape(name: String): String = {
     val sb = new StringBuilder

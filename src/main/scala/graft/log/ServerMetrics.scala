@@ -6,8 +6,9 @@ import java.util.concurrent.atomic.{AtomicLongArray, DoubleAdder, LongAdder}
   * buckets (lite/src/metrics.rs:6-73): append permit latency, append
   * ack latency, append batch records/bytes histograms, exposed in
   * Prometheus text format via gather(). Observations come from the
-  * engine hot paths (StreamStore.append, Producer permits); everything
-  * is lock-free adders so metering never contends with the data plane.
+  * engine hot paths (StreamStore.append and ingest, Producer permits);
+  * everything is lock-free adders so metering never contends with the
+  * data plane.
   */
 object ServerMetrics {
 
@@ -68,9 +69,28 @@ object ServerMetrics {
     "Batches sharing one append group commit",
     Array(1.0, 2.0, 4.0, 8.0, 16.0, 32.0, 64.0))
 
+  // extension: the phases of one StreamStore.ingest call, each
+  // observed once when it completes (a replay that skips every stream
+  // ends after plan; a failed phase is not observed)
+  private val phaseBuckets =
+    Array(0.010, 0.025, 0.050, 0.100, 0.250, 0.500, 1.000, 2.500, 5.000, 10.0, 30.0, 60.0)
+  val ingestCount = new Histogram("graft_ingest_count_seconds",
+    "Bulk ingest key passes (range cut points and per-range counts) in seconds",
+    phaseBuckets)
+  val ingestPlan = new Histogram("graft_ingest_plan_seconds",
+    "Bulk ingest driver planning (gates, manifests, sequence prefix sums) in seconds",
+    phaseBuckets)
+  val ingestWrite = new Histogram("graft_ingest_write_seconds",
+    "Bulk ingest body job (shuffle, sort, sequence, encrypt, staged write) in seconds",
+    phaseBuckets)
+  val ingestCommit = new Histogram("graft_ingest_commit_seconds",
+    "Bulk ingest per-stream commit loop in seconds",
+    phaseBuckets)
+
   private def all: Seq[Histogram] =
     Seq(appendPermitLatency, appendAckLatency, appendBatchRecords,
-      appendBatchBytes, appendGroupBatches)
+      appendBatchBytes, appendGroupBatches,
+      ingestCount, ingestPlan, ingestWrite, ingestCommit)
 
   /** The /metrics text payload (metrics.rs:66-73). */
   def gather(): String = all.map(_.expose).mkString

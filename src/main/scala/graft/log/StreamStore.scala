@@ -4,7 +4,10 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.RangePartitioner
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -77,74 +80,145 @@ object StreamStore {
       val t = new Thread(r, "graft-stage-gc"); t.setDaemon(true); t
     })
 
-  /** Executor-side staged-file writer for bulk ingest: streams one
-    * task's (basin, stream, seq)-sorted rows and cuts a DirectParquet
-    * file at every stream boundary, at the final staged path — no
-    * Hadoop committer (see the call site in ingest for why). Static
-    * (companion) so the closure ships without capturing the store.
-    * Row layout: basin(0), stream(1), seq_num(2), timestamp(3),
-    * headers(4), body(5), metered_size(6). Returns one [[StagedFile]]
-    * report per file written, collected by the driver.
-    */
-  private[log] def writeStagedPartition(
-      stagePath: String, basinCiphers: Map[String, CipherSpec])
-      (rows: Iterator[org.apache.spark.sql.Row]): Iterator[StagedFile] = {
-    import org.apache.spark.sql.Row
-    val it = rows.buffered
-    def toRec(r: Row, spec: Option[CipherSpec],
-              aad: Array[Byte]): DirectParquet.Rec = {
-      val headers: Seq[(Array[Byte], Array[Byte])] =
-        if (r.isNullAt(4)) Nil
-        else r.getSeq[Row](4).map { h =>
-          val n = if (h == null || h.isNullAt(0)) Array.emptyByteArray
-                  else h.getAs[Array[Byte]](0)
-          val v = if (h == null || h.isNullAt(1)) Array.emptyByteArray
-                  else h.getAs[Array[Byte]](1)
-          (n, v)
-        }
-      val plain = if (r.isNullAt(5)) null else r.getAs[Array[Byte]](5)
-      // reject malformed command-marker shapes BEFORE the shape-based
-      // encrypt dispatch below can misclassify them (see
-      // RecordCipher.validateWireShape) — fails the job, nothing commits
-      RecordCipher.validateWireShape(headers, plain).foreach(e =>
-        throw new IllegalArgumentException(s"invalid record: $e"))
-      // A13: encrypt AFTER metering — metered_size (column 6) was
-      // computed on the plaintext body upstream, same contract as the
-      // unary path (encryption.rs:27-29). Commands stay plaintext;
-      // data envelopes seal their full wire encoding (headers
-      // included) under headers=NULL — identical stored shape to the
-      // unary path.
-      spec match {
-        case Some(sp) if !RecordCipher.isCommandForm(headers) =>
-          DirectParquet.Rec(r.getLong(2), r.getLong(3), null,
-            RecordCipher.encryptEnvelope(sp, aad, headers, plain),
-            r.getLong(6))
-        case _ =>
-          DirectParquet.Rec(r.getLong(2), r.getLong(3), headers, plain,
-            r.getLong(6))
-      }
+  /** One stream's settings for the body job: its timestamping mode
+    * and cap, and the cipher its basin resolved to. */
+  private[log] final case class StreamPlan(mode: TimestampingMode,
+                                           uncapped: Boolean,
+                                           cipher: Option[CipherSpec])
+
+  /** One (range, stream) slice of a bulk ingest, planned on the
+    * driver from the count pass: the seq its first row gets, the
+    * monotone-timestamp floor it starts from, the rows the count pass
+    * saw and the timestamp cursor its last row must leave. */
+  private[log] final case class SlicePlan(startSeq: Long, tsFloor: Long,
+                                          rows: Long, tsEnd: Long)
+
+  /** Everything the body job's tasks read: `slices(r)` holds range
+    * `r`'s slices by (basin, stream). Broadcast once per ingest. */
+  private[log] final case class IngestPlan(
+      now: Long, streams: Map[(String, String), StreamPlan],
+      slices: Map[Int, Map[(String, String), SlicePlan]])
+
+  /** Count pass over one partition of the key rows (basin, stream,
+    * arrival, ts_client): per (range, basin, stream) the row count,
+    * the max non-null ts_client (`Long.MinValue` when none) and the
+    * count of null ts_clients. */
+  private[log] def countSlices(ranges: org.apache.spark.Partitioner)
+      (rows: Iterator[InternalRow]): Iterator[((Int, String, String), Array[Long])] = {
+    val m = scala.collection.mutable.HashMap.empty[(Int, String, String), Array[Long]]
+    rows.foreach { r =>
+      val b = r.getString(0); val s = r.getString(1)
+      val a = m.getOrElseUpdate(
+        (ranges.getPartition((b, s, r.getLong(2))), b, s), Array(0L, Long.MinValue, 0L))
+      a(0) += 1
+      if (r.isNullAt(3)) a(2) += 1 else a(1) = math.max(a(1), r.getLong(3))
     }
+    m.iterator
+  }
+
+  /** The task-side failure of the two-reads guard: the body job read
+    * a different row set than the count pass planned. */
+  private def inputChanged(range: Int, basin: String, stream: String,
+                           detail: String): IllegalStateException =
+    new IllegalStateException(
+      s"ingest input changed between its key pass and its body pass: " +
+        s"$basin/$stream in range $range $detail — the input DataFrame " +
+        "must evaluate to the same rows each time it is read")
+
+  /** Executor-side body task of bulk ingest: one range's rows, sorted
+    * by (basin, stream, arrival). Partition `r` of the body job is
+    * range `r` (`repartitionById` is a by-number shuffle, which AQE
+    * never coalesces). For each stream's run it assigns seq_num and
+    * the monotone timestamp from the planned slice, meters the
+    * plaintext, validates the wire shape, encrypts, and cuts one
+    * DirectParquet file at the final staged path — no Hadoop
+    * committer (see the call site in ingest for why). Row layout:
+    * basin(0), stream(1), ts_client(2), headers(3), body(4),
+    * metered_size(5), read straight off the `InternalRow`. A run whose
+    * row count or final timestamp differs from its plan, a stream the
+    * plan does not hold in this range, or a planned slice with no rows
+    * fails the task.
+    * Returns one [[StagedFile]] report per file written. */
+  private[log] def writeStagedPartition(
+      stagePath: String, planBc: org.apache.spark.broadcast.Broadcast[IngestPlan])
+      (rows: Iterator[InternalRow]): Iterator[StagedFile] = {
+    val plan = planBc.value
+    val now = plan.now
+    val range = org.apache.spark.TaskContext.getPartitionId()
+    val planned = plan.slices.getOrElse(range, Map.empty)
+    val it = rows.buffered
     val reports = scala.collection.mutable.ListBuffer.empty[StagedFile]
+    val written = scala.collection.mutable.HashSet.empty[(String, String)]
     while (it.hasNext) {
-      val b = it.head.getString(0)
-      val st = it.head.getString(1)
+      // copies: the sorter reuses its row object across next()
+      val bU = it.head.getUTF8String(0).clone()
+      val sU = it.head.getUTF8String(1).clone()
+      val b = bU.toString; val st = sU.toString
+      val slice = planned.getOrElse((b, st),
+        throw inputChanged(range, b, st, "has rows but no planned slice"))
+      written += ((b, st))
+      val sp = plan.streams((b, st))
       val dir = Layout.stageDir(stagePath, b, st)
-      val spec = basinCiphers.get(b)
       val aad = RecordCipher.aad(b, st)
-      var minSeq = Long.MaxValue; var maxSeq = Long.MinValue; var rows = 0L
+      var nextSeq = slice.startSeq; var ts = slice.tsFloor
       // sync=false: staged temp write, not the live object — see
       // DirectParquet.writeIter's doc for the durability argument
       val file = DirectParquet.writeIter(dir, new Iterator[DirectParquet.Rec] {
         def hasNext: Boolean = it.hasNext &&
-          it.head.getString(0) == b && it.head.getString(1) == st
+          it.head.getUTF8String(0) == bU && it.head.getUTF8String(1) == sU
         def next(): DirectParquet.Rec = {
-          val r = toRec(it.next(), spec, aad)
-          if (r.seqNum < minSeq) minSeq = r.seqNum
-          if (r.seqNum > maxSeq) maxSeq = r.seqNum
-          rows += 1
-          r
+          val r = it.next()
+          val headers: Seq[(Array[Byte], Array[Byte])] =
+            if (r.isNullAt(3)) Nil
+            else {
+              val arr = r.getArray(3)
+              (0 until arr.numElements()).map { i =>
+                if (arr.isNullAt(i)) (Array.emptyByteArray, Array.emptyByteArray)
+                else {
+                  val h = arr.getStruct(i, 2)
+                  (if (h.isNullAt(0)) Array.emptyByteArray else h.getBinary(0),
+                   if (h.isNullAt(1)) Array.emptyByteArray else h.getBinary(1))
+                }
+              }
+            }
+          val plain = if (r.isNullAt(4)) null else r.getBinary(4)
+          // reject malformed command-marker shapes BEFORE the
+          // shape-based encrypt dispatch below can misclassify them
+          // (see RecordCipher.validateWireShape) — fails the job,
+          // nothing commits
+          RecordCipher.validateWireShape(headers, plain).foreach(e =>
+            throw new IllegalArgumentException(s"invalid record: $e"))
+          // A3 timestamping, as unary append does (streamer.rs:964-1008)
+          val raw0 = sp.mode match {
+            case TimestampingMode.Arrival => now
+            case TimestampingMode.ClientRequire =>
+              if (r.isNullAt(2)) throw new IllegalStateException(s"TimestampMissing: $b/$st")
+              r.getLong(2)
+            case TimestampingMode.ClientPrefer =>
+              if (r.isNullAt(2)) now else r.getLong(2)
+          }
+          ts = math.max(ts, if (sp.uncapped) raw0 else math.min(raw0, now))
+          // A13: metered_size (column 5) is the plaintext's, the same
+          // contract as the unary path (encryption.rs:27-29)
+          val metered = r.getLong(5)
+          val s = nextSeq
+          nextSeq += 1
+          // Commands stay plaintext; data envelopes seal their full
+          // wire encoding (headers included) under headers=NULL —
+          // identical stored shape to the unary path.
+          sp.cipher match {
+            case Some(c) if !RecordCipher.isCommandForm(headers) =>
+              DirectParquet.Rec(s, ts, null,
+                RecordCipher.encryptEnvelope(c, aad, headers, plain), metered)
+            case _ => DirectParquet.Rec(s, ts, headers, plain, metered)
+          }
         }
       }, sync = false)
+      val rowsRead = nextSeq - slice.startSeq
+      if (rowsRead != slice.rows || ts != slice.tsEnd)
+        throw inputChanged(range, b, st,
+          s"read $rowsRead rows ending at ts $ts, planned ${slice.rows} " +
+            s"ending at ts ${slice.tsEnd}")
       // embed the file's (minSeq, maxSeq, rows) in its name: files of
       // attempts that died AFTER finishing a file but BEFORE reporting
       // (task killed between files) can still be validated from the
@@ -152,12 +226,14 @@ object StreamStore {
       // footer open (whose Hadoop FileSystem-cache lock serialized the
       // 10k-stream commit). The rename is local to the staged dir.
       val from = java.nio.file.Paths.get(file)
-      val named = from.resolveSibling(
-        StreamStore.stagedName(from.getFileName.toString, minSeq, maxSeq, rows))
+      val named = from.resolveSibling(StreamStore.stagedName(
+        from.getFileName.toString, slice.startSeq, nextSeq - 1, rowsRead))
       java.nio.file.Files.move(from, named)
       reports += StagedFile(b, st, named.getFileName.toString,
-        minSeq, maxSeq, rows)
+        slice.startSeq, nextSeq - 1, rowsRead)
     }
+    planned.keys.find(!written.contains(_))
+      .foreach { case (b, st) => throw inputChanged(range, b, st, "planned rows but read none") }
     reports.iterator
   }
 
@@ -862,18 +938,72 @@ final class StreamStore(val spark: SparkSession, val root: String) {
 
   /** Bulk ingest — the 100 TB path. Takes a DataFrame with columns
     * (basin STRING, stream STRING, ts_client LONG nullable, headers,
-    * body BINARY, arrival LONG) and appends every stream in one job:
-    * one shuffle (partition by stream for the sequencing sort), writes
-    * via dynamic partitions, then commits all manifests. One logical
-    * writer per stream is still required — callers serialize per store.
+    * body BINARY, arrival LONG) and appends every stream it holds.
+    * One logical writer per stream is still required — callers
+    * serialize per store.
+    *
+    * The input is read twice, keys first, in at most four Spark jobs
+    * and with no cache:
+    *  - range pass (one job, keys only): cut points over the global
+    *    (basin, stream, arrival) order, about N/P rows per range with
+    *    P = `spark.sql.shuffle.partitions` — the ranges
+    *    `repartitionByRange` cuts; no job when P = 1;
+    *  - count pass (one job, keys only): per (range, basin, stream)
+    *    the rows, the max ts_client and the null ts_clients. The driver
+    *    takes the key set from it, runs the cipher, epoch, deletion and
+    *    auto-create gates, and plans each slice's first seq and
+    *    timestamp floor by prefix sums in range order;
+    *  - body job (the one shuffle, by range id; two jobs under AQE):
+    *    each task sorts one range by (basin, stream, arrival) and
+    *    writes its staged files ([[StreamStore.writeStagedPartition]]);
+    *  - commit loop on the driver: per stream, under its lock, the
+    *    staged files move into the live generation and the manifest
+    *    commits.
+    * Each phase is timed on `/metrics` (`graft_ingest_*_seconds`). The
+    * two reads rely on the input evaluating to the same rows each time,
+    * as lineage recovery does: a body task whose rows differ from its
+    * planned slice fails the ingest before anything commits.
     */
   def ingest(df0: DataFrame, nowMs: Option[Long] = None,
              epochId: Option[Long] = None,
              cipher: Option[Array[Byte]] = None): Map[(String, String), AppendAck] = {
-    import spark.implicits._
     val now = nowMs.getOrElse(System.currentTimeMillis())
-    val allKeys = df0.select("basin", "stream").distinct().collect()
-      .map(r => (r.getString(0), r.getString(1)))
+    val numRanges = spark.sessionState.conf.numShufflePartitions
+    // range keys are (basin, stream, arrival), a null arrival read as
+    // Long.MinValue: first, where the body job's sort puts it
+    val arrivalKey = coalesce(col("arrival"), lit(Long.MinValue))
+    var phaseT0 = System.nanoTime()
+    def phaseDone(h: ServerMetrics.Histogram): Unit = {
+      val t = System.nanoTime()
+      h.observe((t - phaseT0) / 1e9)
+      phaseT0 = t
+    }
+
+    // Key passes over one key-only projection: no body is read, and
+    // both passes share its RDD, so a shuffle inside the input runs
+    // once for the two.
+    val keyQe = df0.select(col("basin"), col("stream"), arrivalKey, col("ts_client"))
+      .queryExecution
+    val (ranges, sliceStats) = SQLExecution.withNewExecutionId(keyQe, Some("ingest: keys")) {
+      val keyRows = keyQe.toRdd
+      // repartitionByRange's sample size per partition, so the cut
+      // points (and the files per stream) are the ones it would cut
+      val ranges = new RangePartitioner[(String, String, Long), Null](numRanges,
+        keyRows.map(r => ((r.getString(0), r.getString(1), r.getLong(2)), null)),
+        ascending = true,
+        spark.sessionState.conf.rangeExchangeSampleSizePerPartition)
+      val stats = scala.collection.mutable.HashMap.empty[(Int, String, String), Array[Long]]
+      keyRows.mapPartitions(StreamStore.countSlices(ranges)).collect().foreach {
+        case (k, a) => stats.get(k) match {
+          case Some(m) => m(0) += a(0); m(1) = math.max(m(1), a(1)); m(2) += a(2)
+          case None => stats(k) = a
+        }
+      }
+      (ranges, stats)
+    }
+    phaseDone(ServerMetrics.ingestCount)
+
+    val allKeys = sliceStats.keysIterator.map(k => (k._2, k._3)).toArray.distinct
     // A13 on the BULK path: resolve each basin's stream_cipher against
     // the per-call key EXACTLY like unary append (encryption.rs
     // resolve — key without cipher = plaintext, cipher without key =
@@ -893,7 +1023,10 @@ final class StreamStore(val spark: SparkSession, val root: String) {
       case Some(e) => allKeys.filter { case (b, s) => manifest(b, s).lastEpoch != e }
       case None => allKeys
     }
-    if (keys.isEmpty) return Map.empty
+    if (keys.isEmpty) {
+      phaseDone(ServerMetrics.ingestPlan)
+      return Map.empty
+    }
     // C6: bulk ingest enforces the same auto-create contract as unary
     // append (core.rs:326-391); missing streams of an opted-in basin
     // are provisioned in ONE catalog commit per basin (an auto-create
@@ -944,247 +1077,212 @@ final class StreamStore(val spark: SparkSession, val root: String) {
         .isin(keep.toSeq: _*))
     }
 
-
-    // A3 on the bulk path: resolve each stream's MERGED timestamping
-    // config (mode -> cap; the monotone clamp runs in pass 2) exactly
-    // like unary append does (streamer.rs:964-1008). The per-stream
-    // configs ride a broadcast join; ClientRequire rejects the batch
-    // when a client timestamp is missing (codegen'd raise_error — the
-    // job fails, nothing commits, mirroring the unary TimestampMissing).
-    // Configs come from the per-basin shard sweep above (streams auto-
-    // created moments ago carry the empty default config, the same
-    // bytes createStreams just wrote) — pure in-memory merge, zero
+    // A3 on the bulk path: each stream's MERGED timestamping config
+    // (mode -> cap; the monotone clamp runs in the body task) resolved
+    // exactly like unary append does (streamer.rs:964-1008). Configs
+    // come from the per-basin shard sweep above (streams auto-created
+    // moments ago carry the empty default config, the same bytes
+    // createStreams just wrote) — pure in-memory merge, zero
     // per-stream metadata reads.
-    val tsConfig = keys.toSeq.map { case (b, s) =>
+    val streams: Map[(String, String), StreamStore.StreamPlan] = keys.map { case k @ (b, s) =>
       val t = liveCfg(b).getOrElse(s, StreamConfig())
         .mergedOver(basinDefault(b))
         .mergedOver(StreamConfig.SystemDefault)
         .timestampingOrDefault
-      (b, s, t.mode match {
-        case TimestampingMode.ClientPrefer => "client-prefer"
-        case TimestampingMode.ClientRequire => "client-require"
-        case TimestampingMode.Arrival => "arrival"
-      }, t.uncapped)
-    }
-    val tsConfigDf = spark.createDataFrame(tsConfig)
-      .toDF("basin", "stream", "ts_mode", "ts_uncapped")
-    val tsPicked = when(col("ts_mode") === "arrival", lit(now))
-      .when(col("ts_mode") === "client-require",
-        when(col("ts_client").isNull, raise_error(concat(
-          lit("TimestampMissing: "), col("basin"), lit("/"), col("stream")))
-          .cast(LongType))
-          .otherwise(col("ts_client")))
-      .otherwise(coalesce(col("ts_client"), lit(now)))
+      k -> StreamStore.StreamPlan(t.mode, t.uncapped, basinCiphers.get(b))
+    }.toMap
 
     // Distributed per-stream sequencing WITHOUT a one-reducer-per-stream
-    // window: range-partition each stream's rows by arrival so one huge
-    // stream spreads over many partitions in arrival order, then
-    //   pass 1: per (partition, stream) -> row count + running-ts info
-    //   driver: prefix sums -> each partition's starting seq + ts floor
-    //   pass 2: partition-local assignment (no shuffle).
-    // This is the scalable zipWithIndex-per-key pattern; the reference's
-    // one-actor-per-stream bound does not apply because assignment is
-    // deterministic given (arrival order, tail state).
-    val prepared = df
-      .join(broadcast(tsConfigDf), Seq("basin", "stream"))
-      .withColumn("ts_raw",
-        when(col("ts_uncapped"), tsPicked).otherwise(least(tsPicked, lit(now))))
-      .repartitionByRange(col("basin"), col("stream"), col("arrival"))
-      .sortWithinPartitions("basin", "stream", "arrival")
-      .select("basin", "stream", "arrival", "ts_raw", "headers", "body")
-      .cache()
-
-    // pass 1: per-partition per-stream stats, in partition order
-    val partStats = prepared.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val stats = scala.collection.mutable.LinkedHashMap
-        .empty[(String, String), (Long, Long)] // (count, maxTsRaw)
-      it.foreach { r =>
-        val k = (r.getString(0), r.getString(1))
-        val (c, mx) = stats.getOrElse(k, (0L, Long.MinValue))
-        stats(k) = (c + 1, math.max(mx, r.getLong(3)))
-      }
-      stats.iterator.map { case ((b, s), (c, mx)) => (pid, b, s, c, mx) }
-    }.collect()
-
-    // driver: prefix sums per stream across partitions
-    val seqOffset = scala.collection.mutable.Map.empty[(Int, String, String), (Long, Long)]
+    // window: one huge stream spreads over many ranges in arrival
+    // order, and prefix sums over the ranges' counts give each slice
+    // its first seq and timestamp floor (the scalable
+    // zipWithIndex-per-key pattern; the reference's one-actor-per-
+    // stream bound does not apply because assignment is deterministic
+    // given (arrival order, tail state)). Each slice's max raw
+    // timestamp follows from its counts alone: `now` under Arrival, a
+    // rejection under ClientRequire with a missing timestamp (the
+    // unary TimestampMissing, before any body moves), else the capped
+    // max of the client timestamps and `now` for missing ones.
+    val slices = scala.collection.mutable.Map.empty[Int,
+      scala.collection.mutable.Map[(String, String), StreamStore.SlicePlan]]
     val runSeq = scala.collection.mutable.Map.empty[(String, String), Long]
     val runTs = scala.collection.mutable.Map.empty[(String, String), Long]
-    partStats.sortBy(_._1).foreach { case (pid, b, s, c, mx) =>
+    sliceStats.toSeq.sortBy(_._1._1).foreach { case ((r, b, s), a) =>
       val k = (b, s)
-      val startSeq = runSeq.getOrElse(k, tails(k).tailSeq)
-      val tsFloor = runTs.getOrElse(k, tails(k).tailTs)
-      seqOffset((pid, b, s)) = (startSeq, tsFloor)
-      runSeq(k) = startSeq + c
-      runTs(k) = math.max(tsFloor, mx)
-    }
-    val offsets = spark.sparkContext.broadcast(seqOffset.toMap)
-
-    // pass 2: partition-local seq + monotone-ts assignment
-    val outSchema = StructType(Seq(
-      StructField("basin", StringType),
-      StructField("stream", StringType),
-      StructField("seq_num", LongType),
-      StructField("timestamp", LongType))
-      ++ prepared.schema.filter(f => f.name == "headers" || f.name == "body"))
-    val assigned = prepared.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val seqCursor = scala.collection.mutable.Map.empty[(String, String), Long]
-      val tsCursor = scala.collection.mutable.Map.empty[(String, String), Long]
-      it.map { r =>
-        val k = (r.getString(0), r.getString(1))
-        val (s0, t0) = offsets.value((pid, k._1, k._2))
-        val seq = seqCursor.getOrElse(k, s0)
-        val ts = math.max(r.getLong(3), tsCursor.getOrElse(k, t0))
-        seqCursor(k) = seq + 1
-        tsCursor(k) = ts
-        Row(k._1, k._2, seq, ts, r.get(4), r.get(5))
+      // streams the epoch filter dropped have no plan
+      streams.get(k).foreach { sp =>
+        val (rows, maxClient, nulls) = (a(0), a(1), a(2))
+        val maxRaw = sp.mode match {
+          case TimestampingMode.Arrival => now
+          case mode =>
+            if (mode == TimestampingMode.ClientRequire && nulls > 0)
+              throw new IllegalStateException(s"TimestampMissing: $b/$s")
+            val picked = if (nulls > 0) math.max(maxClient, now) else maxClient
+            if (sp.uncapped) picked else math.min(picked, now)
+        }
+        val startSeq = runSeq.getOrElse(k, tails(k).tailSeq)
+        val tsFloor = runTs.getOrElse(k, tails(k).tailTs)
+        val tsEnd = math.max(tsFloor, maxRaw)
+        slices.getOrElseUpdate(r, scala.collection.mutable.Map.empty)(k) =
+          StreamStore.SlicePlan(startSeq, tsFloor, rows, tsEnd)
+        runSeq(k) = startSeq + rows
+        runTs(k) = tsEnd
       }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-      .withColumn("metered_size",
+    }
+    val planBc = spark.sparkContext.broadcast(StreamStore.IngestPlan(now, streams,
+      slices.iterator.map { case (r, m) => r -> m.toMap }.toMap))
+    val rangeOf = udf((b: String, s: String, a: Long) => ranges.getPartition((b, s, a)))
+    // the exchange computes each row's range id itself: no column for
+    // it rides the shuffle. ranges.numPartitions, not numRanges: an
+    // input with fewer distinct keys than P gets fewer ranges, and a
+    // by-number shuffle is never coalesced by AQE.
+    val bodyQe = df
+      .repartitionById(ranges.numPartitions,
+        rangeOf(col("basin"), col("stream"), arrivalKey))
+      .sortWithinPartitions("basin", "stream", "arrival")
+      .select(col("basin"), col("stream"), col("ts_client"), col("headers"), col("body"),
         // custom codegen'd expression: one fused loop per row
         graft.functions.GraftFunctions.metered_size(col("headers"), col("body")))
+      .queryExecution
+    phaseDone(ServerMetrics.ingestPlan)
 
-    // partition values go through Layout.escape so dynamic-partition
-    // dirs coincide with the unary append path for ALL legal names.
-    // The job writes to a STAGING directory; files only enter the live
-    // data dir inside each stream's locked commit below — a losing
-    // concurrent ingest (CAS conflict) leaves nothing behind that a
-    // read could see as duplicate seq_nums.
-    val stage = s"$root/_stage/ingest-${java.util.UUID.randomUUID()}"
+    // The body job writes to a STAGING directory; files only enter the
+    // live data dir inside each stream's locked commit below — a
+    // losing concurrent ingest (CAS conflict) leaves nothing behind
+    // that a read could see as duplicate seq_nums.
     // Staged files are written EXECUTOR-DIRECT (DirectParquet), not
     // through the Hadoop-committer dynamic-partition writer: at 10k
     // one-record streams per batch the committer pays a task-temp
     // rename per file plus a SERIAL driver-side job-commit rename
     // sweep — measured 30+ s of a 44 s ingest against ~2 s of actual
-    // parquet bytes. Each task streams its (basin, stream, seq)-sorted
-    // run and cuts a new file at every stream boundary, writing at the
-    // final staged path directly; the staged dir is private to this
-    // ingest, so no committer atomicity is needed (the finally below
-    // removes it wholesale on any failure, and only the per-stream
-    // locked commit publishes files into the live prefix).
-    val stagePath = stage
-    // The job's result channel carries one StagedFile report per file
-    // a SUCCESSFUL attempt wrote (Spark returns exactly one attempt's
-    // result per partition) — the commit loop below validates tiling
-    // from these reports with ZERO per-file IO, probing only
-    // unexpected extras. O(#files) driver memory, same order as the
-    // partition-stats collect above.
-    val stagedReports: Map[(String, String), Map[String, StreamStore.StagedFile]] =
-      assigned
-        .sortWithinPartitions("basin", "stream", "seq_num")
-        .rdd
-        .mapPartitions(StreamStore.writeStagedPartition(stagePath, basinCiphers))
-        .collect()
-        .groupBy(r => (r.basin, r.stream))
-        .map { case (k, rs) => k -> rs.map(r => r.name -> r).toMap }
-    prepared.unpersist()
-    beforeStagedCommit(stage)
-
-    // per-stream commit (no extra job): under the stream lock, verify
-    // the CAS precondition, move the staged files into the live dir,
-    // then commit the manifest — so a concurrent writer on another
-    // driver aborts this stream's commit with its files still staged.
-    // Streams are independent (each under its own lock), so commits
-    // run on a bounded pool: serial driver IO of ~1-3 ms per manifest
-    // is fine at 8 streams but becomes the whole ingest at 10k+
-    // streams per batch. The work is driver-side filesystem IO
-    // (manifest read + data move + manifest CAS), not CPU, so the
-    // pool oversubscribes cores deliberately; 48 measured ~1.6x
-    // faster than 16 on the 10k-stream bench phase (cap matches that
-    // measurement).
-    val commitPar = math.min(48, runSeq.size)
+    // parquet bytes. Each task streams its sorted range and cuts a new
+    // file at every stream boundary, writing at the final staged path
+    // directly; the staged dir is private to this ingest, so no
+    // committer atomicity is needed (the finally below removes it
+    // wholesale on any failure, and only the per-stream locked commit
+    // publishes files into the live prefix).
+    val stage = s"$root/_stage/ingest-${java.util.UUID.randomUUID()}"
     try {
-      parallelMap(runSeq.keys.toSeq, commitPar) { case k @ (b, s) =>
-      val m = tails(k)
-      val committed = withStreamLock(b, s) {
-        val (cur0, tag0) = manifestTagged(b, s)
-        // sweep first (it may fence-bump or refresh the manifest) so
-        // the precondition checks and the commit see one state
-        val (cur, tag) = sweepOrphans(b, s, cur0, tag0)
-        // The staged files' seq_nums were assigned from the PLANNED
-        // tail (m.tailSeq), so the CAS precondition is the TAIL, not
-        // the raw version: a concurrent append/trim/fence command
-        // moved the tail and the staged numbering is wrong — abort
-        // with the files still staged (clean retry re-plans). A
-        // version bump that left the tail in place (a compact()
-        // generation flip, a maintenance rewrite) is benign: REBASE
-        // the commit on the fresh manifest and land in ITS generation
-        // — the three-way GenerationSpec race pins this (an abort
-        // here would fail a bulk ingest whose rows are still exactly
-        // at the tail; committing against the stale manifest would
-        // resurrect the pre-flip generation).
-        if (cur.tailSeq != m.tailSeq)
-          throw new ManifestCasConflict(
-            s"ingest lost the commit race for $b/$s: tail moved " +
-              s"${m.tailSeq} -> ${cur.tailSeq} (v${m.version} -> v${cur.version})")
-        if (cur.fencingToken != m.fencingToken)
-          throw new ManifestCasConflict(
-            s"ingest lost the commit race for $b/$s: fencing token changed")
-        if (cur.deletionPending)
-          throw new IllegalStateException(s"StreamDeletionPending: $b/$s")
-        val newM = cur.copy(tailSeq = runSeq(k),
-          tailTs = math.max(cur.tailTs, runTs(k)),
-          lastEpoch = epochId.getOrElse(cur.lastEpoch),
-          version = cur.version + 1)
-        val src = Paths.get(Layout.stageDir(stage, b, s))
-        val dst = Paths.get(Layout.genDir(root, b, s, cur.generation))
-        val stagedPaths: Seq[String] =
-          if (!Files.exists(src)) Nil
-          else {
-            val parts = Files.list(src)
-            try parts.iterator().asScala.map(_.toString)
-              .filter(_.endsWith(".parquet")).toSeq
-            finally parts.close()
+      // The job's result channel carries one StagedFile report per file
+      // a SUCCESSFUL attempt wrote (Spark returns exactly one attempt's
+      // result per partition) — the commit loop below validates tiling
+      // from these reports with ZERO per-file IO, probing only
+      // unexpected extras. O(#files) driver memory, same order as the
+      // count pass's collect above.
+      val stagedReports: Map[(String, String), Map[String, StreamStore.StagedFile]] =
+        try SQLExecution.withNewExecutionId(bodyQe, Some("ingest: bodies")) {
+          bodyQe.toRdd.mapPartitions(StreamStore.writeStagedPartition(stage, planBc))
+            .collect()
+        }.groupBy(r => (r.basin, r.stream))
+          .map { case (k, rs) => k -> rs.map(r => r.name -> r).toMap }
+        finally planBc.destroy()
+      phaseDone(ServerMetrics.ingestWrite)
+      beforeStagedCommit(stage)
+
+      // per-stream commit (no extra job): under the stream lock, verify
+      // the CAS precondition, move the staged files into the live dir,
+      // then commit the manifest — so a concurrent writer on another
+      // driver aborts this stream's commit with its files still staged.
+      // Streams are independent (each under its own lock), so commits
+      // run on a bounded pool: serial driver IO of ~1-3 ms per manifest
+      // is fine at 8 streams but becomes the whole ingest at 10k+
+      // streams per batch. The work is driver-side filesystem IO
+      // (manifest read + data move + manifest CAS), not CPU, so the
+      // pool oversubscribes cores deliberately; 48 measured ~1.6x
+      // faster than 16 on the 10k-stream bench phase (cap matches that
+      // measurement).
+      val commitPar = math.min(48, runSeq.size)
+      val acks = parallelMap(runSeq.keys.toSeq, commitPar) { case k @ (b, s) =>
+        val m = tails(k)
+        val committed = withStreamLock(b, s) {
+          val (cur0, tag0) = manifestTagged(b, s)
+          // sweep first (it may fence-bump or refresh the manifest) so
+          // the precondition checks and the commit see one state
+          val (cur, tag) = sweepOrphans(b, s, cur0, tag0)
+          // The staged files' seq_nums were assigned from the PLANNED
+          // tail (m.tailSeq), so the CAS precondition is the TAIL, not
+          // the raw version: a concurrent append/trim/fence command
+          // moved the tail and the staged numbering is wrong — abort
+          // with the files still staged (clean retry re-plans). A
+          // version bump that left the tail in place (a compact()
+          // generation flip, a maintenance rewrite) is benign: REBASE
+          // the commit on the fresh manifest and land in ITS generation
+          // — the three-way GenerationSpec race pins this (an abort
+          // here would fail a bulk ingest whose rows are still exactly
+          // at the tail; committing against the stale manifest would
+          // resurrect the pre-flip generation).
+          if (cur.tailSeq != m.tailSeq)
+            throw new ManifestCasConflict(
+              s"ingest lost the commit race for $b/$s: tail moved " +
+                s"${m.tailSeq} -> ${cur.tailSeq} (v${m.version} -> v${cur.version})")
+          if (cur.fencingToken != m.fencingToken)
+            throw new ManifestCasConflict(
+              s"ingest lost the commit race for $b/$s: fencing token changed")
+          if (cur.deletionPending)
+            throw new IllegalStateException(s"StreamDeletionPending: $b/$s")
+          val newM = cur.copy(tailSeq = runSeq(k),
+            tailTs = math.max(cur.tailTs, runTs(k)),
+            lastEpoch = epochId.getOrElse(cur.lastEpoch),
+            version = cur.version + 1)
+          val src = Paths.get(Layout.stageDir(stage, b, s))
+          val dst = Paths.get(Layout.genDir(root, b, s, cur.generation))
+          val stagedPaths: Seq[String] =
+            if (!Files.exists(src)) Nil
+            else {
+              val parts = Files.list(src)
+              try parts.iterator().asScala.map(_.toString)
+                .filter(_.endsWith(".parquet")).toSeq
+              finally parts.close()
+            }
+          // Task-retry/speculation gate: promote only the file set that
+          // densely tiles [plannedTail, newTail) — torn attempt leavings
+          // and retried/speculated duplicate twins stay staged and die
+          // with the stage dir (see selectStagedFiles).
+          val acceptedFiles = StreamStore.selectStagedFiles(
+            stagedPaths, m.tailSeq, runSeq(k), b, s,
+            stagedReports.getOrElse(k, Map.empty))
+          val moved = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+          acceptedFiles.foreach { st =>
+            val f = Paths.get(st.path)
+            val d = dst.resolve(f.getFileName)
+            backend.putData(f, d); moved += d
           }
-        // Task-retry/speculation gate: promote only the file set that
-        // densely tiles [plannedTail, newTail) — torn attempt leavings
-        // and retried/speculated duplicate twins stay staged and die
-        // with the stage dir (see selectStagedFiles).
-        val acceptedFiles = StreamStore.selectStagedFiles(
-          stagedPaths, m.tailSeq, runSeq(k), b, s,
-          stagedReports.getOrElse(k, Map.empty))
-        val moved = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-        acceptedFiles.foreach { st =>
-          val f = Paths.get(st.path)
-          val d = dst.resolve(f.getFileName)
-          backend.putData(f, d); moved += d
+          // same atomicity contract as unary append: a commit that fails
+          // after the objects entered the live prefix must take them back
+          // out, or a re-driven ingest duplicates their seq_nums (the
+          // beforeManifestCommit hook lets LinearizabilitySpec inject
+          // exactly that failure here too)
+          try {
+            beforeManifestCommit()
+            saveManifestCas(b, s, newM, tag)
+          } catch {
+            // indeterminate commit: may have landed — keep the moved
+            // objects and force a re-sweep (see appendGroup)
+            case ind: IndeterminateCommit =>
+              sweptStreams.remove(b + "\u0000" + s)
+              throw ind
+            case t: Throwable =>
+              moved.foreach(backend.deleteData)
+              throw t
+          }
+          // committed: this stream's staged dir is spent (accepted
+          // files moved out; only torn/twin leavings remain). Deleting
+          // it HERE was the commit loop's hidden serializer at 50k
+          // streams: 48 threads rmdir-ing siblings of ONE stage parent
+          // convoy on the parent directory's kernel mutex (measured
+          // 3 847 of 3 995 thread-s — ~77 ms/stream of lock wait for a
+          // ~100 µs rmdir). All staged dirs die together in the finally
+          // sweep below, where deletion parallelism is chosen for the
+          // filesystem instead of inherited from the commit pool.
+          newM
         }
-        // same atomicity contract as unary append: a commit that fails
-        // after the objects entered the live prefix must take them back
-        // out, or a re-driven ingest duplicates their seq_nums (the
-        // beforeManifestCommit hook lets LinearizabilitySpec inject
-        // exactly that failure here too)
-        try {
-          beforeManifestCommit()
-          saveManifestCas(b, s, newM, tag)
-        } catch {
-          // indeterminate commit: may have landed — keep the moved
-          // objects and force a re-sweep (see appendGroup)
-          case ind: IndeterminateCommit =>
-            sweptStreams.remove(b + "\u0000" + s)
-            throw ind
-          case t: Throwable =>
-            moved.foreach(backend.deleteData)
-            throw t
-        }
-        // committed: this stream's staged dir is spent (accepted
-        // files moved out; only torn/twin leavings remain). Deleting
-        // it HERE was the commit loop's hidden serializer at 50k
-        // streams: 48 threads rmdir-ing siblings of ONE stage parent
-        // convoy on the parent directory's kernel mutex (measured
-        // 3 847 of 3 995 thread-s — ~77 ms/stream of lock wait for a
-        // ~100 µs rmdir). All staged dirs die together in the finally
-        // sweep below, where deletion parallelism is chosen for the
-        // filesystem instead of inherited from the commit pool.
-        newM
-      }
-      k -> AppendAck(
-        StreamPosition(m.tailSeq, 0),
-        StreamPosition(committed.tailSeq, committed.tailTs),
-        StreamPosition(committed.tailSeq, committed.tailTs))
+        k -> AppendAck(
+          StreamPosition(m.tailSeq, 0),
+          StreamPosition(committed.tailSeq, committed.tailTs),
+          StreamPosition(committed.tailSeq, committed.tailTs))
       }.toMap
+      phaseDone(ServerMetrics.ingestCommit)
+      acks
     } finally {
       // ONE stage sweep for committed and uncommitted streams alike:
       // committed dirs are empty (files moved into the live prefix),

@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
@@ -17,10 +16,13 @@ import graft.model._
   */
 class RecordDecryptPlanSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private val key = Array.fill(32)(0x66.toByte)
 
   private def encStore(): StreamStore = {
-    val dir = Files.createTempDirectory("dec-plan").toString
+    val dir = BackendHarness.tempDir("graft-decplan").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("enc-basin", BasinConfig(
       defaultStreamConfig =
@@ -74,7 +76,7 @@ class RecordDecryptPlanSpec extends AnyFunSuite with LocalSpark {
 
   test("basin-wide decrypting scan: one plan, per-row stream-derived " +
     "AAD authenticates every stream, exactly one decrypt per record") {
-    val dir = Files.createTempDirectory("dec-basin").toString
+    val dir = BackendHarness.tempDir("graft-decbasin").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("enc-basin", BasinConfig(
       defaultStreamConfig =

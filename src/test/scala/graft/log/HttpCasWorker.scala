@@ -46,7 +46,9 @@ object HttpCasWorker {
         sys.exit(0)
       case "putloop" =>
         val dir = Paths.get(s"$root/data/crash-stream")
-        val scratch = Files.createTempDirectory(s"xp-put-$workerId")
+        // under the root, which the spec deletes once this worker is
+        // killed: a SIGKILLed worker cannot clean up after itself
+        val scratch = Files.createDirectories(Paths.get(root, s"xp-put-$workerId"))
         var i = 0
         while (true) {
           val recs = (0 until 64).map(j => DirectParquet.Rec(

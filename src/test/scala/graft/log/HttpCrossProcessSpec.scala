@@ -1,6 +1,7 @@
 package graft.log
 
 import java.nio.file.{Files, Paths}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model._
 
@@ -12,7 +13,12 @@ import graft.model._
   * atomicity, request encoding, and list-after-write are load-bearing
   * (reference analog: the sim's HTTP object store host).
   */
-class HttpCrossProcessSpec extends AnyFunSuite {
+class HttpCrossProcessSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  // every worker is dead by then (each test kills and reaps its own),
+  // so no process still writes under the roots this deletes
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
 
   private def forkWorker(endpoint: String, root: String, id: String,
                          mode: String, extra: String*): Process = {
@@ -23,11 +29,18 @@ class HttpCrossProcessSpec extends AnyFunSuite {
     new ProcessBuilder(cmd: _*).inheritIO().start()
   }
 
+  /** Kill a worker that is still running (a failed wait or assertion)
+    * and wait for it to exit. */
+  private def reap(w: Process): Unit = {
+    w.destroyForcibly()
+    w.waitFor()
+  }
+
   test("two foreign processes CAS-increment one counter and populate " +
     "one catalog with zero lost updates") {
     val (server, endpoint) = HttpObjectServer.start()
     try {
-      val root = Files.createTempDirectory("xp-root").toString
+      val root = BackendHarness.tempDir("graft-xproot").toString
       val backend = HttpObjectBackend.install(root, endpoint)
       val cat = new Catalog(root)
       cat.createBasin("xp-basin", BasinConfig()).fold(e => fail(e), identity)
@@ -35,8 +48,10 @@ class HttpCrossProcessSpec extends AnyFunSuite {
       val iters = 40
       val w1 = forkWorker(endpoint, root, "1", "cas", iters.toString)
       val w2 = forkWorker(endpoint, root, "2", "cas", iters.toString)
-      assert(w1.waitFor(120, java.util.concurrent.TimeUnit.SECONDS), "w1 timed out")
-      assert(w2.waitFor(120, java.util.concurrent.TimeUnit.SECONDS), "w2 timed out")
+      try {
+        assert(w1.waitFor(120, java.util.concurrent.TimeUnit.SECONDS), "w1 timed out")
+        assert(w2.waitFor(120, java.util.concurrent.TimeUnit.SECONDS), "w2 timed out")
+      } finally { reap(w1); reap(w2) }
       assert(w1.exitValue() == 0, s"w1 exit ${w1.exitValue()}")
       assert(w2.exitValue() == 0, s"w2 exit ${w2.exitValue()}")
 
@@ -61,16 +76,16 @@ class HttpCrossProcessSpec extends AnyFunSuite {
     "object: every listed object parses whole") {
     val (server, endpoint) = HttpObjectServer.start()
     try {
-      val root = Files.createTempDirectory("xp-crash").toString
+      val root = BackendHarness.tempDir("graft-xpcrash").toString
       val backend = HttpObjectBackend.install(root, endpoint)
       val w = forkWorker(endpoint, root, "9", "putloop")
       val dir = Paths.get(s"$root/data/crash-stream")
-      val deadline = System.currentTimeMillis() + 60000
-      while (backend.listData(dir).size < 5 &&
-             System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(backend.listData(dir).size >= 5, "worker published nothing in 60s")
-      w.destroyForcibly() // SIGKILL mid-flight, possibly mid-PUT
-      w.waitFor()
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        while (backend.listData(dir).size < 5 &&
+               System.currentTimeMillis() < deadline) Thread.sleep(50)
+        assert(backend.listData(dir).size >= 5, "worker published nothing in 60s")
+      } finally reap(w) // SIGKILL mid-flight, possibly mid-PUT
       val listed = backend.listData(dir)
       assert(listed.nonEmpty)
       // the atomicity claim: a listed object is ALWAYS whole — footer

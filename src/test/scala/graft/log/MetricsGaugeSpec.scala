@@ -107,4 +107,27 @@ class MetricsGaugeSpec extends AnyFunSuite with LocalSpark {
     assert(st.basinStorageBytesFast("gauge-basin") ==
       scanBytes(st.visibleBasin("gauge-basin")))
   }
+
+  test("one bulk ingest adds exactly one observation to each ingest phase timer") {
+    val st = freshStore()
+    Seq("i0", "i1").foreach(s => st.catalog.createStream("gauge-basin", s))
+    import spark.implicits._
+    val df = Seq(("i0", 1L), ("i1", 2L), ("i0", 3L)).toDF("stream", "arrival")
+      .select(org.apache.spark.sql.functions.lit("gauge-basin").as("basin"),
+        $"stream", org.apache.spark.sql.functions.lit(null).cast("long").as("ts_client"),
+        org.apache.spark.sql.functions.expr(
+          "CAST(NULL AS ARRAY<STRUCT<name: BINARY, value: BINARY>>)").as("headers"),
+        org.apache.spark.sql.functions.expr("CAST('x' AS BINARY)").as("body"),
+        $"arrival")
+    val phases = Seq(ServerMetrics.ingestCount, ServerMetrics.ingestPlan,
+      ServerMetrics.ingestWrite, ServerMetrics.ingestCommit)
+    val before = phases.map(_.count)
+    assert(st.ingest(df, Some(1000000L)).size == 2)
+    assert(phases.map(_.count) == before.map(_ + 1))
+    val text = ServerMetrics.gather()
+    Seq("count", "plan", "write", "commit").foreach { p =>
+      assert(text.contains(s"# TYPE graft_ingest_${p}_seconds histogram"), p)
+      assert(text.contains(s"graft_ingest_${p}_seconds_count "), p)
+    }
+  }
 }

@@ -1118,4 +1118,155 @@ class StreamStoreSpec extends AnyFunSuite with LocalSpark {
     assert(st.checkTail("test-basin", "hot").seqNum == 51)
   }
 
+  /** Runs `f` with every Spark job it starts tagged; returns its
+    * result (or failure), the number of those jobs, and the executed
+    * plans of the SQL executions it named `ingest: ...`, by name. */
+  private def traced[T](f: => T)
+      : (scala.util.Try[T], Int, Seq[(String, org.apache.spark.sql.execution.SparkPlan)]) = {
+    val tag = s"spec-ingest-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, org.apache.spark.sql.execution.SparkPlan)]()
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+              .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+    }
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def keep(name: String, qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+        if (name.startsWith("ingest")) plans.add(name -> qe.executedPlan)
+      def onSuccess(name: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = keep(name, qe)
+      def onFailure(name: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = keep(name, qe)
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    spark.sparkContext.addJobTag(tag)
+    try {
+      val out = scala.util.Try(f)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (out, jobs.get(), plans.asScala.toSeq)
+    } finally {
+      spark.sparkContext.removeJobTag(tag)
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+  }
+
+  private def liveFiles(st: StreamStore, stream: String): Set[String] = {
+    val dir = java.nio.file.Paths.get(Layout.dataDir(st.root, "test-basin", stream))
+    if (!Files.exists(dir)) Set.empty
+    else {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally walk.close()
+    }
+  }
+
+  test("bulk ingest plan: at most 4 jobs, one exchange and one sort over the " +
+    "bodies, and no cache") {
+    val st = freshStore()
+    (0 until 3).foreach(i => st.catalog.createStream("test-basin", s"shape$i"))
+    import org.apache.spark.sql.functions._
+    StreamStoreSpec.cacheSeen.set(false)
+    val probe = udf { (id: Long) => StreamStoreSpec.checkNoCache(); id }
+    // four balanced input partitions and no exchange of its own
+    val df = spark.range(0, 4000, 1, 4).select(
+      lit("test-basin").as("basin"),
+      concat(lit("shape"), (col("id") % 3).cast("string")).as("stream"),
+      col("id").as("ts_client"),
+      expr("CAST(NULL AS ARRAY<STRUCT<name: BINARY, value: BINARY>>)").as("headers"),
+      concat(lit("r"), col("id").cast("string")).cast("binary").as("body"),
+      probe(col("id")).as("arrival"))
+    val (acks, jobs, plans) = traced(st.ingest(df, Some(10000000L)))
+    assert(acks.get.values.map(_.end.seqNum).sum == 4000)
+    assert(jobs <= 4, s"$jobs Spark jobs")
+    object Shape extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def carriesBody(p: org.apache.spark.sql.execution.SparkPlan) = p.output.exists(_.name == "body")
+    val exchanges = plans.flatMap { case (_, p) => Shape.collect(p) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike if carriesBody(e) => e
+    } }
+    val sorts = plans.flatMap { case (_, p) => Shape.collect(p) {
+      case s: org.apache.spark.sql.execution.SortExec if carriesBody(s) => s
+    } }
+    assert(plans.map(_._1).toSet == Set("ingest: keys", "ingest: bodies"), plans.map(_._1))
+    assert(exchanges.size == 1, plans.mkString("\n"))
+    assert(sorts.size == 1, plans.mkString("\n"))
+    assert(!StreamStoreSpec.cacheSeen.get, "a cached plan was registered during the ingest")
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("bulk ingest whose input changes its rows between the key pass and the " +
+    "body pass fails, commits nothing and publishes nothing") {
+    val st = freshStore()
+    Seq("nd0", "nd1").foreach { s =>
+      st.catalog.createStream("test-basin", s)
+      appendOk(st, s, AppendInput(Seq(env("seed"))))
+    }
+    val tailsBefore = Seq("nd0", "nd1").map(s => st.checkTail("test-basin", s))
+    val filesBefore = Seq("nd0", "nd1").map(liveFiles(st, _))
+    import org.apache.spark.sql.functions._
+    StreamStoreSpec.evals.clear()
+    // keeps every row on its first two evaluations (the range and count
+    // passes over the keys) and drops every fourth id on the third (the
+    // body job): both streams keep rows, but fewer than planned
+    val keep = udf { (id: Long) =>
+      val n = StreamStoreSpec.evals
+        .computeIfAbsent(id, _ => new java.util.concurrent.atomic.AtomicInteger())
+        .incrementAndGet()
+      !(n == 3 && id % 4 == 0)
+    }.asNondeterministic()
+    val df = spark.range(0, 40, 1, 4).where(keep(col("id"))).select(
+      lit("test-basin").as("basin"),
+      concat(lit("nd"), (col("id") % 2).cast("string")).as("stream"),
+      lit(null).cast("long").as("ts_client"),
+      expr("CAST(NULL AS ARRAY<STRUCT<name: BINARY, value: BINARY>>)").as("headers"),
+      col("id").cast("string").cast("binary").as("body"),
+      col("id").as("arrival"))
+    val thrown = intercept[Exception](st.ingest(df, Some(1000000L)))
+    val chain = Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null)
+      .map(e => Option(e.getMessage).getOrElse("")).mkString("|")
+    assert(chain.contains("ingest input changed"), chain)
+    assert(StreamStoreSpec.evals.values.asScala.exists(_.get >= 3),
+      "the body job never re-evaluated the input")
+    assert(Seq("nd0", "nd1").map(s => st.checkTail("test-basin", s)) == tailsBefore)
+    assert(Seq("nd0", "nd1").map(liveFiles(st, _)) == filesBefore)
+  }
+
+  test("bulk ingest replaying an epoch every stream already committed returns " +
+    "no acks and runs no body job") {
+    val st = freshStore()
+    Seq("rp0", "rp1").foreach(st.catalog.createStream("test-basin", _))
+    import spark.implicits._
+    val df = Seq(("rp0", 1L), ("rp1", 2L), ("rp0", 3L)).toDF("stream", "arrival")
+      .select(org.apache.spark.sql.functions.lit("test-basin").as("basin"),
+        $"stream", org.apache.spark.sql.functions.lit(null).cast("long").as("ts_client"),
+        org.apache.spark.sql.functions.expr(
+          "CAST(NULL AS ARRAY<STRUCT<name: BINARY, value: BINARY>>)").as("headers"),
+        org.apache.spark.sql.functions.expr("CAST('x' AS BINARY)").as("body"),
+        $"arrival")
+    assert(st.ingest(df, Some(5000L), epochId = Some(7L)).size == 2)
+    val (replay, jobs, plans) = traced(st.ingest(df, Some(5000L), epochId = Some(7L)))
+    assert(replay.get == Map.empty)
+    assert(plans.map(_._1) == Seq("ingest: keys"))
+    assert(jobs <= 2, s"$jobs Spark jobs")
+    assert(st.checkTail("test-basin", "rp0").seqNum == 2)
+    assert(st.checkTail("test-basin", "rp1").seqNum == 1)
+  }
+
+}
+
+object StreamStoreSpec {
+  /** Evaluations per input row id (the two-reads test's nondeterministic
+    * filter); executors share the test JVM in local mode. */
+  val evals = new java.util.concurrent.ConcurrentHashMap[Long,
+    java.util.concurrent.atomic.AtomicInteger]()
+
+  /** Whether any input row saw a registered cached plan. */
+  val cacheSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
+  def checkNoCache(): Unit =
+    org.apache.spark.sql.SparkSession.getDefaultSession
+      .filter(!_.sharedState.cacheManager.isEmpty)
+      .foreach(_ => cacheSeen.set(true))
 }

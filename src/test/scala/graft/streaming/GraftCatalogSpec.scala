@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
 
-import graft.log.StreamStore
+import graft.log.{BackendHarness, StreamStore}
 import graft.model._
 
 /** The TableCatalog plugin: basins as namespaces, streams as SQL
@@ -12,8 +11,11 @@ import graft.model._
   */
 class GraftCatalogSpec extends AnyFunSuite with LocalSpark {
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   test("streams are first-class SQL tables under the graft catalog") {
-    val dir = Files.createTempDirectory("graft-cat").toString
+    val dir = BackendHarness.tempDir("graft-sqlcat").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("sql-basin-1",
       BasinConfig(defaultStreamConfig =

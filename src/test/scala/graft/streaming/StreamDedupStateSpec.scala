@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LocalSpark
 
-import graft.log.StreamStore
+import graft.log.{BackendHarness, StreamStore}
 import graft.model._
 
 /** The live-dedup family's STATE BOUND (VERDICT r11 #1): every
@@ -30,10 +29,13 @@ class StreamDedupStateSpec extends AnyFunSuite with LocalSpark {
 
   override protected def conf = Seq("spark.sql.shuffle.partitions" -> "2")
 
+  override def afterAll(): Unit =
+    try super.afterAll() finally BackendHarness.cleanup()
+
   private val Hour = 3600L * 1000L
 
   test("dedup state is watermark-bounded across restarts") {
-    val dir = Files.createTempDirectory("graft-wmdedup").toString
+    val dir = BackendHarness.tempDir("graft-wmdedup").toString
     val st = new StreamStore(spark, dir)
     st.catalog.createBasin("wm-basin",
       BasinConfig(defaultStreamConfig =
