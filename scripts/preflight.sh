@@ -20,6 +20,12 @@ if grep -rn "SparkSession.builder" src | grep -v "^src/main/scala/graft/GraftSes
   echo "[preflight] build sessions with graft.GraftSession.local, not SparkSession.builder"; exit 1
 fi
 
+echo "[preflight] one timing primitive: no count() on a query DataFrame in Bench.scala or tools/"
+if grep -rnE '(SparkEntry\.queries\([^)]*\)\([^)]*\)|fn\(spark, [^)]*\))\.count\(\)' \
+    src/main/scala/graft/Bench.scala src/main/scala/graft/tools/; then
+  echo "[preflight] time queries with graft.Measure.run (noop sink), not count()"; exit 1
+fi
+
 echo "[preflight] smoke: Verify on sf0.001 (entry + every query end-to-end)"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/preflight_out" \
   >/tmp/preflight_verify.log 2>&1 || {
@@ -28,13 +34,16 @@ if grep -q "\[verify\].*failed" /tmp/preflight_verify.log; then
   echo "[preflight] QUERY FAILURES:"; grep "\[verify\].*failed" /tmp/preflight_verify.log; exit 1
 fi
 
-# temp roots of the suites on BackendHarness.tempDir; its cleanup()
-# deletes them from each suite's afterAll
+# temp roots of the suites on BackendHarness.tempDir (its cleanup()
+# deletes them from each suite's afterAll), of the queries (graft.TempDir)
+# and of the query specs
 leaked_roots() {
   shopt -s nullglob
   local dirs=(/tmp/graft-{gen,rec,lin,store,http-records,session,prod,src,rafault,http-auth,catshard,clispec}*
               /tmp/graft-{netfault,nf,http-catalog,group,det,http-account,maint,gauge,tls,pem,staged,follow,singest,ord}*
-              /tmp/graft-{decplan,decbasin,sqlcat,wmdedup,xproot,xpcrash,verify}*)
+              /tmp/graft-{decplan,decbasin,sqlcat,wmdedup,xproot,xpcrash,verify}*
+              /tmp/graft-{demo,objdur,objcat,httpobj,annidx,bm25idx,bucketed,cli,e2e,bench-root}*
+              /tmp/graft-{czr,drift,gopherspec,novspec,contamspec,heapstiny,boiler}*)
   shopt -u nullglob
   echo "${#dirs[@]}"
 }

@@ -9,12 +9,18 @@ import graft.log.StreamStore
 import graft.model._
 
 /** Per-round benchmark. Reports:
-  * - per-query wall seconds over SPARK_GRAFT_SF_DIR (after a warm-up
-  *   pass so JVM/session startup is not billed to the first query),
-  *   raw AND calib-normalized (`queries_norm`);
-  * - an s2-bench-style workload (cli/src/bench.rs:239-247 format):
-  *   sustained append MiB/s (bulk ingest path), catch-up read MiB/s,
-  *   and unary append ack latency min/p50/p90/p99/max.
+  * - per-query median-of-3 wall seconds over SPARK_GRAFT_SF_DIR (after
+  *   an unbilled warm-up so JVM/session startup is not billed to the
+  *   first query), raw AND calib-normalized (`queries_norm`), each
+  *   pass one [[Measure.run]]: the full result written to the noop
+  *   sink (`"action":"noop"`), with the median pass's process CPU, GC
+  *   and Spark counters (`queries_counters`: jobs, stages, tasks,
+  *   executor CPU, shuffle and spill bytes, output rows);
+  * - control-plane phases the store benchmark (`perfbench/`) does not
+  *   cover: 10k and 50k streams on one basin, the same over an HTTP
+  *   object endpoint, and the v1 records API. Bulk ingest, ordered
+  *   catch-up and append-ack latency are perfbench's `small` and
+  *   `events` workloads.
   *
   * Output: the full JSON line (also persisted to BENCH_local.json),
   * then a compact map-free summary as the FINAL stdout line — the
@@ -54,17 +60,6 @@ object Bench {
     * long array, so core oversubscription and bandwidth pressure show
     * up in its wall time the way they show up in a shuffle stage. */
   val ParCalibBaselineSec = 0.309
-
-  /** Cumulative stop-the-world GC seconds of this JVM (all collectors).
-    * Recorded per query and per run so an anomalous driver artifact is
-    * adjudicable FROM THE ARTIFACT (VERDICT r17 #2: same-code
-    * process-CPU 7-49x on the shuffle-heavy tier with both calib
-    * probes quiet is a GC/memory signature, but the artifact carried
-    * no GC evidence — wall contention cannot inflate process-CPU 49x;
-    * collector threads billing to the process can). */
-  private[graft] def gcTimeSec(): Double =
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum / 1e3
 
   /** Peak heap usage (MiB) across all heap memory pools since start
     * (the JVM tracks pool peaks natively — no sampling thread). */
@@ -162,21 +157,14 @@ object Bench {
     * class, so baseline and live values are commensurable). None if
     * the query no longer exists. */
   private[graft] def minOf3Norm(spark: SparkSession, name: String,
-                                sfDir: String): Option[(Double, Double)] = {
-    val fn = SparkEntry.queries.getOrElse(name, return None)
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    fn(spark, sfDir).count() // warm (JIT, plan cache)
-    val passes = (0 until 3).map { _ =>
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
+                                sfDir: String): Option[(Double, Double)] =
+    SparkEntry.queries.get(name).map { fn =>
+      Measure.run(spark, name)(fn(spark, sfDir)) // warm (JIT, plan cache)
+      val passes = Seq.fill(3)(Measure.run(spark, name)(fn(spark, sfDir)))
+      val normFactor = math.min(
+        CalibBaselineSec / cpuCalibSec(), ParCalibBaselineSec / parCalibSec())
+      (passes.map(_.wallSec).min * normFactor, passes.map(_.cpuSec).min)
     }
-    val normFactor = math.min(
-      CalibBaselineSec / cpuCalibSec(), ParCalibBaselineSec / parCalibSec())
-    Some((passes.map(_._1).min * normFactor, passes.map(_._2).min))
-  }
 
   /** The AGGREGATE flag's deterministic re-measure sample: the top-n
     * snapshot queries by normalized cost (ties by name). Defined here
@@ -213,6 +201,7 @@ object Bench {
     // One parent directory for every store root this run creates, so
     // the fsync probe below measures the SAME filesystem the fs-heavy
     // phases fsync to (r18 ADVICE: tmpdir may be a different fs).
+    // Deleted at the end of the run.
     val benchRoot = java.nio.file.Files.createTempDirectory("graft-bench-root")
 
     // ---- contamination probes, sampled BEFORE the run and at every
@@ -248,231 +237,45 @@ object Bench {
     def guard(what: String)(f: => Unit): Unit =
       try f catch { case e: Throwable =>
         System.err.println(s"bench warm-up '$what' failed: ${e.getClass.getSimpleName}: ${e.getMessage}") }
-    guard("r1_check_tail")(SparkEntry.queries("r1_check_tail")(spark, sfDir).count())
-    guard("q1_pricing_summary")(SparkEntry.queries("q1_pricing_summary")(spark, sfDir).count())
+    def warm(name: String): Unit =
+      guard(name)(Measure.run(spark, name)(SparkEntry.queries(name)(spark, sfDir)))
+    warm("r1_check_tail")
+    warm("q1_pricing_summary")
     guard("e2e store fixture")(graft.queries.EngineOps.storeFor(spark, sfDir))
     // First spark.sql through a DSv2 catalog plugin pays one-time
     // session-catalog + parser + plugin-classloading init; round 12's
     // driver run showed e2e_sql_catalog 6.2x its snapshot with a quiet
     // scalar calib — exactly the first-use-init-inside-the-timed-region
     // signature. Pay it here, unbilled, through a throwaway plugin.
-    guard("sql catalog init")(SparkEntry.queries("e2e_sql_catalog")(spark, sfDir).count())
+    warm("e2e_sql_catalog")
 
     // ---- query timings ----
     // Median-of-3 wall time per query (with the median pass's
-    // process-CPU seconds alongside). One wall sample proved
-    // load-fragile (round 6: 2-5x phantom "regressions" a quiet re-run
-    // erased); best-of-2 still let one lucky pass hide a contaminated
-    // run (round 12: the driver's artifact tripped the regression gate
-    // on 4 shuffle-heavy queries). The median rejects BOTH a one-off
-    // contention spike and a one-off lucky-cache pass, and the CPU
-    // seconds ride along because CPU barely moves under external load
-    // — BenchRegressionSpec uses that to tell host contention (wall up,
-    // cpu flat) from a real algorithmic regression (both up).
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    // process-CPU and GC seconds and Spark counters alongside). One
+    // wall sample proved load-fragile (round 6: 2-5x phantom
+    // "regressions" a quiet re-run erased); best-of-2 still let one
+    // lucky pass hide a contaminated run (round 12: that round's
+    // artifact tripped the regression gate on 4 shuffle-heavy
+    // queries). The median rejects BOTH a one-off contention spike and
+    // a one-off lucky-cache pass, and the CPU seconds ride along
+    // because CPU barely moves under external load — BenchRegressionSpec
+    // uses that to tell host contention (wall up, cpu flat) from a real
+    // algorithmic regression (both up).
     val queryErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timed(name: String,
-              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Double) = {
-      val g0 = gcTimeSec()
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-        // One bad query costs one entry (recorded by name in the JSON),
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      try {
+        val passes = Seq.fill(3)(Measure.run(spark, name)(fn(spark, sfDir)))
+        Some(name -> passes.sortBy(_.wallSec)(Ordering.Double.TotalOrdering)(1)) // median wall
+      } catch { case e: Throwable =>
+        // One bad query costs its entries (named in query_errors),
         // never the artifact — round 10's schema drift produced rc=1
         // and NO numbers at all.
-        queryErrors.getOrElseUpdate(name,
-          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
+        queryErrors(name) =
+          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}"
+        None
       }
-      ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9,
-        gcTimeSec() - g0)
-    }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val passes = Seq(timed(name, fn), timed(name, fn), timed(name, fn))
-      name -> passes.sortBy(_._1)(Ordering.Double.TotalOrdering)(1) // median wall
     }
     sampleFsync("queries")
-
-    // ---- s2-style append/read workload over the events table ----
-    // The whole workload is fallible (it re-reads events.parquet and
-    // drives the store end-to-end); compute it into a JSON fragment so
-    // a failure here degrades to zeroed workload metrics + an error
-    // note while the per-query timings above still ship.
-    val workloadJson: String = try {
-    val root = java.nio.file.Files.createTempDirectory(benchRoot, "graft-bench").toString
-    val store = new StreamStore(spark, root)
-    store.catalog.createBasin("bench-basin",
-      BasinConfig(defaultStreamConfig =
-        StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
-    val ev = graft.queries.Records.events(spark, sfDir)
-    val ingestDf = ev.select(
-      lit("bench-basin").as("basin"),
-      col("event_type").as("stream"),
-      expr("ts div 1000000").as("ts_client"),
-      expr("CAST(NULL AS ARRAY<STRUCT<name: BINARY, value: BINARY>>)").as("headers"),
-      col("props").cast("binary").as("body"),
-      col("event_id").as("arrival"))
-    ev.select("event_type").distinct().collect().foreach(r =>
-      store.catalog.createStream("bench-basin", r.getString(0)))
-
-    // sustained append: bulk ingest path (the scale path)
-    val tIngest0 = System.nanoTime()
-    store.ingest(ingestDf)
-    val ingestSec = (System.nanoTime() - tIngest0) / 1e9
-    val (totalBytes, totalRecords) = {
-      val r = spark.read.parquet(s"$root/data")
-        .agg(sum("metered_size"), count(lit(1))).first()
-      (r.getLong(0), r.getLong(1))
-    }
-    val appendMibps = totalBytes / 1048576.0 / ingestSec
-
-    // Catch-up reads carry the reference bench's integrity oracle
-    // (cli/src/bench.rs:389-394): an md5 CHAIN over bodies per stream,
-    // folded during an ordered per-partition consume, compared against
-    // the chain of the source data in arrival order. A mismatch (or an
-    // out-of-order delivery) flips `read_verified` — the read MiB/s is
-    // measured on this verified ordered pass, so optimizer sort
-    // elimination can't silently turn it into an unsorted-scan number.
-    import spark.implicits._
-    def streamChains(df: org.apache.spark.sql.DataFrame, orderCol: String)
-        : Map[String, (String, Long, Long, Boolean)] =
-      df.select(col("stream").cast("string").as("s"),
-          col(orderCol).cast("long").as("ord"), col("body"))
-        .repartition(col("s"))
-        .sortWithinPartitions("s", "ord")
-        .mapPartitions { it =>
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val acc = scala.collection.mutable.LinkedHashMap
-            .empty[String, (Array[Byte], Long, Long, Long, Boolean)]
-          it.foreach { r =>
-            val s = r.getString(0)
-            val ord = r.getLong(1)
-            val b = r.getAs[Array[Byte]](2)
-            val (c0, n, bytes, last, ok) =
-              acc.getOrElse(s, (Array.emptyByteArray, 0L, 0L, Long.MinValue, true))
-            val len = if (b == null) 0L else b.length.toLong
-            md.reset(); md.update(c0); if (b != null) md.update(b)
-            acc(s) = (md.digest(), n + 1, bytes + len, ord, ok && ord > last)
-          }
-          acc.iterator.map { case (s, (c, n, bytes, _, ok)) =>
-            (s, c.map(x => f"$x%02x").mkString, n, bytes, ok) }
-        }
-        .collect().map { case (s, c, n, bytes, ok) => s -> ((c, n, bytes, ok)) }.toMap
-
-    // raw unordered scan throughput (no ordering claim), then the
-    // ordered, chain-verified catch-up that backs read_mibps
-    val tScan0 = System.nanoTime()
-    val readBytes = spark.read.parquet(s"$root/data")
-      .agg(sum("metered_size")).first().getLong(0)
-    val scanMibps = readBytes / 1048576.0 / ((System.nanoTime() - tScan0) / 1e9)
-    val tRead0 = System.nanoTime()
-    val gotEvents = streamChains(spark.read.parquet(s"$root/data"), "seq_num")
-    val readSec = (System.nanoTime() - tRead0) / 1e9
-    val readMibps = readBytes / 1048576.0 / readSec
-    val eventsVerified = {
-      val exp = streamChains(ingestDf, "arrival")
-      exp.keySet == gotEvents.keySet && exp.forall { case (s, (c, n, _, _)) =>
-        val (gc, gn, _, gok) = gotEvents(s)
-        gok && gc == c && gn == n
-      }
-    }
-
-    // s2-bench-style 1 KiB workload (cli/src/bench.rs generates record
-    // bodies; MiB/s on the events table's 16-byte props is record-size
-    // bound, so this phase measures throughput at the reference bench's
-    // record scale): same row count as events, 8 streams, 1 KiB bodies.
-    val nBig = ev.count()
-    val root2 = java.nio.file.Files.createTempDirectory(benchRoot, "graft-bench1k").toString
-    val store2 = new StreamStore(spark, root2)
-    store2.catalog.createBasin("bench-basin",
-      BasinConfig(defaultStreamConfig =
-        StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
-    (0 until 8).foreach(i => store2.catalog.createStream("bench-basin", s"s$i"))
-    val bigDf = spark.range(nBig).select(
-      lit("bench-basin").as("basin"),
-      concat(lit("s"), (col("id") % 8).cast("string")).as("stream"),
-      (lit(1700000000000L) + col("id")).as("ts_client"),
-      expr("CAST(NULL AS ARRAY<STRUCT<name: BINARY, value: BINARY>>)").as("headers"),
-      expr("CAST(repeat(substr(md5(CAST(id AS STRING)), 1, 16), 64) AS BINARY)").as("body"),
-      col("id").as("arrival"))
-    val tBig0 = System.nanoTime()
-    store2.ingest(bigDf)
-    val bigSec = (System.nanoTime() - tBig0) / 1e9
-    val bigBytes = spark.read.parquet(s"$root2/data")
-      .agg(sum("metered_size")).first().getLong(0)
-    val append1kMibps = bigBytes / 1048576.0 / bigSec
-
-    // 1 KiB catch-up: same chain-verified ordered consume
-    val expected = streamChains(bigDf, "arrival")
-    val tBigR0 = System.nanoTime()
-    val got = streamChains(spark.read.parquet(s"$root2/data"), "seq_num")
-    val read1kSec = (System.nanoTime() - tBigR0) / 1e9
-    val read1kMibps = bigBytes / 1048576.0 / read1kSec
-    val readVerified = eventsVerified && expected.keySet == got.keySet &&
-      expected.forall { case (s, (c, n, _, _)) =>
-        val (gc, gn, _, gok) = got(s)
-        gok && gc == c && gn == n
-      }
-
-    // encrypted 1 KiB workload (A13 at bench scale): same rows through
-    // an AEGIS-256 basin — appends encrypt executor-side inside the
-    // staged write, the catch-up decrypts via the codegen'd
-    // record_decrypt plan column and must reproduce the PLAINTEXT
-    // md5 chains (so `enc_verified` proves the full encrypt->decrypt
-    // loop at throughput, not just that bytes moved). MiB/s stays
-    // normalized to metered (= plaintext) bytes, so the enc/plain
-    // ratio IS the cipher overhead.
-    val root3 = java.nio.file.Files.createTempDirectory(benchRoot, "graft-bench1ke").toString
-    val store3 = new StreamStore(spark, root3)
-    store3.catalog.createBasin("bench-basin",
-      BasinConfig(defaultStreamConfig =
-        StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite)),
-        streamCipher = Some(graft.log.CipherAlgo.Aegis256)))
-    (0 until 8).foreach(i => store3.catalog.createStream("bench-basin", s"s$i"))
-    val encKey = Array.tabulate(32)(i => (i * 7 + 3).toByte)
-    val tEnc0 = System.nanoTime()
-    store3.ingest(bigDf, cipher = Some(encKey))
-    val encSec = (System.nanoTime() - tEnc0) / 1e9
-    val encBytes = spark.read.parquet(s"$root3/data")
-      .agg(sum("metered_size")).first().getLong(0)
-    val append1kEncMibps = encBytes / 1048576.0 / encSec
-    val tEncR0 = System.nanoTime()
-    // basin-wide decrypting catch-up: ONE scan with a per-row AAD
-    // derived from the stream column — the same plan shape as the
-    // plaintext read above (never one union branch per stream)
-    val decDf = graft.log.RecordCipher.decryptBasin(
-      store3.visibleBasin("bench-basin"), encKey, "bench-basin")
-    val gotEnc = streamChains(decDf, "seq_num")
-    val read1kEncSec = (System.nanoTime() - tEncR0) / 1e9
-    val read1kEncMibps = encBytes / 1048576.0 / read1kEncSec
-    val encVerified = expected.keySet == gotEnc.keySet &&
-      expected.forall { case (s, (c, n, _, _)) =>
-        val (gc, gn, _, gok) = gotEnc(s)
-        gok && gc == c && gn == n
-      }
-
-    // unary append ack latency (small batches through the full A1-A7
-    // path: validate -> fence/CAS -> assign -> parquet file -> manifest)
-    val ackBatch = AppendInput(Seq.fill(10)(
-      EnvelopeRecord(Nil, Array.fill(100)(42: Byte))))
-    val acks = (0 until 30).map { _ =>
-      val t0 = System.nanoTime()
-      store.append("bench-basin", "click", ackBatch)
-      (System.nanoTime() - t0) / 1e6
-    }.sorted
-    val ack = Map(
-      "min" -> acks.head, "p50" -> pct(acks, 0.50), "p90" -> pct(acks, 0.90),
-      "p99" -> pct(acks, 0.99), "max" -> acks.last)
-    val ackJson = Seq("min", "p50", "p90", "p99", "max")
-      .map(k => "\"" + k + f"\":${ack(k)}%.1f").mkString("{", ",", "}")
-    f""""append_mibps":$appendMibps%.3f,"read_mibps":$readMibps%.3f,"append_records_per_sec":${totalRecords / ingestSec}%.0f,"avg_record_bytes":${totalBytes / math.max(totalRecords, 1)},"ingest_sec":$ingestSec%.3f,"append_1kib_mibps":$append1kMibps%.3f,"read_1kib_mibps":$read1kMibps%.3f,"append_1kib_enc_mibps":$append1kEncMibps%.3f,"read_1kib_enc_mibps":$read1kEncMibps%.3f,"enc_verified":$encVerified,"read_scan_mibps":$scanMibps%.3f,"read_verified":$readVerified,"ack_latency_ms":$ackJson"""
-    } catch { case e: Throwable =>
-      val msg = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}"
-      System.err.println(s"bench workload failed: $msg")
-      s""""append_mibps":0,"read_mibps":0,"read_verified":false,"workload_error":${jsonStr(msg)}"""
-    }
-    sampleFsync("workload")
 
     // ---- many-streams control plane (VERDICT r12 #7): 10k streams on
     // one basin — bulk create, full 10-page listing, check_tail p99
@@ -481,8 +284,8 @@ object Bench {
     // the hot paths stay flat in #streams: create is 64 shard writes,
     // a list page is bounded-heap work over cached shards, check_tail
     // is one cached manifest read, and the ingest commit loop is the
-    // 16-way parallelMap. Guarded like the workload: a failure here
-    // zeroes these keys, never the artifact.
+    // 16-way parallelMap. Guarded: a failure here zeroes these keys,
+    // never the artifact.
     val controlPlaneJson: String = try {
       val rootCp = java.nio.file.Files.createTempDirectory(benchRoot, "graft-bench10k").toString
       val storeCp = new StreamStore(spark, rootCp)
@@ -671,23 +474,23 @@ object Bench {
     val recordsApiJson: String = recordsApiPhaseJson(spark, benchRoot)
     sampleFsync("records_api")
 
-    val qs = results.map { case (k, (w, _, _)) => "\"" + k + f"\":$w%.3f" }
-      .mkString("{", ",", "}")
-    val qsCpu = results.map { case (k, (_, c, _)) => "\"" + k + f"\":$c%.3f" }
-      .mkString("{", ",", "}")
-    val qsGc = results.map { case (k, (_, _, g)) => "\"" + k + f"\":$g%.3f" }
-      .mkString("{", ",", "}")
+    def perQuery(v: Measure.Sample => String): String =
+      results.map { case (k, m) => "\"" + k + "\":" + v(m) }.mkString("{", ",", "}")
+    val qs = perQuery(m => f"${m.wallSec}%.3f")
+    val qsCpu = perQuery(m => f"${m.cpuSec}%.3f")
+    val qsGc = perQuery(m => f"${m.gcSec}%.3f")
+    val qsCounters = perQuery(_.countersJson)
     val errJson =
       if (queryErrors.isEmpty) ""
       else queryErrors.map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
         .mkString(""","query_errors":{""", ",", "}")
-    val total = results.map(_._2._1).sum
-    val totalCpu = results.map(_._2._2).sum
+    val total = results.map(_._2.wallSec).sum
+    val totalCpu = results.map(_._2.cpuSec).sum
     // run-level GC/heap evidence (VERDICT r17 #2): gc_sec is the
     // JVM's cumulative collection time at artifact-write (covers the
-    // workload phases too, which run before this line), heap_max_mb
+    // store phases too, which run before this line), heap_max_mb
     // the native pool peak — both zero-cost bean reads
-    val gcRunSec = gcTimeSec()
+    val gcRunSec = Measure.gcTimeSec()
     val heapMaxMb = heapPeakMb()
     // post-run probe set, paired with the pre-run set sampled before
     // the warm-up; the fsync series additionally carries one sample
@@ -761,10 +564,9 @@ object Bench {
     // the probes don't move when only a query's code slows down.
     val normFactor =
       math.min(CalibBaselineSec / calib, ParCalibBaselineSec / parCalib)
-    val qsNorm = results.map { case (k, (w, _, _)) =>
-      "\"" + k + f"\":${w * normFactor}%.3f" }.mkString("{", ",", "}")
+    val qsNorm = perQuery(m => f"${m.wallSec * normFactor}%.3f")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"median-of-3","total_cpu_sec":$totalCpu%.3f,"gc_sec":$gcRunSec%.3f,"heap_max_mb":$heapMaxMb,"fsync_p50_ms":$fsyncMs%.2f,"cpu_calib_sec":$calib%.4f,"par_calib_sec":$parCalib%.4f,"calib_norm_factor":$normFactor%.4f,$probesJson,"queries":$qs,"queries_norm":$qsNorm,"queries_cpu_sec":$qsCpu,"queries_gc_sec":$qsGc$errJson,"sf":"$sfDir",$workloadJson,$controlPlaneJson,$cp50kJson,$httpControlPlaneJson,$recordsApiJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"median-of-3","action":"noop","total_cpu_sec":$totalCpu%.3f,"gc_sec":$gcRunSec%.3f,"heap_max_mb":$heapMaxMb,"fsync_p50_ms":$fsyncMs%.2f,"cpu_calib_sec":$calib%.4f,"par_calib_sec":$parCalib%.4f,"calib_norm_factor":$normFactor%.4f,$probesJson,"queries":$qs,"queries_norm":$qsNorm,"queries_cpu_sec":$qsCpu,"queries_gc_sec":$qsGc,"queries_counters":$qsCounters$errJson,"sf":"$sfDir",$controlPlaneJson,$cp50kJson,$httpControlPlaneJson,$recordsApiJson}"""
     // The driver captures only the LAST ~2000 chars of stdout, which
     // cannot hold a 186-query map (r11's artifact carried only the
     // alphabetic tail of one map). Persist the full line to a file, and
@@ -778,8 +580,9 @@ object Bench {
     catch { case _: java.io.IOException => () } // bench output must not fail on an unwritable cwd
     println(json)
     val summary =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"median-of-3","n_queries":${results.size},"n_query_errors":${queryErrors.size},"total_cpu_sec":$totalCpu%.3f,"gc_sec":$gcRunSec%.3f,"heap_max_mb":$heapMaxMb,"fsync_p50_ms":$fsyncMs%.2f,"cpu_calib_sec":$calib%.4f,"par_calib_sec":$parCalib%.4f,"calib_norm_factor":$normFactor%.4f,$probesJson,"queries_in":"BENCH_local.json","sf":"$sfDir",$workloadJson,$controlPlaneJson,$cp50kJson,$httpControlPlaneJson,$recordsApiJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"median-of-3","action":"noop","n_queries":${results.size},"n_query_errors":${queryErrors.size},"total_cpu_sec":$totalCpu%.3f,"gc_sec":$gcRunSec%.3f,"heap_max_mb":$heapMaxMb,"fsync_p50_ms":$fsyncMs%.2f,"cpu_calib_sec":$calib%.4f,"par_calib_sec":$parCalib%.4f,"calib_norm_factor":$normFactor%.4f,$probesJson,"queries_in":"BENCH_local.json","sf":"$sfDir",$controlPlaneJson,$cp50kJson,$httpControlPlaneJson,$recordsApiJson}"""
     println(summary)
+    TempDir.delete(benchRoot)
     spark.stop()
   }
 

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.TempDir
 import graft.log.{StreamStore, CipherAlgo, LocationInfo, Layout, Visibility}
 import graft.model._
 
@@ -19,13 +20,17 @@ import graft.model._
   */
 object EngineDemos {
 
-  private def freshStore(s: SparkSession): StreamStore = {
-    val st = new StreamStore(s, Files.createTempDirectory("graft-demo").toString)
-    st.catalog.createBasin("demo-basin1",
-      BasinConfig(defaultStreamConfig =
-        StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
-    st
-  }
+  /** Run `f` on a fresh temp store holding `demo-basin1`, deleted
+    * afterwards. */
+  private def withFreshStore[T](s: SparkSession)(f: StreamStore => T): T =
+    TempDir.using("graft-demo") { dir =>
+      val st = new StreamStore(s, dir.toString)
+      st.catalog.createBasin("demo-basin1",
+        BasinConfig(defaultStreamConfig =
+          StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
+      // the JVM-wide stage-GC worker may still be sweeping this root
+      try f(st) finally st.awaitStageGc()
+    }
 
   private def rec(body: String): EnvelopeRecord =
     EnvelopeRecord(Nil, body.getBytes)
@@ -43,7 +48,7 @@ object EngineDemos {
   private def demo(name: String, expected: Seq[(String, String)])(
       run: (SparkSession, StreamStore) => Seq[(String, String)]): QueryDef =
     QueryDef(name,
-      (s, _) => out(s, run(s, freshStore(s))),
+      (s, _) => out(s, withFreshStore(s)(run(s, _))),
       Some(constOracle(expected)))
 
   /** Set a session conf for the duration of `f`, restored even on
@@ -1616,8 +1621,8 @@ object EngineDemos {
       "tail_from_second_instance" -> "3",
       "rows_from_second_instance" -> "3",
       "manifest_version_advances" -> "true",
-      "stale_tag_commit_rejected" -> "true")) { (sp, _) =>
-      val root = Files.createTempDirectory("graft-objdur").toString
+      "stale_tag_commit_rejected" -> "true")) { (sp, _) => TempDir.using("graft-objdur") { dir =>
+      val root = dir.toString
       graft.log.ObjectStoreBackend.install(root)
       val st = new StreamStore(sp, root)
       st.catalog.createBasin("demo-basin1",
@@ -1645,7 +1650,7 @@ object EngineDemos {
         "rows_from_second_instance" -> rows.size.toString,
         "manifest_version_advances" -> (version2 == 2L).toString,
         "stale_tag_commit_rejected" -> rejected.toString)
-    },
+    }},
 
     // C1-C5 on an OBJECT root — the control plane over conditional
     // puts only (no file locks, no renames): the reference keeps
@@ -1661,8 +1666,8 @@ object EngineDemos {
       "reconfigure_cross_driver" -> "infinite",
       "config_merge_on_object" -> "standard",
       "stale_shard_commit_rejected" -> "true",
-      "append_after_catalog_ops" -> "1")) { (sp, _) =>
-      val root = Files.createTempDirectory("graft-objcat").toString
+      "append_after_catalog_ops" -> "1")) { (sp, _) => TempDir.using("graft-objcat") { dir =>
+      val root = dir.toString
       graft.log.ObjectStoreBackend.install(root)
       val a = new StreamStore(sp, root)
       val b = new StreamStore(sp, root) // second simulated driver
@@ -1709,7 +1714,7 @@ object EngineDemos {
         "stale_shard_commit_rejected" -> rejected.toString,
         "append_after_catalog_ops" ->
           a.checkTail("demo-basin1", "oc-0").seqNum.toString)
-    },
+    }},
 
     // The REAL-ENDPOINT object adapter: same flows as the object demos
     // above, but every protocol operation is an actual HTTP round trip
@@ -1729,8 +1734,8 @@ object EngineDemos {
       "encrypted_round_trip" -> "sealed-over-http",
       "encrypted_headers_hidden" -> "true")) { (sp, _) =>
       val (server, endpoint) = graft.log.HttpObjectServer.start()
-      try {
-        val root = Files.createTempDirectory("graft-httpobj").toString
+      try TempDir.using("graft-httpobj") { dir =>
+        val root = dir.toString
         graft.log.HttpObjectBackend.install(root, endpoint)
         val a = new StreamStore(sp, root)
         val b = new StreamStore(sp, root) // second driver, same endpoint
@@ -2511,11 +2516,11 @@ object EngineDemos {
       "token_mgmt_gate" -> "201,403,204",
       // issuance is scope-subset-gated: minting a wider grant than
       // the bearer's own is 403 even inside the managed id namespace
-      "issue_escalation" -> "403")) { (sp, _) =>
+      "issue_escalation" -> "403")) { (sp, _) => TempDir.using("graft-demo-auth") { dir =>
       // fresh store WITHOUT the open-posture server the other demos
       // use: this one runs requireAuth = true end to end
       val st = new StreamStore(sp,
-        Files.createTempDirectory("graft-demo-auth").toString)
+        dir.toString)
       st.catalog.createBasin("auth-basin-a1", BasinConfig(
         defaultStreamConfig =
           StreamConfig(retentionPolicy = Some(RetentionPolicy.Infinite))))
@@ -2614,7 +2619,7 @@ object EngineDemos {
           "token_mgmt_gate" -> mgmt,
           "issue_escalation" -> escalation.toString)
       } finally server.stop(0)
-    },
+    }},
 
     // T5 — basin deletion: every stream terminally trimmed, basin marked
     demo("e2e_t5_basin_delete", Seq(
@@ -2830,10 +2835,9 @@ object EngineDemos {
     // newly appended clean record (offsets resume; nothing is
     // re-scored or re-emitted).
     QueryDef("e2e_stream_quality_gate",
-      (sp, d) => withDemoPartitions(sp) {
+      (sp, d) => withFreshStore(sp) { st => withDemoPartitions(sp) {
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.types.{BinaryType, LongType}
-        val st = freshStore(sp)
         st.catalog.createStream("demo-basin1", "qg")
         val (_, totals, weights) = PipelineOps.qualityTrainArtifacts(sp, d)
         val tr = totals.collect().head
@@ -2890,7 +2894,7 @@ object EngineDemos {
             (second.toSet -- first.toSet).toSeq.sorted.mkString(","),
           "spam_never_passes" ->
             second.forall(id => id != "q2" && id != "q4" && id != "q6").toString))
-      },
+      }},
       Some(constOracle(Seq(
         "trained_buckets_bounded" -> "true",
         "first_run_kept" -> "q1,q3",
@@ -2910,14 +2914,14 @@ object EngineDemos {
     // check rows pin that the pruning actually happened in the plan,
     // not just that the answer came out right.
     QueryDef("e2e_ann_index",
-      (s, d) => {
+      (s, d) => TempDir.using("graft-annidx") { dir =>
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.expressions.Window
         val all = QueryDef.fanOut(s.read.parquet(s"$d/embeddings.parquet"))
           .select(col("vec_id"), col("embedding"))
         val ranks = AnalyticsOps.kmeansCellRanks(all, AnalyticsOps.KmK, 2)
           .select("vec_id", "cluster", "arn").localCheckpoint()
-        val tmp = Files.createTempDirectory("graft-annidx").toString
+        val tmp = dir.toString
         all.join(ranks.where(col("arn") === 1), "vec_id")
           .select(col("vec_id"), col("embedding"), col("cluster").as("cell"))
           // cluster by cell before the partitioned write: one task per
@@ -2995,12 +2999,11 @@ object EngineDemos {
     // replay one micro-batch; production pairs this sink with the
     // epoch-id dedup the bulk-ingest path already implements.
     QueryDef("e2e_stream_ann_ingest",
-      (sp, _) => withDemoPartitions(sp) {
+      (sp, _) => withFreshStore(sp) { st => withDemoPartitions(sp) {
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.Column
-        val st = freshStore(sp)
         st.catalog.createStream("demo-basin1", "ann")
-        val idx = Files.createTempDirectory("graft-annstream").toString
+        val idx = s"${st.root}/_annidx"
         // fixed unit centroids c0=(1,0,0,0), c1=(0,1,0,0)
         def cellOf(x: Column, y: Column, z: Column, w: Column): Column =
           when((x - 1) * (x - 1) + y * y + z * z + w * w
@@ -3062,7 +3065,7 @@ object EngineDemos {
           "partition_filter_pushed" -> pushed.toString,
           "no_dup_after_restart" ->
             (allIds.size == allIds.distinct.size).toString))
-      },
+      }},
       Some(constOracle(Seq(
         "index_rows_by_cell" -> "0:2,1:3",
         "probed_cell_serves_streamed_vecs" -> "true",
@@ -3082,7 +3085,7 @@ object EngineDemos {
     // query reads 3/16ths of the directories regardless of corpus
     // size.
     QueryDef("e2e_bm25_index",
-      (s, d) => {
+      (s, d) => TempDir.using("graft-bm25idx") { dir =>
         import org.apache.spark.sql.functions._
         val terms = Seq("spark", "join", "window")
         // raw scan, NOT fanned: toks feeds two map-side-combined
@@ -3099,7 +3102,7 @@ object EngineDemos {
           .agg(count(lit(1)).cast("long").as("tf"))
           .join(dl, "doc_id")
           .withColumn("tb", pmod(hash(col("term")), lit(16)))
-        val tmp = Files.createTempDirectory("graft-bm25idx").toString
+        val tmp = dir.toString
         // direct partitioned write, NO repartition(col("tb")) first:
         // r21 added the pre-write clustering for guide-§6 file sizing,
         // but both r21 driver artifacts measured it a net loss at this
@@ -3176,9 +3179,9 @@ object EngineDemos {
     // (at real scale neither side broadcasts). Result equality is
     // checked on exact integer aggregates (no fp-reorder noise).
     QueryDef("e2e_bucketed_join",
-      (s, d) => {
+      (s, d) => TempDir.using("graft-bucketed") { dir =>
         import org.apache.spark.sql.functions._
-        val tmp = Files.createTempDirectory("graft-bucketed").toString
+        val tmp = dir.toString
         s.sql("DROP TABLE IF EXISTS graft_bkt_orders")
         s.sql("DROP TABLE IF EXISTS graft_bkt_customer")
         s.read.parquet(s"$d/orders.parquet")
@@ -3318,8 +3321,7 @@ object EngineDemos {
       "tail_last3" -> "delta",
       "config_ls" -> "demo-basin1")) { (_, st) =>
       val (server, endpoint) = graft.log.HttpRecordsServer.start(st, Some(1000L))
-      try {
-        val tmp = Files.createTempDirectory("graft-cli")
+      try TempDir.using("graft-cli") { tmp =>
         def cli(args: String*): (Int, String, String) = {
           val o = new java.io.ByteArrayOutputStream
           val e = new java.io.ByteArrayOutputStream

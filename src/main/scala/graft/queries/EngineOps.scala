@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -24,12 +23,13 @@ object EngineOps {
 
   val Basin = "bench-basin"
 
-  // One ingested store per sf dir per JVM (queries share it).
+  // One ingested store per sf dir per JVM (queries share it); its
+  // root goes when the JVM exits.
   private val stores = TrieMap[String, StreamStore]()
 
   def storeFor(s: SparkSession, sfDir: String): StreamStore =
     stores.getOrElseUpdate(sfDir, {
-      val root = Files.createTempDirectory("graft-e2e").toString
+      val root = graft.TempDir.untilExit("graft-e2e").toString
       val st = new StreamStore(s, root)
       st.catalog.createBasin(Basin,
         BasinConfig(defaultStreamConfig =

@@ -23,12 +23,7 @@ object Rm8Baseline {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val snapPath = args.headOption.getOrElse("scripts/bench_snapshot.json")
     val json = java.nio.file.Files.readString(java.nio.file.Paths.get(snapPath))
-    val snapNorm = {
-      val m = """"queries_norm"\s*:\s*\{([^}]*)\}""".r
-        .findFirstMatchIn(json).getOrElse(sys.error("no queries_norm")).group(1)
-      """"([^"]+)"\s*:\s*(-?[0-9.]+)""".r.findAllMatchIn(m)
-        .map(g => g.group(1) -> g.group(2).toDouble).toMap
-    }
+    val snapNorm = graft.Measure.numMap(json, "queries_norm")
     val spark = graft.Bench.remeasureSession()
     val sample = graft.Bench.rm8Sample(snapNorm)
     val vals = sample.flatMap { q =>

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Measure
+
 /** Scale-trend audit: growth exponents across sf0.001 / 0.01 / 0.1.
   *
   * The single-sf bench can say "slower than last round" but not
@@ -12,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   *
   *   exponent = log10( cost(10·n) / cost(n) )
   *
-  * so linear work → ~1.0, quadratic → ~2.0. Cost is process-CPU
-  * seconds (min of `reps` passes), not wall: CPU barely moves under
+  * so linear work → ~1.0, quadratic → ~2.0. Cost is the process-CPU
+  * seconds of [[graft.Measure.run]] (min of `reps` passes), not wall: CPU barely moves under
   * external host load (the same corroboration BenchRegressionSpec
   * uses), which makes the exponent reproducible on a busy machine.
   * The LAST decade (0.01 → 0.1) is the verdict decade — at sf0.001
@@ -83,13 +85,13 @@ object ScaleTrend {
     */
   def measure(spark: SparkSession, names: Seq[String], sfDirs: Seq[String],
               reps: Int = 2): Seq[Trend] = {
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     // warm once per scale so first-touch parquet footers aren't billed
     // to the first query of that scale
-    sfDirs.foreach(d => graft.SparkEntry.queries("q1_pricing_summary")(spark, d).count())
+    sfDirs.foreach(d =>
+      Measure.run(spark, "warm")(graft.SparkEntry.queries("q1_pricing_summary")(spark, d)))
     names.map { n =>
       val fn = graft.SparkEntry.queries(n)
+      def pass(d: String): Measure.Sample = Measure.run(spark, n)(fn(spark, d))
       // Per-QUERY warm-up at the two smallest scales before anything
       // is billed: process CPU counts the JIT compiler threads, and a
       // cold dedup pipeline burns multiples of its steady-state cost
@@ -97,16 +99,11 @@ object ScaleTrend {
       // than sf0.01 and every exponent is garbage. Two passes settle
       // codegen + JIT; the billed passes below then measure the
       // algorithm, not the compiler.
-      (0 until 2).foreach(_ => fn(spark, sfDirs.head).count())
-      fn(spark, sfDirs(math.min(1, sfDirs.size - 1))).count()
+      (0 until 2).foreach(_ => pass(sfDirs.head))
+      pass(sfDirs(math.min(1, sfDirs.size - 1)))
       val perScale = sfDirs.map { d =>
-        val passes = (0 until reps).map { _ =>
-          val c0 = osBean.getProcessCpuTime
-          val t0 = System.nanoTime()
-          fn(spark, d).count()
-          ((osBean.getProcessCpuTime - c0) / 1e9, (System.nanoTime() - t0) / 1e9)
-        }
-        (passes.map(_._1).min, passes.map(_._2).min)
+        val passes = Seq.fill(reps)(pass(d))
+        (passes.map(_.cpuSec).min, passes.map(_.wallSec).min)
       }
       Trend(n, perScale.map(_._1), perScale.map(_._2))
     }

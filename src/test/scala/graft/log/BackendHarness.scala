@@ -68,15 +68,7 @@ object BackendHarness {
   def cleanup(): Unit = {
     var dir = handedOut.poll()
     while (dir != null) {
-      if (Files.exists(dir))
-        try {
-          val walk = Files.walk(dir)
-          try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-          finally walk.close()
-        } catch {
-          case _: java.io.IOException | _: java.io.UncheckedIOException => ()
-        }
+      graft.TempDir.delete(dir)
       dir = handedOut.poll()
     }
   }

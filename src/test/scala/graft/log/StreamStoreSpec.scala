@@ -1145,7 +1145,7 @@ class StreamStoreSpec extends AnyFunSuite with LocalSpark {
     spark.sparkContext.addJobTag(tag)
     try {
       val out = scala.util.Try(f)
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
       (out, jobs.get(), plans.asScala.toSeq)
     } finally {
       spark.sparkContext.removeJobTag(tag)

@@ -73,7 +73,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
     assert(!new graft.extras.Multimodal.WavSpectrumDecoder().decode(bytes).ok)
   }
 
-  test("Gopher keep thresholds fire on crafted docs, end-to-end") {
+  test("Gopher keep thresholds fire on crafted docs, end-to-end") { graft.TempDir.using("graft-gopherspec") { dir =>
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // clean: 60 five-char-ish words incl. stopwords, no repetition
@@ -90,7 +90,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
         s"fill${i}c", "the", "of")).mkString(" ")
     val df = Seq((0L, clean), (1L, repetitive), (2L, short), (3L, triLoop))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("gopherspec").toString
+    val tmp = dir.toString
     df.select($"doc_id", $"text", lit("en").as("lang"),
         lit("spec").as("source"), length($"text").cast("long").as("n_chars"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -106,9 +106,9 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
     assert(out(3L)._3 > 0.18,
       s"trigram loop must exceed the dup-3-gram cap, got ${out(3L)._3}")
     assert(!out(3L)._1, "trigram-looped doc must be dropped")
-  }
+  }}
 
-  test("novelty rate is 0 for memorized held-out docs, 1 for unseen ones") {
+  test("novelty rate is 0 for memorized held-out docs, 1 for unseen ones") { graft.TempDir.using("graft-novspec") { dir =>
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val copied = (0 until 30).map(i => s"tok$i").mkString(" ")
@@ -118,7 +118,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
     // doc_id % 10 == 0 -> held out; others -> train
     val df = Seq((0L, copied), (10L, unseen), (20L, mixed), (1L, copied))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("novspec").toString
+    val tmp = dir.toString
     df.select($"doc_id", $"text", lit("en").as("lang"),
         lit("spec").as("source"), length($"text").cast("long").as("n_chars"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -130,7 +130,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
     assert(out(10L) == 1.0, "all-unseen doc must be fully novel")
     assert(out(20L) > 0.0 && out(20L) < 1.0,
       s"mixed doc must be partially novel, got ${out(20L)}")
-  }
+  }}
 
   test("dHash is invariant to wrap-free uniform brightness regrades") {
     val dec = new graft.extras.Multimodal.BmpDHashDecoder()
@@ -301,7 +301,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
     }
   }
 
-  test("contamination matrix flags a planted cross-source duplicate") {
+  test("contamination matrix flags a planted cross-source duplicate") { graft.TempDir.using("graft-contamspec") { dir =>
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val leaked = (0 until 20).map(i => s"bench$i").mkString(" ")
@@ -311,7 +311,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
       (0L, leaked, "crawl"), (1L, cleanA, "crawl"),
       (2L, leaked, "benchmark"), (3L, cleanB, "books"))
       .toDF("doc_id", "text", "source")
-    val tmp = java.nio.file.Files.createTempDirectory("contamspec").toString
+    val tmp = dir.toString
     df.select($"doc_id", $"text", lit("en").as("lang"), $"source",
         length($"text").cast("long").as("n_chars"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -325,7 +325,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
     // disjoint-vocabulary sources share nothing: no row at all
     assert(!out.contains(("benchmark", "books")) &&
       !out.contains(("books", "crawl")))
-  }
+  }}
 
   test("curriculum keys: deciles are ordered by score and cover the corpus") {
     val rows = CorpusOps.defs.find(_.name == "curriculum_quality_order").get
@@ -357,7 +357,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
     assert(rows.last.getAs[Double]("frac_docs_fit") == 1.0)
   }
 
-  test("Heaps on a <10-doc corpus drops empty deciles instead of diverging") {
+  test("Heaps on a <10-doc corpus drops empty deciles instead of diverging") { graft.TempDir.using("graft-heapstiny") { dir =>
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // 5 docs: cp_idx 1 lands at cp_doc = -1 — both engines must DROP
@@ -365,7 +365,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
     // silently lost the row; review-caught parity edge)
     val df = (0L until 5L).map(i => (i, s"alpha beta w$i gamma"))
       .toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("heapstiny").toString
+    val tmp = dir.toString
     df.select($"doc_id", $"text", lit("en").as("lang"),
         lit("spec").as("source"), length($"text").cast("long").as("n_chars"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -375,7 +375,7 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSpark {
       s"expected only the non-empty deciles, got ${rows.length}")
     assert(rows.forall(_.getAs[Long]("cp_doc") >= 0))
     assert(rows.forall(_.getAs[Long]("vocab_cum") > 0))
-  }
+  }}
 
   test("Heaps checkpoints are monotone and end at the full corpus") {
     val rows = CorpusOps.defs.find(_.name == "stats_heaps_law").get

@@ -123,7 +123,7 @@ class CurationOpsSpec extends AnyFunSuite with LocalSpark {
     }
   }
 
-  test("text_compression_ratio: deterministic, and repetition compresses below prose") {
+  test("text_compression_ratio: deterministic, and repetition compresses below prose") { graft.TempDir.using("graft-czr") { dir =>
     // no SQL oracle exists for DEFLATE — these are the operator's
     // gates instead: bit-stable across runs, exact length accounting,
     // and the quality signal actually separates repetitive text
@@ -140,7 +140,7 @@ class CurationOpsSpec extends AnyFunSuite with LocalSpark {
     }
     // separation on synthetic fixtures through the same plan
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("czr").toString
+    val tmp = dir.toString
     val docs = Seq(
       (0L, "spam spam spam spam spam spam spam spam spam spam " * 10,
         "en", "s0", 100L),
@@ -154,9 +154,9 @@ class CurationOpsSpec extends AnyFunSuite with LocalSpark {
       out(1).getAs[Long]("ratio_micros") / 3,
       s"repetitive text must compress far below varied text: ${out.toSeq}")
     assert(out(0).getAs[Boolean]("flag_repetitive"))
-  }
+  }}
 
-  test("stats_drift: identical snapshots have zero drift (operator sanity)") {
+  test("stats_drift: identical snapshots have zero drift (operator sanity)") { graft.TempDir.using("graft-drift") { dir =>
     import spark.implicits._
     // run the same plan shape on a corpus where base == candidate:
     // every doc appears once with even id and once with odd id
@@ -165,7 +165,7 @@ class CurationOpsSpec extends AnyFunSuite with LocalSpark {
     val both = (docs ++ docs.map { case (id, t, l, src, nc) =>
       (id + 1, t, l, src, nc) })
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("drift").toString
+    val tmp = dir.toString
     both.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = graft.SparkEntry.queries("stats_drift")(spark, tmp).collect()
     assert(out.length == 3)
@@ -176,7 +176,7 @@ class CurationOpsSpec extends AnyFunSuite with LocalSpark {
     // and the real corpus has nonzero drift on at least one feature
     val real = run("stats_drift").collect()
     assert(real.map(_.getAs[Long]("l1_micros")).sum > 0L)
-  }
+  }}
 
   test("rank_mmr_diversify: driver-side greedy replay reproduces the loop") {
     // The distributed plan builds the 4 greedy rounds as unioned

@@ -78,7 +78,7 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("text_boilerplate_lines: banner over threshold removed, footer " +
-       "under threshold and unique bodies kept") {
+       "under threshold and unique bodies kept") { graft.TempDir.using("graft-boiler") { dir =>
     import spark.implicits._
     // 20 docs, one source: banner lands on 10/20 docs (50% >= 30%,
     // boilerplate), footer on 4/20 (20% < 30%, NOT boilerplate)
@@ -86,7 +86,7 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
       (i.toLong, s"unique body text of document number $i", "en", "srcA",
         30L + i))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("boiler").toString
+    val tmp = dir.toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = graft.SparkEntry.queries("text_boilerplate_lines")(spark, tmp)
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
@@ -111,7 +111,7 @@ class TextOpsSpec extends AnyFunSuite with LocalSpark {
           s"unique body text of document number $i".length.toLong,
           s"doc $i: under-threshold footer was wrongly removed")
     }
-  }
+  }}
 
   test("text_entropy: matches an independent in-JVM recompute; bounds hold") {
     val d = graft.TestData.requireSf("sf0.001")
