@@ -26,6 +26,11 @@ if grep -rnE '(SparkEntry\.queries\([^)]*\)\([^)]*\)|fn\(spark, [^)]*\))\.count\
   echo "[preflight] time queries with graft.Measure.run (noop sink), not count()"; exit 1
 fi
 
+echo "[preflight] no host-calibrated wall gate: no calib probe, norm factor or live re-measure under src/"
+if grep -rnE 'cpuCalibSec|parCalibSec|minOf3Norm|queries_norm' src; then
+  echo "[preflight] gate plan regressions on Spark counters (CounterGateSpec), walls raw (BenchRegressionSpec)"; exit 1
+fi
+
 echo "[preflight] smoke: Verify on sf0.001 (entry + every query end-to-end)"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/preflight_out" \
   >/tmp/preflight_verify.log 2>&1 || {

@@ -8,14 +8,19 @@ import org.apache.spark.sql.functions._
 import graft.log.StreamStore
 import graft.model._
 
-/** Per-round benchmark. Reports:
+/** Per-round benchmark on `local[SPARK_GRAFT_CPUS]` (`"cpus"` in the
+  * artifact). Reports:
   * - per-query median-of-3 wall seconds over SPARK_GRAFT_SF_DIR (after
   *   an unbilled warm-up so JVM/session startup is not billed to the
-  *   first query), raw AND calib-normalized (`queries_norm`), each
-  *   pass one [[Measure.run]]: the full result written to the noop
-  *   sink (`"action":"noop"`), with the median pass's process CPU, GC
-  *   and Spark counters (`queries_counters`: jobs, stages, tasks,
-  *   executor CPU, shuffle and spill bytes, output rows);
+  *   first query), each pass one [[Measure.run]]: the full result
+  *   written to the noop sink (`"action":"noop"`), with the median
+  *   pass's process CPU, GC and Spark counters (`queries_counters`:
+  *   jobs, stages, tasks, executor CPU, shuffle and spill bytes, output
+  *   rows). The walls are raw: a wall compares only with a run on the
+  *   same host class, and the counters, which do not follow the host,
+  *   are what CounterGateSpec gates;
+  * - run-level evidence: JVM GC seconds, peak heap and fsync p50
+  *   samples at every fs-heavy phase boundary;
   * - control-plane phases the store benchmark (`perfbench/`) does not
   *   cover: 10k and 50k streams on one basin, the same over an HTTP
   *   object endpoint, and the v1 records API. Bulk ingest, ordered
@@ -33,34 +38,6 @@ object Bench {
     if (sorted.isEmpty) 0.0
     else sorted(math.min(sorted.size - 1, (p * sorted.size).toInt))
 
-  /** Single-core host-speed calibration: a fixed xorshift spin whose
-    * wall time depends only on effective core speed (no allocation, no
-    * I/O, fits in registers). Reported as `cpu_calib_sec` so
-    * cross-round wall-clock comparisons can be discounted for
-    * shared-host slowdown — round 11 measured a UNIFORM ~1.4×
-    * wall+cpu elevation on completely untouched queries, which this
-    * one number would have attributed to the host immediately.
-    * min-of-3 rejects scheduler preemption spikes.
-    */
-  /** Quiet-host reference value of [[cpuCalibSec]] (measured on this
-    * container idle, r11/r12). `queries_norm` = wall * (this / calib):
-    * a run on a 1.4x-loaded host reports calib ~1.4x larger and its
-    * normalized times scale back down, so cross-round comparisons of
-    * `queries_norm` (BenchRegressionSpec, README round table) are
-    * host-load-proof. */
-  val CalibBaselineSec = 0.127
-
-  /** Quiet-host reference value of [[parCalibSec]] (measured on this
-    * container idle, r13). The round-12 driver run proved the scalar
-    * probe alone is blind to exactly the contention that matters: its
-    * calib read 1.01 (quiet) while the shuffle-heaviest queries ran
-    * 2.5-6x their snapshot — multi-threaded scheduler + memory-
-    * bandwidth contention does not slow a single register-resident
-    * spin. This probe runs 16 threads each alloc+sorting a 16 MiB
-    * long array, so core oversubscription and bandwidth pressure show
-    * up in its wall time the way they show up in a shuffle stage. */
-  val ParCalibBaselineSec = 0.309
-
   /** Peak heap usage (MiB) across all heap memory pools since start
     * (the JVM tracks pool peaks natively — no sampling thread). */
   private[graft] def heapPeakMb(): Long =
@@ -69,14 +46,12 @@ object Bench {
       .map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L))
       .sum / (1024 * 1024)
 
-  /** Median fsync latency (ms) of 20 4-KiB write+fsync cycles — the
-    * DISK-side calibration probe the CPU probes can't see. The
-    * fs-heavy rows (cp10k ingest, ack latency, a8 serial, 1 KiB
-    * append) are fsync-bound: a shared-host IO aftershock that
-    * multiplies fsync 20x multiplies them too while cpu_calib reads
-    * quiet (observed r18: fsync p50 0.5 ms -> 11 ms moved cp10k
-    * ingest 12 s -> 88 s at cpu norm 0.94). Recording it makes the
-    * artifact disk-adjudicable, same rationale as gc_sec.
+  /** Median fsync latency (ms) of 20 4-KiB write+fsync cycles. The
+    * fs-heavy rows (cp10k ingest, a8 serial) are fsync-bound: a
+    * shared-host IO aftershock that multiplies fsync 20x multiplies
+    * them too (observed r18: fsync p50 0.5 ms -> 11 ms moved cp10k
+    * ingest 12 s -> 88 s). Recording it makes the artifact
+    * disk-adjudicable, same rationale as gc_sec.
     *
     * `dir` places the probe file on the SAME filesystem the bench
     * stores fsync to (r18 ADVICE: java.io.tmpdir can be a different
@@ -100,78 +75,6 @@ object Bench {
     java.nio.file.Files.deleteIfExists(f)
     lat(lat.size / 2)
   }
-
-  private[graft] def cpuCalibSec(): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < (1 << 26)) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        i += 1
-      }
-      if (x == 42L) System.err.print("") // defeat dead-code elimination
-      (System.nanoTime() - t0) / 1e9
-    }
-    once() // warm the JIT, unbilled
-    Seq(once(), once(), once()).min
-  }
-
-  /** Parallel host-load probe (see [[ParCalibBaselineSec]]): wall time
-    * for 16 concurrent alloc+fill+sort threads. min-of-3 after a JIT
-    * warm pass, mirroring [[cpuCalibSec]]. */
-  private[graft] def parCalibSec(): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      val threads = (0 until 16).map { t =>
-        val th = new Thread(() => {
-          val rnd = new java.util.Random(t)
-          val arr = Array.fill(1 << 21)(rnd.nextLong())
-          java.util.Arrays.sort(arr)
-          if (arr(0) == 42L) System.err.print("")
-        })
-        th.start(); th
-      }
-      threads.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
-    once()
-    Seq(once(), once(), once()).min
-  }
-
-  // -------------------------------------------------------------------
-  // Re-measurement environment (BenchRegressionSpec + Rm8Baseline tool)
-  // -------------------------------------------------------------------
-
-  /** The flag-confirmation session: local[8] so a re-measurement
-    * doesn't commandeer the whole host mid-suite. getOrCreate — in a
-    * test JVM an earlier suite's session may be inherited instead
-    * (the structural skew the spec's sentinel scaling absorbs). */
-  private[graft] def remeasureSession(): SparkSession = GraftSession.local(8)
-
-  /** min-of-3 (calib-normalized wall, process-cpu) for one query after
-    * an unbilled warm pass — the single measurement definition behind
-    * per-query flag confirmation, the AGGREGATE flag's sampled
-    * re-measurement, and the `queries_rm8` snapshot baseline those
-    * sampled sums compare against (same code = same environment
-    * class, so baseline and live values are commensurable). None if
-    * the query no longer exists. */
-  private[graft] def minOf3Norm(spark: SparkSession, name: String,
-                                sfDir: String): Option[(Double, Double)] =
-    SparkEntry.queries.get(name).map { fn =>
-      Measure.run(spark, name)(fn(spark, sfDir)) // warm (JIT, plan cache)
-      val passes = Seq.fill(3)(Measure.run(spark, name)(fn(spark, sfDir)))
-      val normFactor = math.min(
-        CalibBaselineSec / cpuCalibSec(), ParCalibBaselineSec / parCalibSec())
-      (passes.map(_.wallSec).min * normFactor, passes.map(_.cpuSec).min)
-    }
-
-  /** The AGGREGATE flag's deterministic re-measure sample: the top-n
-    * snapshot queries by normalized cost (ties by name). Defined here
-    * so the snapshot tool and the gate can never disagree on it. */
-  private[graft] def rm8Sample(snapNorm: Map[String, Double],
-                               n: Int = 16): Seq[String] =
-    snapNorm.toSeq.sortBy { case (k, v) => (-v, k) }.take(n).map(_._1)
 
   /** JSON string literal with FULL escaping (backslash, quote, and all
     * control chars < 0x20 — exception messages routinely carry tabs
@@ -204,27 +107,18 @@ object Bench {
     // Deleted at the end of the run.
     val benchRoot = java.nio.file.Files.createTempDirectory("graft-bench-root")
 
-    // ---- contamination probes, sampled BEFORE the run and at every
-    // fs-heavy phase boundary, not just at artifact-write: the r18
-    // driver artifact's end-of-run fsync probe read QUIET because the
-    // IO aftershock that collapsed its serving rows had passed by
-    // write time — a mid-run sample would have caught it. Same for
-    // the CPU probes: par_calib at the END cannot prove the QUERY
-    // phase was quiet. The artifact carries every sample plus the
-    // MAX, and a quiet_host verdict computed from the worst sample.
+    // ---- fsync probe, sampled before the run and at every fs-heavy
+    // phase boundary, not just at artifact-write: the r18 driver
+    // artifact's end-of-run sample read QUIET because the IO aftershock
+    // that collapsed its serving rows had passed by write time. The
+    // artifact carries every sample plus the MAX.
     val fsyncSamples = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def sampleFsync(label: String): Double = {
       val v = fsyncP50Ms(benchRoot)
       fsyncSamples(label) = v
       v
     }
-    def loadavg(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
-    val loadavgPre = loadavg()
     sampleFsync("pre")
-    val cpuCalibPre = cpuCalibSec()
-    val parCalibPre = parCalibSec()
     val spark = GraftSession.local(cpus)
 
     // ---- warm-up (not billed): session, codegen, parquet footers,
@@ -492,81 +386,17 @@ object Bench {
     // the native pool peak — both zero-cost bean reads
     val gcRunSec = Measure.gcTimeSec()
     val heapMaxMb = heapPeakMb()
-    // post-run probe set, paired with the pre-run set sampled before
-    // the warm-up; the fsync series additionally carries one sample
-    // per fs-heavy phase boundary. fsync_p50_ms (the adjudication key
-    // BASELINE.md's fs-heavy rule reads) is the MAX over all samples,
-    // so an aftershock that ends mid-run can no longer hide behind a
-    // quiet end-of-run probe — the hole the r18 artifact fell through.
+    // fsync_p50_ms (the adjudication key BASELINE.md's fs-heavy rule
+    // reads) is the MAX over all samples, so an aftershock that ends
+    // mid-run can no longer hide behind a quiet end-of-run probe.
     val fsyncPost = sampleFsync("post")
     val fsyncMs = fsyncSamples.values.max
-    val calib = cpuCalibSec()
-    val parCalib = parCalibSec()
-    val loadavgPost = loadavg()
-    // quiet-host verdict, computed from the WORST sample of each
-    // probe: the thresholds are the r19 task's done-criteria (cpu
-    // calib quiet band 0.13-0.16, par_calib quiet floor 0.309 with
-    // ≤~0.5 acceptable, fsync quiet floor ~0.5 ms with ≤~1.5
-    // acceptable). A non-quiet run says so IN the artifact rather
-    // than shipping a silently-poisoned queries_norm map.
-    val cpuCalibWorst = math.max(calib, cpuCalibPre)
-    val parCalibWorst = math.max(parCalib, parCalibPre)
-    val quietHost = cpuCalibWorst <= 0.20 && parCalibWorst <= 0.55 &&
-      fsyncMs <= 2.0
-    // Scope the note to what each tripped probe actually poisons: a
-    // CPU probe or a query-sweep-bracketing fsync sample (pre /
-    // queries) taints queries_norm; a later fsync sample taints only
-    // the phases it brackets (each fs-heavy phase is judged by the
-    // samples on its two sides). An unscoped "everything is
-    // unreliable" would throw away the clean half of a half-clean run
-    // — the exact information the per-phase samples exist to keep.
-    val contaminationNote =
-      if (quietHost) ""
-      else {
-        val phases = fsyncSamples.keys.toSeq
-        val hotFsync = fsyncSamples.filter(_._2 > 2.0)
-        def phasesTainted: Seq[String] = hotFsync.keys.toSeq.flatMap { k =>
-          val i = phases.indexOf(k)
-          // a hot sample taints the phase it closed and the one it opens
-          Seq(k) ++ (if (i + 1 < phases.size) Seq(phases(i + 1)) else Nil)
-        }.distinct
-        val cpuTaint = cpuCalibWorst > 0.20 || parCalibWorst > 0.55
-        val sweepTaint = cpuTaint ||
-          hotFsync.contains("pre") || hotFsync.contains("queries")
-        val reasons = Seq(
-          if (cpuCalibWorst > 0.20) Seq(f"cpu_calib $cpuCalibWorst%.3f > 0.20") else Nil,
-          if (parCalibWorst > 0.55) Seq(f"par_calib $parCalibWorst%.3f > 0.55 (core oversubscription — CPU-inflation-without-GC class)") else Nil,
-          if (hotFsync.nonEmpty) Seq("fsync p50 hot at " + hotFsync.map {
-            case (k, v) => f"$k=$v%.2f ms" }.mkString(", ") +
-            " (IO aftershock — the bracketed phases' fs-heavy rows are incommensurable)") else Nil).flatten
-        val scope =
-          (if (sweepTaint) Seq("queries_norm unreliable") else Nil) ++
-            (if (phasesTainted.nonEmpty)
-               Seq("tainted phase boundaries: " + phasesTainted.mkString(", "))
-             else Nil)
-        s""","contamination_note":${jsonStr(
-          "NOT fully quiet: " + reasons.mkString("; ") + ". Scope: " +
-            (if (scope.isEmpty) "none beyond the flagged probes" else scope.mkString("; ")) +
-            "; all other rows' bracketing samples read quiet")}"""
-      }
     val probesJson =
       f""""fsync_p50_ms_pre":${fsyncSamples("pre")}%.2f,"fsync_p50_ms_post":$fsyncPost%.2f,"fsync_samples":${
         fsyncSamples.map { case (k, v) => "\"" + k + f"\":$v%.2f" }
-          .mkString("{", ",", "}")},"cpu_calib_pre_sec":$cpuCalibPre%.4f,"par_calib_pre_sec":$parCalibPre%.4f,"loadavg_pre":$loadavgPre%.2f,"loadavg_post":$loadavgPost%.2f,"quiet_host":$quietHost$contaminationNote"""
-    // Host-load-normalized wall times (see CalibBaselineSec /
-    // ParCalibBaselineSec): the map BenchRegressionSpec gates on and
-    // the README round table reports. Normalize by whichever probe saw
-    // MORE host elevation (the smaller factor): the scalar probe is
-    // blind to scheduler/bandwidth contention (round 12: calib 1.01 on
-    // a run whose shuffle tier ran 3x slow), and a query can't be
-    // slower than the worst contention either probe measured without
-    // it being the query's own fault. Real regressions still fire —
-    // the probes don't move when only a query's code slows down.
-    val normFactor =
-      math.min(CalibBaselineSec / calib, ParCalibBaselineSec / parCalib)
-    val qsNorm = perQuery(m => f"${m.wallSec * normFactor}%.3f")
+          .mkString("{", ",", "}")}"""
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"median-of-3","action":"noop","total_cpu_sec":$totalCpu%.3f,"gc_sec":$gcRunSec%.3f,"heap_max_mb":$heapMaxMb,"fsync_p50_ms":$fsyncMs%.2f,"cpu_calib_sec":$calib%.4f,"par_calib_sec":$parCalib%.4f,"calib_norm_factor":$normFactor%.4f,$probesJson,"queries":$qs,"queries_norm":$qsNorm,"queries_cpu_sec":$qsCpu,"queries_gc_sec":$qsGc,"queries_counters":$qsCounters$errJson,"sf":"$sfDir",$controlPlaneJson,$cp50kJson,$httpControlPlaneJson,$recordsApiJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"median-of-3","action":"noop","cpus":$cpus,"total_cpu_sec":$totalCpu%.3f,"gc_sec":$gcRunSec%.3f,"heap_max_mb":$heapMaxMb,"fsync_p50_ms":$fsyncMs%.2f,$probesJson,"queries":$qs,"queries_cpu_sec":$qsCpu,"queries_gc_sec":$qsGc,"queries_counters":$qsCounters$errJson,"sf":"$sfDir",$controlPlaneJson,$cp50kJson,$httpControlPlaneJson,$recordsApiJson}"""
     // The driver captures only the LAST ~2000 chars of stdout, which
     // cannot hold a 186-query map (r11's artifact carried only the
     // alphabetic tail of one map). Persist the full line to a file, and
@@ -580,7 +410,7 @@ object Bench {
     catch { case _: java.io.IOException => () } // bench output must not fail on an unwritable cwd
     println(json)
     val summary =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"median-of-3","action":"noop","n_queries":${results.size},"n_query_errors":${queryErrors.size},"total_cpu_sec":$totalCpu%.3f,"gc_sec":$gcRunSec%.3f,"heap_max_mb":$heapMaxMb,"fsync_p50_ms":$fsyncMs%.2f,"cpu_calib_sec":$calib%.4f,"par_calib_sec":$parCalib%.4f,"calib_norm_factor":$normFactor%.4f,$probesJson,"queries_in":"BENCH_local.json","sf":"$sfDir",$controlPlaneJson,$cp50kJson,$httpControlPlaneJson,$recordsApiJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"median-of-3","action":"noop","n_queries":${results.size},"n_query_errors":${queryErrors.size},"cpus":$cpus,"total_cpu_sec":$totalCpu%.3f,"gc_sec":$gcRunSec%.3f,"heap_max_mb":$heapMaxMb,"fsync_p50_ms":$fsyncMs%.2f,$probesJson,"queries_in":"BENCH_local.json","sf":"$sfDir",$controlPlaneJson,$cp50kJson,$httpControlPlaneJson,$recordsApiJson}"""
     println(summary)
     TempDir.delete(benchRoot)
     spark.stop()

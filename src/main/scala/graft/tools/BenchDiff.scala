@@ -3,8 +3,8 @@ package graft.tools
 import graft.Measure
 
 /** Compares two bench artifacts (`BENCH_local.json` lines) without
-  * running anything: per query the calib-normalized wall ratio
-  * now/prev, worst first, with the Spark counters that moved when
+  * running anything: per query the wall ratio now/prev (`queries`),
+  * worst first, with the Spark counters that moved when
   * both artifacts carry `queries_counters`, then the geomean ratio
   * over the shared queries. Re-measuring a query by name is
   * [[QueryProfile]]'s job. Usage:
@@ -21,7 +21,7 @@ object BenchDiff {
 
   /** The report lines for artifacts `prev` and `now`. */
   def diff(prev: String, now: String): Seq[String] = {
-    val (p, n) = (Measure.numMap(prev, "queries_norm"), Measure.numMap(now, "queries_norm"))
+    val (p, n) = (Measure.numMap(prev, "queries"), Measure.numMap(now, "queries"))
     val (pc, nc) = (Measure.counters(prev), Measure.counters(now))
     val shared = (p.keySet intersect n.keySet).toSeq
     val ratio = shared.map(q => q -> n(q) / math.max(p(q), 1e-3)).toMap

@@ -8,8 +8,8 @@ import graft.Measure
   * the data is small enough that scheduling overhead dominates (guide
   * §1: measure first; §2.4: count the exchanges). Usage:
   *   runMain graft.tools.QueryProfile <sfDir> [query ...]
-  * Defaults to the 20 costliest queries of `scripts/bench_snapshot.json`
-  * when no names are given.
+  * Defaults to the 20 costliest queries (by wall, `queries`) of
+  * `scripts/bench_snapshot.json` when no names are given.
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
@@ -17,8 +17,9 @@ object QueryProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names =
       if (args.length > 1) args.tail.toSeq
-      else graft.Bench.rm8Sample(Measure.numMap(java.nio.file.Files.readString(
-        java.nio.file.Paths.get("scripts/bench_snapshot.json")), "queries_norm"), 20)
+      else Measure.numMap(java.nio.file.Files.readString(
+        java.nio.file.Paths.get("scripts/bench_snapshot.json")), "queries")
+        .toSeq.sortBy { case (k, v) => (-v, k) }.take(20).map(_._1)
     val spark = graft.GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try {

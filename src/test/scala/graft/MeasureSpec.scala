@@ -62,4 +62,29 @@ class MeasureSpec extends AnyFunSuite with LocalSpark {
     assert(counts.distinct.size == 1, counts.distinct)
     assert(counts.head._1 >= 1 && counts.head._4 == 10L)
   }
+
+  test("a loaded host changes no counter of partition-sensitive queries") {
+    val sfDir = TestData.requireSf("sf0.001")
+    val names = Seq("dedup_keep_best", "cluster_kmeans", "text_keyphrase_tfidf", "sample_split")
+    def measure(q: String) = Measure.run(spark, q)(SparkEntry.queries(q)(spark, sfDir))
+    names.foreach(measure) // warm
+    val alone = names.map(q => q -> measure(q)).toMap
+    val spinning = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val spinners = (0 until 4).map { _ =>
+      val t = new Thread(() => { var x = 1L; while (spinning.get()) x = x * 31 + 7 })
+      t.setDaemon(true); t.start(); t
+    }
+    val loaded = try names.map(q => q -> measure(q)).toMap
+      finally { spinning.set(false); spinners.foreach(_.join()) }
+    // within CounterGateSpec's bounds: equal jobs, stages and rows, tasks
+    // within its slack, shuffle bytes within its tolerance both ways
+    for (q <- names; (a, l) = (alone(q), loaded(q))) {
+      assert((l.jobs, l.stages, l.outputRows) == (a.jobs, a.stages, a.outputRows) &&
+        math.abs(l.tasks - a.tasks) <= CounterGateSpec.TaskSlack, s"$q: alone $a, loaded $l")
+      for ((x, y) <- Seq(a.shuffleWriteBytes -> l.shuffleWriteBytes,
+                         a.shuffleReadBytes -> l.shuffleReadBytes))
+        assert(y <= CounterGateSpec.shuffleLimit(x) && x <= CounterGateSpec.shuffleLimit(y),
+          s"$q: shuffle bytes alone $a, loaded $l")
+    }
+  }
 }
