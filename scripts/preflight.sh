@@ -31,6 +31,11 @@ if grep -rnE 'cpuCalibSec|parCalibSec|minOf3Norm|queries_norm' src; then
   echo "[preflight] gate plan regressions on Spark counters (CounterGateSpec), walls raw (BenchRegressionSpec)"; exit 1
 fi
 
+echo "[preflight] one control-plane document path: no POSIX-only catalog IO under src/"
+if grep -rnE 'objectMode|objectParseCache|saveFile|writeJson' src; then
+  echo "[preflight] catalog documents go through StorageBackend getMeta/casMeta and ManifestCache"; exit 1
+fi
+
 echo "[preflight] smoke: Verify on sf0.001 (entry + every query end-to-end)"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/preflight_out" \
   >/tmp/preflight_verify.log 2>&1 || {

@@ -48,19 +48,17 @@ final class AppendSession(store: StreamStore, basin: String, stream: String,
                           groupMaxBatches: Int = 64,
                           groupMaxBytes: Long = 8L * 1024 * 1024) {
 
-  /** The append op the drain loop applies — injectable so specs can
-    * exercise the retry matrix with scripted failures. When a spec
-    * replaces it, the drain falls back to batch-at-a-time application
-    * (the scripted op sees every batch in order); the default path
-    * group-commits via [[StreamStore.appendGroup]]. */
-  private val defaultOp: AppendInput => Either[AppendError, AppendAck] =
-    in => store.append(basin, stream, in, nowMs, cipher)
-  @volatile private[log] var appendOp: AppendInput => Either[AppendError, AppendAck] =
-    defaultOp
+  /** The group append the drain applies: one call commits a backlog of
+    * batches under one manifest CAS and returns the acks of the
+    * committed prefix plus the first failure. Injectable so specs can
+    * script the retry matrix. */
+  @volatile private[log] var appendGroupOp
+      : Seq[AppendInput] => (Seq[AppendAck], Option[(Int, AppendError)]) =
+    inputs => store.appendGroup(basin, stream, inputs, nowMs, cipher)
 
   /** Transient = worth retrying. ONLY the manifest-CAS race qualifies:
-    * a competing writer advanced the tail, and `StreamStore.append`
-    * deletes its data file before rethrowing, so re-driving the batch
+    * a competing writer advanced the tail, and `StreamStore.appendGroup`
+    * deletes its data object before rethrowing, so re-driving the group
     * against the new tail is safe and duplicate-free. IOExceptions in
     * an embedded store are deterministic (disk-full, permissions) and
     * would fail identically on every attempt — blanket-retrying them
@@ -143,22 +141,23 @@ final class AppendSession(store: StreamStore, basin: String, stream: String,
           }
           if (poisoned)
             group.foreach(_.p.success(Left(SessionError.SessionPoisoned)))
-          else if (appendOp eq defaultOp) drainGroup(group.toSeq)
-          else group.foreach(drainOne)
+          else drainGroup(group.toSeq)
         }
       }
     } finally drained.countDown()
   }
 
-  /** Group-commit path: one appendGroup call (one manifest CAS) for
-    * the whole backlog; in-place retry of the WHOLE group on a
-    * transient CAS race (nothing committed — the group's object is
-    * deleted before the rethrow). */
+  /** One group append (one manifest CAS) for the whole backlog;
+    * in-place retry of the WHOLE group on a transient CAS race (nothing
+    * committed — the group's object is deleted before the rethrow). Any
+    * other throw (IO failure) poisons and completes every promise: a
+    * dead worker with hanging futures would deadlock Producer permits
+    * forever. */
   private def drainGroup(group: Seq[Pending]): Unit = {
     var attempt = 0
     var out: (Seq[AppendAck], Option[(Int, AppendError)]) = null
     while (out == null) {
-      try out = store.appendGroup(basin, stream, group.map(_.input), nowMs, cipher)
+      try out = appendGroupOp(group.map(_.input))
       catch {
         case e: Throwable if attempt < maxRetries && retryable(e) =>
           attempt += 1
@@ -175,33 +174,6 @@ final class AppendSession(store: StreamStore, basin: String, stream: String,
       lock.synchronized { poisoned = true }
       group(idx).p.success(Left(SessionError.Append(err)))
       group.drop(idx + 1).foreach(_.p.success(Left(SessionError.SessionPoisoned)))
-    }
-  }
-
-  /** Batch-at-a-time path, kept for scripted `appendOp` overrides: a
-    * THROWN failure (CAS conflict, IO error) must poison and complete
-    * the promise too — a dead worker with hanging futures would
-    * deadlock Producer permits forever; transient throws retry with
-    * capped backoff first (retry.rs). */
-  private def drainOne(next: Pending): Unit = {
-    if (poisoned) { next.p.success(Left(SessionError.SessionPoisoned)); return }
-    var attempt = 0
-    var res: Either[AppendError, AppendAck] = null
-    while (res == null) {
-      try res = appendOp(next.input)
-      catch {
-        case e: Throwable if attempt < maxRetries && retryable(e) =>
-          attempt += 1
-          Thread.sleep(math.min(retryBackoffMs << (attempt - 1), 1000L))
-        case e: Throwable =>
-          res = Left(AppendError.InvalidBatch(s"append threw: ${e.getMessage}"))
-      }
-    }
-    res match {
-      case Right(ack) => next.p.success(Right(ack))
-      case Left(e) =>
-        lock.synchronized { poisoned = true }
-        next.p.success(Left(SessionError.Append(e)))
     }
   }
 

@@ -193,7 +193,7 @@ object Catalog {
     String, java.lang.ref.WeakReference[Object]]()
 
   /** Counter-gating for the dead-ref sweep below, same discipline as
-    * purgeDeadEntries: with >8192 LIVE monitors the size threshold
+    * ManifestCache's purge: with >8192 LIVE monitors the size threshold
     * never clears, and an ungated `removeIf` would put a full-map
     * scan inside EVERY lock acquisition forever. At most one sweep
     * per 1024 acquisitions bounds the amortized cost regardless of
@@ -247,61 +247,6 @@ object Catalog {
     }
   }
 
-  /** JVM-global (mtime, size)-keyed parse cache over control-plane
-    * files, shared by every Catalog instance.
-    *
-    * Shared -- not per-instance -- because the LOCKS are shared: with a
-    * per-instance cache, instance A's saveFile only refreshed A's own
-    * cache, and a same-size rewrite landing within filesystem
-    * timestamp granularity would let instance B serve its stale parse
-    * (mtime+size unchanged) and then rewrite from it, losing A's
-    * update despite the shared monitor. With one cache, A's saveFile
-    * IS B's cache refresh.
-    */
-  /** Cache entry: (mtime, size, write-stamp-at-install, parsed value).
-    * The stamp lets lock-free readers install with CAS against
-    * concurrent writers — see loadCached. */
-  private[log] val parseCache = scala.collection.concurrent.TrieMap
-    .empty[String, (java.nio.file.attribute.FileTime, Long, Long, AnyRef)]
-
-  /** Per-path monotonically increasing write stamp, bumped by every
-    * saveFile BEFORE its cache refresh. An UNLOCKED reader (the read
-    * paths take no monitor) records the stamp before parsing and
-    * declines to cache if it moved: otherwise the reader could parse
-    * the pre-write bytes, the writer could rewrite same-size within
-    * filesystem timestamp granularity and refresh the cache, and the
-    * reader's late put would clobber the fresh entry with a stale
-    * parse under a matching (mtime, size) key — resurrecting the
-    * lost-update this shared cache exists to prevent.
-    */
-  private[log] val writeStamps = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
-  private[log] def writeStamp(path: String): java.util.concurrent.atomic.AtomicLong =
-    writeStamps.computeIfAbsent(path, _ => new java.util.concurrent.atomic.AtomicLong)
-
-  /** Opportunistic purge of parse-cache entries whose files are gone
-    * (deleted basins, abandoned test roots) once the map gets large —
-    * the same no-monotonic-growth discipline as the lock registry.
-    *
-    * Counter-gated to at most one sweep per 1024 saves: the sweep
-    * stats every cached path, and with >4096 LIVE entries an
-    * every-save sweep would put thousands of stat(2) calls inside
-    * each catalog mutation forever (the threshold never clears when
-    * the files all exist).
-    *
-    * writeStamps is deliberately NOT purged: a purged-and-recreated
-    * stamp restarts at 0 and could climb back to a previously
-    * observed value, letting a stale reader pass loadCached's
-    * stamp-unmoved check and CAS its stale parse over a fresh one.
-    * Monotonicity is the invariant; an AtomicLong per path ever
-    * written is cheap.
-    */
-  /** Object-mode control-plane parse cache: path -> (etag, parsed).
-    * Shared JVM-wide for the same reason parseCache is; correctness
-    * rests on etag equality (content hash), not timestamps. */
-  private[log] val objectParseCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, AnyRef)]
-
   /** Test-visible tally of control-plane document PARSES (cache
     * misses). CatalogShardSpec uses deltas of this to pin that
     * list-paging serves pages from the parse cache — the structural
@@ -309,38 +254,40 @@ object Catalog {
     * 64 shards (the failure mode if the cache keying broke).
     */
   private[log] val parseTally = new java.util.concurrent.atomic.AtomicLong
-
-  private val savesSincePurge = new java.util.concurrent.atomic.AtomicLong
-  private[log] def purgeDeadEntries(): Unit = {
-    if (savesSincePurge.incrementAndGet() % 1024 == 0 && parseCache.size > 4096)
-      parseCache.keys.foreach { k =>
-        if (!Files.exists(java.nio.file.Paths.get(k))) parseCache.remove(k)
-      }
-  }
+  private val tallied = Some(parseTally)
 }
 
 /** Control-plane catalog (SURVEY §2.4, C1-C6): basins and streams with
   * create/ensure/reconfigure/list/delete.
   *
   * Scale layout: `basins.json` holds the basin list; each basin's
-  * streams live in 64 hash-sharded `<basin>/streams-NN.json` files. A
-  * single-stream mutation loads and rewrites ONLY its shard (~1/64th
+  * streams live in 64 hash-sharded `<basin>/streams-NN.json` documents.
+  * A single-stream mutation loads and rewrites ONLY its shard (~1/64th
   * of one basin), where the old single-file layout serialized the
   * entire control plane on every mutation — at 100k streams an
-  * O(100k) write per create/reconfigure. This is the file-granularity
+  * O(100k) write per create/reconfigure. This is the document-granularity
   * analog of the reference's per-stream StreamMeta KV key
   * (lite/src/backend/kv/mod.rs:66-71) under serialized catalog
-  * transactions (streams.rs:89,284): writers serialize per basin (plus
-  * one lock for the basin list), and every control-plane file has an
-  * (mtime, size)-keyed parse cache so reads cost a stat(2) unless a
-  * foreign process wrote it.
+  * transactions (streams.rs:89,284).
+  *
+  * The documents live in the same store as the records, as the
+  * reference keeps basin/stream metadata in the object-backed KV
+  * (lite/src/backend/kv/mod.rs:54-71): on every backend a read is
+  * `backend.getMeta` and a mutation commits through `backend.casMeta`,
+  * exactly like a stream manifest. In-JVM writers serialize on shared
+  * monitors (per basin, plus one for the basin list), so a failed
+  * precondition means another process committed between our load and
+  * put, and the mutation rebases. Cached reads go through
+  * [[ManifestCache]]: a stat-keyed raw tier on POSIX, then one
+  * etag-keyed parse cache, so a read costs three stats and map hits
+  * unless someone wrote the document.
   */
 final class Catalog(root: String) {
   import Catalog.NumShards
 
-  /** All registry keys and control-plane paths are built from the
-    * canonical root so every instance over one physical root — however
-    * spelled — shares the same monitors and parse-cache entries.
+  /** All registry keys and document keys are built from the canonical
+    * root so every instance over one physical root — however spelled —
+    * shares the same monitors and cache entries.
     */
   private val canonRoot = Catalog.canonicalRoot(root)
 
@@ -350,109 +297,46 @@ final class Catalog(root: String) {
   private def basinLock(basin: String): Object =
     Catalog.globalLock(canonRoot, "b\u0000" + basin)
 
-  private val basinsPath = Layout.basinsPath(canonRoot)
+  private val basinsKey = Layout.basinsPath(canonRoot).toString
 
-  /** The physical-IO adapter governing this root — same resolution as
-    * StreamStore's data plane, so a root with an object-semantics
-    * backend installed gets an object-portable CONTROL plane too: the
-    * reference keeps basin/stream metadata in the same object-backed
-    * KV as records (lite/src/backend/kv/mod.rs:54-71, key types
-    * BasinMeta/StreamMeta), and this catalog follows suit — every
-    * document read comes from the backend and every mutation commits
-    * through `casMeta` (conditional put), no file locks, no renames.
-    * On POSIX the classic advisory path below (JVM monitors + atomic
-    * rename + (mtime,size) parse cache) remains the fast path.
-    */
+  /** The physical-IO adapter governing this root — the same resolution
+    * as StreamStore's data plane. */
   private val backend = StorageBackend.forRoot(root)
-  private val objectMode = !backend.hasWriterMutex
 
-  // JVM-global parse cache (see Catalog.parseCache for why it cannot
-  // be per-instance)
-  private def cache = Catalog.parseCache
-
-  /** Object-mode parse cache: etag-keyed (etags are content hashes, so
-    * a hit is exact). Lock-free: entries are only ever replaced with a
-    * parse of the SAME etag'd bytes or newer bytes; a stale install
-    * is corrected by the next read's etag mismatch. */
-  private def objCache = Catalog.objectParseCache
-
-  private def parseObj[A <: AnyRef: Manifest](key: String,
-                                              json: String, etag: String): A =
-    objCache.get(key) match {
-      case Some((t, v)) if t == etag => v.asInstanceOf[A]
-      case _ =>
-        Catalog.parseTally.incrementAndGet()
-        val v = Layout.fromJsonString[A](json)
-        objCache.put(key, (etag, v))
-        v
-    }
-
-  /** Serialized read-modify-write of ONE control-plane document; every
-    * catalog mutation goes through here.
-    *
-    * `f` sees the current parse and returns (replacement, result);
-    * `None` = read-only outcome, nothing written.
-    *
-    * POSIX: the JVM monitor the caller holds serializes in-process
-    * writers; the write is an atomic rename (pre-existing semantics —
-    * cross-process POSIX catalog mutation remains advisory, exactly
-    * like before this abstraction).
-    *
-    * Object mode: load (json, etag) from the backend, apply `f`,
-    * commit with `casMeta` — If-Match on the loaded etag, or
-    * If-None-Match when the document did not exist. In-JVM writers
-    * already serialize on the catalog monitors, so a precondition
-    * failure means a FOREIGN driver committed between our load and
-    * put: re-run `f` on the fresh parse (f is pure in the document)
-    * and try again, bounded.
-    */
   /** Test seam: runs between a mutation's document load and its
-    * conditional put (object mode only), so specs can inject the
-    * foreign-driver interleaving that forces the CAS-rebase path. */
+    * conditional put, so specs can inject the foreign-driver
+    * interleaving that forces the CAS-rebase path. */
   private[log] var beforeCatalogCas: () => Unit = () => ()
 
-  /** objectParseCache growth bound (the POSIX parseCache has the same
-    * discipline in Catalog.purgeDeadEntries): long-lived drivers that
-    * create and delete many streams/basins would otherwise accumulate
-    * dead-key parses forever. Same cadence (every 1024 saves, only
-    * past 4096 entries), scoped to THIS root's prefix so one catalog
-    * never evicts another root's live entries, and keyed on backend
-    * absence — the authoritative "this document no longer exists". */
-  private val objSavesSincePurge = new java.util.concurrent.atomic.AtomicLong
-  private def purgeObjCache(): Unit = {
-    if (objSavesSincePurge.incrementAndGet() % 1024 == 0 && objCache.size > 4096) {
-      val prefix = canonRoot + "/"
-      objCache.keys.foreach { k =>
-        if (k.startsWith(prefix) && backend.getMeta(k, fresh = false).isEmpty)
-          objCache.remove(k)
-      }
-    }
-  }
+  private def parse[A <: AnyRef: Manifest](key: String,
+                                           meta: Option[(String, String)],
+                                           default: => A): A =
+    ManifestCache.parse(backend, key, meta, default, Catalog.tallied)
 
-  private def mutateDoc[A <: AnyRef: Manifest, R](path: java.nio.file.Path,
-                                                  default: => A)
+  /** Read-modify-write of ONE control-plane document; every catalog
+    * mutation goes through here, under the caller's monitor.
+    *
+    * `f` sees the current parse and returns (replacement, result);
+    * `None` = read-only outcome, nothing written. Loads (json, etag)
+    * fresh from the backend, applies `f`, and commits with `casMeta` —
+    * If-Match on the loaded etag, or If-None-Match when the document did
+    * not exist. A precondition failure means a FOREIGN process committed
+    * between our load and put: re-run `f` on the fresh parse (f is pure
+    * in the document) and try again, bounded.
+    */
+  private def mutateDoc[A <: AnyRef: Manifest, R](key: String, default: => A)
       (f: A => (Option[A], R)): R = {
-    if (!objectMode) {
-      val (next, r) = f(loadCached(path, default))
-      next.foreach(saveFile(path, _))
-      return r
-    }
-    val key = path.toString
     var attempts = 0
     while (attempts < 64) {
       val cur = backend.getMeta(key, fresh = true)
-      val parsed = cur match {
-        case Some((json, etag)) => parseObj[A](key, json, etag)
-        case None => default
-      }
-      val (next, r) = f(parsed)
+      val (next, r) = f(parse(key, cur, default))
       next match {
         case None => return r
         case Some(doc) =>
           beforeCatalogCas()
           backend.casMeta(key, Layout.toJsonString(doc), cur.map(_._2)) match {
             case Right(tag) =>
-              objCache.put(key, (tag, doc)); purgeObjCache(); return r
+              ManifestCache.committed(backend, key, tag, doc); return r
             case Left(_) => attempts += 1 // foreign commit won; rebase
           }
       }
@@ -460,82 +344,25 @@ final class Catalog(root: String) {
     throw new IllegalStateException(s"catalog CAS starvation on $key")
   }
 
-  private def loadCached[A <: AnyRef: Manifest](path: java.nio.file.Path,
-                                                default: => A): A = {
-    if (objectMode) {
-      // reads come from the backend's authoritative index (the local
-      // mirror files are write-through copies for foreign read-only
-      // tooling, never consulted here), cached by etag
-      val key = path.toString
-      return backend.getMeta(key, fresh = false) match {
-        case Some((json, etag)) => parseObj[A](key, json, etag)
-        case None => default
-      }
-    }
-    if (!Files.exists(path)) { cache.remove(path.toString); return default }
-    val key = path.toString
-    val stamp0 = Catalog.writeStamp(key).get()
-    val ft = Files.getLastModifiedTime(path)
-    val size = Files.size(path)
-    cache.get(key) match {
-      case Some((t, s, _, v)) if t == ft && s == size => v.asInstanceOf[A]
-      case _ =>
-        Catalog.parseTally.incrementAndGet()
-        val v = Layout.readJson[A](path).getOrElse(default)
-        // Key the cache by the PRE-read stat: if a foreign process
-        // replaces the file while we parse, the next call re-stats,
-        // mismatches, and re-parses — keying by a post-read stat
-        // would pair the new (mtime, size) with the old content and
-        // serve it stale until the file changes again.
-        //
-        // Install with CAS against the in-JVM write stamp: this read
-        // path holds no monitor, so a concurrent locked saveFile may
-        // have rewritten the file (possibly same-size within mtime
-        // granularity) and refreshed the cache while we parsed — an
-        // unconditional put here would clobber that fresh entry with
-        // our stale parse under a matching key. The entry we install
-        // records stamp0; we only install over nothing (putIfAbsent)
-        // or over an entry no newer than stamp0 (replace-CAS). A
-        // writer's entry always carries a higher stamp and wins.
-        val entry = (ft, size, stamp0, v: AnyRef)
-        if (Catalog.writeStamp(key).get() == stamp0) {
-          cache.get(key) match {
-            case None => cache.putIfAbsent(key, entry)
-            case Some(old) if old._3 <= stamp0 => cache.replace(key, old, entry)
-            case _ => ()
-          }
-        }
-        v
-    }
-  }
-
-  private def saveFile[A <: AnyRef](path: java.nio.file.Path, v: A): Unit = {
-    Layout.writeJson(path, v)
-    val stamp = Catalog.writeStamp(path.toString).incrementAndGet()
-    cache.put(path.toString,
-      (Files.getLastModifiedTime(path), Files.size(path), stamp, v))
-    Catalog.purgeDeadEntries()
-  }
+  private def load[A <: AnyRef: Manifest](key: String, default: => A): A =
+    parse(key, backend.getMeta(key, fresh = false), default)
 
   // A pre-shard root (single-file `catalog.json`, no basins.json) is
   // refused: reading it as an empty sharded catalog would hide every
-  // basin and stream it lists. Object roots are born sharded.
-  if (!objectMode &&
-      Files.exists(Layout.catalogPath(canonRoot)) && !Files.exists(basinsPath))
+  // basin and stream it lists.
+  if (Files.exists(Layout.catalogPath(canonRoot)) &&
+      backend.getMeta(basinsKey, fresh = true).isEmpty)
     throw new IllegalStateException(s"${Layout.catalogPath(canonRoot)} is a " +
       "pre-round-19 single-file catalog; this build reads only the sharded " +
       "_catalog layout and does not migrate old roots")
 
-  private def basinsFile(): BasinsFile = loadCached(basinsPath, BasinsFile())
+  private def basinsFile(): BasinsFile = load(basinsKey, BasinsFile())
+
+  private def shardKey(basin: String, sh: Int): String =
+    Layout.streamShardPath(canonRoot, basin, sh).toString
 
   private def shard(basin: String, sh: Int): StreamShard =
-    loadCached(Layout.streamShardPath(canonRoot, basin, sh), StreamShard())
-
-  private def shardFor(basin: String,
-                       stream: String): (java.nio.file.Path, StreamShard) = {
-    val sh = Catalog.shardOf(stream)
-    (Layout.streamShardPath(canonRoot, basin, sh), shard(basin, sh))
-  }
+    load(shardKey(basin, sh), StreamShard())
 
   /** All of one basin's stream entries (64 cached shard loads). */
   private def basinStreams(basin: String): Iterator[StreamEntry] =
@@ -559,7 +386,7 @@ final class Catalog(root: String) {
       else {
         val enc = ConfigCodec.encodeBasin(config)
         val key = requestToken.map(idemKey(_, enc))
-        mutateDoc(basinsPath, BasinsFile()) { st =>
+        mutateDoc(basinsKey, BasinsFile()) { st =>
           st.basins.find(b => b.name == name && b.deletedAt.isEmpty) match {
             case Some(existing) if key.isDefined && existing.idempotencyKey == key =>
               (None, Right(existing)) // idempotent retry
@@ -585,7 +412,7 @@ final class Catalog(root: String) {
       if (!Caps.validBasinName(name)) Left(s"invalid basin name: $name")
       else {
         val enc = ConfigCodec.encodeBasin(config)
-        mutateDoc(basinsPath, BasinsFile()) { st =>
+        mutateDoc(basinsKey, BasinsFile()) { st =>
           st.basins.find(b => b.name == name && b.deletedAt.isEmpty) match {
             case Some(e) if e.config == enc => (None, Right(EnsureOutcome.Noop))
             case Some(e) =>
@@ -609,7 +436,7 @@ final class Catalog(root: String) {
   def reconfigureBasin(name: String,
                        patch: BasinConfigPatch): Either[String, BasinConfig] =
     lock.synchronized {
-      mutateDoc(basinsPath, BasinsFile()) { st =>
+      mutateDoc(basinsKey, BasinsFile()) { st =>
         st.basins.find(b => b.name == name && b.deletedAt.isEmpty) match {
           case None => (None, Left("BasinNotFound"))
           case Some(e) =>
@@ -631,10 +458,10 @@ final class Catalog(root: String) {
       if (!Caps.validStreamName(name)) Left(s"invalid stream name: $name")
       else if (getBasin(basin).isEmpty) Left("BasinNotFound")
       else {
-        val path = Layout.streamShardPath(canonRoot, basin, Catalog.shardOf(name))
+        val docKey = shardKey(basin, Catalog.shardOf(name))
         val enc = ConfigCodec.encode(config)
         val key = requestToken.map(idemKey(_, enc))
-        mutateDoc(path, StreamShard()) { sh =>
+        mutateDoc(docKey, StreamShard()) { sh =>
           sh.streams.find(s => s.name == name && s.deletedAt.isEmpty) match {
             case Some(existing) if key.isDefined && existing.idempotencyKey == key =>
               (None, Right(existing))
@@ -663,8 +490,8 @@ final class Catalog(root: String) {
         val t = now()
         var created = 0
         valid0.groupBy(Catalog.shardOf).foreach { case (shardNo, group) =>
-          val path = Layout.streamShardPath(canonRoot, basin, shardNo)
-          created += mutateDoc(path, StreamShard()) { sh =>
+          val docKey = shardKey(basin, shardNo)
+          created += mutateDoc(docKey, StreamShard()) { sh =>
             val existing = sh.streams.iterator
               .filter(_.deletedAt.isEmpty).map(_.name).toSet
             val fresh = group.filterNot(existing)
@@ -685,9 +512,9 @@ final class Catalog(root: String) {
     basinLock(basin).synchronized {
       if (getBasin(basin).isEmpty) Left("BasinNotFound")
       else {
-        val path = Layout.streamShardPath(canonRoot, basin, Catalog.shardOf(name))
+        val docKey = shardKey(basin, Catalog.shardOf(name))
         val enc = ConfigCodec.encode(config)
-        mutateDoc(path, StreamShard()) { sh =>
+        mutateDoc(docKey, StreamShard()) { sh =>
           sh.streams.find(s => s.name == name && s.deletedAt.isEmpty) match {
             case Some(e) if e.config == enc => (None, Right(EnsureOutcome.Noop))
             case Some(e) =>
@@ -707,8 +534,8 @@ final class Catalog(root: String) {
   def reconfigureStream(basin: String, name: String,
                         patch: StreamConfigPatch): Either[String, StreamConfig] =
     basinLock(basin).synchronized {
-      val path = Layout.streamShardPath(canonRoot, basin, Catalog.shardOf(name))
-      mutateDoc(path, StreamShard()) { sh =>
+      val docKey = shardKey(basin, Catalog.shardOf(name))
+      mutateDoc(docKey, StreamShard()) { sh =>
         sh.streams.find(s => s.name == name && s.deletedAt.isEmpty) match {
           case None => (None, Left("StreamNotFound"))
           case Some(e) =>
@@ -728,7 +555,7 @@ final class Catalog(root: String) {
         .mergedOver(StreamConfig.SystemDefault))
 
   def getStream(basin: String, name: String): Option[StreamEntry] =
-    shardFor(basin, name)._2.streams
+    shard(basin, Catalog.shardOf(name)).streams
       .find(s => s.name == name && s.deletedAt.isEmpty)
 
   /** Bulk planning read: every LIVE stream's raw (unmerged) config in
@@ -793,11 +620,11 @@ final class Catalog(root: String) {
   // product provisions them account-level) and validated with the
   // reference's name rules (common/src/location.rs:8-45).
 
-  private val locationsPath =
-    java.nio.file.Paths.get(canonRoot, "_catalog", "locations.json")
+  private val locationsKey =
+    java.nio.file.Paths.get(canonRoot, "_catalog", "locations.json").toString
 
   private def locationsFile(): LocationsFile =
-    loadCached(locationsPath, LocationsFile())
+    load(locationsKey, LocationsFile())
 
   def listLocations(): Seq[LocationInfo] =
     locationsFile().locations.sortBy(_.name)
@@ -808,7 +635,7 @@ final class Catalog(root: String) {
     lock.synchronized {
       if (!Caps.validLocationName(name)) Left(s"invalid location name: $name")
       else {
-        mutateDoc(locationsPath, LocationsFile()) { st =>
+        mutateDoc(locationsKey, LocationsFile()) { st =>
           st.locations.find(_.name == name) match {
             case Some(l) if l.isPrivate == isPrivate => (None, Right(l))
             case Some(_) => (None, Left("LocationAlreadyExists"))
@@ -831,7 +658,7 @@ final class Catalog(root: String) {
     lock.synchronized {
       if (!Caps.validLocationName(name)) Left(s"invalid location name: $name")
       else {
-        mutateDoc(locationsPath, LocationsFile()) { st =>
+        mutateDoc(locationsKey, LocationsFile()) { st =>
           st.locations.find(_.name == name) match {
             case None => (None, Left("LocationNotFound"))
             case Some(l) =>
@@ -850,10 +677,10 @@ final class Catalog(root: String) {
   // discipline as locations; authorization itself is the pure
   // model predicate (model/Access.scala), evaluated by callers.
 
-  private val tokensPath =
-    java.nio.file.Paths.get(canonRoot, "_catalog", "access_tokens.json")
+  private val tokensKey =
+    java.nio.file.Paths.get(canonRoot, "_catalog", "access_tokens.json").toString
 
-  private def tokensFile(): TokensFile = loadCached(tokensPath, TokensFile())
+  private def tokensFile(): TokensFile = load(tokensKey, TokensFile())
 
   /** Issue: unique id (1-96 bytes, caps.rs MAX_ACCESS_TOKEN_ID_LEN);
     * auto_prefix_streams requires a prefix stream scope (api
@@ -864,7 +691,7 @@ final class Catalog(root: String) {
       else if (t.autoPrefixStreams && !t.scope.streams.isInstanceOf[
         graft.model.ResourceSet.Prefix])
         Left("auto_prefix_streams requires a prefix stream scope")
-      else mutateDoc(tokensPath, TokensFile()) { st =>
+      else mutateDoc(tokensKey, TokensFile()) { st =>
         st.tokens.find(_.id == t.id) match {
           case Some(_) => (None, Left("AccessTokenExists"))
           case None =>
@@ -892,7 +719,7 @@ final class Catalog(root: String) {
 
   /** Revoke: true when the token existed. */
   def revokeToken(id: String): Boolean = lock.synchronized {
-    mutateDoc(tokensPath, TokensFile()) { st =>
+    mutateDoc(tokensKey, TokensFile()) { st =>
       if (st.tokens.exists(_.id == id))
         (Some(st.copy(tokens = st.tokens.filterNot(_.id == id))), true)
       else (None, false)
@@ -904,8 +731,8 @@ final class Catalog(root: String) {
     */
   def markStreamDeleted(basin: String, name: String): Unit =
     basinLock(basin).synchronized {
-      val path = Layout.streamShardPath(canonRoot, basin, Catalog.shardOf(name))
-      mutateDoc(path, StreamShard()) { sh =>
+      val docKey = shardKey(basin, Catalog.shardOf(name))
+      mutateDoc(docKey, StreamShard()) { sh =>
         (Some(sh.copy(streams = sh.streams.map(s =>
           if (s.name == name && s.deletedAt.isEmpty)
             s.copy(deletedAt = Some(now())) else s))), ())
@@ -921,7 +748,7 @@ final class Catalog(root: String) {
     */
   def markBasinDeleted(name: String): Unit = lock.synchronized {
     basinLock(name).synchronized {
-      mutateDoc(basinsPath, BasinsFile()) { st =>
+      mutateDoc(basinsKey, BasinsFile()) { st =>
         (Some(st.copy(basins = st.basins.map(b =>
           if (b.name == name && b.deletedAt.isEmpty) b.copy(deletedAt = Some(now()))
           else b))), ())
@@ -931,8 +758,8 @@ final class Catalog(root: String) {
 
   def hardDeleteStream(basin: String, name: String): Unit =
     basinLock(basin).synchronized {
-      val path = Layout.streamShardPath(canonRoot, basin, Catalog.shardOf(name))
-      mutateDoc(path, StreamShard()) { sh =>
+      val docKey = shardKey(basin, Catalog.shardOf(name))
+      mutateDoc(docKey, StreamShard()) { sh =>
         (Some(sh.copy(streams = sh.streams.filterNot(_.name == name))), ())
       }
     }

@@ -382,8 +382,8 @@ final class HttpObjectBackend(endpoint: String,
     * makes the round trip, so consistency is exactly the server's
     * (check_tail at 10k streams re-reads one manifest forever; the
     * cache spares the body transfer and the caller's re-parse).
-    * Bounded like Catalog.objCache: cleared wholesale past 64k keys —
-    * a refill costs one 200 per key, never a wrong answer. */
+    * Bounded by a wholesale clear past 64k keys — a refill costs one
+    * 200 per key, never a wrong answer. */
   private val metaCache = new ConcurrentHashMap[String, (String, String)]()
 
   def getMeta(key: String, fresh: Boolean): Option[(String, String)] = retrying("getMeta") {

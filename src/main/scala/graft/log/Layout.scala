@@ -1,6 +1,6 @@
 package graft.log
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -26,9 +26,10 @@ import org.json4s.jackson.Serialization
   * The per-stream manifest is the analog of the reference's KV keys
   * StreamTailPosition / StreamFencingToken / StreamTrimPoint
   * (lite/src/backend/kv/mod.rs:73-83): the tail survives a full trim,
-  * fencing token and trim point are recovered from it on open. All
-  * manifest/catalog writes go through an atomic temp-file + rename, so
-  * a committed manifest IS the durability barrier (SURVEY §4: commit =
+  * fencing token and trim point are recovered from it on open. Every
+  * manifest and catalog write is a conditional put
+  * (`StorageBackend.casMeta`; on POSIX an atomic temp-file + rename),
+  * so a committed manifest IS the durability barrier (SURVEY §4: commit =
   * durable replaces the reference's flush watermark machinery).
   */
 object Layout {
@@ -150,15 +151,6 @@ object Layout {
 
   implicit val formats: Formats = DefaultFormats
 
-  /** Atomic JSON write: temp file in the same directory + atomic move. */
-  def writeJson[A <: AnyRef](path: Path, value: A): Unit = {
-    Files.createDirectories(path.getParent)
-    val tmp = Files.createTempFile(path.getParent, ".tmp", ".json")
-    Files.writeString(tmp, Serialization.writePretty(value))
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   def readJson[A: Manifest](path: Path): Option[A] =
     if (Files.exists(path))
       Some(JsonMethods.parse(Files.readString(path)).extract[A])
@@ -202,18 +194,27 @@ final case class StreamManifest(
     generation: Long = 0L,
     version: Long = 0L)
 
-/** Driver-side manifest read cache for the POSIX backend, keyed by
-  * (mtime, size) — manifests are read on every append/read/metrics
-  * call; with the cache a read is one stat(2) unless the file changed
-  * (our own writers refresh eagerly; foreign processes are caught by
-  * the mtime key). Since round 13 the cache stores the raw JSON plus
-  * its content-hash etag (the POSIX stand-in for the object-store CAS
-  * tag the commit protocol is written against); parsed manifests are
-  * cached separately, keyed by etag, in [[ManifestCache.parse]].
+/** Driver-side cache of control-plane documents: stream manifests and
+  * catalog files, on every backend. Two tiers, one purge rule.
+  *
+  *  - Raw (POSIX backend only): path -> (mtime, size, json, etag).
+  *    `PosixBackend.getMeta(fresh = false)` serves it while the stat
+  *    still matches, so a cached read is three stats and a map hit
+  *    unless the file changed. Our own writers refresh eagerly; a
+  *    foreign process's write is caught by the stat key. The etag is
+  *    the content hash, the POSIX stand-in for the object-store CAS tag
+  *    the commit protocol is written against.
+  *  - Parsed (every backend): key -> (etag, document), in [[parse]].
+  *    Content-addressed, so a stale install can never serve wrong
+  *    content; at worst it costs a re-parse.
   */
 object ManifestCache {
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[String, (java.nio.file.attribute.FileTime, Long, String, String)]
+  /** A plain class, not a case class: installs compare-and-set on the
+    * entry's identity (see [[install]]). The Path is kept so a hit needs
+    * no `Paths.get` of the key. */
+  private final class Raw(val path: Path, val mtime: java.nio.file.attribute.FileTime,
+                          val size: Long, val json: String, val etag: String)
+  private val raw = scala.collection.concurrent.TrieMap.empty[String, Raw]
 
   def etagOf(json: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -221,41 +222,59 @@ object ManifestCache {
       .map(b => f"${b & 0xff}%02x").mkString
   }
 
-  /** Cached (json, etag); serves the cache when (mtime, size) match. */
-  def read(path: Path): Option[(String, String)] = {
-    if (!Files.exists(path)) { cache.remove(path.toString); return None }
+  /** (json, etag), or None when the document is absent. `fresh = false`
+    * serves the cache when (mtime, size) match; `fresh = true` always
+    * re-reads the bytes (commit paths — a foreign write in the same
+    * mtime granule must be seen). */
+  def read(key: String, fresh: Boolean): Option[(String, String)] = {
+    val seen = raw.get(key)
+    val path = if (seen.isEmpty) Paths.get(key) else seen.get.path
+    if (!Files.exists(path)) { drop(key, seen); return None }
     val ft = Files.getLastModifiedTime(path)
     val size = Files.size(path)
-    cache.get(path.toString) match {
-      case Some((t, s, json, etag)) if t == ft && s == size => Some((json, etag))
-      case _ => readAt(path, ft, size)
+    seen match {
+      case Some(e) if !fresh && e.mtime == ft && e.size == size => Some((e.json, e.etag))
+      case _ => readAt(key, path, ft, size, seen)
     }
   }
 
-  /** Authoritative (json, etag): always re-reads the bytes (commit
-    * paths — a foreign write in the same mtime granule must be seen). */
-  def readFresh(path: Path): Option[(String, String)] = {
-    if (!Files.exists(path)) { cache.remove(path.toString); return None }
-    readAt(path, Files.getLastModifiedTime(path), Files.size(path))
-  }
-
-  private def readAt(path: Path, ft: java.nio.file.attribute.FileTime,
-                     size: Long): Option[(String, String)] =
+  /** Keyed by the PRE-read stat: a replacement landing while we read
+    * mismatches on the next stat and re-reads. */
+  private def readAt(key: String, path: Path, ft: java.nio.file.attribute.FileTime,
+                     size: Long, seen: Option[Raw]): Option[(String, String)] =
     try {
       val json = Files.readString(path)
       val etag = etagOf(json)
-      // keyed by the PRE-read stat: a replacement landing while we
-      // read mismatches on the next stat and re-reads (see Catalog
-      // .loadCached for the rationale)
-      cache.put(path.toString, (ft, size, json, etag))
+      install(key, seen, new Raw(path, ft, size, json, etag))
       Some((json, etag))
     } catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** Stale-install guard. Reads take no lock, so a writer may rename
+    * and [[refresh]] while a reader is reading the pre-write bytes,
+    * possibly same-size within the mtime granule. An unconditional put
+    * would clobber the writer's entry with those bytes under a matching
+    * key and serve them until the file next changed. Instead the reader
+    * installs by compare-and-set against the entry it saw BEFORE its
+    * stat: every refresh replaces the entry object, so the CAS fails
+    * and the writer's entry stands. */
+  private def install(key: String, seen: Option[Raw], next: Raw): Unit = {
+    seen match {
+      case None => raw.putIfAbsent(key, next)
+      case Some(old) => raw.replace(key, old, next)
+    }
+    ()
+  }
+
+  /** The file is gone: drop the entry this reader saw, never a newer
+    * writer's. */
+  private def drop(key: String, seen: Option[Raw]): Unit =
+    seen.foreach(raw.remove(key, _))
 
   /** Refresh after our own atomic write; returns the etag. */
   def refresh(path: Path, json: String): String = {
     val etag = etagOf(json)
-    cache.put(path.toString,
-      (Files.getLastModifiedTime(path), Files.size(path), json, etag))
+    raw.put(path.toString, new Raw(path,
+      Files.getLastModifiedTime(path), Files.size(path), json, etag))
     etag
   }
 
@@ -265,29 +284,78 @@ object ManifestCache {
     * (GenerationSpec, StreamStoreSpec). */
   def put(path: Path, m: StreamManifest): Unit = {
     val json = Layout.toJsonString(m)
-    cache.put(path.toString,
-      (Files.getLastModifiedTime(path), Files.size(path), json, etagOf(json)))
+    raw.put(path.toString, new Raw(path,
+      Files.getLastModifiedTime(path), Files.size(path), json, etagOf(json)))
   }
 
-  /** Drop the entry (stream deleted). */
-  def invalidate(path: Path): Unit = { cache.remove(path.toString); () }
+  /** Drop both tiers' entries (document deleted). */
+  def invalidate(path: Path): Unit = {
+    raw.remove(path.toString)
+    parsed.remove(path.toString)
+    ()
+  }
 
-  /** Parse cache keyed by etag (content-addressed, so a stale install
-    * can never serve wrong content — at worst it costs a re-parse).
-    * One entry per path. */
-  private val parsed = scala.collection.concurrent.TrieMap
-    .empty[String, (String, StreamManifest)]
+  /** Parsed tier: one entry per key, keyed by etag. The backend that
+    * served the bytes rides along so [[purge]] can ask it whether the
+    * document still exists. */
+  private final class Parsed(val etag: String, val doc: AnyRef,
+                             val backend: StorageBackend)
+  private val parsed = scala.collection.concurrent.TrieMap.empty[String, Parsed]
 
-  def parse(key: String, meta: Option[(String, String)]): StreamManifest =
+  /** Parsed entries whose key starts with `prefix` (a root), for specs
+    * that check deletion leaves none behind. */
+  private[log] def parsedSize(prefix: String): Int =
+    parsed.keys.count(_.startsWith(prefix))
+
+  /** The parse of `meta` (bytes + etag as `backend.getMeta` returned
+    * them), or `default` when the document is absent. A miss bumps
+    * `tally` when one is given. */
+  def parse[A <: AnyRef: Manifest](backend: StorageBackend, key: String,
+                                   meta: Option[(String, String)], default: => A,
+                                   tally: Option[java.util.concurrent.atomic.AtomicLong] = None): A =
     meta match {
-      case None => StreamManifest()
+      case None => default
       case Some((json, etag)) =>
         parsed.get(key) match {
-          case Some((e, m)) if e == etag => m
+          case Some(p) if p.etag == etag => p.doc.asInstanceOf[A]
           case _ =>
-            val m = Layout.fromJsonString[StreamManifest](json)
-            parsed.put(key, (etag, m))
-            m
+            tally.foreach(_.incrementAndGet())
+            val v = Layout.fromJsonString[A](json)
+            parsed.put(key, new Parsed(etag, v, backend))
+            v
         }
     }
+
+  /** Install the parse of a document this driver just committed under
+    * `etag` (the next read is a hit, not a re-parse), and count the
+    * commit toward [[purge]]. */
+  def committed(backend: StorageBackend, key: String, etag: String,
+                doc: AnyRef): Unit = {
+    parsed.put(key, new Parsed(etag, doc, backend))
+    if (commitsSincePurge.incrementAndGet() % 1024 == 0 &&
+        raw.size + parsed.size > 4096) purge()
+  }
+
+  /** Bounded cache: drops the entries whose document is gone (deleted
+    * streams and basins, abandoned roots), so a long-lived driver that
+    * creates and deletes documents does not grow the cache forever.
+    * Counter-gated to at most one sweep per 1024 commits, and only past
+    * 4096 entries: the sweep stats or fetches every cached document,
+    * and with that many LIVE entries an every-commit sweep would put
+    * thousands of reads inside each commit forever (the threshold never
+    * clears when the documents all exist). A sweep that fails to reach
+    * a backend keeps the entry. */
+  private val commitsSincePurge = new java.util.concurrent.atomic.AtomicLong
+
+  private def purge(): Unit = {
+    raw.foreach { case (k, e) =>
+      if (!Files.exists(e.path)) raw.remove(k, e)
+    }
+    parsed.foreach { case (k, p) =>
+      val gone =
+        try p.backend.getMeta(k, fresh = false).isEmpty
+        catch { case scala.util.control.NonFatal(_) => false }
+      if (gone) parsed.remove(k, p)
+    }
+  }
 }

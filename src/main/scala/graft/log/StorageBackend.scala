@@ -77,12 +77,14 @@ trait StorageBackend {
     * absent (If-None-Match: *). Returns the new etag, or Left with the
     * reason on precondition failure. MUST be atomic with respect to
     * concurrent casMeta calls on the same key — on the object adapter
-    * by construction; on the POSIX adapter under the writer mutex the
-    * commit protocol always holds here. */
+    * by construction; on the POSIX adapter under the serialization its
+    * callers hold (the writer mutex for stream manifests, the JVM
+    * catalog monitors for catalog documents). */
   def casMeta(key: String, json: String, ifMatch: Option[String]): Either[String, String]
 
-  /** Unconditional put (control-plane files whose writers serialize
-    * above this layer). */
+  /** Unconditional put. No commit path uses it: every manifest and
+    * catalog write is a [[casMeta]]. Specs use it to play a foreign
+    * writer's blind overwrite. */
   def putMeta(key: String, json: String): Unit
 
   def deleteMeta(key: String): Unit
@@ -149,24 +151,29 @@ object StorageBackend {
 
 /** The POSIX adapter: current-filesystem semantics, extracted verbatim
   * from the pre-round-13 StreamStore — rename-as-atomic-publish, OS
-  * file locks, (mtime, size)-keyed read caching, real mtimes for grace
-  * clocks.
+  * file locks, real mtimes for grace clocks. Metadata reads are served
+  * by [[ManifestCache]]'s (mtime, size)-keyed raw tier; `casMeta` is the
+  * one commit for stream manifests and catalog documents alike. It
+  * re-reads the document, compares etags, then renames, so it is atomic
+  * against writers in this JVM that hold the caller's monitor (and,
+  * for manifests, against other processes holding the writer mutex).
+  * Another process committing an unlocked catalog document inside the
+  * compare-to-rename window can still be overwritten.
   */
 object PosixBackend extends StorageBackend {
   val name = "posix"
   val hasWriterMutex = true
 
   def getMeta(key: String, fresh: Boolean): Option[(String, String)] =
-    if (fresh) ManifestCache.readFresh(Paths.get(key))
-    else ManifestCache.read(Paths.get(key))
+    ManifestCache.read(key, fresh)
 
   def casMeta(key: String, json: String, ifMatch: Option[String]): Either[String, String] = {
-    // Atomic only under the writer mutex (the commit protocol holds it
-    // here); the re-read inside the mutex is the authoritative check.
-    val p = Paths.get(key)
-    val cur = ManifestCache.readFresh(p).map(_._2)
+    // Atomic only under the caller's serialization (see the object
+    // doc); the fresh re-read inside it is the authoritative check.
+    val cur = ManifestCache.read(key, fresh = true).map(_._2)
     if (cur != ifMatch)
       return Left(s"precondition failed: expected ${ifMatch.getOrElse("<absent>")}, found ${cur.getOrElse("<absent>")}")
+    val p = Paths.get(key)
     Files.createDirectories(p.getParent)
     val tmp = Files.createTempFile(p.getParent, ".tmp", ".json")
     Files.writeString(tmp, json)

@@ -576,7 +576,8 @@ final class StreamStore(val spark: SparkSession, val root: String) {
 
   def manifest(basin: String, stream: String): StreamManifest = {
     val key = stateKey(basin, stream)
-    ManifestCache.parse(key, getMeta(key, basin, stream, fresh = false))
+    ManifestCache.parse(backend, key, getMeta(key, basin, stream, fresh = false),
+      StreamManifest())
   }
 
   /** Authoritative manifest read for commit paths: bypasses any
@@ -594,7 +595,8 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     val key = stateKey(basin, stream)
     getMeta(key, basin, stream, fresh = true) match {
       case None => (StreamManifest(), None)
-      case some @ Some((_, etag)) => (ManifestCache.parse(key, some), Some(etag))
+      case some @ Some((_, etag)) =>
+        (ManifestCache.parse(backend, key, some, StreamManifest()), Some(etag))
     }
   }
 

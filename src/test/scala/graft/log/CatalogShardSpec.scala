@@ -216,8 +216,8 @@ class CatalogShardSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.createSymbolicLink(linkParent, realParent)
     // the registry KEY itself must match — the filesystem aliasing
     // would make the behavioral assertions below pass even with split
-    // keys (loadCached re-stats on every foreign write), so assert the
-    // canonicalization directly
+    // keys (a cached read re-stats on every foreign write), so assert
+    // the canonicalization directly
     assert(Catalog.canonicalRoot(linkParent.resolve("store").toString) ==
       Catalog.canonicalRoot(realParent.resolve("store").toString))
     val viaLink = new Catalog(linkParent.resolve("store").toString) // not yet created
@@ -229,12 +229,11 @@ class CatalogShardSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lock-free readers never clobber a writer's cache refresh (no lost creates)") {
-    // Regression for the shared-cache install race: loadCached runs
-    // without a monitor, so a reader that parsed PRE-write bytes and
+    // Regression for the shared-cache install race: cached reads run
+    // without a monitor, so a reader that read PRE-write bytes and
     // installed them late (over the writer's same-(mtime,size) fresh
-    // entry) would poison the cache — the writer's next
-    // read-modify-write would then rewrite from the stale parse and
-    // drop earlier creates. Hammer reads from a second instance while
+    // entry) would poison the cache for every later reader (see
+    // ManifestCache.install). Hammer reads from a second instance while
     // a writer creates 300 streams; every create must survive.
     val r = root()
     val writer = new Catalog(r)
@@ -360,17 +359,37 @@ class CatalogShardSpec extends AnyFunSuite with BeforeAndAfterAll {
       Catalog.shardOf("stream-31")).toString)
   }
 
-  test("object backend: a foreign driver's interleaved commit forces CAS rebase, no lost update") {
+  test("cache purge: documents that no longer exist leave the parse cache") {
+    // past 4096 entries, one of any 1024 consecutive catalog commits
+    // sweeps the cache and drops each entry whose getMeta finds nothing
     val r = objectRoot()
-    val backend = StorageBackend.forRoot(r).asInstanceOf[ObjectStoreBackend]
+    val backend = StorageBackend.forRoot(r)
+    val prefix = Catalog.canonicalRoot(r) + "/_dead/"
+    val dead = (0 until 4100).map(i => s"${prefix}d-$i.json")
+    dead.foreach { k =>
+      assert(backend.casMeta(k, "{}", None).isRight)
+      ManifestCache.parse(backend, k, backend.getMeta(k, fresh = false), LocationsFile())
+    }
+    assert(ManifestCache.parsedSize(prefix) == dead.size)
+    dead.foreach(backend.deleteMeta)
     val cat = new Catalog(r)
-    cat.createBasin("obj-cas-basin")
-    cat.createStream("obj-cas-basin", "seed") // shard doc exists
+    (0 until 1024).foreach(i => assert(cat.ensureBasin("purge-basin",
+      BasinConfig(createStreamOnAppend = i % 2 == 0)).isRight))
+    assert(ManifestCache.parsedSize(prefix) == 0,
+      "1024 commits past 4096 entries left dead documents cached")
+    assert(cat.getBasin("purge-basin").isDefined)
+  }
 
-    // between cat's load and its conditional put, a FOREIGN driver
-    // (simulated by a raw backend write) commits another stream into
-    // the same shard — cat's first CAS must fail and its retry must
-    // carry BOTH entries
+  /** Between the catalog's load and its conditional put, a FOREIGN
+    * driver (a raw `casMeta` on the root's backend) commits another
+    * stream into the same shard: the catalog's first CAS must fail and
+    * its retry must carry BOTH entries. */
+  private def foreignCommitForcesRebase(r: String, basin: String): Unit = {
+    val backend = StorageBackend.forRoot(r)
+    val cat = new Catalog(r)
+    cat.createBasin(basin)
+    cat.createStream(basin, "seed") // shard doc exists
+
     val victimShard = Catalog.shardOf("seed")
     // pick a second name hashing to the same shard
     val collider = (0 until 10000).map(i => s"c-$i")
@@ -378,7 +397,7 @@ class CatalogShardSpec extends AnyFunSuite with BeforeAndAfterAll {
     val target = (0 until 10000).map(i => s"t-$i")
       .find(n => Catalog.shardOf(n) == victimShard && n != "seed").get
     val shardKey = Layout.streamShardPath(
-      Catalog.canonicalRoot(r), "obj-cas-basin", victimShard).toString
+      Catalog.canonicalRoot(r), basin, victimShard).toString
 
     @volatile var fired = false
     cat.beforeCatalogCas = () => if (!fired) {
@@ -386,16 +405,26 @@ class CatalogShardSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (json, etag) = backend.getMeta(shardKey, fresh = true).get
       val sh = Layout.fromJsonString[StreamShard](json)
       val foreign = sh.copy(streams = sh.streams :+
-        StreamEntry("obj-cas-basin", collider, Map.empty, 123L))
+        StreamEntry(basin, collider, Map.empty, 123L))
       assert(backend.casMeta(shardKey,
         Layout.toJsonString(foreign), Some(etag)).isRight)
     }
     try {
-      assert(cat.createStream("obj-cas-basin", target).isRight)
+      assert(cat.createStream(basin, target).isRight)
     } finally cat.beforeCatalogCas = () => ()
     assert(fired, "the interleaving hook never ran — the test is vacuous")
-    val listed = cat.listStreams("obj-cas-basin", limit = 100).items.map(_.name).toSet
+    val listed = cat.listStreams(basin, limit = 100).items.map(_.name).toSet
     assert(listed == Set("seed", collider, target),
       s"lost update after CAS rebase: $listed")
+  }
+
+  test("posix backend: a foreign driver's interleaved commit forces CAS rebase, no lost update") {
+    val r = root()
+    assert(StorageBackend.forRoot(r) eq PosixBackend)
+    foreignCommitForcesRebase(r, "posix-cas-basin")
+  }
+
+  test("object backend: a foreign driver's interleaved commit forces CAS rebase, no lost update") {
+    foreignCommitForcesRebase(objectRoot(), "obj-cas-basin")
   }
 }

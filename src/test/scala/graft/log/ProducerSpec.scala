@@ -109,11 +109,11 @@ class ProducerSpec extends AnyFunSuite with LocalSpark {
     val p = new Producer(st, "test-basin", "p5", nowMs = Some(1000L),
       maxRetries = 3, retryBackoffMs = 1)
     val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
-    val real = p.session.appendOp
-    p.session.appendOp = in => {
+    val real = p.session.appendGroupOp
+    p.session.appendGroupOp = ins => {
       if (attempts.incrementAndGet() <= 2)
         throw new ManifestCasConflict("CAS race")
-      real(in)
+      real(ins)
     }
     val f = p.submit(env("a"))
     p.close()
@@ -128,7 +128,7 @@ class ProducerSpec extends AnyFunSuite with LocalSpark {
     val p = new Producer(st, "test-basin", "p6", nowMs = Some(1000L),
       maxRetries = 2, retryBackoffMs = 1)
     val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
-    p.session.appendOp = _ => {
+    p.session.appendGroupOp = _ => {
       attempts.incrementAndGet()
       throw new ManifestCasConflict("CAS race")
     }
@@ -146,9 +146,9 @@ class ProducerSpec extends AnyFunSuite with LocalSpark {
     val p2 = new Producer(st, "test-basin", "p7", nowMs = Some(1000L),
       maxRetries = 5, retryBackoffMs = 1)
     val attempts2 = new java.util.concurrent.atomic.AtomicInteger(0)
-    p2.session.appendOp = _ => {
+    p2.session.appendGroupOp = _ => {
       attempts2.incrementAndGet()
-      Left(AppendError.SeqNumMismatch(7, 0))
+      (Nil, Some((0, AppendError.SeqNumMismatch(7, 0))))
     }
     val f2 = p2.submit(env("a"))
     p2.flush()
@@ -163,7 +163,7 @@ class ProducerSpec extends AnyFunSuite with LocalSpark {
     val p = new Producer(st, "test-basin", "p8", nowMs = Some(1000L),
       maxRetries = 5, retryBackoffMs = 1)
     val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
-    p.session.appendOp = _ => {
+    p.session.appendGroupOp = _ => {
       attempts.incrementAndGet()
       throw new java.io.IOException("No space left on device")
     }
@@ -172,6 +172,38 @@ class ProducerSpec extends AnyFunSuite with LocalSpark {
     assert(Await.result(f, 30.seconds).isLeft)
     assert(attempts.get() == 1) // disk-full retried 0 times before poison
     p.close()
+  }
+
+  test("retry policy: a raced multi-batch group retries whole, once, and acks in order") {
+    val st = freshStore()
+    st.catalog.createStream("test-basin", "p11")
+    val session = new AppendSession(st, "test-basin", "p11",
+      nowMs = Some(1000L), maxRetries = 3, retryBackoffMs = 1)
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val groupSizes = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val real = session.appendGroupOp
+    session.appendGroupOp = ins => {
+      groupSizes.add(ins.size)
+      groupSizes.size match {
+        // hold the first group so the next five queue behind it
+        case 1 => entered.countDown(); release.await(30, java.util.concurrent.TimeUnit.SECONDS)
+        // the five-batch group loses its first commit to a CAS race
+        case 2 => throw new ManifestCasConflict("CAS race")
+        case _ => ()
+      }
+      real(ins)
+    }
+    val first = session.submit(AppendInput(Seq(env("b0"))))
+    assert(entered.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    val rest = (1 to 5).map(i => session.submit(AppendInput(Seq(env(s"b$i")))))
+    release.countDown()
+    session.close()
+    val acks = (first +: rest).map(f => Await.result(f, 30.seconds).toOption.get)
+    assert(groupSizes.asScala.toSeq == Seq(1, 5, 5),
+      s"the raced group must be retried whole, once: ${groupSizes.asScala.toSeq}")
+    assert(acks.map(_.start.seqNum) == (0L until 6L))
+    assert(st.checkTail("test-basin", "p11").seqNum == 6)
   }
 
   test("failed manifest commit takes its data file with it — retry leaves no duplicate seq_nums") {

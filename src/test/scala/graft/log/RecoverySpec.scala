@@ -32,7 +32,7 @@ import LinModel._
   *  - `KillAfterDataFile`  — complete orphan data file at the
   *    committed tail, manifest not advanced.
   *  - `KillMidManifestRename` — same orphan, plus a torn manifest
-  *    temp file in the state dir (writeJson is write-tmp + atomic
+  *    temp file in the state dir (casMeta is write-tmp + atomic
   *    rename; a kill between the two leaves the tmp).
   *  - `KillMidDataWrite`   — data file truncated mid-write: no
   *    parquet footer at all.

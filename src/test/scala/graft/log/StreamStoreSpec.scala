@@ -225,6 +225,24 @@ class StreamStoreSpec extends AnyFunSuite with LocalSpark {
       Layout.dataDir(st.root, "test-basin", "del"))))
   }
 
+  test("compacting deleted streams away drops their parsed manifests") {
+    val st = freshStore()
+    val names = (0 until 8).map(i => s"gone-$i")
+    names.foreach(n => st.catalog.createStream("test-basin", n))
+    val size0 = ManifestCache.parsedSize(st.root)
+    names.foreach { n =>
+      appendOk(st, n, AppendInput(Seq(env("a"))))
+      assert(st.checkTail("test-basin", n).seqNum == 1)
+    }
+    assert(ManifestCache.parsedSize(st.root) == size0 + names.size)
+    names.foreach { n =>
+      st.deleteStream("test-basin", n)
+      st.compact("test-basin", n)
+    }
+    assert(ManifestCache.parsedSize(st.root) == size0,
+      "a compacted-away stream's parsed manifest outlived its document")
+  }
+
   test("compact physically drops trimmed prefix; reads unchanged (T1)") {
     val st = freshStore()
     st.catalog.createStream("test-basin", "cp")
