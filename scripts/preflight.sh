@@ -36,6 +36,12 @@ if grep -rnE 'objectMode|objectParseCache|saveFile|writeJson' src; then
   echo "[preflight] catalog documents go through StorageBackend getMeta/casMeta and ManifestCache"; exit 1
 fi
 
+echo "[preflight] footer opens on the shared conf: no one-argument ParquetFileReader.open or bare ParquetReadOptions.builder() in src/main"
+if grep -rn 'ParquetFileReader\.open(' src/main | grep -v 'ReadOptions' ||
+   grep -rnE 'ParquetReadOptions\.builder\(\s*\)' src/main; then
+  echo "[preflight] open footers with HadoopReadOptions.builder(conf) (FileIndex.openFooter): the no-conf forms parse a new Configuration per file"; exit 1
+fi
+
 echo "[preflight] smoke: Verify on sf0.001 (entry + every query end-to-end)"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.001 /tmp/preflight_out" \
   >/tmp/preflight_verify.log 2>&1 || {
@@ -51,7 +57,7 @@ leaked_roots() {
   shopt -s nullglob
   local dirs=(/tmp/graft-{gen,rec,lin,store,http-records,session,prod,src,rafault,http-auth,catshard,clispec}*
               /tmp/graft-{netfault,nf,http-catalog,group,det,http-account,maint,gauge,tls,pem,staged,follow,singest,ord}*
-              /tmp/graft-{decplan,decbasin,sqlcat,wmdedup,xproot,xpcrash,verify}*
+              /tmp/graft-{decplan,decbasin,sqlcat,wmdedup,xproot,xpcrash,verify,layout}*
               /tmp/graft-{demo,objdur,objcat,httpobj,annidx,bm25idx,bucketed,cli,e2e,bench-root}*
               /tmp/graft-{czr,drift,gopherspec,novspec,contamspec,heapstiny,boiler}*)
   shopt -u nullglob

@@ -531,7 +531,7 @@ final class HttpObjectBackend(endpoint: String,
     val k = norm(Paths.get(key))
     exchange("DELETE", metaUrl(k))
     metaCache.remove(k)
-    ()
+    ManifestCache.invalidate(Paths.get(key))
   }
 
   def withWriterMutex[A](lockKey: Path)(f: => A): A = f // no locks on object stores

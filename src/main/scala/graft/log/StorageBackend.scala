@@ -350,6 +350,7 @@ final class ObjectStoreBackend extends StorageBackend {
     val k = norm(Paths.get(key))
     meta.remove(k)
     Files.deleteIfExists(Paths.get(k))
+    ManifestCache.invalidate(Paths.get(key))
   }
 
   /** No locks on an object store: the in-JVM per-stream monitor the

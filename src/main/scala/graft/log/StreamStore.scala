@@ -116,6 +116,35 @@ object StreamStore {
     m.iterator
   }
 
+  /** Adds one slice's counts (see [[countSlices]]) into `into`. */
+  private[log] def addCounts(into: Array[Long], a: Array[Long]): Unit = {
+    into(0) += a(0); into(1) = math.max(into(1), a(1)); into(2) += a(2)
+  }
+
+  /** Whole-stream placement after the count pass: each stream the cut
+    * points split whose rows fit in one range's share
+    * (⌈rows ÷ `numRanges`⌉) moves whole into the range that holds most
+    * of its rows, the lowest index on a tie, so it is written as one
+    * file. Its slices merge in `stats` (rows and null ts_clients add,
+    * the max ts_client is the max) and the returned map gives its home
+    * range; streams larger than a share stay split. Each cut point
+    * splits at most one stream, so a range gains or loses at most one
+    * stream's rows per cut point. */
+  private[log] def wholeStreamHomes(
+      stats: scala.collection.mutable.Map[(Int, String, String), Array[Long]],
+      numRanges: Int): Map[(String, String), Int] = {
+    val share = (stats.valuesIterator.map(_(0)).sum + numRanges - 1) / numRanges
+    val split = stats.toSeq.groupBy { case ((_, b, s), _) => (b, s) }
+      .filter { case (_, sl) => sl.size > 1 && sl.map(_._2(0)).sum <= share }
+    split.map { case ((b, s), sl) =>
+      val ((home, _, _), _) = sl.minBy { case ((r, _, _), a) => (-a(0), r) }
+      val merged = Array(0L, Long.MinValue, 0L)
+      sl.foreach { case (k, a) => addCounts(merged, a); stats.remove(k) }
+      stats((home, b, s)) = merged
+      (b, s) -> home
+    }
+  }
+
   /** The task-side failure of the two-reads guard: the body job read
     * a different row set than the count pass planned. */
   private def inputChanged(range: Int, basin: String, stream: String,
@@ -951,10 +980,15 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     *    P = `spark.sql.shuffle.partitions` — the ranges
     *    `repartitionByRange` cuts; no job when P = 1;
     *  - count pass (one job, keys only): per (range, basin, stream)
-    *    the rows, the max ts_client and the null ts_clients. The driver
-    *    takes the key set from it, runs the cipher, epoch, deletion and
-    *    auto-create gates, and plans each slice's first seq and
-    *    timestamp floor by prefix sums in range order;
+    *    the rows, the max ts_client and the null ts_clients. A stream
+    *    the cut points split whose rows fit in one range's share
+    *    (⌈rows ÷ ranges⌉) then moves whole into the range holding most
+    *    of its rows, the lowest index on a tie
+    *    ([[StreamStore.wholeStreamHomes]]), so it is written as one file
+    *    and read back as one; a larger stream stays split. The driver
+    *    takes the key set from the counts, runs the cipher, epoch,
+    *    deletion and auto-create gates, and plans each slice's first seq
+    *    and timestamp floor by prefix sums in range order;
     *  - body job (the one shuffle, by range id; two jobs under AQE):
     *    each task sorts one range by (basin, stream, arrival) and
     *    writes its staged files ([[StreamStore.writeStagedPartition]]);
@@ -997,12 +1031,13 @@ final class StreamStore(val spark: SparkSession, val root: String) {
       val stats = scala.collection.mutable.HashMap.empty[(Int, String, String), Array[Long]]
       keyRows.mapPartitions(StreamStore.countSlices(ranges)).collect().foreach {
         case (k, a) => stats.get(k) match {
-          case Some(m) => m(0) += a(0); m(1) = math.max(m(1), a(1)); m(2) += a(2)
+          case Some(m) => StreamStore.addCounts(m, a)
           case None => stats(k) = a
         }
       }
       (ranges, stats)
     }
+    val home = StreamStore.wholeStreamHomes(sliceStats, ranges.numPartitions)
     phaseDone(ServerMetrics.ingestCount)
 
     val allKeys = sliceStats.keysIterator.map(k => (k._2, k._3)).toArray.distinct
@@ -1133,9 +1168,11 @@ final class StreamStore(val spark: SparkSession, val root: String) {
     }
     val planBc = spark.sparkContext.broadcast(StreamStore.IngestPlan(now, streams,
       slices.iterator.map { case (r, m) => r -> m.toMap }.toMap))
-    val rangeOf = udf((b: String, s: String, a: Long) => ranges.getPartition((b, s, a)))
-    // the exchange computes each row's range id itself: no column for
-    // it rides the shuffle. ranges.numPartitions, not numRanges: an
+    val rangeOf = udf((b: String, s: String, a: Long) =>
+      home.getOrElse((b, s), ranges.getPartition((b, s, a))))
+    // the exchange computes each row's range id itself (a moved
+    // stream's home range, else the cut points'): no column for it
+    // rides the shuffle. ranges.numPartitions, not numRanges: an
     // input with fewer distinct keys than P gets fewer ranges, and a
     // by-number shuffle is never coalesced by AQE.
     val bodyQe = df

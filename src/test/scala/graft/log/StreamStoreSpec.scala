@@ -16,8 +16,9 @@ class StreamStoreSpec extends AnyFunSuite with LocalSpark {
   override def afterAll(): Unit =
     try super.afterAll() finally BackendHarness.cleanup()
 
-  private def freshStore(): StreamStore = {
-    val dir = BackendHarness.PosixHarness.freshRoot("graft-store")
+  private def freshStore(
+      h: BackendHarness = BackendHarness.PosixHarness): StreamStore = {
+    val dir = h.freshRoot("graft-store")
     val st = new StreamStore(spark, dir)
     // Fixture timestamps are tiny epoch values; infinite retention by
     // default so the age mask (T2) only applies where a test opts in.
@@ -226,7 +227,16 @@ class StreamStoreSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("compacting deleted streams away drops their parsed manifests") {
-    val st = freshStore()
+    dropsParsedManifests(BackendHarness.PosixHarness)
+  }
+
+  for (h <- Seq(BackendHarness.ObjectHarness, BackendHarness.HttpHarness))
+  test(s"[${h.label}] compacting deleted streams away drops their parsed manifests") {
+    dropsParsedManifests(h)
+  }
+
+  private def dropsParsedManifests(h: BackendHarness): Unit = {
+    val st = freshStore(h)
     val names = (0 until 8).map(i => s"gone-$i")
     names.foreach(n => st.catalog.createStream("test-basin", n))
     val size0 = ManifestCache.parsedSize(st.root)
